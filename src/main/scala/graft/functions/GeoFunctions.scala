@@ -19,8 +19,4 @@ object GeoFunctions {
       pow(sin(dLat), 2) +
         cos(radians(latA)) * cos(radians(latB)) * pow(sin(dLon), 2)))
   }
-
-  /** Great-circle distance in metres (reference returns metres). */
-  def haversineM(latA: Column, lonA: Column, latB: Column, lonB: Column): Column =
-    haversineKm(latA, lonA, latB, lonB) * 1000.0
 }

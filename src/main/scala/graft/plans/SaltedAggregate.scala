@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{DataType, DecimalType}
   * `salt_key` is always safe to add.
   *
   * This automates the hand-written pattern in
-  * `ValidationQueries.uniquenessVerdict` / `ImageSuite.uniqueness` —
+  * `ValidationQueries.uniquenessVerdict` —
   * reference analogue: the fmt/phash hot-key handling called out in the
   * north rule. AQE's skew-join handling covers joins; this covers
   * aggregations, which AQE does not re-balance.

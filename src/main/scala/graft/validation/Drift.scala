@@ -91,6 +91,36 @@ object Drift {
     * 0.1–0.2 moderate, >0.2 significant shift). */
   val DriftPsiMax = 0.2
 
+  /** The union bucket grid of each (part, colname) against a persisted
+    * baseline histogram: every baseline bucket instantiated per partition,
+    * full-outer'd with the observed buckets so novel support survives.
+    * Columns part, colname, bucket, obs and g_cnt (0 where absent), and
+    * the totals p_tot and g_tot. Shared by the baseline drift statistics.
+    */
+  private def unionGrid(images: DataFrame, baselineHist: DataFrame): DataFrame = {
+    val ph = histogram(images).withColumnRenamed("cnt", "obs")
+    val ptot = ph.groupBy("part", "colname").agg(sum("obs").as("p_tot"))
+    val g = baselineHist.select(col("colname"), col("bucket"), col("cnt").as("g_cnt"))
+    val gtot = g.groupBy("colname").agg(sum("g_cnt").as("g_tot"))
+    val bgrid = ptot.select("part", "colname").join(broadcast(g), Seq("colname"))
+    bgrid.join(ph, Seq("part", "colname", "bucket"), "full_outer")
+      .na.fill(0L, Seq("obs", "g_cnt"))
+      .join(ptot, Seq("part", "colname"))
+      .join(broadcast(gtot), Seq("colname"))
+  }
+
+  /** Half-count smoothed bucket shares over a [[unionGrid]]: pp for the
+    * partition, pg for the baseline, each (cnt + 0.5) / (tot + 0.5·nb)
+    * with nb the grid's bucket count.
+    */
+  private def smoothedShares(grid: DataFrame): DataFrame =
+    grid
+      .withColumn("nb", count(lit(1)).over(Window.partitionBy("part", "colname")))
+      .withColumn("pp", (col("obs").cast("double") + lit(0.5)) /
+        (col("p_tot").cast("double") + lit(0.5) * col("nb").cast("double")))
+      .withColumn("pg", (col("g_cnt").cast("double") + lit(0.5)) /
+        (col("g_tot").cast("double") + lit(0.5) * col("nb").cast("double")))
+
   /** Oracle-able relational twin of the chi² leg of [[finalizeOne]] against
     * a persisted baseline histogram: per (part, colname), the normalized
     * smoothed chi² over the UNION of baseline and partition buckets —
@@ -103,18 +133,8 @@ object Drift {
     * t-digest KS leg is not. Scale: one (part, colname, bucket) groupBy
     * over the scan + broadcast of the zone-count-sized baseline.
     */
-  def baselineChiSq(images: DataFrame, baselineHist: DataFrame): DataFrame = {
-    val ph = histogram(images).withColumnRenamed("cnt", "obs")
-    val ptot = ph.groupBy("part", "colname").agg(sum("obs").as("p_tot"))
-    val g = baselineHist.select(col("colname"), col("bucket"), col("cnt").as("g_cnt"))
-    val gtot = g.groupBy("colname").agg(sum("g_cnt").as("g_tot"))
-    // every baseline bucket instantiated per partition, full-outer'd with
-    // the observed buckets so novel support survives
-    val bgrid = ptot.select("part", "colname").join(broadcast(g), Seq("colname"))
-    val u = bgrid.join(ph, Seq("part", "colname", "bucket"), "full_outer")
-      .na.fill(0L, Seq("obs", "g_cnt"))
-    u.join(ptot, Seq("part", "colname"))
-      .join(broadcast(gtot), Seq("colname"))
+  def baselineChiSq(images: DataFrame, baselineHist: DataFrame): DataFrame =
+    unionGrid(images, baselineHist)
       .withColumn("e", when(col("g_cnt") > 0,
           col("p_tot").cast("double") * col("g_cnt").cast("double") /
             col("g_tot").cast("double"))
@@ -127,7 +147,6 @@ object Drift {
         round(sum(col("term")) /
           greatest(max("p_tot"), lit(1L)).cast("double"), 6).as("chi2"))
       .withColumn("drifted", col("chi2") > ImageSuite.DriftChi2Max)
-  }
 
   /** PSI (population stability index) per (part, colname) against a
     * persisted baseline histogram: Σ (p_i − q_i)·ln(p_i/q_i) over the
@@ -144,28 +163,12 @@ object Drift {
     * chi² (count-scale sensitive) and KS (max-deviation) on the
     * north-star image table's w/h.
     */
-  def baselinePsi(images: DataFrame, baselineHist: DataFrame): DataFrame = {
-    val ph = histogram(images).withColumnRenamed("cnt", "obs")
-    val ptot = ph.groupBy("part", "colname").agg(sum("obs").as("p_tot"))
-    val g = baselineHist.select(col("colname"), col("bucket"), col("cnt").as("g_cnt"))
-    val gtot = g.groupBy("colname").agg(sum("g_cnt").as("g_tot"))
-    val bgrid = ptot.select("part", "colname").join(broadcast(g), Seq("colname"))
-    val u = bgrid.join(ph, Seq("part", "colname", "bucket"), "full_outer")
-      .na.fill(0L, Seq("obs", "g_cnt"))
-    val withNb = u.join(ptot, Seq("part", "colname"))
-      .join(broadcast(gtot), Seq("colname"))
-      .withColumn("nb", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("part", "colname")))
-    withNb
-      .withColumn("pp", (col("obs").cast("double") + lit(0.5)) /
-        (col("p_tot").cast("double") + lit(0.5) * col("nb").cast("double")))
-      .withColumn("pg", (col("g_cnt").cast("double") + lit(0.5)) /
-        (col("g_tot").cast("double") + lit(0.5) * col("nb").cast("double")))
+  def baselinePsi(images: DataFrame, baselineHist: DataFrame): DataFrame =
+    smoothedShares(unionGrid(images, baselineHist))
       .withColumn("term", (col("pp") - col("pg")) * log(col("pp") / col("pg")))
       .groupBy("part", "colname")
       .agg(count(lit(1)).as("n_buckets"), round(sum(col("term")), 6).as("psi"))
       .withColumn("drifted", col("psi") > DriftPsiMax)
-  }
 
   /** EMD flag threshold in bucket-width units: the generator's planted
     * drift shifts dims by exactly two bucket widths (EMD ≈ 2.0); clean
@@ -192,16 +195,8 @@ object Drift {
     * (part, colname, bucket) + a window over bucket-count-sized frames.
     */
   def baselineEmd(images: DataFrame, baselineHist: DataFrame): DataFrame = {
-    val ph = histogram(images).withColumnRenamed("cnt", "obs")
-    val ptot = ph.groupBy("part", "colname").agg(sum("obs").as("p_tot"))
-    val g = baselineHist.select(col("colname"), col("bucket"), col("cnt").as("g_cnt"))
-    val gtot = g.groupBy("colname").agg(sum("g_cnt").as("g_tot"))
-    val bgrid = ptot.select("part", "colname").join(broadcast(g), Seq("colname"))
-    val u = bgrid.join(ph, Seq("part", "colname", "bucket"), "full_outer")
-      .na.fill(0L, Seq("obs", "g_cnt"))
     val w = Window.partitionBy("part", "colname").orderBy("bucket")
-    u.join(ptot, Seq("part", "colname"))
-      .join(broadcast(gtot), Seq("colname"))
+    unionGrid(images, baselineHist)
       .withColumn("diff", col("obs") * col("g_tot") - col("g_cnt") * col("p_tot"))
       .withColumn("cum", sum("diff").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -233,30 +228,14 @@ object Drift {
     * inputs → identical doubles on both engines; one groupBy over the
     * scan + broadcast of the bucket-count-sized baseline.
     */
-  def baselineJsd(images: DataFrame, baselineHist: DataFrame): DataFrame = {
-    val ph = histogram(images).withColumnRenamed("cnt", "obs")
-    val ptot = ph.groupBy("part", "colname").agg(sum("obs").as("p_tot"))
-    val g = baselineHist.select(col("colname"), col("bucket"), col("cnt").as("g_cnt"))
-    val gtot = g.groupBy("colname").agg(sum("g_cnt").as("g_tot"))
-    val bgrid = ptot.select("part", "colname").join(broadcast(g), Seq("colname"))
-    val u = bgrid.join(ph, Seq("part", "colname", "bucket"), "full_outer")
-      .na.fill(0L, Seq("obs", "g_cnt"))
-    val withNb = u.join(ptot, Seq("part", "colname"))
-      .join(broadcast(gtot), Seq("colname"))
-      .withColumn("nb", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("part", "colname")))
-    withNb
-      .withColumn("pp", (col("obs").cast("double") + lit(0.5)) /
-        (col("p_tot").cast("double") + lit(0.5) * col("nb").cast("double")))
-      .withColumn("pg", (col("g_cnt").cast("double") + lit(0.5)) /
-        (col("g_tot").cast("double") + lit(0.5) * col("nb").cast("double")))
+  def baselineJsd(images: DataFrame, baselineHist: DataFrame): DataFrame =
+    smoothedShares(unionGrid(images, baselineHist))
       .withColumn("m", (col("pp") + col("pg")) / lit(2.0))
       .withColumn("term", (col("pp") * log(col("pp") / col("m")) +
         col("pg") * log(col("pg") / col("m"))) / lit(2.0))
       .groupBy("part", "colname")
       .agg(count(lit(1)).as("n_buckets"), round(sum(col("term")), 6).as("jsd"))
       .withColumn("drifted", col("jsd") > DriftJsdMax)
-  }
 
   /** Baseline snapshot: global histogram + per-column global t-digest. */
   def snapshot(spark: SparkSession, images: DataFrame, dir: String): Unit = {
@@ -291,16 +270,6 @@ object Drift {
     }
   }
 
-  /** Drift verdicts per partition: chi-square (bucketed counts vs baseline
-    * proportions) + KS (t-digest CDFs) — both statistics from ONE narrow
-    * pass that builds mergeable partials per input split, reduced per
-    * (part, colname) (a KB-scale shuffle), final math on the driver. At
-    * 10^12 rows the identical partials flow through the same
-    * groupByKey/reduceGroups; only the final few-hundred-row collect ever
-    * reaches the driver. With `baselineDir`, the reference histogram and
-    * digests come from the persisted snapshot; otherwise the merged global
-    * is the baseline. Returns (verdicts, violations).
-    */
   /** One narrow pass over `images` building mergeable per-(part, colname)
     * partials (t-digest + bucket histogram), reduced per key — a KB-scale
     * shuffle. Stays DISTRIBUTED (a Dataset): only callers that persist the
@@ -329,10 +298,6 @@ object Drift {
       .reduceGroups((a, b) => a.merge(b))
       .map(_._2)
   }
-
-  /** Driver-side partial collection (resume side-store + small-table path). */
-  def collectPartials(images: DataFrame): Array[DriftPartial] =
-    partials(images).collect()
 
   /** Persisted partials as a DATASET — the resume path unions these with
     * fresh partials and finalizes via [[verdictsAuto]], so a 10^6-partition
@@ -368,6 +333,16 @@ object Drift {
     */
   val DriverFinalizeMaxPartials = 100000
 
+  /** Drift verdicts per partition: chi-square (bucketed counts vs baseline
+    * proportions) + KS (t-digest CDFs) — both statistics from ONE narrow
+    * pass that builds mergeable partials per input split, reduced per
+    * (part, colname) (a KB-scale shuffle), final math on the driver. At
+    * 10^12 rows the identical partials flow through the same
+    * groupByKey/reduceGroups; only the final few-hundred-row collect ever
+    * reaches the driver. With `baselineDir`, the reference histogram and
+    * digests come from the persisted snapshot; otherwise the merged global
+    * is the baseline. Returns (verdicts, violations).
+    */
   def check(images: DataFrame, runId: String,
             baselineDir: Option[String] = None,
             driverFinalizeMax: Int = DriverFinalizeMaxPartials): (DataFrame, DataFrame) =

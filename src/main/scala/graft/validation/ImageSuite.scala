@@ -1,26 +1,29 @@
 package graft.validation
 
-import graft.images.{ImageCodec, ImageGen, Phash}
+import graft.images.ImageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 /** The north-rule constraint-validation engine over the image+caption table.
   *
   * Pipeline shape (designed for 10^12 rows / 1000 executors):
   *
   *   scan(images, pruned to pending partitions)           ── no shuffle
-  *     → decode stage (mapPartitions, bytes dropped)      ── narrow
+  *     → decode stage (image_facts expression)            ── narrow
   *     → per-row violation array + explode                ── narrow
   *     → per-partition verdict aggregation                ── 1 shuffle (part)
-  *   uniqueness: salted two-stage agg on image_id         ── 2 shuffles
-  *   referential: broadcast-or-SMJ anti joins both ways   ── ≤1 shuffle
-  *   drift: per-part histograms + global baseline join    ── 1 shuffle
+  *   key checks: pending keys vs the stored key index     ── hash joins on
+  *     (left-outer count join, anti joins both ways)         image_id
+  *   drift: per-part sketch partials + stored partials    ── 1 shuffle
   *
   * All byte-derived columns are computed in the scan stage; only small
   * derived facts cross shuffles. Resume prunes completed `part=` directories
   * before the scan (partition pruning, anti-join on the state table —
   * reference resume semantics validation_agent.py:787-812).
+  *
+  * One engine path: [[runAndCheckpoint]] reads the checkpoint's prior
+  * state, computes and commits; [[run]] computes the same increment over
+  * an empty prior state and returns the frames.
   */
 object ImageSuite {
 
@@ -33,53 +36,13 @@ object ImageSuite {
   // and would flag every partition at 10^12 scale.
   val DriftChi2Max = 0.5
 
-  /** Decode stage: one pass over rows, emits DecodedFacts, drops bytes. */
-  def decodeFacts(spark: SparkSession, images: DataFrame,
-                  decodeNanos: Option[LongAccumulator] = None): Dataset[DecodedFacts] = {
-    import spark.implicits._
-    images.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash", "part")
-      .as[(String, Array[Byte], Int, Int, String, String, Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, bytes, w, h, fmt, caption, phash, part) =>
-          val t0 = System.nanoTime()
-          val hasBytes = bytes != null && bytes.nonEmpty
-          val nBytes = if (bytes == null) 0L else bytes.length.toLong
-          val dec = if (hasBytes) ImageCodec.decode(bytes) else None
-          val sniffed = ImageCodec.sniffFormat(bytes).getOrElse("none")
-          // ground truth is id-derived (asserted-vs-inferred): the ordinal
-          // seeds the synthesis, so reference pixels are recomputable.
-          val ord = idOrdinal(id)
-          val facts = dec match {
-            case Some((px, dw, dh)) =>
-              val truth = ImageGen.truthPixels(ord, dw, dh)
-              val p = ImageCodec.psnr(px, truth).getOrElse(Double.NaN)
-              val ph = Phash.phash64(px, dw, dh)
-              DecodedFacts(id, part, fmt, caption, w, h, phash,
-                hasBytes, nBytes, decode_ok = true, dw, dh,
-                psnr_db = p, phash_rec = ph,
-                phash_hamming = Phash.hamming(ph, phash),
-                fmt_sniffed = sniffed,
-                caption_expected = ImageGen.caption(ord))
-            case None =>
-              DecodedFacts(id, part, fmt, caption, w, h, phash,
-                hasBytes, nBytes, decode_ok = false, 0, 0,
-                psnr_db = Double.NaN, phash_rec = 0L, phash_hamming = -1,
-                fmt_sniffed = sniffed,
-                caption_expected = ImageGen.caption(ord))
-          }
-          decodeNanos.foreach(_.add(System.nanoTime() - t0))
-          facts
-        }
-      }
-  }
-
   def idOrdinal(id: String): Long =
     try id.stripPrefix("img-").toLong catch { case _: Throwable => -1L }
 
-  /** Expression-based decode stage — same facts as [[decodeFacts]], but as
-    * a DataFrame projection over the native `image_facts` Catalyst
-    * expression: no Product-encoder round-trip per row, prune/pushdown
-    * compose around it, and downstream predicates stay codegen'd.
+  /** Decode stage as a DataFrame projection over the native `image_facts`
+    * Catalyst expression: no Product-encoder round-trip per row,
+    * prune/pushdown compose around it, and downstream predicates stay
+    * codegen'd (ImageFactsExprSpec pins it to a plain-Scala decode).
     */
   def decodeFactsExpr(images: DataFrame): DataFrame = {
     val f = graft.functions.ImageFactsExpr.imageFacts(col("bytes"), col("image_id"))
@@ -153,12 +116,20 @@ object ImageSuite {
     val rowChecks = Seq("bytes_present", "decodable", "dims_positive",
       "dims_match_decoded", "sentinel_row", "psnr_allclose", "phash_consistent",
       "fmt_matches_magic", "caption_equality")
-    val parts = facts.groupBy("part").agg(count(lit(1)).as("n_rows"))
-    val checks = parts.sparkSession.createDataFrame(
-      rowChecks.map(Tuple1(_))).toDF("check")
-    val vcounts = violations.filter(col("check").isin(rowChecks: _*))
-      .groupBy("part", "check").agg(count(lit(1)).as("n_violations"))
-    parts.crossJoin(broadcast(checks))
+    rateVerdicts(facts, violations.filter(col("check").isin(rowChecks: _*)),
+      rowChecks, runId)
+  }
+
+  /** Zero-tolerance verdicts: one row per (part of `rows`, check), failing
+    * when any `violations` row carries that (part, check); the metric is
+    * the violation rate.
+    */
+  private def rateVerdicts(rows: DataFrame, violations: DataFrame,
+                           checks: Seq[String], runId: String): DataFrame = {
+    val parts = rows.groupBy("part").agg(count(lit(1)).as("n_rows"))
+    val checksDf = rows.sparkSession.createDataFrame(checks.map(Tuple1(_))).toDF("check")
+    val vcounts = violations.groupBy("part", "check").agg(count(lit(1)).as("n_violations"))
+    parts.crossJoin(broadcast(checksDf))
       .join(vcounts, Seq("part", "check"), "left")
       .na.fill(0L, Seq("n_violations"))
       .select(col("part"), col("check"),
@@ -184,192 +155,28 @@ object ImageSuite {
       .unionByName(verdict("null_bytes", "null_rate_bytes"))
   }
 
-  /** Global uniqueness of image_id with salted two-stage aggregation;
-    * violations carry every extra row beyond the kept (first) one.
-    * Returns (verdicts per part, violations).
+  /** Id-keyed checks over a whole table: [[incrementalKeyChecks]] against
+    * an empty key index — the full check is the incremental one started
+    * from nothing, so every key-check violation row is built in one place.
     */
-  def uniqueness(facts: DataFrame, runId: String, saltBuckets: Int = 32): (DataFrame, DataFrame) = {
-    // stage 1: (id, salt) partial counts — a hot duplicated id spreads over
-    // saltBuckets reducers; stage 2 merges per id. The salt hashes ALL
-    // input columns (not just the key): pure content hash, so task retries
-    // and repartitions reproduce identical salts (never rand()), while a
-    // key duplicated with varying payloads still fans out across buckets.
-    // Only byte-identical full-row duplicates share a bucket — the
-    // irreducible case for any deterministic content salt.
-    val salted = facts
-      .withColumn("salt", pmod(xxhash64(facts.columns.map(col): _*), lit(saltBuckets)))
-      .select(col("image_id"), col("part"), col("salt"))
-    val stage1 = salted.groupBy("image_id", "salt")
-      .agg(count(lit(1)).as("c1"), min("part").as("minp1"))
-    val perId = stage1.groupBy("image_id")
-      .agg(sum("c1").as("n"), min("minp1").as("min_part"))
-    val dups = perId.filter(col("n") > 1)
-    val violations = facts.join(broadcast(dups.select("image_id", "n")), Seq("image_id"))
-      .select(col("part"), col("image_id"), lit("uniqueness_image_id").as("check"),
-        concat(lit("key seen "), col("n"), lit(" times")).as("observed"),
-        lit("unique image_id").as("expected"))
-    val perPart = facts.groupBy("part").agg(count(lit(1)).as("n_rows"))
-      .join(violations.groupBy("part").agg(count(lit(1)).as("n_violations")), Seq("part"), "left")
-      .na.fill(0L, Seq("n_violations"))
-      .select(col("part"), lit("uniqueness_image_id").as("check"),
-        (col("n_violations") === 0).as("pass"),
-        (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-        lit(0.0).as("threshold"), col("n_rows"), col("n_violations"),
-        lit(runId).as("run_id"))
-    (perPart, violations)
-  }
+  def keyChecks(light: DataFrame, captions: DataFrame, runId: String): (DataFrame, DataFrame) =
+    incrementalKeyChecks(light, emptyStore(light.sparkSession, KeysSchema), captions, runId)
 
-  /** Referential checks image↔caption, both directions (left anti), plus
-    * cross-table bit-for-bit caption consistency on the inner match
-    * (input_hint caption-equality) — one join surface feeds all three.
+  /** Full suite over the whole table; returns (verdicts, violations,
+    * metrics). The same computation as [[runAndCheckpoint]], started from
+    * an empty prior state and returning the frames instead of committing
+    * them.
     */
-  def referential(facts: DataFrame, captions: DataFrame, runId: String): (DataFrame, DataFrame) = {
-    val imgIds = facts.select(col("image_id"), col("part"), col("caption"))
-    val capIds = captions.select(col("image_id").as("cap_image_id"),
-      col("part").as("cap_part"), col("caption").as("cap_caption"))
-    val missingCaption = imgIds.join(capIds,
-        imgIds("image_id") === capIds("cap_image_id"), "left_anti")
-      .select(col("part"), col("image_id"),
-        lit("referential_caption_exists").as("check"),
-        lit("no caption row").as("observed"), lit("caption row exists").as("expected"))
-    val orphanCaption = capIds.join(imgIds,
-        capIds("cap_image_id") === imgIds("image_id"), "left_anti")
-      .select(col("cap_part").as("part"), col("cap_image_id").as("image_id"),
-        lit("referential_image_exists").as("check"),
-        lit("caption without image").as("observed"), lit("image row exists").as("expected"))
-    val mismatched = imgIds.join(capIds,
-        imgIds("image_id") === capIds("cap_image_id"), "inner")
-      .filter(col("caption").isNotNull && col("cap_caption").isNotNull &&
-        col("caption") =!= col("cap_caption"))
-      .select(col("part"), col("image_id"),
-        lit("caption_consistent").as("check"),
-        col("cap_caption").as("observed"), col("caption").as("expected"))
-    val violations = missingCaption.unionByName(orphanCaption)
-      .unionByName(mismatched)
-    val nImgs = facts.groupBy("part").agg(count(lit(1)).as("n_rows"))
-    val verdicts = Seq("referential_caption_exists", "referential_image_exists",
-      "caption_consistent").map { c =>
-      nImgs
-        .join(violations.filter(col("check") === c)
-          .groupBy("part").agg(count(lit(1)).as("n_violations")), Seq("part"), "left")
-        .na.fill(0L, Seq("n_violations"))
-        .select(col("part"), lit(c).as("check"), (col("n_violations") === 0).as("pass"),
-          (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-          lit(0.0).as("threshold"), col("n_rows"), col("n_violations"),
-          lit(runId).as("run_id"))
-    }.reduce(_ unionByName _)
-    (verdicts, violations)
-  }
-
-  /** Fused id-keyed checks: uniqueness + referential (both directions) +
-    * caption consistency from ONE full-outer join — both sides shuffle once
-    * on image_id, the duplicate count rides the join's hash partitioning as
-    * a window (no further exchange). Semantically identical to
-    * [[uniqueness]] + [[referential]] (spec-enforced); preferred in [[run]]
-    * because the flat shuffle count drops from ~5 to 2. Hot duplicated keys
-    * are AQE-skew-join territory here; the salted two-stage variant remains
-    * for aggregate-only pipelines.
-    */
-  def keyChecks(light: DataFrame, captions: DataFrame, runId: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val caps = captions.select(col("image_id").as("cap_id"),
-      col("part").as("cap_part"), col("caption").as("cap_caption"))
-    // n_img counts LIGHT rows per key, computed BEFORE the caption join:
-    // counting joined rows would multiply by caption multiplicity — an id
-    // with one image row but two caption rows would read as a uniqueness
-    // violation (and diverge from both the DuckDB oracle and the
-    // incremental twin, which count image rows only; KeyCheckDupSpec pins
-    // the duplicate-caption case). The window shuffles on image_id — the
-    // same key the join needs, so the partitioning is reused.
-    // NOT cached (measured at sf0.1: caching the window output costs
-    // more in materialization than the second consumer's recompute — the
-    // upstream `light` frame is the caller-cached one, so each consumer
-    // pays only the image_id shuffle + window sort over cached input)
-    val lightN = light.withColumn("n_img",
-      count(lit(1)).over(Window.partitionBy("image_id")))
-    val j = lightN.join(caps, col("image_id") === col("cap_id"), "full_outer")
-    // cache: violation branches re-read the joined frame; the cached
-    // width is a handful of scalar columns (bytes never enter this path)
-    // and MEMORY_AND_DISK spills gracefully when a partition outgrows the
-    // executor's storage fraction at scale.
-    val jj = j.cache()
-
-    // uniqueness violations come from the PRE-join frame (one row per
-    // offending image row, never multiplied by matching caption rows)
-    val uniqViol = lightN.filter(col("n_img") > 1)
-      .select(col("part"), col("image_id"), lit("uniqueness_image_id").as("check"),
-        concat(lit("key seen "), col("n_img"), lit(" times")).as("observed"),
-        lit("unique image_id").as("expected"))
-    val missingCap = jj.filter(col("part").isNotNull && col("cap_id").isNull)
-      .select(col("part"), col("image_id"), lit("referential_caption_exists").as("check"),
-        lit("no caption row").as("observed"), lit("caption row exists").as("expected"))
-    val orphanCap = jj.filter(col("part").isNull)
-      .select(col("cap_part").as("part"), col("cap_id").as("image_id"),
-        lit("referential_image_exists").as("check"),
-        lit("caption without image").as("observed"), lit("image row exists").as("expected"))
-    val mismatch = jj.filter(col("part").isNotNull && col("cap_id").isNotNull &&
-        col("caption").isNotNull && col("cap_caption").isNotNull &&
-        col("caption") =!= col("cap_caption"))
-      .select(col("part"), col("image_id"), lit("caption_consistent").as("check"),
-        col("cap_caption").as("observed"), col("caption").as("expected"))
-    val violations = uniqViol.unionByName(missingCap)
-      .unionByName(orphanCap).unionByName(mismatch)
-
-    val checks = Seq("uniqueness_image_id", "referential_caption_exists",
-      "referential_image_exists", "caption_consistent")
-    val nImgs = light.groupBy("part").agg(count(lit(1)).as("n_rows"))
-    val checksDf = broadcast(light.sparkSession.createDataFrame(
-      checks.map(Tuple1(_))).toDF("check"))
-    val verdicts = nImgs.crossJoin(checksDf)
-      .join(violations.groupBy("part", "check").agg(count(lit(1)).as("n_violations")),
-        Seq("part", "check"), "left")
-      .na.fill(0L, Seq("n_violations"))
-      .select(col("part"), col("check"), (col("n_violations") === 0).as("pass"),
-        (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-        lit(0.0).as("threshold"), col("n_rows"), col("n_violations"),
-        lit(runId).as("run_id"))
-    (verdicts, violations)
-  }
-
-  /** Full suite over pending partitions; returns (verdicts, violations,
-    * metrics). Global checks (uniqueness/referential/drift) always run over
-    * the full table; per-partition families are resumable via `state`.
-    */
-  def run(spark: SparkSession, dataDir: String, runId: String,
-          stateDir: Option[String] = None,
-          baselineDir: Option[String] = None): (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
+  def run(spark: SparkSession, dataDir: String, runId: String): (DataFrame, DataFrame, DataFrame) = {
     val images = ImageGen.images(spark, dataDir)
-    val captions = ImageGen.captions(spark, dataDir)
-
-    val done: Set[String] = stateDir.map(readDoneParts(spark, _)).getOrElse(Set.empty)
-    val pending = if (done.isEmpty) images
-      else images.filter(!col("part").isin(done.toSeq: _*)) // partition-pruned scan
-
-    // native-expression decode path (see decodeFactsExpr; ≡ decodeFacts,
-    // equivalence enforced by ImageFactsExprSpec)
-    val facts = decodeFactsExpr(pending).cache()
-    // Global checks never touch `bytes` — a light projection keeps the
-    // full-table pass down to pruned parquet columns (id/part/w/h/caption),
-    // cached once and shared by uniqueness/referential/drift so the scan
-    // happens a single time.
-    val light = images.select("image_id", "part", "w", "h", "caption").cache()
-
-    val rv = rowViolations(facts)
-    val rVerd = rowVerdicts(facts, rv, runId)
-    val cVerd = coverageVerdicts(facts, runId)
-    val qVerd = Scoring.qualityVerdicts(facts, runId)
-    val (kVerd, kViol) = keyChecks(light, captions, runId)
-    val (dVerd, dViol) = Drift.check(light, runId, baselineDir)
-
-    // every verdict carries a graded score (V1); overall composition (V8)
-    // is Scoring.overallScores over this frame
-    val verdicts = rVerd.unionByName(cVerd).unionByName(qVerd)
-      .unionByName(kVerd).unionByName(dVerd)
-      .withColumn("score",
-        Scoring.verdictScore(col("check"), col("metric"), col("threshold")))
-    val violations = rv.unionByName(kViol).unionByName(dViol)
-
+    val facts = decodeFactsExpr(images).cache()
+    // Key and drift checks never touch `bytes`: a light projection keeps
+    // their pass down to pruned parquet columns, cached once and shared.
+    val light = images.select(LightCols.map(col): _*).cache()
+    val kd = keyDrift(light, ImageGen.captions(spark, dataDir), emptyPrior(spark), runId)
+    // the drift verdicts are final (collected or cached) once built
+    kd.freshPds.unpersist()
+    val (verdicts, violations) = allFamilies(facts, kd, runId)
     (verdicts, violations, metricsOf(facts, runId))
   }
 
@@ -390,16 +197,18 @@ object ImageSuite {
       }.toDF()
   }
 
-  /** Incremental twin of [[keyChecks]] for resumed runs: uniqueness,
-    * referential (both directions) and caption consistency for the PENDING
-    * partitions only, against a persisted key index `(image_id, part)` of
-    * everything validated so far — done partitions are never re-scanned.
+  /** The key-check kernel: uniqueness, referential (both directions) and
+    * caption consistency for the PENDING partitions only, against a
+    * persisted key index `(image_id, part)` of everything validated so far
+    * — done partitions are never re-scanned; a full check is this kernel
+    * over an empty index ([[keyChecks]]).
     * Cross-partition duplicates against old runs surface as violations on
     * the NEW partition (the old partition's verdict is already checkpointed
     * — the reference's resume semantics, validation_agent.py:787-812).
     * At 10^12 scale the key index is the standard dedup-index pattern:
     * O(keys) storage, hash-equi joins only (bucket it by hash(image_id) in
-    * the Iceberg layout so the join is storage-partitioned).
+    * the Iceberg layout so the join is storage-partitioned). Its left-outer
+    * and anti joins are ones AQE can split on skewed keys (SkewStressSpec).
     */
   def incrementalKeyChecks(lightNew: DataFrame, oldKeys: DataFrame,
                            captions: DataFrame, runId: String,
@@ -422,28 +231,24 @@ object ImageSuite {
       .select(col("part"), col("image_id"), lit("referential_caption_exists").as("check"),
         lit("no caption row").as("observed"), lit("caption row exists").as("expected"))
     // Orphan captions: no image row anywhere in the table validated so
-    // far. SEMANTICS (deliberate, spec-pinned, twin-consistent): every run
-    // assesses every caption in a NOT-DONE partition against the full
-    // current key index (old ∪ new) — exactly what the full-outer twin
-    // (`keyChecks`) reports over the data present at that moment. The
-    // violations table is append-only, run_id-stamped provenance, so an
-    // image id that ARRIVES in a later run does not retract an earlier
-    // run's recorded orphan (the record was true of the table its run
-    // saw); conversely a caption partition whose images never arrive —
-    // one that would otherwise never be validated — is still checked
-    // (these partitions never produce a state row, so they stay not-done
-    // and are re-assessed each run). The `priorOrphans` anti-join keeps
-    // that re-assessment from appending one duplicate copy per run; the
-    // VERDICT counts below use the PRE-dedup candidates, so a partition's
-    // verdict row reflects all of its orphans as of its validation run,
-    // not just the newly discovered ones. Done partitions are never
-    // re-checked (their captions were assessed when they were validated).
+    // far. SEMANTICS (deliberate, spec-pinned): every run assesses every
+    // caption in a NOT-DONE partition against the full current key index
+    // (old ∪ new) — exactly what a full `keyChecks` reports over the data
+    // present at that moment. The violations table is append-only,
+    // run_id-stamped provenance, so an image id that ARRIVES in a later
+    // run does not retract an earlier run's recorded orphan (the record
+    // was true of the table its run saw); conversely a caption partition
+    // whose images never arrive — one that would otherwise never be
+    // validated — is still checked (these partitions never produce a
+    // state row, so they stay not-done and are re-assessed each run). The
+    // `priorOrphans` anti-join keeps that re-assessment from appending one
+    // duplicate copy per run; the VERDICT counts below use the PRE-dedup
+    // candidates, so a partition's verdict row reflects all of its orphans
+    // as of its validation run, not just the newly discovered ones. Done
+    // partitions are never re-checked (their captions were assessed when
+    // they were validated).
     val donePartsDf = Option(doneParts).getOrElse(
-      lightNew.sparkSession.createDataFrame(
-        lightNew.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("part",
-            org.apache.spark.sql.types.StringType)))))
+      emptyStore(lightNew.sparkSession, "part STRING"))
     val notDoneCapParts = caps.select("cap_part").distinct()
       .join(broadcast(donePartsDf.withColumnRenamed("part", "cap_part")),
         Seq("cap_part"), "left_anti")
@@ -461,36 +266,21 @@ object ImageSuite {
         orphanAll("cap_part") === po("part") &&
           orphanAll("cap_id") === po("image_id"), "left_anti")
     ).getOrElse(orphanAll)
-    val orphanCap = asOrphanRows(orphanNew)
     val mismatch = lightNew.join(caps, lightNew("image_id") === caps("cap_id"))
       .filter(col("caption").isNotNull && col("cap_caption").isNotNull &&
         col("caption") =!= col("cap_caption"))
       .select(col("part"), col("image_id"), lit("caption_consistent").as("check"),
         col("cap_caption").as("observed"), col("caption").as("expected"))
-    val violations = dupViol.unionByName(missingCap)
-      .unionByName(orphanCap).unionByName(mismatch)
+    def violationsWith(orphans: DataFrame): DataFrame = dupViol
+      .unionByName(missingCap).unionByName(asOrphanRows(orphans)).unionByName(mismatch)
+    val checks = Seq("uniqueness_image_id", "referential_caption_exists",
+      "referential_image_exists", "caption_consistent")
     // verdict counts come from the PRE-dedup orphan candidates (see the
     // orphan comment above): a partition validated this run must count
     // orphans an earlier run already stored, or its verdict would read
-    // cleaner than the uninterrupted twin's
-    val violationsForVerdicts = dupViol.unionByName(missingCap)
-      .unionByName(asOrphanRows(orphanAll)).unionByName(mismatch)
-
-    val checks = Seq("uniqueness_image_id", "referential_caption_exists",
-      "referential_image_exists", "caption_consistent")
-    val nImgs = lightNew.groupBy("part").agg(count(lit(1)).as("n_rows"))
-    val checksDf = broadcast(lightNew.sparkSession.createDataFrame(
-      checks.map(Tuple1(_))).toDF("check"))
-    val verdicts = nImgs.crossJoin(checksDf)
-      .join(violationsForVerdicts.groupBy("part", "check")
-          .agg(count(lit(1)).as("n_violations")),
-        Seq("part", "check"), "left")
-      .na.fill(0L, Seq("n_violations"))
-      .select(col("part"), col("check"), (col("n_violations") === 0).as("pass"),
-        (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-        lit(0.0).as("threshold"), col("n_rows"), col("n_violations"),
-        lit(runId).as("run_id"))
-    (verdicts, violations)
+    // cleaner than an uninterrupted run's
+    (rateVerdicts(lightNew, violationsWith(orphanAll), checks, runId),
+      violationsWith(orphanNew))
   }
 
   /** True when `dir` exists on the session's filesystem. A genuine read
@@ -546,58 +336,57 @@ object ImageSuite {
     if (fs.exists(p.getParent) && !fs.exists(p)) fs.create(p, true).close()
   }
 
+  /** Columns of the bytes-free projection the key and drift checks read. */
+  private val LightCols = Seq("image_id", "part", "w", "h", "caption")
+  private val KeysSchema = "image_id STRING, part STRING"
+  private val OrphansSchema = "part STRING, image_id STRING"
+
+  /** An empty frame with a store's schema (DDL) — what a side store reads
+    * as before its first write, and the parts of an empty prior state.
+    */
+  private def emptyStore(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
   /** Read the per-partition HLL-sketch store (mergeable image_id NDV). */
   private def readHll(spark: SparkSession, dir: String): DataFrame =
     if (pathExists(spark, dir)) spark.read.parquet(dir).select("sketch", "part")
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("sketch", org.apache.spark.sql.types.BinaryType),
-          org.apache.spark.sql.types.StructField("part", org.apache.spark.sql.types.StringType))))
+    else emptyStore(spark, "sketch BINARY, part STRING")
 
   private def readKeys(spark: SparkSession, dir: String): DataFrame =
     if (pathExists(spark, dir)) spark.read.parquet(dir).select("image_id", "part")
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("image_id", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("part", org.apache.spark.sql.types.StringType))))
+    else emptyStore(spark, KeysSchema)
 
-  /** Wall-clock a named phase when GRAFT_PHASE_TIMING is set (opt-in
-    * observability for tuning the checkpoint path; zero cost otherwise).
+  /** What a checkpoint already holds, as an increment reads it: the done
+    * partitions, the key index and drift partials restricted to them, and
+    * the orphan captions already stored.
     */
-  private def phase[A](name: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_PHASE_TIMING")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PHASE $name%-18s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
+  private case class Prior(doneDf: DataFrame, keys: DataFrame, orphans: DataFrame,
+                           partials: Dataset[Drift.DriftPartial])
 
-  /** Incremental key-check + drift verdicts for a pending light frame
-    * against the side stores under `outDir` — the shared core of the batch
-    * resume path ([[runAndCheckpoint]]) and the streaming twin
-    * ([[graft.streaming.StreamingValidation]]). Returns (keyVerdicts,
-    * keyViolations, driftVerdicts, driftViolations, freshPartials); the
-    * CALLER owns the store writes (ordering is the caller's commit
-    * protocol) and unpersists freshPartials after persisting them.
+  /** The prior state of a checkpoint that holds nothing — [[run]]'s. */
+  private def emptyPrior(spark: SparkSession): Prior = {
+    import spark.implicits._
+    Prior(emptyStore(spark, "part STRING"), emptyStore(spark, KeysSchema),
+      emptyStore(spark, OrphansSchema), spark.emptyDataset[Drift.DriftPartial])
+  }
+
+  /** Read the prior state of the checkpoint under `outDir`, given its done
+    * partitions. Side-store content beyond the done set is ignored: state
+    * is the commit point.
     */
-  private[graft] def keyDriftIncrement(spark: SparkSession, lightNew: DataFrame,
-      captions: DataFrame, outDir: String, runId: String, done: Set[String])
-      : (DataFrame, DataFrame, DataFrame, DataFrame,
-         org.apache.spark.sql.Dataset[Drift.DriftPartial]) = {
+  private def readPrior(spark: SparkSession, outDir: String, done: Set[String]): Prior = {
     import spark.implicits._
     // Restrict the key index to DONE partitions (exactly like the drift
     // partials below): a crash between the keys append and the state
     // append would otherwise leave keys for partitions that are pending
     // again, and the retry would flag every one of their rows as a
-    // cross-run duplicate. State is the commit point; anything in the
-    // side stores beyond it is ignored. Broadcast semi-join rather than
-    // an isin literal list: at 10^5+ partitions the literal would bloat
-    // the plan (the scan filter keeps isin because partition pruning
-    // needs compile-time literals).
+    // cross-run duplicate. Broadcast semi-join rather than an isin literal
+    // list: at 10^5+ partitions the literal would bloat the plan (the scan
+    // filter keeps isin because partition pruning needs compile-time
+    // literals).
     val doneDf = done.toSeq.toDF("part")
-    val oldKeys = readKeys(spark, s"$outDir/keys")
+    val keys = readKeys(spark, s"$outDir/keys")
       .join(broadcast(doneDf), Seq("part"), "left_semi")
     // Migrate the violations store to a uniform schema BEFORE any frame
     // reads it (the prior-orphan dedup below scans it; its file listing is
@@ -617,31 +406,67 @@ object ImageSuite {
     // blocks, so the read happens exactly once, now. Executor-local
     // storage (not the driver): the orphan set is O(orphan captions),
     // which at 10^12 rows is too large to collect.
-    val priorOrphans =
+    val orphans =
       if (pathExists(spark, s"$outDir/violations"))
         spark.read.parquet(s"$outDir/violations")
           .filter(col("check") === "referential_image_exists")
           .select("part", "image_id").distinct()
           .localCheckpoint()
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("part", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("image_id", org.apache.spark.sql.types.StringType))))
-    val (kVerd, kViol) =
-      incrementalKeyChecks(lightNew, oldKeys, captions, runId, doneDf, priorOrphans)
+      else emptyStore(spark, OrphansSchema)
+    // The `done` membership filter is a closure over the done-set (fine to
+    // ~10^5 parts; beyond that, broadcast-semi-join like the keys above).
+    val partials = Drift.readPartialsDS(spark, s"$outDir/drift_partials")
+      .filter(p => done.contains(p.part))
+    Prior(doneDf, keys, orphans, partials)
+  }
+
+  /** Key-check and drift output of one increment. `freshPds` are the
+    * pending partitions' drift partials, persisted: the commit stores them,
+    * then releases them. `dVerd`/`dViol` may be cached by the distributed
+    * finalize; [[release]] frees them once written.
+    */
+  private case class KeyDrift(kVerd: DataFrame, kViol: DataFrame,
+                              dVerd: DataFrame, dViol: DataFrame,
+                              freshPds: Dataset[Drift.DriftPartial]) {
+    def release(): Unit = { dVerd.unpersist(); dViol.unpersist() }
+  }
+
+  /** Key checks and drift of a pending light frame against a prior state —
+    * the one engine path of [[run]], [[runAndCheckpoint]] and
+    * [[lightIncrement]].
+    */
+  private def keyDrift(lightNew: DataFrame, captions: DataFrame, prior: Prior,
+                       runId: String): KeyDrift = {
+    val (kVerd, kViol) = incrementalKeyChecks(lightNew, prior.keys, captions, runId,
+      prior.doneDf, prior.orphans)
     // Drift partials stay DISTRIBUTED end-to-end: fresh partials from the
     // pending scan union the persisted partials of done partitions (parts
     // are disjoint, both sides pre-reduced per key), and verdictsAuto
     // finalizes driver-side below 10^5 partials, in executors beyond —
-    // nothing funnels through the driver at 10^6-partition scale. The
-    // `done` membership filter is a closure over the done-set (fine to
-    // ~10^5 parts; beyond that, broadcast-semi-join like oldKeys above).
-    val doneSet = done
+    // nothing funnels through the driver at 10^6-partition scale.
     val freshPds = Drift.partials(lightNew).persist()
-    val storedPds = Drift.readPartialsDS(spark, s"$outDir/drift_partials")
-      .filter(p => doneSet.contains(p.part))
-    val (dVerd, dViol) = Drift.verdictsAuto(spark, storedPds.union(freshPds), runId)
-    (kVerd, kViol, dVerd, dViol, freshPds)
+    val (dVerd, dViol) =
+      Drift.verdictsAuto(lightNew.sparkSession, prior.partials.union(freshPds), runId)
+    KeyDrift(kVerd, kViol, dVerd, dViol, freshPds)
+  }
+
+  private def scored(verdicts: DataFrame): DataFrame =
+    verdicts.withColumn("score",
+      Scoring.verdictScore(col("check"), col("metric"), col("threshold")))
+
+  /** Every check family over one increment: the row, coverage and quality
+    * families from the decoded pending facts, plus its key and drift
+    * output. Returns (scored verdicts, violations); every verdict carries a
+    * graded score (V1), and Scoring.overallScores composes them (V8).
+    */
+  private def allFamilies(facts: DataFrame, kd: KeyDrift, runId: String)
+      : (DataFrame, DataFrame) = {
+    val rv = rowViolations(facts)
+    val verdicts = rowVerdicts(facts, rv, runId)
+      .unionByName(coverageVerdicts(facts, runId))
+      .unionByName(Scoring.qualityVerdicts(facts, runId))
+      .unionByName(kd.kVerd).unionByName(kd.dVerd)
+    (scored(verdicts), rv.unionByName(kd.kViol).unionByName(kd.dViol))
   }
 
   /** Shared commit-protocol tail of [[runAndCheckpoint]] and
@@ -661,37 +486,25 @@ object ImageSuite {
       freshPds: Dataset[Drift.DriftPartial])(
       afterViolations: => Unit, beforeState: => Unit): Unit = {
     import spark.implicits._
-    phase("write_verdicts") {
-      verdicts.write.mode(SaveMode.Append).parquet(s"$outDir/verdicts")
-    }
-    phase("write_violations") {
-      violations.withColumn("run_id", lit(runId))
-        .write.mode(SaveMode.Append).parquet(s"$outDir/violations")
-      markRunIdUniform(spark, s"$outDir/violations")
-    }
+    verdicts.write.mode(SaveMode.Append).parquet(s"$outDir/verdicts")
+    violations.withColumn("run_id", lit(runId))
+      .write.mode(SaveMode.Append).parquet(s"$outDir/violations")
+    markRunIdUniform(spark, s"$outDir/violations")
     afterViolations
-    val stateRows: Seq[StateRow] = phase("state_rows") {
-      verdicts
-        .join(lightNew.select("part").distinct(), Seq("part"), "left_semi")
-        .groupBy("part").agg(
-          sum(col("n_violations")).as("nv"), max(col("n_rows")).as("nr"))
-        .select(col("part"), lit("done").as("status"), col("nr").as("n_rows"),
-          col("nv").as("n_violations"), lit(runId).as("run_id"),
-          lit(System.currentTimeMillis()).as("finished_at"))
-        .as[StateRow].collect().toSeq
-    }
-    phase("write_keys") {
-      PartitionedStore.write(lightNew.select("image_id", "part"), s"$outDir/keys")
-    }
-    phase("write_drift") {
-      Drift.writePartialsDS(freshPds, s"$outDir/drift_partials")
-    }
+    val stateRows: Seq[StateRow] = verdicts
+      .join(lightNew.select("part").distinct(), Seq("part"), "left_semi")
+      .groupBy("part").agg(
+        sum(col("n_violations")).as("nv"), max(col("n_rows")).as("nr"))
+      .select(col("part"), lit("done").as("status"), col("nr").as("n_rows"),
+        col("nv").as("n_violations"), lit(runId).as("run_id"),
+        lit(System.currentTimeMillis()).as("finished_at"))
+      .as[StateRow].collect().toSeq
+    PartitionedStore.write(lightNew.select("image_id", "part"), s"$outDir/keys")
+    Drift.writePartialsDS(freshPds, s"$outDir/drift_partials")
     freshPds.unpersist()
     beforeState
-    phase("write_state") {
-      spark.createDataset(stateRows).toDF()
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/state")
-    }
+    spark.createDataset(stateRows).toDF()
+      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/state")
   }
 
   /** Light-projection increment — the full resumable key-check + drift
@@ -715,24 +528,18 @@ object ImageSuite {
     // batch (no partition discovery to feed compile-time literals — the
     // only reason the batch scan keeps isin), and a 10^5-element INSET
     // per batch would bloat every micro-batch plan
-    val doneDf = done.toSeq.toDF("part")
     val lightNew = (if (done.isEmpty) lightNew0
-      else lightNew0.join(broadcast(doneDf), Seq("part"), "left_anti")).cache()
+      else lightNew0.join(broadcast(done.toSeq.toDF("part")), Seq("part"), "left_anti")).cache()
     if (lightNew.isEmpty) { lightNew.unpersist(); return }
-    val (kVerd, kViol, dVerd, dViol, freshPds) =
-      keyDriftIncrement(spark, lightNew, captions, outDir, runId, done)
+    val kd = keyDrift(lightNew, captions, readPrior(spark, outDir, done), runId)
     val batchParts = lightNew.select("part").distinct()
-    val verdicts = kVerd
-      .unionByName(dVerd.join(batchParts, Seq("part"), "left_semi"))
-      .withColumn("score",
-        Scoring.verdictScore(col("check"), col("metric"), col("threshold")))
+    val verdicts = scored(kd.kVerd
+      .unionByName(kd.dVerd.join(batchParts, Seq("part"), "left_semi")))
       .persist()
-    val violations = kViol
-      .unionByName(dViol.join(batchParts, Seq("part"), "left_semi"))
-    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew, freshPds)((), ())
-    // release the drift frames the distributed finalize may have cached
-    // (no-op when the driver-side path built them)
-    dVerd.unpersist(); dViol.unpersist()
+    val violations = kd.kViol
+      .unionByName(kd.dViol.join(batchParts, Seq("part"), "left_semi"))
+    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew, kd.freshPds)((), ())
+    kd.release()
     lightNew.unpersist(); verdicts.unpersist()
   }
 
@@ -752,10 +559,9 @@ object ImageSuite {
   def runAndCheckpoint(spark: SparkSession, dataDir: String, outDir: String,
                        runId: String): Unit = {
     import spark.implicits._
-    val stateDir = s"$outDir/state"
     val images = ImageGen.images(spark, dataDir)
     val captions = ImageGen.captions(spark, dataDir)
-    val done: Set[String] = readDoneParts(spark, stateDir)
+    val done: Set[String] = readDoneParts(spark, s"$outDir/state")
     // Partition-pruned scan via a NOT-isin literal over the done set.
     // Scale notes (measured): >10 elements converts to a hashed INSET,
     // evaluated ONCE driver-side during partition discovery (never shipped
@@ -770,7 +576,7 @@ object ImageSuite {
       else images.filter(!col("part").isin(done.toSeq: _*))
 
     val facts = decodeFactsExpr(pending).cache()
-    val lightNew = pending.select("image_id", "part", "w", "h", "caption").cache()
+    val lightNew = pending.select(LightCols.map(col): _*).cache()
     if (lightNew.isEmpty) {
       // idempotent no-op rerun: everything is done — appending the drift
       // verdicts recomputed from stored partials again would grow the
@@ -779,25 +585,15 @@ object ImageSuite {
       return
     }
 
-    val rv = rowViolations(facts)
-    val rVerd = rowVerdicts(facts, rv, runId)
-    val cVerd = coverageVerdicts(facts, runId)
-    val qVerd = Scoring.qualityVerdicts(facts, runId)
-    val (kVerd, kViol, dVerd, dViol, freshPds) =
-      keyDriftIncrement(spark, lightNew, captions, outDir, runId, done)
-    val doneDf = done.toSeq.toDF("part") // HLL store filter below
-
+    val prior = readPrior(spark, outDir, done)
+    val kd = keyDrift(lightNew, captions, prior, runId)
+    val (allVerdicts, violations) = allFamilies(facts, kd, runId)
     // persisted: the frame is tiny (one row per partition × check) but its
     // lineage is the whole engine — the verdicts write AND the state-row
     // aggregation below both consume it, and without the persist the
     // second action re-executes every check family (measured: ~10% of the
     // run wall at 4 cores)
-    val verdicts = rVerd.unionByName(cVerd).unionByName(qVerd)
-      .unionByName(kVerd).unionByName(dVerd)
-      .withColumn("score",
-        Scoring.verdictScore(col("check"), col("metric"), col("threshold")))
-      .persist()
-    val violations = rv.unionByName(kViol).unionByName(dViol)
+    val verdicts = allVerdicts.persist()
 
     // Cross-run NDV(image_id) from mergeable HLL sketches (DataSketches HLL
     // via the builtin hll_* functions): one sketch per pending partition is
@@ -811,12 +607,10 @@ object ImageSuite {
     val freshHll = lightNew.groupBy("part")
       .agg(hll_sketch_agg(col("image_id")).as("sketch")).persist()
     val storedHll = readHll(spark, s"$outDir/hll")
-      .join(broadcast(doneDf), Seq("part"), "left_semi")
-    val ndvImageId: Long = phase("ndv_hll") {
-      freshHll.select("sketch", "part").unionByName(storedHll)
-        .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("ndv"))
-        .collect()(0).getLong(0)
-    }
+      .join(broadcast(prior.doneDf), Seq("part"), "left_semi")
+    val ndvImageId: Long = freshHll.select("sketch", "part").unionByName(storedHll)
+      .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("ndv"))
+      .collect()(0).getLong(0)
 
     // Commit through the shared protocol (see commitIncrement): metrics
     // ride the afterViolations slot, the HLL store overwrite the
@@ -827,20 +621,17 @@ object ImageSuite {
     // (doubling that partition's histogram on merge) — the output tables
     // stay append-only (at-least-once on crash, exactly-once per
     // successful run; the state table is the commit point).
-    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew, freshPds)(
-      afterViolations = phase("write_metrics") {
+    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew, kd.freshPds)(
+      afterViolations =
         metricsOf(facts, runId)
           .unionByName(spark.createDataset(Seq(
             MetricRow("_global", "ndv_image_id_hll", ndvImageId.toDouble, runId))).toDF())
-          .write.mode(SaveMode.Append).parquet(s"$outDir/metrics")
-      },
+          .write.mode(SaveMode.Append).parquet(s"$outDir/metrics"),
       beforeState = {
-        phase("write_hll") { PartitionedStore.write(freshHll, s"$outDir/hll") }
+        PartitionedStore.write(freshHll, s"$outDir/hll")
         freshHll.unpersist()
       })
-    // release the drift frames the distributed finalize may have cached
-    // (no-op when the driver-side path built them)
-    dVerd.unpersist(); dViol.unpersist()
+    kd.release()
     facts.unpersist(); lightNew.unpersist(); verdicts.unpersist()
   }
 

@@ -231,8 +231,9 @@ object ImageSuiteQueries {
 
     // Key-check verdict family (uniqueness, referential both ways,
     // caption consistency) over the persisted light+captions bridge —
-    // the production fused full-outer-join path (ImageSuite.keyChecks),
-    // DuckDB recomputing the same four verdicts from the same parquet.
+    // the production key-check kernel over an empty key index
+    // (ImageSuite.keyChecks), DuckDB recomputing the same four verdicts
+    // from the same parquet.
     "q_i_keychecks" -> ((s, dir) => {
       val (light, caps) = ensureKeyTables(s, dir)
       ImageSuite.keyChecks(light, caps, "verify")._1.orderBy("part", "check")
@@ -385,8 +386,8 @@ object ImageSuiteQueries {
     // Typed violation ROWS (issues[] twin, validation_agent.py:600-650)
     // from the oracle-able families: every row-invariant violation over the
     // persisted facts bridge plus every key-check violation (uniqueness,
-    // referential both ways, caption consistency — the production fused
-    // full-outer-join path) over the light+captions bridge, with DuckDB
+    // referential both ways, caption consistency — the production
+    // key-check kernel) over the light+captions bridge, with DuckDB
     // recomputing the same rows INCLUDING the observed/expected strings.
     // Converts the r4 rows-only qi_violations: only drift violations
     // (sketch-derived) stay outside — their verdicts are covered by

@@ -21,18 +21,3 @@ case class StateRow(part: String, status: String, n_rows: Long,
                     n_violations: Long, run_id: String, finished_at: Long)
 
 case class MetricRow(part: String, metric: String, value: Double, run_id: String)
-
-/** Per-row derived facts from the decode stage — computed once per row in
-  * the scan stage, `bytes` dropped immediately after so binary payloads
-  * never cross a shuffle (SURVEY.md §7.4).
-  */
-case class DecodedFacts(
-  image_id: String, part: String, fmt: String, caption: String,
-  w: Int, h: Int, phash: Long,
-  has_bytes: Boolean, n_bytes: Long,
-  decode_ok: Boolean, dec_w: Int, dec_h: Int,
-  psnr_db: Double,       // vs id-derived ground truth; NaN when undecodable
-  phash_rec: Long,       // recomputed pHash; 0 when undecodable
-  phash_hamming: Int,    // vs asserted phash; -1 when undecodable
-  fmt_sniffed: String,   // magic bytes; "none" when unknown
-  caption_expected: String) // id-derived; for bit-for-bit caption equality

@@ -30,29 +30,6 @@ object Scoring {
       .when(metric <= thr * 2.0, 0.6)
       .otherwise(0.2)
 
-  /** Scala twin of [[driftScore]] for driver-side drift verdicts. */
-  def driftScoreScala(metric: Double, thr: Double): Double =
-    if (metric <= thr * 0.5) 1.0
-    else if (metric <= thr) 0.8
-    else if (metric <= thr * 2.0) 0.6
-    else 0.2
-
-  /** Per-row PSNR plausibility ladder (the elevation-difference bucket
-    * shape, validation_agent.py:742-750, over the PSNR≥40dB invariant).
-    */
-  def psnrScore(psnrDb: Column): Column =
-    when(psnrDb >= 45.0, 1.0)
-      .when(psnrDb >= ImageSuite.PsnrThresholdDb, 0.8)
-      .when(psnrDb >= 30.0, 0.6)
-      .otherwise(0.2)
-
-  /** Per-row perceptual-hash consistency ladder. */
-  def hammingScore(hamming: Column): Column =
-    when(hamming === 0, 1.0)
-      .when(hamming <= 4, 0.8)
-      .when(hamming <= ImageSuite.PhashHammingMax, 0.6)
-      .otherwise(0.2)
-
   /** The minimum graded score counted as acceptable quality. */
   val QualityPassMin = 0.6
 

@@ -17,16 +17,13 @@ import org.apache.spark.sql.functions._
   * the table on a handful of reducer partitions.
   *
   * What the engine does about it (SkewStressSpec asserts all three):
-  *  - the INCREMENTAL key-check join (left-outer on image_id) is
-  *    AQE-skew-splittable — with realistic thresholds the hot partitions
-  *    split and the plan shows `skewed`;
-  *  - the FUSED full-outer key-check join is NOT splittable (Spark's
-  *    OptimizeSkewedJoin cannot split either side of a FullOuter — a
-  *    split would duplicate the unmatched-row padding), so its defense is
-  *    the aggregate-before-join shape: the window count and the
-  *    per-(part, check) verdicts aggregate BEFORE any row explosion, and
-  *    hot keys join against ONE caption row each, so no multiplicity
-  *    blowup exists to amplify the skew;
+  *  - the key-check kernel's joins (left-outer on image_id against the
+  *    key index, anti joins against the captions) are AQE-skew-splittable
+  *    — with realistic thresholds the hot partitions split and the plan
+  *    shows `skewed` (a full-outer join could not be split: Spark's
+  *    OptimizeSkewedJoin splits neither side of a FullOuter);
+  *  - the kernel over an EMPTY key index (a full check) still counts
+  *    every hot duplicate correctly;
   *  - end-to-end runAndCheckpoint wall time on the skewed tier stays
   *    within 2× of the uniform tier at equal row count.
   */

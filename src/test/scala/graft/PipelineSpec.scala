@@ -52,27 +52,43 @@ class PipelineSpec extends SparkTestBase {
     // EXTRA full re-scans of the corpus). Counted via
     // QueryExecutionListener, scoped to plans carrying this pipeline's
     // CollectMetrics("ingest") node.
+    // Listener events arrive asynchronously, in posting order, on one bus
+    // queue. A marker query run before and after the curate fences the
+    // count window: counts still queued from earlier tests (on `curated`,
+    // which carries the same node) land before the first fence, and every
+    // count of this curate lands before the second.
     import org.apache.spark.sql.util.QueryExecutionListener
     import org.apache.spark.sql.execution.QueryExecution
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val fencesSeen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fenceCol = "pipeline_spec_count_fence"
     val l = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = {
-        val isOurs = qe.analyzed.collect {
-          case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
-            if c.name == "ingest" => c
-        }.nonEmpty
-        if (funcName == "count" && isOurs) counter.incrementAndGet()
+        if (qe.analyzed.output.exists(_.name == fenceCol)) fencesSeen.incrementAndGet()
+        else {
+          val isOurs = qe.analyzed.collect {
+            case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+              if c.name == "ingest" => c
+          }.nonEmpty
+          if (armed.get() && funcName == "count" && isOurs) counter.incrementAndGet()
+        }
       }
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    def fence(n: Int): Unit = {
+      spark.range(1).select(lit(1).as(fenceCol)).collect()
+      val deadline = System.currentTimeMillis() + 120000
+      while (fencesSeen.get() < n && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(fencesSeen.get() >= n, s"listener fence $n was not delivered within 120 s")
+    }
     spark.listenerManager.register(l)
     try {
+      fence(1)
+      armed.set(true)
       Pipeline.curate(spark, sfDir)
-      // listener events are delivered asynchronously
-      val deadline = System.currentTimeMillis() + 15000
-      while (counter.get() < 4 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500) // let any EXTRA count actions surface
+      fence(2)
       assert(counter.get() == 4,
         s"expected 4 count actions (gate, repetition_gate, dedup_exact, dedup_near), got ${counter.get()}")
     } finally spark.listenerManager.unregister(l)

@@ -1,10 +1,62 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.images.ImageGen
+import graft.images.{ImageCodec, ImageGen, Phash}
 import graft.validation.ImageSuite
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+/** Per-row derived facts of the plain-Scala reference decode. */
+case class DecodedFacts(
+  image_id: String, part: String, fmt: String, caption: String,
+  w: Int, h: Int, phash: Long,
+  has_bytes: Boolean, n_bytes: Long,
+  decode_ok: Boolean, dec_w: Int, dec_h: Int,
+  psnr_db: Double,       // vs id-derived ground truth; NaN when undecodable
+  phash_rec: Long,       // recomputed pHash; 0 when undecodable
+  phash_hamming: Int,    // vs asserted phash; -1 when undecodable
+  fmt_sniffed: String,   // magic bytes; "none" when unknown
+  caption_expected: String) // id-derived; for bit-for-bit caption equality
 
 class ImageFactsExprSpec extends SparkTestBase {
+
+  /** Reference decode stage: one Product-encoder pass over rows through
+    * the plain-Scala codec, pHash and ground-truth synthesis — the
+    * semantics `ImageSuite.decodeFactsExpr` must reproduce.
+    */
+  def decodeFacts(spark: SparkSession, images: DataFrame): Dataset[DecodedFacts] = {
+    import spark.implicits._
+    images.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash", "part")
+      .as[(String, Array[Byte], Int, Int, String, String, Long, String)]
+      .mapPartitions { it =>
+        it.map { case (id, bytes, w, h, fmt, caption, phash, part) =>
+          val hasBytes = bytes != null && bytes.nonEmpty
+          val nBytes = if (bytes == null) 0L else bytes.length.toLong
+          val dec = if (hasBytes) ImageCodec.decode(bytes) else None
+          val sniffed = ImageCodec.sniffFormat(bytes).getOrElse("none")
+          // ground truth is id-derived (asserted-vs-inferred): the ordinal
+          // seeds the synthesis, so reference pixels are recomputable.
+          val ord = ImageSuite.idOrdinal(id)
+          dec match {
+            case Some((px, dw, dh)) =>
+              val truth = ImageGen.truthPixels(ord, dw, dh)
+              val p = ImageCodec.psnr(px, truth).getOrElse(Double.NaN)
+              val ph = Phash.phash64(px, dw, dh)
+              DecodedFacts(id, part, fmt, caption, w, h, phash,
+                hasBytes, nBytes, decode_ok = true, dw, dh,
+                psnr_db = p, phash_rec = ph,
+                phash_hamming = Phash.hamming(ph, phash),
+                fmt_sniffed = sniffed,
+                caption_expected = ImageGen.caption(ord))
+            case None =>
+              DecodedFacts(id, part, fmt, caption, w, h, phash,
+                hasBytes, nBytes, decode_ok = false, 0, 0,
+                psnr_db = Double.NaN, phash_rec = 0L, phash_hamming = -1,
+                fmt_sniffed = sniffed,
+                caption_expected = ImageGen.caption(ord))
+          }
+        }
+      }
+  }
 
   test("native image_facts expression ≡ mapPartitions decode stage") {
     val dir = ImageGen.ensure(spark, 2000L, "target/test-images")
@@ -15,7 +67,7 @@ class ImageFactsExprSpec extends SparkTestBase {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.selectExpr(cols :+ "round(psnr_db, 6) as psnr_r": _*)
         .orderBy("image_id", "part").collect().map(_.toString).toSeq
-    val a = canon(ImageSuite.decodeFacts(spark, images).toDF())
+    val a = canon(decodeFacts(spark, images).toDF())
     val b = canon(ImageSuite.decodeFactsExpr(images))
     assert(a.size == b.size && a.size == 2000)
     assert(a == b)

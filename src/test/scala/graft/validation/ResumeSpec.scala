@@ -29,14 +29,35 @@ class ResumeSpec extends SparkTestBase {
     df.filter(col("check") === check).select("image_id")
       .collect().map(_.getString(0)).toSet
 
-  // full-run reference over the intact source data
-  lazy val (fullKeyViol, fullDriftVerd) = {
-    val images = ImageGen.images(spark, srcDir)
-    val light = images.select("image_id", "part", "w", "h", "caption")
-    val (_, kv) = ImageSuite.keyChecks(light, ImageGen.captions(spark, srcDir), "ref")
+  // Uninterrupted-run reference for the key checks, recomputed in plain
+  // Scala from the generator rows — independent of the engine's kernel.
+  lazy val genRows: Seq[ImageGen.GenRow] = (0L until N).map(ImageGen.genRow(_, np))
+  lazy val genCaps: Seq[ImageGen.CapRow] =
+    (0L until N).flatMap(ImageGen.genCaption(_, np)) ++ ImageGen.genOrphans(N, np)
+  lazy val orphanCaps: Seq[ImageGen.CapRow] = {
+    val imgIds = genRows.map(_.image_id).toSet
+    genCaps.filterNot(c => imgIds.contains(c.image_id))
+  }
+  /** check → ids an uninterrupted run over the intact source flags. */
+  lazy val fullKeyViol: Map[String, Set[String]] = {
+    val capsById = genCaps.groupBy(_.image_id)
+    Map(
+      "uniqueness_image_id" ->
+        genRows.groupBy(_.image_id).filter(_._2.size > 1).keySet,
+      "referential_caption_exists" ->
+        genRows.map(_.image_id).filterNot(capsById.contains).toSet,
+      "caption_consistent" -> genRows.filter(r => r.caption != null &&
+          capsById.getOrElse(r.image_id, Nil)
+            .exists(c => c.caption != null && c.caption != r.caption))
+        .map(_.image_id).toSet)
+  }
+
+  // full-run drift reference over the intact source data
+  lazy val fullDriftVerd = {
+    val light = ImageGen.images(spark, srcDir).select("part", "w", "h")
     val (dv, _) = Drift.check(light, "ref")
-    (kv.cache(), dv.collect().map(r => (r.getAs[String]("part"),
-      r.getAs[String]("check"), r.getAs[Double]("metric"), r.getAs[Boolean]("pass"))))
+    dv.collect().map(r => (r.getAs[String]("part"),
+      r.getAs[String]("check"), r.getAs[Double]("metric"), r.getAs[Boolean]("pass")))
   }
 
   lazy val ranBothPhases: Unit = {
@@ -82,7 +103,7 @@ class ResumeSpec extends SparkTestBase {
 
   test("cross-partition duplicates are caught from the key index, not a rescan") {
     val all = runViol("x")
-    val expected = violSet(fullKeyViol, "uniqueness_image_id")
+    val expected = fullKeyViol("uniqueness_image_id")
     val got = violSet(all, "uniqueness_image_id")
     assert(expected.nonEmpty)
     assert(got == expected,
@@ -91,28 +112,23 @@ class ResumeSpec extends SparkTestBase {
 
   test("referential + consistency checks match the uninterrupted run") {
     val all = runViol("x")
-    assert(violSet(all, "referential_caption_exists") ==
-      violSet(fullKeyViol, "referential_caption_exists"))
-    assert(violSet(all, "caption_consistent") ==
-      violSet(fullKeyViol, "caption_consistent"))
+    for (check <- Seq("referential_caption_exists", "caption_consistent")) {
+      val expected = fullKeyViol(check)
+      assert(expected.nonEmpty && violSet(all, check) == expected, check)
+    }
   }
 
   test("orphan captions: store is twin-consistent per run, duplicate-free") {
     val all = runViol("x")
-    // Twin-consistent semantics: each run reports what a full `keyChecks`
-    // over the data PRESENT AT THAT MOMENT would report for not-yet-done
+    // Each run reports what a full `keyChecks` over the data PRESENT AT
+    // THAT MOMENT would report for not-yet-done
     // partitions, and never re-appends a (part, image_id) pair a prior run
     // stored. Run 1's table has first-half images but ALL captions, so
     // every caption whose id is not a first-half image id is an orphan as
     // of run 1 (run_id provenance makes that honest); run 2's fresh check
     // of the second half against the full index finds nothing new.
-    val imageIds = (0L until N).map { i =>
-      val r = ImageGen.genRow(i, np); (r.image_id, r.part)
-    }
-    val firstIds = imageIds.filter(t => firstHalf.contains(t._2)).map(_._1).toSet
-    val capRows = (0L until N).flatMap(i => ImageGen.genCaption(i, np)) ++
-      ImageGen.genOrphans(N, np)
-    val expected = capRows.filterNot(c => firstIds.contains(c.image_id))
+    val firstIds = genRows.filter(r => firstHalf.contains(r.part)).map(_.image_id).toSet
+    val expected = genCaps.filterNot(c => firstIds.contains(c.image_id))
       .map(_.image_id).toSet
     val got = violSet(all, "referential_image_exists")
     assert(expected.nonEmpty && got == expected,
@@ -123,17 +139,16 @@ class ResumeSpec extends SparkTestBase {
       .groupBy("image_id").count().filter(col("count") > 1).count()
     assert(dupRows == 0, s"$dupRows orphan captions reported more than once")
     // VERDICT rows count PRE-dedup candidates: a second-half partition's
-    // run-2 verdict must match the uninterrupted twin's orphan count for
-    // that partition, even though those orphans were stored by run 1
+    // run-2 verdict must match an uninterrupted run's orphan count for
+    // that partition, even though those orphans were stored by run 1 (one
+    // violation per orphan caption ROW)
     val run2Verd = spark.read.parquet(s"$outDir/verdicts")
       .filter(col("run_id") === "run2" && col("check") === "referential_image_exists")
       .collect().map(r => r.getAs[String]("part") -> r.getAs[Long]("n_violations")).toMap
-    val twinCounts = fullKeyViol.filter(col("check") === "referential_image_exists")
-      .groupBy("part").count()
-      .collect().map(r => r.getAs[String]("part") -> r.getAs[Long]("count")).toMap
+    val fullCounts = orphanCaps.groupBy(_.part).map { case (p, cs) => p -> cs.size.toLong }
     for (p <- secondHalf)
-      assert(run2Verd.getOrElse(p, 0L) == twinCounts.getOrElse(p, 0L),
-        s"$p: run2 verdict=${run2Verd.get(p)} twin=${twinCounts.get(p)}")
+      assert(run2Verd.getOrElse(p, 0L) == fullCounts.getOrElse(p, 0L),
+        s"$p: run2 verdict=${run2Verd.get(p)} full run=${fullCounts.get(p)}")
   }
 
   test("caption-only partitions (no image rows ever) are checked, exactly once") {
@@ -235,8 +250,8 @@ class ResumeSpec extends SparkTestBase {
     // without the done-partition filter on the key index, every second-half
     // row would now be a false cross-run duplicate
     val got = violSet(spark.read.parquet(s"$out2/violations"), "uniqueness_image_id")
-    assert(got == violSet(fullKeyViol, "uniqueness_image_id"),
-      s"false duplicates after crash-retry: extra=${got diff violSet(fullKeyViol, "uniqueness_image_id")}")
+    assert(got == fullKeyViol("uniqueness_image_id"),
+      s"false duplicates after crash-retry: extra=${got diff fullKeyViol("uniqueness_image_id")}")
     // and the retry's dynamic overwrite must not leave duplicate key rows
     // (appending would double n_old for these images forever after)
     assert(spark.read.parquet(s"$out2/keys").count() == N,
@@ -255,8 +270,8 @@ class ResumeSpec extends SparkTestBase {
     val firstImgs = ImageGen.images(spark, data3)
       .filter(col("part").isin(firstHalf: _*))
     firstImgs.select("image_id", "part").write.parquet(s"$out3/keys")
-    val partials = Drift.collectPartials(
-      firstImgs.select("image_id", "part", "w", "h", "caption"))
+    val partials = Drift.partials(
+      firstImgs.select("image_id", "part", "w", "h", "caption")).collect()
     spark.createDataset(partials.toSeq)(Encoders.product[Drift.DriftPartial])
       .write.parquet(s"$out3/drift_partials")
     spark.createDataset(firstHalf.map(p => StateRow(p, "done", 0L, 0L, "legacy", 0L)))(
