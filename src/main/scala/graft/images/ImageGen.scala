@@ -1,6 +1,6 @@
 package graft.images
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthesis of the north-rule input: the image+caption table
@@ -315,9 +315,12 @@ object ImageGen {
     dir
   }
 
+  /** The image table under `dir`, read with the [[GenRow]] schema every
+    * writer of the table uses — no footer-inference job per read. */
   def images(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/images")
+    spark.read.schema(Encoders.product[GenRow].schema).parquet(s"$dir/images")
 
+  /** The caption table under `dir`, read with the [[CapRow]] schema. */
   def captions(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/captions")
+    spark.read.schema(Encoders.product[CapRow].schema).parquet(s"$dir/captions")
 }

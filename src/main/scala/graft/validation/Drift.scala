@@ -311,9 +311,10 @@ object Drift {
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       spark.emptyDataset[DriftPartial]
     else
-      // canonical column order: the partitioned layout lists `part` last,
-      // and Dataset.union is positional
-      spark.read.parquet(dir)
+      // declared schema: no footer-inference job per read. Canonical
+      // column order: the partitioned layout lists `part` last, and
+      // Dataset.union is positional
+      spark.read.schema(Encoders.product[DriftPartial].schema).parquet(dir)
         .select("part", "colname", "sketch", "buckets").as[DriftPartial]
   }
 

@@ -1,19 +1,25 @@
 package graft.validation
 
 import graft.images.ImageGen
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The north-rule constraint-validation engine over the image+caption table.
   *
-  * Pipeline shape (designed for 10^12 rows / 1000 executors):
+  * Pipeline shape (designed for 10^12 rows / 1000 executors), one pass per
+  * layer:
   *
   *   scan(images, pruned to pending partitions)           ── no shuffle
   *     → decode stage (image_facts expression)            ── narrow
-  *     → per-row violation array + explode                ── narrow
-  *     → per-partition verdict aggregation                ── 1 shuffle (part)
+  *     → per-partition summary: every row-check count,    ── 1 shuffle (part)
+  *       null and ladder counts, metrics, HLL sketch
+  *     → row/coverage/quality verdicts: one explode of    ── narrow
+  *       the summary; violation rows: one explode of the
+  *       decoded facts
   *   key checks: pending keys vs the stored key index     ── hash joins on
-  *     (left-outer count join, anti joins both ways)         image_id
+  *     (window count + left-outer count join, one left-     image_id,
+  *     outer caption join, orphan anti joins), built once   persisted once
+  *     as flagged candidate rows
   *   drift: per-part sketch partials + stored partials    ── 1 shuffle
   *
   * All byte-derived columns are computed in the scan stage; only small
@@ -71,89 +77,116 @@ object ImageSuite {
         col("f.phash_d4").as("phash_d4"))
   }
 
+  /** One row-invariant check over decoded facts: a row violates it where
+    * `cond` holds, and its violation row carries `observed`/`expected`.
+    */
+  private case class RowCheck(check: String, cond: Column, observed: Column,
+                              expected: String)
+
+  /** The nine row checks, defined once: [[rowViolations]] fans them out
+    * per row, [[partSummary]] counts them per partition.
+    */
+  private val RowChecks: Seq[RowCheck] = Seq(
+    RowCheck("bytes_present", !col("has_bytes"), lit("empty"), "non-empty bytes"),
+    RowCheck("decodable", col("has_bytes") && !col("decode_ok"),
+      concat(lit("undecodable n_bytes="), col("n_bytes")), "decodable image"),
+    RowCheck("dims_positive", col("w") <= 0 || col("h") <= 0,
+      concat(lit("w="), col("w"), lit(" h="), col("h")), "w>0 and h>0"),
+    RowCheck("dims_match_decoded",
+      col("decode_ok") && (col("w") =!= col("dec_w") || col("h") =!= col("dec_h")),
+      concat(lit("asserted="), col("w"), lit("x"), col("h"),
+        lit(" decoded="), col("dec_w"), lit("x"), col("dec_h")),
+      "asserted dims equal decoded dims"),
+    RowCheck("sentinel_row", col("w") === 0 && col("h") === 0 && !col("has_bytes"),
+      lit("w=h=0, empty bytes"), "no sentinel rows"),
+    RowCheck("psnr_allclose",
+      col("decode_ok") && !isnan(col("psnr_db")) && col("psnr_db") < PsnrThresholdDb,
+      round(col("psnr_db"), 2), s"PSNR >= $PsnrThresholdDb dB vs ground truth"),
+    RowCheck("phash_consistent", col("decode_ok") && col("phash_hamming") > PhashHammingMax,
+      col("phash_hamming"), s"hamming(phash, recomputed) <= $PhashHammingMax"),
+    RowCheck("fmt_matches_magic",
+      col("fmt_sniffed") =!= lit("none") && col("fmt") =!= col("fmt_sniffed"),
+      concat(lit("fmt="), col("fmt"), lit(" magic="), col("fmt_sniffed")),
+      "fmt tag equals magic bytes"),
+    RowCheck("caption_equality",
+      col("caption").isNotNull && col("caption") =!= col("caption_expected"),
+      col("caption"), "caption bit-for-bit equal to source"))
+
   /** Row-invariant violation fan-out: one array<struct> per row, exploded —
     * Catalyst-native generator, no UDTF (SURVEY.md §2.10).
     */
   def rowViolations(facts: DataFrame): DataFrame = {
-    def viol(cond: Column, check: String, observed: Column, expected: String): Column =
-      when(cond, struct(lit(check).as("check"),
-        observed.cast("string").as("observed"), lit(expected).as("expected")))
-
-    val entries = array(
-      viol(!col("has_bytes"), "bytes_present", lit("empty"), "non-empty bytes"),
-      viol(col("has_bytes") && !col("decode_ok"), "decodable",
-        concat(lit("undecodable n_bytes="), col("n_bytes")), "decodable image"),
-      viol(col("w") <= 0 || col("h") <= 0, "dims_positive",
-        concat(lit("w="), col("w"), lit(" h="), col("h")), "w>0 and h>0"),
-      viol(col("decode_ok") && (col("w") =!= col("dec_w") || col("h") =!= col("dec_h")),
-        "dims_match_decoded",
-        concat(lit("asserted="), col("w"), lit("x"), col("h"),
-          lit(" decoded="), col("dec_w"), lit("x"), col("dec_h")),
-        "asserted dims equal decoded dims"),
-      viol(col("w") === 0 && col("h") === 0 && !col("has_bytes"), "sentinel_row",
-        lit("w=h=0, empty bytes"), "no sentinel rows"),
-      viol(col("decode_ok") && !isnan(col("psnr_db")) && col("psnr_db") < PsnrThresholdDb,
-        "psnr_allclose", round(col("psnr_db"), 2),
-        s"PSNR >= $PsnrThresholdDb dB vs ground truth"),
-      viol(col("decode_ok") && col("phash_hamming") > PhashHammingMax,
-        "phash_consistent", col("phash_hamming"),
-        s"hamming(phash, recomputed) <= $PhashHammingMax"),
-      viol(col("fmt_sniffed") =!= lit("none") && col("fmt") =!= col("fmt_sniffed"),
-        "fmt_matches_magic",
-        concat(lit("fmt="), col("fmt"), lit(" magic="), col("fmt_sniffed")),
-        "fmt tag equals magic bytes"),
-      viol(col("caption").isNotNull && col("caption") =!= col("caption_expected"),
-        "caption_equality", col("caption"), "caption bit-for-bit equal to source"))
-
+    val entries = array(RowChecks.map(c => when(c.cond, struct(lit(c.check).as("check"),
+      c.observed.cast("string").as("observed"), lit(c.expected).as("expected")))): _*)
     facts
       .withColumn("v", explode(filter(entries, e => e.isNotNull)))
       .select(col("part"), col("image_id"), col("v.check").as("check"),
         col("v.observed").as("observed"), col("v.expected").as("expected"))
   }
 
-  /** Per-(part, check) verdicts for the row-invariant family. */
-  def rowVerdicts(facts: DataFrame, violations: DataFrame, runId: String): DataFrame = {
-    val rowChecks = Seq("bytes_present", "decodable", "dims_positive",
-      "dims_match_decoded", "sentinel_row", "psnr_allclose", "phash_consistent",
-      "fmt_matches_magic", "caption_equality")
-    rateVerdicts(facts, violations.filter(col("check").isin(rowChecks: _*)),
-      rowChecks, runId)
+  private def nViolationsOf(check: String): String = s"nv_$check"
+
+  /** The one per-partition summary of decoded facts: a single `groupBy
+    * part` computing the row count, one violation count per row check, the
+    * two coverage null counts, the quality-ladder counts
+    * ([[Scoring.LadderCounts]]), the lineage metrics and an HLL sketch of
+    * image_id. Every row-family verdict, metric row and sketch-store row is
+    * a projection of it.
+    */
+  private[validation] def partSummary(facts: DataFrame): DataFrame =
+    facts.groupBy("part").agg(count(lit(1)).as("n_rows"),
+      RowChecks.map(c => count_if(c.cond).as(nViolationsOf(c.check))) ++ Seq(
+        count_if(col("caption").isNull).as("null_caption"),
+        count_if(!col("has_bytes")).as("null_bytes")) ++
+      Scoring.LadderCounts ++ Seq(
+        sum("n_bytes").cast("double").as("bytes_total"),
+        avg(when(col("decode_ok"), col("psnr_db"))).as("psnr_mean"),
+        hll_sketch_agg(col("image_id")).as("sketch")): _*)
+
+  /** One verdict entry of a summary row, as [[summaryVerdicts]] explodes it. */
+  private[validation] def verdictEntry(check: String, pass: Column, metric: Column,
+                                       threshold: Double, nViolations: Column): Column =
+    struct(lit(check).as("check"), pass.as("pass"), metric.cast("double").as("metric"),
+      lit(threshold).as("threshold"), nViolations.cast("long").as("n_violations"))
+
+  /** Verdict rows of a [[partSummary]]: one narrow explode of `entries`. */
+  private[validation] def summaryVerdicts(summary: DataFrame, entries: Seq[Column],
+                                          runId: String): DataFrame =
+    summary.select(col("part"), col("n_rows"), explode(array(entries: _*)).as("v"))
+      .select(col("part"), col("v.check").as("check"), col("v.pass").as("pass"),
+        col("v.metric").as("metric"), col("v.threshold").as("threshold"),
+        col("n_rows"), col("v.n_violations").as("n_violations"), lit(runId).as("run_id"))
+
+  private def rate(n: Column): Column = n.cast("double") / col("n_rows").cast("double")
+
+  /** Zero-tolerance verdicts of the row checks: fail on any violation; the
+    * metric is the violation rate.
+    */
+  private val RowEntries: Seq[Column] = RowChecks.map { c =>
+    val nv = col(nViolationsOf(c.check))
+    verdictEntry(c.check, nv === 0, rate(nv), 0.0, nv)
   }
 
-  /** Zero-tolerance verdicts: one row per (part of `rows`, check), failing
-    * when any `violations` row carries that (part, check); the metric is
-    * the violation rate.
+  /** Null-rate verdicts: pass while the null rate stays within [[NullRateMax]]. */
+  private val CoverageEntries: Seq[Column] =
+    Seq("null_caption" -> "null_rate_caption", "null_bytes" -> "null_rate_bytes").map {
+      case (nulls, check) =>
+        verdictEntry(check, rate(col(nulls)) <= NullRateMax, rate(col(nulls)),
+          NullRateMax, col(nulls))
+    }
+
+  /** Per-(part, check) verdicts for the row-invariant family — a projection
+    * of [[partSummary]]. `violations` is NOT read: the counts come from the
+    * same check table [[rowViolations]] fans out. The parameter is kept
+    * only because the benchmark under `perfbench/` compiles against this
+    * signature.
     */
-  private def rateVerdicts(rows: DataFrame, violations: DataFrame,
-                           checks: Seq[String], runId: String): DataFrame = {
-    val parts = rows.groupBy("part").agg(count(lit(1)).as("n_rows"))
-    val checksDf = rows.sparkSession.createDataFrame(checks.map(Tuple1(_))).toDF("check")
-    val vcounts = violations.groupBy("part", "check").agg(count(lit(1)).as("n_violations"))
-    parts.crossJoin(broadcast(checksDf))
-      .join(vcounts, Seq("part", "check"), "left")
-      .na.fill(0L, Seq("n_violations"))
-      .select(col("part"), col("check"),
-        (col("n_violations") === 0).as("pass"),
-        (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-        lit(0.0).as("threshold"),
-        col("n_rows"), col("n_violations"), lit(runId).as("run_id"))
-  }
+  def rowVerdicts(facts: DataFrame, violations: DataFrame, runId: String): DataFrame =
+    summaryVerdicts(partSummary(facts), RowEntries, runId)
 
   /** Null-rate / coverage verdicts per partition (A10 — the core stat). */
-  def coverageVerdicts(facts: DataFrame, runId: String): DataFrame = {
-    val agg = facts.groupBy("part").agg(
-      count(lit(1)).as("n_rows"),
-      sum(when(col("caption").isNull, 1L).otherwise(0L)).as("null_caption"),
-      sum(when(!col("has_bytes"), 1L).otherwise(0L)).as("null_bytes"))
-    def verdict(nullCol: String, check: String) =
-      agg.select(col("part"), lit(check).as("check"),
-        (col(nullCol).cast("double") / col("n_rows").cast("double") <= NullRateMax).as("pass"),
-        (col(nullCol).cast("double") / col("n_rows").cast("double")).as("metric"),
-        lit(NullRateMax).as("threshold"),
-        col("n_rows"), col(nullCol).as("n_violations"), lit(runId).as("run_id"))
-    verdict("null_caption", "null_rate_caption")
-      .unionByName(verdict("null_bytes", "null_rate_bytes"))
-  }
+  def coverageVerdicts(facts: DataFrame, runId: String): DataFrame =
+    summaryVerdicts(partSummary(facts), CoverageEntries, runId)
 
   /** Id-keyed checks over a whole table: [[incrementalKeyChecks]] against
     * an empty key index — the full check is the incremental one started
@@ -168,34 +201,29 @@ object ImageSuite {
     * them.
     */
   def run(spark: SparkSession, dataDir: String, runId: String): (DataFrame, DataFrame, DataFrame) = {
-    val images = ImageGen.images(spark, dataDir)
-    val facts = decodeFactsExpr(images).cache()
-    // Key and drift checks never touch `bytes`: a light projection keeps
-    // their pass down to pruned parquet columns, cached once and shared.
-    val light = images.select(LightCols.map(col): _*).cache()
-    val kd = keyDrift(light, ImageGen.captions(spark, dataDir), emptyPrior(spark), runId)
+    val facts = decodeFactsExpr(ImageGen.images(spark, dataDir)).cache()
+    val summary = partSummary(facts)
+    // key and drift checks read the light columns of the cached facts
+    val kd = keyDrift(facts.select(LightCols.map(col): _*), summary.select("part", "n_rows"),
+      ImageGen.captions(spark, dataDir), emptyPrior(spark), runId)
     // the drift verdicts are final (collected or cached) once built
     kd.freshPds.unpersist()
-    val (verdicts, violations) = allFamilies(facts, kd, runId)
-    (verdicts, violations, metricsOf(facts, runId))
+    val (verdicts, violations) = allFamilies(summary, facts, kd, runId)
+    (verdicts, violations, metricRows(summary, runId))
   }
 
   /** Per-partition lineage metrics (PerformanceTimer twin). */
-  def metricsOf(facts: DataFrame, runId: String): DataFrame = {
-    val spark = facts.sparkSession
-    import spark.implicits._
-    facts.groupBy("part").agg(
-        count(lit(1)).as("nr"),
-        sum("n_bytes").cast("double").as("bytes_total"),
-        avg(when(col("decode_ok"), col("psnr_db"))).as("psnr_mean"))
-      .select(col("part"), col("nr"), col("bytes_total"), col("psnr_mean"))
-      .as[(String, Long, Double, Double)]
-      .flatMap { case (p, nr, bt, pm) => Seq(
-        MetricRow(p, "n_rows", nr.toDouble, runId),
-        MetricRow(p, "bytes_total", bt, runId),
-        MetricRow(p, "psnr_mean", pm, runId))
-      }.toDF()
-  }
+  def metricsOf(facts: DataFrame, runId: String): DataFrame =
+    metricRows(partSummary(facts), runId)
+
+  /** The metric rows of a [[partSummary]]: row count, bytes and mean PSNR. */
+  private def metricRows(summary: DataFrame, runId: String): DataFrame =
+    summary.select(col("part"), explode(array(
+        struct(lit("n_rows").as("metric"), col("n_rows").cast("double").as("value")),
+        struct(lit("bytes_total").as("metric"), col("bytes_total").as("value")),
+        struct(lit("psnr_mean").as("metric"), col("psnr_mean").as("value")))).as("m"))
+      .select(col("part"), col("m.metric").as("metric"), col("m.value").as("value"),
+        lit(runId).as("run_id"))
 
   /** The key-check kernel: uniqueness, referential (both directions) and
     * caption consistency for the PENDING partitions only, against a
@@ -214,22 +242,47 @@ object ImageSuite {
                            captions: DataFrame, runId: String,
                            doneParts: DataFrame = null,
                            priorOrphans: DataFrame = null): (DataFrame, DataFrame) = {
+    val candidates = keyCandidates(lightNew, oldKeys, captions,
+      Option(doneParts).getOrElse(emptyStore(lightNew.sparkSession, "part STRING")),
+      Option(priorOrphans))
+    (keyVerdicts(lightNew.groupBy("part").agg(count(lit(1)).as("n_rows")), candidates, runId),
+      newKeyViolations(candidates))
+  }
+
+  private val KeyChecks = Seq("uniqueness_image_id", "referential_caption_exists",
+    "referential_image_exists", "caption_consistent")
+
+  /** Every key-check violation candidate of an increment, built once: the
+    * violation columns plus `is_new`, false only for orphan captions
+    * `priorOrphans` already holds. The verdicts count all candidates, the
+    * violations keep the new ones ([[newKeyViolations]]).
+    */
+  private def keyCandidates(lightNew: DataFrame, oldKeys: DataFrame, captions: DataFrame,
+                            doneParts: DataFrame,
+                            priorOrphans: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val caps = captions.select(col("image_id").as("cap_id"),
       col("part").as("cap_part"), col("caption").as("cap_caption"))
     val w = Window.partitionBy("image_id")
     val withN = lightNew.withColumn("n_new", count(lit(1)).over(w))
     val oldCount = oldKeys.groupBy("image_id").agg(count(lit(1)).as("n_old"))
-    val j = withN.join(oldCount, Seq("image_id"), "left")
+    val dupViol = withN.join(oldCount, Seq("image_id"), "left")
       .na.fill(0L, Seq("n_old"))
-    val dupViol = j.filter(col("n_new") + col("n_old") > 1)
+      .filter(col("n_new") + col("n_old") > 1)
       .select(col("part"), col("image_id"), lit("uniqueness_image_id").as("check"),
         concat(lit("key seen "), col("n_new") + col("n_old"), lit(" times")).as("observed"),
         lit("unique image_id").as("expected"))
-    val missingCap = lightNew.join(caps,
-        lightNew("image_id") === caps("cap_id"), "left_anti")
-      .select(col("part"), col("image_id"), lit("referential_caption_exists").as("check"),
-        lit("no caption row").as("observed"), lit("caption row exists").as("expected"))
+    // one left-outer caption join yields both the missing-caption rows (no
+    // caption matched) and the mismatch rows (a caption matched and differs)
+    val missing = col("cap_id").isNull
+    val capViol = lightNew.join(caps, lightNew("image_id") === caps("cap_id"), "left")
+      .filter(missing || (col("caption").isNotNull && col("cap_caption").isNotNull &&
+        col("caption") =!= col("cap_caption")))
+      .select(col("part"), col("image_id"),
+        when(missing, lit("referential_caption_exists"))
+          .otherwise(lit("caption_consistent")).as("check"),
+        when(missing, lit("no caption row")).otherwise(col("cap_caption")).as("observed"),
+        when(missing, lit("caption row exists")).otherwise(col("caption")).as("expected"))
     // Orphan captions: no image row anywhere in the table validated so
     // far. SEMANTICS (deliberate, spec-pinned): every run assesses every
     // caption in a NOT-DONE partition against the full current key index
@@ -240,48 +293,55 @@ object ImageSuite {
     // was true of the table its run saw); conversely a caption partition
     // whose images never arrive — one that would otherwise never be
     // validated — is still checked (these partitions never produce a
-    // state row, so they stay not-done and are re-assessed each run). The
-    // `priorOrphans` anti-join keeps that re-assessment from appending one
-    // duplicate copy per run; the VERDICT counts below use the PRE-dedup
-    // candidates, so a partition's verdict row reflects all of its orphans
-    // as of its validation run, not just the newly discovered ones. Done
-    // partitions are never re-checked (their captions were assessed when
-    // they were validated).
-    val donePartsDf = Option(doneParts).getOrElse(
-      emptyStore(lightNew.sparkSession, "part STRING"))
-    val notDoneCapParts = caps.select("cap_part").distinct()
-      .join(broadcast(donePartsDf.withColumnRenamed("part", "cap_part")),
-        Seq("cap_part"), "left_anti")
+    // state row, so they stay not-done and are re-assessed each run).
+    // Candidates `priorOrphans` already holds are flagged not new, which
+    // keeps that re-assessment from appending one duplicate copy per run;
+    // the VERDICT counts use every candidate, so a partition's verdict row
+    // reflects all of its orphans as of its validation run, not just the
+    // newly discovered ones. Done partitions are never re-checked (their
+    // captions were assessed when they were validated).
     val allIds = oldKeys.select("image_id")
       .unionByName(lightNew.select("image_id"))
-    def asOrphanRows(df: DataFrame): DataFrame = df
+    // a caption without a part belongs to no partition a run validates
+    val orphanAll = caps.filter(col("cap_part").isNotNull)
+      .join(broadcast(doneParts.withColumnRenamed("part", "cap_part")),
+        Seq("cap_part"), "left_anti")
+      .join(allIds, caps("cap_id") === allIds("image_id"), "left_anti")
+    def asOrphanRows(df: DataFrame, isNew: Boolean): DataFrame = df
       .select(col("cap_part").as("part"), col("cap_id").as("image_id"),
         lit("referential_image_exists").as("check"),
-        lit("caption without image").as("observed"), lit("image row exists").as("expected"))
-    val orphanAll = caps
-      .join(broadcast(notDoneCapParts), Seq("cap_part"), "left_semi")
-      .join(allIds, caps("cap_id") === allIds("image_id"), "left_anti")
-    val orphanNew = Option(priorOrphans).map(po =>
-      orphanAll.join(po,
-        orphanAll("cap_part") === po("part") &&
-          orphanAll("cap_id") === po("image_id"), "left_anti")
-    ).getOrElse(orphanAll)
-    val mismatch = lightNew.join(caps, lightNew("image_id") === caps("cap_id"))
-      .filter(col("caption").isNotNull && col("cap_caption").isNotNull &&
-        col("caption") =!= col("cap_caption"))
-      .select(col("part"), col("image_id"), lit("caption_consistent").as("check"),
-        col("cap_caption").as("observed"), col("caption").as("expected"))
-    def violationsWith(orphans: DataFrame): DataFrame = dupViol
-      .unionByName(missingCap).unionByName(asOrphanRows(orphans)).unionByName(mismatch)
-    val checks = Seq("uniqueness_image_id", "referential_caption_exists",
-      "referential_image_exists", "caption_consistent")
-    // verdict counts come from the PRE-dedup orphan candidates (see the
-    // orphan comment above): a partition validated this run must count
-    // orphans an earlier run already stored, or its verdict would read
-    // cleaner than an uninterrupted run's
-    (rateVerdicts(lightNew, violationsWith(orphanAll), checks, runId),
-      violationsWith(orphanNew))
+        lit("caption without image").as("observed"), lit("image row exists").as("expected"),
+        lit(isNew).as("is_new"))
+    // semi + anti rather than a flagging left join: a duplicated prior
+    // orphan must not duplicate the candidate the verdicts count
+    val orphans = priorOrphans.map { po =>
+      val seen = orphanAll("cap_part") === po("part") && orphanAll("cap_id") === po("image_id")
+      asOrphanRows(orphanAll.join(po, seen, "left_anti"), isNew = true)
+        .unionByName(asOrphanRows(orphanAll.join(po, seen, "left_semi"), isNew = false))
+    }.getOrElse(asOrphanRows(orphanAll, isNew = true))
+    dupViol.unionByName(capViol).withColumn("is_new", lit(true)).unionByName(orphans)
   }
+
+  /** Zero-tolerance key-check verdicts: one row per (part of `parts`,
+    * check), failing when any candidate carries that (part, check); the
+    * metric is the violation rate. `parts` holds `(part, n_rows)`.
+    */
+  private def keyVerdicts(parts: DataFrame, candidates: DataFrame, runId: String): DataFrame = {
+    val checksDf = parts.sparkSession.createDataFrame(KeyChecks.map(Tuple1(_))).toDF("check")
+    val vcounts = candidates.groupBy("part", "check").agg(count(lit(1)).as("n_violations"))
+    parts.crossJoin(broadcast(checksDf))
+      .join(vcounts, Seq("part", "check"), "left")
+      .na.fill(0L, Seq("n_violations"))
+      .select(col("part"), col("check"),
+        (col("n_violations") === 0).as("pass"),
+        (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
+        lit(0.0).as("threshold"),
+        col("n_rows"), col("n_violations"), lit(runId).as("run_id"))
+  }
+
+  /** The violation rows of the candidates not already stored. */
+  private def newKeyViolations(candidates: DataFrame): DataFrame =
+    candidates.filter(col("is_new")).drop("is_new")
 
   /** True when `dir` exists on the session's filesystem. A genuine read
     * error must PROPAGATE — swallowing it would silently disable
@@ -340,6 +400,7 @@ object ImageSuite {
   private val LightCols = Seq("image_id", "part", "w", "h", "caption")
   private val KeysSchema = "image_id STRING, part STRING"
   private val OrphansSchema = "part STRING, image_id STRING"
+  private val HllSchema = "sketch BINARY, part STRING"
 
   /** An empty frame with a store's schema (DDL) — what a side store reads
     * as before its first write, and the parts of an empty prior state.
@@ -348,14 +409,13 @@ object ImageSuite {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
-  /** Read the per-partition HLL-sketch store (mergeable image_id NDV). */
-  private def readHll(spark: SparkSession, dir: String): DataFrame =
-    if (pathExists(spark, dir)) spark.read.parquet(dir).select("sketch", "part")
-    else emptyStore(spark, "sketch BINARY, part STRING")
-
-  private def readKeys(spark: SparkSession, dir: String): DataFrame =
-    if (pathExists(spark, dir)) spark.read.parquet(dir).select("image_id", "part")
-    else emptyStore(spark, KeysSchema)
+  /** Read one of the engine's own stores with its declared schema — no
+    * footer-inference job per read — or its empty frame before the first
+    * write.
+    */
+  private def readStore(spark: SparkSession, dir: String, ddl: String): DataFrame =
+    if (pathExists(spark, dir)) spark.read.schema(ddl).parquet(dir)
+    else emptyStore(spark, ddl)
 
   /** What a checkpoint already holds, as an increment reads it: the done
     * partitions, the key index and drift partials restricted to them, and
@@ -372,10 +432,10 @@ object ImageSuite {
   }
 
   /** Read the prior state of the checkpoint under `outDir`, given its done
-    * partitions. Side-store content beyond the done set is ignored: state
-    * is the commit point.
+    * partitions `doneDf`. Side-store content beyond the done set is
+    * ignored: state is the commit point.
     */
-  private def readPrior(spark: SparkSession, outDir: String, done: Set[String]): Prior = {
+  private def readPrior(spark: SparkSession, outDir: String, doneDf: DataFrame): Prior = {
     import spark.implicits._
     // Restrict the key index to DONE partitions (exactly like the drift
     // partials below): a crash between the keys append and the state
@@ -385,8 +445,7 @@ object ImageSuite {
     // list: at 10^5+ partitions the literal would bloat the plan (the scan
     // filter keeps isin because partition pruning needs compile-time
     // literals).
-    val doneDf = done.toSeq.toDF("part")
-    val keys = readKeys(spark, s"$outDir/keys")
+    val keys = readStore(spark, s"$outDir/keys", KeysSchema)
       .join(broadcast(doneDf), Seq("part"), "left_semi")
     // Migrate the violations store to a uniform schema BEFORE any frame
     // reads it (the prior-orphan dedup below scans it; its file listing is
@@ -408,37 +467,42 @@ object ImageSuite {
     // which at 10^12 rows is too large to collect.
     val orphans =
       if (pathExists(spark, s"$outDir/violations"))
-        spark.read.parquet(s"$outDir/violations")
+        spark.read.schema(Encoders.product[Violation].schema).parquet(s"$outDir/violations")
           .filter(col("check") === "referential_image_exists")
           .select("part", "image_id").distinct()
           .localCheckpoint()
       else emptyStore(spark, OrphansSchema)
-    // The `done` membership filter is a closure over the done-set (fine to
-    // ~10^5 parts; beyond that, broadcast-semi-join like the keys above).
+    // the same broadcast semi-join as the keys: stored sketches of parts
+    // outside the done set are never decoded
     val partials = Drift.readPartialsDS(spark, s"$outDir/drift_partials")
-      .filter(p => done.contains(p.part))
+      .join(broadcast(doneDf), Seq("part"), "left_semi").as[Drift.DriftPartial]
     Prior(doneDf, keys, orphans, partials)
   }
 
-  /** Key-check and drift output of one increment. `freshPds` are the
-    * pending partitions' drift partials, persisted: the commit stores them,
-    * then releases them. `dVerd`/`dViol` may be cached by the distributed
-    * finalize; [[release]] frees them once written.
+  /** Key-check and drift output of one increment. `candidates` are the
+    * persisted key-check candidates both `kVerd` and `kViol` read;
+    * `freshPds` are the pending partitions' drift partials, persisted: the
+    * commit stores them, then releases them. `dVerd`/`dViol` may be cached
+    * by the distributed finalize; [[release]] frees them and the candidates
+    * once written.
     */
   private case class KeyDrift(kVerd: DataFrame, kViol: DataFrame,
                               dVerd: DataFrame, dViol: DataFrame,
-                              freshPds: Dataset[Drift.DriftPartial]) {
-    def release(): Unit = { dVerd.unpersist(); dViol.unpersist() }
+                              freshPds: Dataset[Drift.DriftPartial],
+                              candidates: DataFrame) {
+    def release(): Unit = { candidates.unpersist(); dVerd.unpersist(); dViol.unpersist() }
   }
 
   /** Key checks and drift of a pending light frame against a prior state —
     * the one engine path of [[run]], [[runAndCheckpoint]] and
-    * [[lightIncrement]].
+    * [[lightIncrement]]. `parts` holds the pending `(part, n_rows)`.
     */
-  private def keyDrift(lightNew: DataFrame, captions: DataFrame, prior: Prior,
-                       runId: String): KeyDrift = {
-    val (kVerd, kViol) = incrementalKeyChecks(lightNew, prior.keys, captions, runId,
-      prior.doneDf, prior.orphans)
+  private def keyDrift(lightNew: DataFrame, parts: DataFrame, captions: DataFrame,
+                       prior: Prior, runId: String): KeyDrift = {
+    // persisted: the verdicts and the violations both read the candidates,
+    // and without it the violations write re-runs every key-check join
+    val candidates = keyCandidates(lightNew, prior.keys, captions, prior.doneDf,
+      Some(prior.orphans)).persist()
     // Drift partials stay DISTRIBUTED end-to-end: fresh partials from the
     // pending scan union the persisted partials of done partitions (parts
     // are disjoint, both sides pre-reduced per key), and verdictsAuto
@@ -447,7 +511,8 @@ object ImageSuite {
     val freshPds = Drift.partials(lightNew).persist()
     val (dVerd, dViol) =
       Drift.verdictsAuto(lightNew.sparkSession, prior.partials.union(freshPds), runId)
-    KeyDrift(kVerd, kViol, dVerd, dViol, freshPds)
+    KeyDrift(keyVerdicts(parts, candidates, runId), newKeyViolations(candidates),
+      dVerd, dViol, freshPds, candidates)
   }
 
   private def scored(verdicts: DataFrame): DataFrame =
@@ -455,18 +520,17 @@ object ImageSuite {
       Scoring.verdictScore(col("check"), col("metric"), col("threshold")))
 
   /** Every check family over one increment: the row, coverage and quality
-    * families from the decoded pending facts, plus its key and drift
+    * verdicts as one explode of the pending partitions' [[partSummary]],
+    * the row violations from the decoded facts, plus the key and drift
     * output. Returns (scored verdicts, violations); every verdict carries a
     * graded score (V1), and Scoring.overallScores composes them (V8).
     */
-  private def allFamilies(facts: DataFrame, kd: KeyDrift, runId: String)
+  private def allFamilies(summary: DataFrame, facts: DataFrame, kd: KeyDrift, runId: String)
       : (DataFrame, DataFrame) = {
-    val rv = rowViolations(facts)
-    val verdicts = rowVerdicts(facts, rv, runId)
-      .unionByName(coverageVerdicts(facts, runId))
-      .unionByName(Scoring.qualityVerdicts(facts, runId))
+    val verdicts = summaryVerdicts(summary,
+        RowEntries ++ CoverageEntries ++ Scoring.QualityEntries, runId)
       .unionByName(kd.kVerd).unionByName(kd.dVerd)
-    (scored(verdicts), rv.unionByName(kd.kViol).unionByName(kd.dViol))
+    (scored(verdicts), rowViolations(facts).unionByName(kd.kViol).unionByName(kd.dViol))
   }
 
   /** Shared commit-protocol tail of [[runAndCheckpoint]] and
@@ -475,14 +539,16 @@ object ImageSuite {
     * rows are materialized to the driver BEFORE the keys overwrite
     * replaces the files their lineage scans, side stores extend via
     * dynamic partition overwrite (idempotent per partition), and the
-    * state write — the commit point — runs LAST. `afterViolations` /
-    * `beforeState` are the slots where the full engine inserts its
-    * metrics and HLL-store legs at the protocol positions they require
-    * (metrics before the state-row collect; the HLL overwrite before the
-    * commit, after the partials it mirrors).
+    * state write — the commit point — runs LAST. The state rows aggregate
+    * the (persisted) verdicts of `parts`, the increment's pending
+    * partitions: drift verdicts also cover done partitions.
+    * `afterViolations` / `beforeState` are the slots where the full engine
+    * inserts its metrics and HLL-store legs at the protocol positions they
+    * require (metrics before the state-row collect; the HLL overwrite
+    * before the commit, after the partials it mirrors).
     */
   private def commitIncrement(spark: SparkSession, outDir: String, runId: String,
-      verdicts: DataFrame, violations: DataFrame, lightNew: DataFrame,
+      verdicts: DataFrame, violations: DataFrame, lightNew: DataFrame, parts: DataFrame,
       freshPds: Dataset[Drift.DriftPartial])(
       afterViolations: => Unit, beforeState: => Unit): Unit = {
     import spark.implicits._
@@ -492,7 +558,7 @@ object ImageSuite {
     markRunIdUniform(spark, s"$outDir/violations")
     afterViolations
     val stateRows: Seq[StateRow] = verdicts
-      .join(lightNew.select("part").distinct(), Seq("part"), "left_semi")
+      .join(parts, Seq("part"), "left_semi")
       .groupBy("part").agg(
         sum(col("n_violations")).as("nv"), max(col("n_rows")).as("nr"))
       .select(col("part"), lit("done").as("status"), col("nr").as("n_rows"),
@@ -524,21 +590,24 @@ object ImageSuite {
                      captions: DataFrame, outDir: String, runId: String): Unit = {
     import spark.implicits._
     val done: Set[String] = readDoneParts(spark, s"$outDir/state")
+    val doneDf = done.toSeq.toDF("part")
     // broadcast anti-join, not an isin literal: this frame is a micro-
     // batch (no partition discovery to feed compile-time literals — the
     // only reason the batch scan keeps isin), and a 10^5-element INSET
     // per batch would bloat every micro-batch plan
     val lightNew = (if (done.isEmpty) lightNew0
-      else lightNew0.join(broadcast(done.toSeq.toDF("part")), Seq("part"), "left_anti")).cache()
+      else lightNew0.join(broadcast(doneDf), Seq("part"), "left_anti")).cache()
     if (lightNew.isEmpty) { lightNew.unpersist(); return }
-    val kd = keyDrift(lightNew, captions, readPrior(spark, outDir, done), runId)
-    val batchParts = lightNew.select("part").distinct()
+    val parts = lightNew.groupBy("part").agg(count(lit(1)).as("n_rows"))
+    val kd = keyDrift(lightNew, parts, captions, readPrior(spark, outDir, doneDf), runId)
+    val batchParts = parts.select("part")
     val verdicts = scored(kd.kVerd
       .unionByName(kd.dVerd.join(batchParts, Seq("part"), "left_semi")))
       .persist()
     val violations = kd.kViol
       .unionByName(kd.dViol.join(batchParts, Seq("part"), "left_semi"))
-    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew, kd.freshPds)((), ())
+    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew, batchParts,
+      kd.freshPds)((), ())
     kd.release()
     lightNew.unpersist(); verdicts.unpersist()
   }
@@ -562,6 +631,7 @@ object ImageSuite {
     val images = ImageGen.images(spark, dataDir)
     val captions = ImageGen.captions(spark, dataDir)
     val done: Set[String] = readDoneParts(spark, s"$outDir/state")
+    val doneDf = done.toSeq.toDF("part")
     // Partition-pruned scan via a NOT-isin literal over the done set.
     // Scale notes (measured): >10 elements converts to a hashed INSET,
     // evaluated ONCE driver-side during partition discovery (never shipped
@@ -575,42 +645,46 @@ object ImageSuite {
     val pending = if (done.isEmpty) images
       else images.filter(!col("part").isin(done.toSeq: _*))
 
+    // cached: the summary and the row-violation fan-out both read the
+    // decoded facts, and the key and drift checks read their light columns
     val facts = decodeFactsExpr(pending).cache()
-    val lightNew = pending.select(LightCols.map(col): _*).cache()
-    if (lightNew.isEmpty) {
+    // persisted: one row per pending partition, read by the verdicts, the
+    // metrics, the HLL store and the state rows
+    val summary = partSummary(facts).persist()
+
+    // Cross-run NDV(image_id) from mergeable HLL sketches (DataSketches HLL
+    // via the builtin hll_* functions): the summary's sketch per pending
+    // partition is merged with the persisted sketches of DONE partitions —
+    // resumed runs get the sketch-accuracy estimate without re-reading a
+    // single done partition (the same resume pattern as the drift t-digest
+    // partials). Estimated EAGERLY (collect) before the store below is
+    // overwritten; the same collect counts the pending partitions.
+    val storedHll = readStore(spark, s"$outDir/hll", HllSchema)
+      .join(broadcast(doneDf), Seq("part"), "left_semi")
+    val hllRow = summary.select(col("sketch"), lit(true).as("fresh"))
+      .unionByName(storedHll.select(col("sketch"), lit(false).as("fresh")))
+      .agg(count_if(col("fresh")),
+        hll_sketch_estimate(hll_union_agg(col("sketch"))))
+      .head()
+    if (hllRow.getLong(0) == 0L) {
       // idempotent no-op rerun: everything is done — appending the drift
       // verdicts recomputed from stored partials again would grow the
       // output tables on every invocation without new information
-      facts.unpersist(); lightNew.unpersist()
+      facts.unpersist(); summary.unpersist()
       return
     }
+    val ndvImageId = hllRow.getLong(1)
 
-    val prior = readPrior(spark, outDir, done)
-    val kd = keyDrift(lightNew, captions, prior, runId)
-    val (allVerdicts, violations) = allFamilies(facts, kd, runId)
+    val lightNew = facts.select(LightCols.map(col): _*)
+    val kd = keyDrift(lightNew, summary.select("part", "n_rows"), captions,
+      readPrior(spark, outDir, doneDf), runId)
+    val (allVerdicts, violations) = allFamilies(summary, facts, kd, runId)
     // persisted: the frame is tiny (one row per partition × check) but its
     // lineage is the whole engine — the verdicts write AND the state-row
     // aggregation below both consume it, and without the persist the
     // second action re-executes every check family (measured: ~10% of the
     // run wall at 4 cores)
     val verdicts = allVerdicts.persist()
-
-    // Cross-run NDV(image_id) from mergeable HLL sketches (DataSketches HLL
-    // via the builtin hll_* functions): one sketch per pending partition is
-    // merged with the persisted sketches of DONE partitions — resumed runs
-    // get the sketch-accuracy estimate without re-reading a single done
-    // partition (the same resume pattern as the drift t-digest partials).
-    // Estimated EAGERLY (collect) before the store below is overwritten.
-    // Persisted: the estimate here and the sketch-store write below would
-    // otherwise each run the full groupBy+sketch pass over the pending
-    // rows (and persist also makes the stored bytes the estimated bytes).
-    val freshHll = lightNew.groupBy("part")
-      .agg(hll_sketch_agg(col("image_id")).as("sketch")).persist()
-    val storedHll = readHll(spark, s"$outDir/hll")
-      .join(broadcast(prior.doneDf), Seq("part"), "left_semi")
-    val ndvImageId: Long = freshHll.select("sketch", "part").unionByName(storedHll)
-      .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("ndv"))
-      .collect()(0).getLong(0)
 
     // Commit through the shared protocol (see commitIncrement): metrics
     // ride the afterViolations slot, the HLL store overwrite the
@@ -621,25 +695,24 @@ object ImageSuite {
     // (doubling that partition's histogram on merge) — the output tables
     // stay append-only (at-least-once on crash, exactly-once per
     // successful run; the state table is the commit point).
-    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew, kd.freshPds)(
+    commitIncrement(spark, outDir, runId, verdicts, violations, lightNew,
+      summary.select("part"), kd.freshPds)(
       afterViolations =
-        metricsOf(facts, runId)
+        metricRows(summary, runId)
           .unionByName(spark.createDataset(Seq(
             MetricRow("_global", "ndv_image_id_hll", ndvImageId.toDouble, runId))).toDF())
           .write.mode(SaveMode.Append).parquet(s"$outDir/metrics"),
-      beforeState = {
-        PartitionedStore.write(freshHll, s"$outDir/hll")
-        freshHll.unpersist()
-      })
+      beforeState = PartitionedStore.write(summary.select("part", "sketch"), s"$outDir/hll"))
     kd.release()
-    facts.unpersist(); lightNew.unpersist(); verdicts.unpersist()
+    facts.unpersist(); summary.unpersist(); verdicts.unpersist()
   }
 
   def readDoneParts(spark: SparkSession, stateDir: String): Set[String] =
     if (!pathExists(spark, stateDir)) Set.empty
     else {
       import spark.implicits._
-      spark.read.parquet(stateDir).filter(col("status") === "done")
+      spark.read.schema(Encoders.product[StateRow].schema).parquet(stateDir)
+        .filter(col("status") === "done")
         .select("part").as[String].collect().toSet
     }
 

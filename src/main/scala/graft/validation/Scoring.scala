@@ -44,50 +44,53 @@ object Scoring {
       .when(check.startsWith("drift_"), driftScore(metric, threshold))
       .otherwise(rateScore(metric))
 
-  /** Per-partition graded-quality verdicts from decoded facts: metric is the
-    * MEAN per-row ladder score (reference scores each record then averages);
-    * rows scoring below [[QualityPassMin]] count as violations. Partitions
-    * with zero decodable rows get the reference's 0.5 "unavailable" score.
+  /** The per-partition ladder counts over decoded facts, as aggregate
+    * columns of ImageSuite's per-partition summary.
     */
-  def qualityVerdicts(facts: DataFrame, runId: String): DataFrame = {
+  private[validation] val LadderCounts: Seq[Column] = {
     val decodable = col("decode_ok")
-    // The mean ladder score is computed from INTEGER bucket counts — mean =
-    // (10·n₁.₀ + 8·n₀.₈ + 6·n₀.₆ + 2·n₀.₂) / (10·n) — algebraically equal to
-    // avg(per-row score) but with a single exact division: the result is
-    // bit-identical at any partition count / merge order (a float `avg`
-    // re-associates across partitions), which makes the verdict both
-    // rerun-deterministic at cluster scale and DuckDB-oracle-reproducible.
-    def cnt(cond: Column) = sum(when(cond, 1L).otherwise(0L))
-    def ladderMean(n: Column, c1: Column, c08: Column, c06: Column) =
-      when(n > 0,
-        (c1 * 10 + c08 * 8 + c06 * 6 + (n - c1 - c08 - c06) * 2).cast("double") /
-          (n * 10).cast("double"))
-        .otherwise(lit(0.5)) // reference's "unavailable" score
     val psnr = col("psnr_db"); val ham = col("phash_hamming")
-    val agg = facts.groupBy("part").agg(
-      count(lit(1)).as("n_rows"),
-      cnt(decodable).as("nd"),
-      cnt(decodable && psnr >= 45.0).as("p1"),
-      cnt(decodable && psnr >= PsnrThr && psnr < 45.0).as("p08"),
-      cnt(decodable && psnr >= 30.0 && psnr < PsnrThr).as("p06"),
-      cnt(decodable && ham >= 0).as("nh"),
-      cnt(decodable && ham === 0).as("h1"),
-      cnt(decodable && ham >= 1 && ham <= 4).as("h08"),
-      cnt(decodable && ham >= 5 && ham <= ImageSuite.PhashHammingMax).as("h06"))
-      .select(col("part"), col("n_rows"),
-        ladderMean(col("nd"), col("p1"), col("p08"), col("p06")).as("psnr_q"),
-        (col("nd") - col("p1") - col("p08") - col("p06")).as("psnr_bad"),
-        ladderMean(col("nh"), col("h1"), col("h08"), col("h06")).as("phash_q"),
-        (col("nh") - col("h1") - col("h08") - col("h06")).as("phash_bad"))
-    def verdict(q: String, bad: String, check: String) =
-      agg.select(col("part"), lit(check).as("check"),
-        (col(q) >= QualityPassMin).as("pass"),
-        col(q).as("metric"), lit(QualityPassMin).as("threshold"),
-        col("n_rows"), col(bad).as("n_violations"))
-    verdict("psnr_q", "psnr_bad", "psnr_quality")
-      .unionByName(verdict("phash_q", "phash_bad", "phash_quality"))
-      .withColumn("run_id", lit(runId))
+    Seq(
+      count_if(decodable).as("nd"),
+      count_if(decodable && psnr >= 45.0).as("p1"),
+      count_if(decodable && psnr >= PsnrThr && psnr < 45.0).as("p08"),
+      count_if(decodable && psnr >= 30.0 && psnr < PsnrThr).as("p06"),
+      count_if(decodable && ham >= 0).as("nh"),
+      count_if(decodable && ham === 0).as("h1"),
+      count_if(decodable && ham >= 1 && ham <= 4).as("h08"),
+      count_if(decodable && ham >= 5 && ham <= ImageSuite.PhashHammingMax).as("h06"))
   }
+
+  /** The two quality verdict entries of a summary row ([[LadderCounts]]):
+    * metric is the MEAN per-row ladder score (reference scores each record
+    * then averages); rows scoring below [[QualityPassMin]] count as
+    * violations. Partitions with zero scorable rows get the reference's
+    * 0.5 "unavailable" score.
+    *
+    * The mean is computed from INTEGER bucket counts — mean =
+    * (10·n₁.₀ + 8·n₀.₈ + 6·n₀.₆ + 2·n₀.₂) / (10·n) — algebraically equal to
+    * avg(per-row score) but with a single exact division: the result is
+    * bit-identical at any partition count / merge order (a float `avg`
+    * re-associates across partitions), which makes the verdict both
+    * rerun-deterministic at cluster scale and DuckDB-oracle-reproducible.
+    */
+  private[validation] val QualityEntries: Seq[Column] = {
+    def entry(check: String, n: Column, c1: Column, c08: Column, c06: Column) = {
+      val bad = n - c1 - c08 - c06
+      val mean = when(n > 0,
+        (c1 * 10 + c08 * 8 + c06 * 6 + bad * 2).cast("double") / (n * 10).cast("double"))
+        .otherwise(lit(0.5)) // reference's "unavailable" score
+      ImageSuite.verdictEntry(check, mean >= QualityPassMin, mean, QualityPassMin, bad)
+    }
+    Seq(entry("psnr_quality", col("nd"), col("p1"), col("p08"), col("p06")),
+      entry("phash_quality", col("nh"), col("h1"), col("h08"), col("h06")))
+  }
+
+  /** Per-partition graded-quality verdicts from decoded facts — a
+    * projection of ImageSuite's per-partition summary ([[QualityEntries]]).
+    */
+  def qualityVerdicts(facts: DataFrame, runId: String): DataFrame =
+    ImageSuite.summaryVerdicts(ImageSuite.partSummary(facts), QualityEntries, runId)
 
   /** V8: per-partition overall score = mean of that partition's sub-scores
     * (all checks emit a score here, so "available" = all; the 0.5 fallback

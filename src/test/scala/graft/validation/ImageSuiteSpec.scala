@@ -154,6 +154,50 @@ class ImageSuiteSpec extends SparkTestBase {
     assert(cleanFailing.size <= 2, s"too many clean parts flagged: $cleanFailing")
   }
 
+  test("metricsOf rows equal a plain-Scala recomputation") {
+    val facts = ImageSuite.decodeFactsExpr(ImageGen.images(spark, dataDir))
+    val got = ImageSuite.metricsOf(facts, "t1").collect()
+      .map(r => (r.getAs[String]("part"), r.getAs[String]("metric")) -> r.getAs[Double]("value"))
+      .toMap
+    // psnr_mean averages the decodable rows' PSNR vs the id-derived truth
+    def psnrOf(r: ImageGen.GenRow): Option[Double] =
+      if (r.bytes == null || r.bytes.isEmpty) None
+      else ImageCodec.decode(r.bytes).map { case (px, dw, dh) =>
+        val truth = ImageGen.truthPixels(ImageSuite.idOrdinal(r.image_id), dw, dh)
+        ImageCodec.psnr(px, truth).getOrElse(Double.NaN)
+      }
+    val parts = rows.groupBy(_.part)
+    assert(got.keySet == parts.keySet.flatMap(p =>
+      Seq("n_rows", "bytes_total", "psnr_mean").map(p -> _)))
+    parts.foreach { case (p, rs) =>
+      assert(got(p -> "n_rows") == rs.size.toDouble, s"$p n_rows")
+      assert(got(p -> "bytes_total") ==
+        rs.map(r => if (r.bytes == null) 0L else r.bytes.length.toLong).sum.toDouble,
+        s"$p bytes_total")
+      val psnrs = rs.flatMap(psnrOf)
+      val exp = psnrs.sum / psnrs.size
+      val g = got(p -> "psnr_mean")
+      assert((g.isNaN && exp.isNaN) || g == exp || math.abs(g - exp) <= 1e-9,
+        s"$p psnr_mean: got $g, expected $exp")
+    }
+  }
+
+  test("rowVerdicts counts exactly the rowViolations rows per (part, check)") {
+    val facts = ImageSuite.decodeFactsExpr(ImageGen.images(spark, dataDir))
+    val fanned = ImageSuite.rowViolations(facts).groupBy("part", "check").count().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val verdicts = ImageSuite.rowVerdicts(facts, ImageSuite.rowViolations(facts), "t1")
+      .select("part", "check", "n_violations", "pass").collect()
+    assert(verdicts.length == rows.map(_.part).toSet.size * 9)
+    assert(fanned.values.sum > 0)
+    verdicts.foreach { r =>
+      val key = (r.getString(0), r.getString(1))
+      assert(r.getLong(2) == fanned.getOrElse(key, 0L), s"$key")
+      assert(r.getBoolean(3) == (r.getLong(2) == 0L), s"$key pass")
+    }
+    assert(fanned.keySet.subsetOf(verdicts.map(r => (r.getString(0), r.getString(1))).toSet))
+  }
+
   test("resume skips completed partitions (no duplicate row-family verdicts)") {
     val out = "target/test-images/ckpt-run"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
