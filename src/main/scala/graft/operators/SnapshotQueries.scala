@@ -129,7 +129,8 @@ object SnapshotQueries {
     * (sum-of-counts, xor-of-xors, sum-of-sums), so the baseline
     * fingerprint table can be maintained incrementally on append — no
     * rescan — exactly like an Iceberg manifest. Spec-proven equal to the
-    * direct computation in StreamingSnapshotSpec. */
+    * direct computation over partials streamed through
+    * [[graft.streaming.PartialFold]] (StreamingSnapshotSpec). */
   def mergeFingerprints(partials: DataFrame): DataFrame =
     partials.groupBy(col("part"))
       .agg(sum(col("n_rows")).as("n_rows"),

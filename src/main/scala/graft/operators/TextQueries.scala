@@ -129,16 +129,27 @@ object TextQueries {
   /** Pass 1: fold ONE mergeable Misra–Gries summary over `words`
     * (bounded state per partition, executor-merged; the driver receives
     * one k-entry blob, never a word list). */
-  def sketchOf(words: DataFrame, k: Int = HeavyHitterK): graft.sketch.MisraGries = {
-    val mgAgg = udaf(new MisraGriesAgg(k))
-    graft.sketch.MisraGries.fromBytes(
-      words.select(mgAgg(col("word"))).head.getAs[Array[Byte]](0))
-  }
+  def sketchOf(words: DataFrame, k: Int = HeavyHitterK): graft.sketch.MisraGries =
+    mergeSketches(sketchPartial(words, k), k)
+
+  /** Pass 1 as a mergeable partial: a one-row frame holding the
+    * serialized Misra–Gries summary of `words` in column `sketch`. */
+  def sketchPartial(words: DataFrame, k: Int = HeavyHitterK): DataFrame =
+    words.select(udaf(new MisraGriesAgg(k)).apply(col("word")).as("sketch"))
+
+  /** Fold any number of [[sketchPartial]] rows with the Agarwal et al.
+    * mergeable combine: error bounds add to ≤ n/(k+1) of the COMBINED
+    * input, so the no-false-negative candidate guarantee holds over all
+    * of them. The collect is bounded by the partial count, not data. */
+  def mergeSketches(partials: DataFrame, k: Int = HeavyHitterK): graft.sketch.MisraGries =
+    partials.select("sketch").collect()
+      .map(r => graft.sketch.MisraGries.fromBytes(r.getAs[Array[Byte]](0)))
+      .foldLeft(new graft.sketch.MisraGries(k))(_.merge(_))
 
   /** Pass 2: exact-count ONLY the sketch's nominated candidates
     * (broadcast isin over ≤k literals) and apply the true threshold —
     * exact output regardless of the sketch's merge-order-dependent
-    * internals. Shared by the batch query and the streaming twin. */
+    * internals. Shared by the batch query and the streamed partials. */
   def confirmHeavyHitters(words: DataFrame, mg: graft.sketch.MisraGries,
                           phi: Double = HeavyHitterPhi): DataFrame = {
     val cand = mg.candidates(phi)

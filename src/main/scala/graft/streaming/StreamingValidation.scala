@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.validation.Verdict
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -14,9 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   - [[windowedCounts]]: watermarked tumbling-window aggregation — the
   *     managed twin of incremental per-batch emission (ST1/ST6);
   *   - [[runningValidation]]: `mapGroupsWithState` per-partition running
-  *     violation counters — custom state the engine checkpoints (ST2/ST3);
-  *   - [[validateStream]]: the constraint predicates applied to a stream
-  *     of image-fact rows via `foreachBatch`-able DataFrame (ST1).
+  *     violation counters — custom state the engine checkpoints (ST2/ST3).
   *
   * All transforms are source-agnostic: tests drive them from
   * MemoryStream; production would use a file/Kafka source with the same
@@ -60,16 +57,6 @@ object StreamingValidation {
           cur
       }
   }
-
-  /** Row-check predicates over a (possibly streaming) image-fact frame:
-    * emits one verdict-ish row per micro-batch partition slice. Pure
-    * column expressions — identical plan for batch and streaming input.
-    */
-  def validateStream(facts: DataFrame): DataFrame =
-    facts.select(col("part"), col("image_id"),
-      (col("w") > 0 && col("h") > 0).as("dims_ok"),
-      col("caption").isNotNull.as("caption_ok"))
-      .withColumn("is_violation", !col("dims_ok") || !col("caption_ok"))
 
   /** Streaming exact dedup — the streaming twin of `q_dedup_exact`:
     * state-store-backed `dropDuplicatesWithinWatermark` on the content

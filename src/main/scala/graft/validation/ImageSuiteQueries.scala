@@ -68,6 +68,46 @@ object ImageSuiteQueries {
   val QgClipMax = 0.02
   val QgBlurRateMax = 0.5
 
+  /** Mergeable gate state: one row per image part (`img_part`) of the
+    * decoded facts — gate counters, an exact DECIMAL sharpness sum and a
+    * running min. Merges by sum/sum/min, so [[gates]] over the partials
+    * of any batches of facts lands the rows it lands over their union. */
+  def gatePartials(facts: DataFrame): DataFrame =
+    facts.filter(col("decode_ok"))
+      .groupBy(col("part").as("img_part"))
+      .agg(
+        count(lit(1L)).as("n"),
+        sum(when(col("sharpness") < QgSharpMin, 1L).otherwise(0L)).as("n_blur"),
+        sum(when(col("brightness") < QgDarkMax, 1L).otherwise(0L)).as("n_dark"),
+        sum(when(col("brightness") > QgBrightMin, 1L).otherwise(0L)).as("n_bright"),
+        sum(when(col("contrast") < QgContrastMin, 1L).otherwise(0L)).as("n_flat"),
+        sum(when(col("clip_lo") > QgClipMax || col("clip_hi") > QgClipMax,
+          1L).otherwise(0L)).as("n_clipped"),
+        sum(col("sharpness").cast("decimal(38,10)")).as("sharp_sum"),
+        min(col("sharpness")).as("sharp_min"))
+
+  /** Per-part gate verdicts from [[gatePartials]] rows. Every verdict is
+    * computed once, from the merged totals; the mean divides the exact
+    * decimal sum, so both engines agree bit-for-bit. */
+  def gates(partials: DataFrame): DataFrame =
+    partials
+      .groupBy(col("img_part").as("part"))
+      .agg(sum("n").as("n"), sum("n_blur").as("n_blur"),
+        sum("n_dark").as("n_dark"), sum("n_bright").as("n_bright"),
+        sum("n_flat").as("n_flat"), sum("n_clipped").as("n_clipped"),
+        sum("sharp_sum").as("sharp_sum"), min("sharp_min").as("sharp_min"))
+      .select(col("part"), col("n"), col("n_blur"), col("n_dark"),
+        col("n_bright"), col("n_flat"), col("n_clipped"),
+        round(col("sharp_sum").cast("double") / col("n").cast("double"), 6)
+          .as("sharpness_mean"),
+        round(col("sharp_min"), 6).as("sharpness_min"))
+      .withColumn("blur_rate",
+        round(col("n_blur").cast("double") / col("n").cast("double"), 6))
+      .withColumn("pass", col("blur_rate") <= QgBlurRateMax &&
+        col("n_dark") === 0L && col("n_bright") === 0L &&
+        col("n_flat") === 0L)
+      .orderBy("part")
+
   private def tierKey(sfDir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s"g${ImageGen.GenVersion}f$FactsVersion:$sfDir".getBytes("UTF-8"))
@@ -281,32 +321,7 @@ object ImageSuiteQueries {
     // curation pre-gates a 100 TB pipeline runs beside integrity checks.
     // The blur gate detects the planted low-quality parts for real
     // (~85% flagged on the degraded parts vs ~11% baseline at sf0.001).
-    // Means use decimal-sum division so both engines agree bit-for-bit.
-    "q_i_quality_gates" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      val f = ensureFacts(s, dir).filter(col("decode_ok"))
-      f.groupBy("part").agg(
-        count(lit(1L)).as("n"),
-        sum(when(col("sharpness") < QgSharpMin, 1L).otherwise(0L))
-          .as("n_blur"),
-        sum(when(col("brightness") < QgDarkMax, 1L).otherwise(0L))
-          .as("n_dark"),
-        sum(when(col("brightness") > QgBrightMin, 1L).otherwise(0L))
-          .as("n_bright"),
-        sum(when(col("contrast") < QgContrastMin, 1L).otherwise(0L))
-          .as("n_flat"),
-        sum(when(col("clip_lo") > QgClipMax || col("clip_hi") > QgClipMax,
-          1L).otherwise(0L)).as("n_clipped"),
-        round(expr("CAST(sum(CAST(sharpness AS DECIMAL(38,10))) AS DOUBLE)")
-          / count(lit(1L)).cast("double"), 6).as("sharpness_mean"),
-        round(min(col("sharpness")), 6).as("sharpness_min"))
-        .withColumn("blur_rate",
-          round(col("n_blur").cast("double") / col("n").cast("double"), 6))
-        .withColumn("pass", col("blur_rate") <= QgBlurRateMax &&
-          col("n_dark") === 0L && col("n_bright") === 0L &&
-          col("n_flat") === 0L)
-        .orderBy("part")
-    }),
+    "q_i_quality_gates" -> ((s, dir) => gates(gatePartials(ensureFacts(s, dir)))),
     // Structural pre-gate audit: per part, how many bytes the container
     // walk (no decode) proves broken, vs the decoder's verdict. The
     // production value is n_pregate_saved (full decodes skipped at 100 TB

@@ -42,7 +42,7 @@ object MaskProfile {
 
   /** ALGEBRAIC partial: per-full-mask counts — the mergeable state of
     * the profile (sum-merge on full_mask), shared by the batch path and
-    * the streaming twin ([[graft.streaming.StreamingMasks]]). */
+    * its streamed form ([[graft.streaming.PartialFold]]). */
   def fullMaskCounts(df: DataFrame, colSql: String): DataFrame =
     df.select(fullMask(expr(colSql)).as("full_mask"))
       .filter(col("full_mask").isNotNull)

@@ -787,35 +787,63 @@ object StatChecks {
   * discipline).
   *
   * Scale shape: one (segment, ts) sort-window for intra-segment gaps +
-  * one groupBy — both shuffle on segment only; state per segment is a
-  * handful of scalars. */
+  * one groupBy to per-segment partials, then a window + groupBy over
+  * those partials — all shuffles on segment only; state per segment is
+  * a handful of scalars, so the same partials stream through
+  * [[graft.streaming.PartialFold]] one micro-batch at a time. */
 object Timeliness {
-
-  import org.apache.spark.sql.expressions.Window
 
   /** Per-segment freshness verdict: staleness vs `nowTs` and the
     * largest intra-segment arrival gap.
     * Output: (segment, n_events, first_ts, last_ts, staleness_hours,
     * max_gap_hours, fresh, no_gaps, pass); single-event segments have
-    * max_gap 0 by definition. */
+    * max_gap 0 by definition. The verdicts of `df` as ONE batch:
+    * [[verdicts]] over its [[partials]]. */
   def freshness(df: DataFrame, tsCol: String, segCol: String, nowTs: String,
-                maxLagHours: Double, maxGapHours: Double): DataFrame = {
+                maxLagHours: Double, maxGapHours: Double): DataFrame =
+    verdicts(partials(df, tsCol, segCol), nowTs, maxLagHours, maxGapHours)
+
+  /** The mergeable state: one row per segment of `df` —
+    * (segment, n_events, min_us, max_us, max_gap_us). */
+  def partials(df: DataFrame, tsCol: String, segCol: String): DataFrame = {
     val ts = col(tsCol).cast("timestamp")
     val base = df.filter(ts.isNotNull)
-      .select(col(segCol).cast("string").as("segment"), ts.as("ts"))
-    val w = Window.partitionBy("segment").orderBy("ts")
-    val gapUs = unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(w))
-    val usPerHour = lit(3600000000.0)
-    val nowUs = unix_micros(lit(nowTs).cast("timestamp"))
-    base.withColumn("_gap_us", gapUs)
+      .select(col(segCol).cast("string").as("segment"),
+        unix_micros(ts).as("us"))
+    val w = Window.partitionBy("segment").orderBy("us")
+    base.withColumn("_gap", col("us") - lag(col("us"), 1).over(w))
       .groupBy("segment").agg(
         count(lit(1L)).as("n_events"),
-        date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss").as("first_ts"),
-        date_format(max(col("ts")), "yyyy-MM-dd HH:mm:ss").as("last_ts"),
-        round((nowUs - unix_micros(max(col("ts")))).cast("double") / usPerHour, 6)
+        min(col("us")).as("min_us"),
+        max(col("us")).as("max_us"),
+        coalesce(max(col("_gap")), lit(0L)).as("max_gap_us"))
+  }
+
+  /** [[freshness]] rows from [[partials]] of any number of batches:
+    * counts and extremes merge per segment, and the silence between one
+    * batch's last event and the next batch's first is a gap too, so a
+    * hole spanning a batch border is still seen.
+    *
+    * Contract: exact when a segment's batch time ranges do not overlap
+    * (in-order append ingestion — the watermark case). Overlapping ranges
+    * would need a re-sort of raw timestamps; run [[freshness]] there. */
+  def verdicts(partials: DataFrame, nowTs: String, maxLagHours: Double,
+               maxGapHours: Double): DataFrame = {
+    val w = Window.partitionBy("segment").orderBy("min_us")
+    val boundary = col("min_us") - lag(col("max_us"), 1).over(w)
+    val usPerHour = lit(3600000000.0)
+    val nowUs = unix_micros(lit(nowTs).cast("timestamp"))
+    partials.withColumn("_bgap", coalesce(boundary, lit(0L)))
+      .groupBy("segment").agg(
+        sum(col("n_events")).as("n_events"),
+        date_format(timestamp_micros(min(col("min_us"))), "yyyy-MM-dd HH:mm:ss")
+          .as("first_ts"),
+        date_format(timestamp_micros(max(col("max_us"))), "yyyy-MM-dd HH:mm:ss")
+          .as("last_ts"),
+        round((nowUs - max(col("max_us"))).cast("double") / usPerHour, 6)
           .as("staleness_hours"),
-        round(coalesce(max(col("_gap_us")), lit(0L)).cast("double") / usPerHour, 6)
-          .as("max_gap_hours"))
+        round(greatest(max(col("max_gap_us")), max(col("_bgap")))
+          .cast("double") / usPerHour, 6).as("max_gap_hours"))
       .withColumn("fresh", col("staleness_hours") <= lit(maxLagHours))
       .withColumn("no_gaps", col("max_gap_hours") <= lit(maxGapHours))
       .withColumn("pass", col("fresh") && col("no_gaps"))
@@ -866,24 +894,33 @@ object Timeliness {
   * predecessor does not — lag-only checks miss nested intervals.
   *
   * Scale shape: one shuffle on key, one sort window within key, then a
-  * per-key aggregation to scalar verdicts — the 10^12-row shape is one
-  * exchange + per-partition sorts, no joins at all. */
+  * per-key aggregation to a partial row, finished by a window + groupBy
+  * over #batches rows per key — the 10^12-row shape is one exchange +
+  * per-partition sorts, no joins at all. The same partials stream
+  * through [[graft.streaming.PartialFold]] one micro-batch at a time. */
 object Intervals {
-
-  import org.apache.spark.sql.expressions.Window
 
   /** Per-key interval-consistency verdicts. All bound columns are
     * BIGINT epoch-microseconds (cross-engine-exact arithmetic; never
-    * interval types). `gapTolUs` — a hole longer than this is a gap
-    * violation; back-to-back intervals (gap 0) are healthy.
+    * interval types). `gapTolUs` (≥ 0) — a hole longer than this is a
+    * gap violation; back-to-back intervals (gap 0) are healthy.
     *
     * Output: (key, n_intervals, n_invalid, n_overlaps, max_overlap_us,
     * n_gaps, max_gap_us, span_from_us, span_to_us, pass), ordered by
     * key. `n_invalid` counts to < from rows (they still participate in
-    * the sweep — corrupt rows must not hide other violations). */
-  def validity(df: org.apache.spark.sql.DataFrame, keySql: String,
-               fromSql: String, toSql: String, idSql: String,
-               gapTolUs: Long): org.apache.spark.sql.DataFrame = {
+    * the sweep — corrupt rows must not hide other violations). The
+    * verdicts of `df` as ONE batch: [[verdicts]] over its [[partials]]. */
+  def validity(df: DataFrame, keySql: String, fromSql: String,
+               toSql: String, idSql: String, gapTolUs: Long): DataFrame =
+    verdicts(partials(df, keySql, fromSql, toSql, idSql, gapTolUs)
+      .withColumn("batch_id", lit(0L)), gapTolUs)
+
+  /** The mergeable state: one row per key of `df` — the sweep's verdict
+    * counters plus the [min_from, max_to] envelope needed to merge
+    * across batch borders. */
+  def partials(df: DataFrame, keySql: String, fromSql: String,
+               toSql: String, idSql: String, gapTolUs: Long): DataFrame = {
+    require(gapTolUs >= 0, s"gapTolUs >= 0, got $gapTolUs")
     val base = df.select(
       expr(keySql).cast("string").as("k"),
       expr(fromSql).cast("long").as("from_us"),
@@ -893,9 +930,8 @@ object Intervals {
         col("to_us").isNotNull)
     val w = Window.partitionBy("k").orderBy("from_us", "to_us", "id")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val prevTo = max(col("to_us")).over(w)
     base
-      .withColumn("_prev_to", prevTo)
+      .withColumn("_prev_to", max(col("to_us")).over(w))
       .withColumn("_overlap_us",
         greatest(lit(0L), col("_prev_to") - col("from_us")))
       .withColumn("_gap_us",
@@ -909,14 +945,61 @@ object Intervals {
         coalesce(max(col("_overlap_us")), lit(0L)).as("max_overlap_us"),
         sum(when(col("_gap_us") > gapTolUs, 1L).otherwise(0L)).as("n_gaps"),
         coalesce(max(col("_gap_us")), lit(0L)).as("max_gap_us"),
-        min(col("from_us")).as("span_from_us"),
-        max(col("to_us")).as("span_to_us"))
+        min(col("from_us")).as("min_from_us"),
+        max(col("to_us")).as("max_to_us"))
+  }
+
+  /** Per-partial boundary frame: carry = running max end of the key's
+    * preceding batches, ordered by (min_from_us, batch_id). */
+  private def withCarry(partials: DataFrame): DataFrame = {
+    val w = Window.partitionBy("k").orderBy("min_from_us", "batch_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    partials.withColumn("_carry", max(col("max_to_us")).over(w))
+  }
+
+  /** [[validity]] rows from [[partials]] of any number of batches (each
+    * row tagged with its `batch_id`, as [[graft.streaming.PartialFold
+    * .stored]] returns them): counters merge per key, and a hole between
+    * a batch's first start and the carry of its predecessors is a gap,
+    * so a hole spanning a batch border is still seen.
+    *
+    * Contract: exact when, per key, each batch's envelope starts at or
+    * after the carry (in-order append ingestion) and rows are valid
+    * (to ≥ from). A batch reaching back over the carry would need its raw
+    * rows to count the overlaps; [[contractViolations]] detects it from
+    * the same partials. */
+  def verdicts(partials: DataFrame, gapTolUs: Long): DataFrame = {
+    require(gapTolUs >= 0, s"gapTolUs >= 0, got $gapTolUs")
+    val bGap = greatest(lit(0L), col("min_from_us") - col("_carry"))
+    withCarry(partials)
+      .withColumn("_bgap", coalesce(bGap, lit(0L)))
+      .groupBy("k").agg(
+        sum(col("n_intervals")).as("n_intervals"),
+        sum(col("n_invalid")).as("n_invalid"),
+        sum(col("n_overlaps")).as("n_overlaps"),
+        max(col("max_overlap_us")).as("max_overlap_us"),
+        (sum(col("n_gaps")) +
+          sum(when(col("_bgap") > gapTolUs, 1L).otherwise(0L))).as("n_gaps"),
+        greatest(max(col("max_gap_us")), max(col("_bgap"))).as("max_gap_us"),
+        min(col("min_from_us")).as("span_from_us"),
+        max(col("max_to_us")).as("span_to_us"))
       .withColumn("pass",
         col("n_invalid") === 0L && col("n_overlaps") === 0L &&
           col("n_gaps") === 0L)
       .withColumnRenamed("k", "key")
       .orderBy("key")
   }
+
+  /** (key, batch_id, reachback_us) of every batch whose envelope reached
+    * back over its carry — out of the [[verdicts]] contract, so those
+    * keys' merged overlap counts are lower bounds: re-run [[validity]]
+    * on them. */
+  def contractViolations(partials: DataFrame): DataFrame =
+    withCarry(partials)
+      .filter(col("_carry").isNotNull && col("_carry") > col("min_from_us"))
+      .select(col("k").as("key"), col("batch_id"),
+        (col("_carry") - col("min_from_us")).as("reachback_us"))
+      .orderBy("key", "batch_id")
 
   /** DuckDB twin of [[validity]] — same sweep-line window, same
     * epoch-microsecond arithmetic, same tie order. */

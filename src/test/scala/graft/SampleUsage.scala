@@ -13,7 +13,7 @@ object SampleUsage {
     import spark.implicits._
 
     // 1. streaming: file-stream windowed counts (public API)
-    val dir = s"target/sample-events-${System.nanoTime()}"
+    val dir = java.nio.file.Files.createTempDirectory("sample-events").toString
     new java.io.File(dir).mkdirs()
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),

@@ -1,14 +1,14 @@
 package graft.streaming
 
 import graft.{SparkTestBase, Tables}
-import graft.validation.{CheckSuite, Complete, InRange, MeanBetween, PartitionedStore, Satisfies, SizeBetween}
+import graft.validation.{CheckSuite, Complete, InRange, MeanBetween, MetricAnomaly, Satisfies, SizeBetween}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
-/** The streaming constraint-suite twin must produce EXACTLY the batch
-  * verdicts over the union of its micro-batches, and its counter store
-  * must be overwrite-idempotent under foreachBatch redelivery. */
+/** Constraint-suite counters streamed through [[PartialFold]] must
+  * finalize to EXACTLY the batch verdicts over the union of the
+  * micro-batches, and the counter store must be overwrite-idempotent
+  * under foreachBatch redelivery. */
 class StreamingChecksSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
@@ -29,13 +29,13 @@ class StreamingChecksSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_checks").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Double, Double, Double, java.sql.Timestamp)]
-    val q = StreamingChecks.run(
+    val q = PartialFold.stream(
       input.toDF().toDF("l_orderkey", "l_quantity", "l_extendedprice",
         "l_discount", "l_shipdate"),
-      suite, s"$tmp/partials", s"$tmp/ckpt")
+      s"$tmp/partials", s"$tmp/ckpt")(suite.partials)
     try {
       batches.foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
-      val got = StreamingChecks.verdicts(spark, suite, s"$tmp/partials")
+      val got = suite.finalizeFrom(PartialFold.stored(spark, s"$tmp/partials"))
         .collect().map(r => (r.getString(0), r.getDouble(1), r.getBoolean(2)))
       val want = suite.run(li).collect()
         .map(r => (r.getString(0), r.getDouble(1), r.getBoolean(2)))
@@ -50,9 +50,10 @@ class StreamingChecksSpec extends SparkTestBase {
         MeanBetween("l_extendedprice", 0.0, 100000.0),
         SizeBetween(1L, 10000000L),
         Satisfies("low_discount", "l_discount <= 0.08", 0.9))).run(li)
-      val streamed = StreamingChecks.anomalies(spark, suite, s"$tmp/partials",
+      val streamed = MetricAnomaly.vs(
+        suite.finalizeFrom(PartialFold.stored(spark, s"$tmp/partials")),
         base, maxAbsDelta = 0.001, maxRelDelta = 0.0).collect()
-      val batchTwin = graft.validation.MetricAnomaly.vs(suite.run(li), base,
+      val batchTwin = MetricAnomaly.vs(suite.run(li), base,
         maxAbsDelta = 0.001, maxRelDelta = 0.0).collect()
       assert(streamed.toSeq == batchTwin.toSeq)
       assert(streamed.exists(r => r.getString(0) == "range_l_quantity" &&
@@ -65,10 +66,9 @@ class StreamingChecksSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_checks_redo").toString
     val s2 = CheckSuite(Seq(InRange("v", 0.0, 10.0, 1.0), SizeBetween(1L, 100L)))
     val batch = Seq(1.0, 2.0, 20.0).toDF("v")
-    def writeOnce(): Unit = PartitionedStore.write(
-      s2.partials(batch).withColumn("part", lit("b0")), s"$tmp/partials")
+    def writeOnce(): Unit = PartialFold.write(s2.partials(batch), s"$tmp/partials", 0L)
     writeOnce(); writeOnce() // simulated at-least-once redelivery
-    val got = StreamingChecks.verdicts(spark, s2, s"$tmp/partials")
+    val got = s2.finalizeFrom(PartialFold.stored(spark, s"$tmp/partials"))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toMap
     assert(got("size") == 3.0, s"redelivery doubled the counters: $got")
     assert(got("range_v") == BigDecimal(2.0 / 3)

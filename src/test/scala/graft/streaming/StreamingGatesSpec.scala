@@ -1,13 +1,13 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.validation.{ImageSuiteQueries, PartitionedStore}
+import graft.validation.ImageSuiteQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
-/** The streaming quality-gate twin must land bit-identical rows to
-  * q_i_quality_gates over the union of its micro-batches (decimal sums
-  * merge exactly), and redelivery must not double the counters. */
+/** Gate partials streamed through [[PartialFold]] must land
+  * bit-identical rows to q_i_quality_gates over the union of the
+  * micro-batches (decimal sums merge exactly), and redelivery must not
+  * double the counters. */
 class StreamingGatesSpec extends SparkTestBase {
 
   private val tier = "/x/sf0.0005"
@@ -23,13 +23,13 @@ class StreamingGatesSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_gates").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Boolean, Double, Double, Double, Double, Double)]
-    val q = StreamingGates.run(
+    val q = PartialFold.stream(
       input.toDF().toDF("part", "decode_ok", "sharpness", "brightness",
         "contrast", "clip_lo", "clip_hi"),
-      s"$tmp/partials", s"$tmp/ckpt")
+      s"$tmp/partials", s"$tmp/ckpt")(ImageSuiteQueries.gatePartials)
     try {
       batches.foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
-      val got = StreamingGates.gates(spark, s"$tmp/partials")
+      val got = ImageSuiteQueries.gates(PartialFold.stored(spark, s"$tmp/partials"))
         .collect().map(_.toString).toSeq
       val want = ImageSuiteQueries.queries("q_i_quality_gates")(spark, tier)
         .collect().map(_.toString).toSeq
@@ -45,11 +45,11 @@ class StreamingGatesSpec extends SparkTestBase {
       ("p0", true, 200.0, 130.0, 40.0, 0.0, 0.0))
       .toDF("part", "decode_ok", "sharpness", "brightness", "contrast",
         "clip_lo", "clip_hi")
-    def writeOnce(): Unit = PartitionedStore.write(
-      StreamingGates.partials(batch).withColumn("part", lit("b0")),
-      s"$tmp/partials")
+    def writeOnce(): Unit = PartialFold.write(
+      ImageSuiteQueries.gatePartials(batch), s"$tmp/partials", 0L)
     writeOnce(); writeOnce()
-    val got = StreamingGates.gates(spark, s"$tmp/partials").collect()
+    val got = ImageSuiteQueries.gates(PartialFold.stored(spark, s"$tmp/partials"))
+      .collect()
     assert(got.length == 1 && got(0).getAs[Long]("n") == 2L,
       s"redelivery doubled the counters: ${got.mkString}")
     assert(got(0).getAs[Long]("n_blur") == 1L)

@@ -1,12 +1,11 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.validation.{Intervals, PartitionedStore}
+import graft.validation.Intervals
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.lit
 
-/** The streaming interval-validity twin must produce EXACTLY the batch
-  * verdicts over the union of its micro-batches — including a timeline
+/** Interval partials streamed through [[PartialFold]] must finish to
+  * EXACTLY the batch verdicts over the union of the micro-batches — including a timeline
   * hole that SPANS a micro-batch boundary — stay overwrite-idempotent
   * under redelivery, and DETECT (not silently absorb) a batch that
   * reaches back over the carry. */
@@ -31,12 +30,11 @@ class StreamingIntervalsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_iv").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long, Long)]
-    val q = StreamingIntervals.run(
-      input.toDF().toDF("k", "f", "t", "id"), "k", "f", "t", "id", tol,
-      s"$tmp/partials", s"$tmp/ckpt")
+    val q = PartialFold.stream(input.toDF().toDF("k", "f", "t", "id"),
+      s"$tmp/partials", s"$tmp/ckpt")(Intervals.partials(_, "k", "f", "t", "id", tol))
     try {
       Seq(b1, b2, b3).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val got = StreamingIntervals.verdicts(spark, s"$tmp/partials", tol)
+      val got = Intervals.verdicts(PartialFold.stored(spark, s"$tmp/partials"), tol)
         .collect()
       val want = Intervals.validity(all.toDF("k", "f", "t", "id"),
         "k", "f", "t", "id", tol).collect()
@@ -47,7 +45,7 @@ class StreamingIntervalsSpec extends SparkTestBase {
       assert(hole.getAs[Long]("max_gap_us") === 4000L)
       assert(!hole.getAs[Boolean]("pass"))
       // in-contract data: no violations detected
-      assert(StreamingIntervals.contractViolations(spark, s"$tmp/partials")
+      assert(Intervals.contractViolations(PartialFold.stored(spark, s"$tmp/partials"))
         .count() === 0L)
       // state is partial-sized
       assert(spark.read.parquet(s"$tmp/partials").count() <= 3L * 4L)
@@ -59,12 +57,10 @@ class StreamingIntervalsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_iv_redo").toString
     val batch = Seq(("a", 0L, 300L, 1L), ("a", 200L, 400L, 2L))
       .toDF("k", "f", "t", "id")
-    def writeOnce(): Unit = PartitionedStore.write(
-      StreamingIntervals.partials(batch, "k", "f", "t", "id", tol)
-        .withColumn("part", lit("b0")),
-      s"$tmp/partials")
+    def writeOnce(): Unit = PartialFold.write(
+      Intervals.partials(batch, "k", "f", "t", "id", tol), s"$tmp/partials", 0L)
     writeOnce(); writeOnce()
-    val got = StreamingIntervals.verdicts(spark, s"$tmp/partials", tol)
+    val got = Intervals.verdicts(PartialFold.stored(spark, s"$tmp/partials"), tol)
       .collect()
     assert(got.length === 1)
     assert(got.head.getAs[Long]("n_intervals") === 2L)
@@ -76,16 +72,30 @@ class StreamingIntervalsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_iv_ooo").toString
     val b0 = Seq(("k", 0L, 1000L, 1L)).toDF("k", "f", "t", "id")
     val b1 = Seq(("k", 500L, 600L, 2L)).toDF("k", "f", "t", "id") // reaches back
-    PartitionedStore.write(
-      StreamingIntervals.partials(b0, "k", "f", "t", "id", tol)
-        .withColumn("part", lit("b0")), s"$tmp/partials")
-    PartitionedStore.write(
-      StreamingIntervals.partials(b1, "k", "f", "t", "id", tol)
-        .withColumn("part", lit("b1")), s"$tmp/partials")
-    val v = StreamingIntervals.contractViolations(spark, s"$tmp/partials")
+    PartialFold.write(
+      Intervals.partials(b0, "k", "f", "t", "id", tol), s"$tmp/partials", 0L)
+    PartialFold.write(
+      Intervals.partials(b1, "k", "f", "t", "id", tol), s"$tmp/partials", 1L)
+    val v = Intervals.contractViolations(PartialFold.stored(spark, s"$tmp/partials"))
       .collect()
     assert(v.length === 1)
     assert(v.head.getAs[String]("key") === "k")
     assert(v.head.getAs[Long]("reachback_us") === 500L)
+  }
+
+  test("the carry orders micro-batches by number: batch 10 follows batch 2") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("stream_iv_order").toString
+    // in contract: batch 10 starts where batch 2 ends. Ordered by the
+    // string key, b10 would sort first and hand b2 a carry of 200 > 100.
+    val b2 = Seq(("k", 100L, 100L, 1L)).toDF("k", "f", "t", "id")
+    val b10 = Seq(("k", 100L, 200L, 2L)).toDF("k", "f", "t", "id")
+    PartialFold.write(
+      Intervals.partials(b2, "k", "f", "t", "id", tol), s"$tmp/partials", 2L)
+    PartialFold.write(
+      Intervals.partials(b10, "k", "f", "t", "id", tol), s"$tmp/partials", 10L)
+    val v = Intervals.contractViolations(PartialFold.stored(spark, s"$tmp/partials"))
+      .collect()
+    assert(v.isEmpty, s"in-contract batches flagged: ${v.mkString}")
   }
 }

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import graft.{LayoutQueries, SparkTestBase, Tables}
-import graft.validation.PartitionedStore
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** The streaming manifest-stats twin must produce EXACTLY the stats a
-  * full rescan would, and its side store must be overwrite-idempotent
-  * under foreachBatch redelivery. */
+/** Zone-stats partials streamed through [[PartialFold]] must merge to
+  * EXACTLY the stats a full rescan would, and the side store must be
+  * overwrite-idempotent under foreachBatch redelivery. */
 class StreamingLayoutSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
@@ -22,9 +21,9 @@ class StreamingLayoutSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_layout").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, Long)]
-    val q = StreamingLayout.run(
+    val q = PartialFold.stream(
       input.toDF().toDF("l_shipdate", "l_partkey"),
-      s"$tmp/stats", s"$tmp/ckpt")
+      s"$tmp/stats", s"$tmp/ckpt")(LayoutQueries.zonePartials)
     try {
       batches.foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
       def canon(df: org.apache.spark.sql.DataFrame) = df
@@ -35,7 +34,8 @@ class StreamingLayoutSpec extends SparkTestBase {
           r.getAs[String]("z_max"), r.getAs[Long]("z_rows"),
           r.getAs[Long]("z_sum_pk")))
         .sortBy(_._1)
-      val got = canon(StreamingLayout.statsToDate(spark, s"$tmp/stats"))
+      val got = canon(LayoutQueries.mergeZonePartials(
+        PartialFold.stored(spark, s"$tmp/stats")))
       val want = canon(LayoutQueries.zonePartials(li))
       assert(got.toSeq == want.toSeq)
       // per-batch manifest rows: ≤ #zones touched by each batch
@@ -51,11 +51,11 @@ class StreamingLayoutSpec extends SparkTestBase {
       (java.sql.Timestamp.valueOf("1997-03-01 00:00:00"), 10L),
       (java.sql.Timestamp.valueOf("1997-03-09 00:00:00"), 30L))
       .toDF("l_shipdate", "l_partkey")
-    def writeOnce(): Unit = PartitionedStore.write(
-      LayoutQueries.zonePartials(batch).withColumn("part", lit("b0")),
-      s"$tmp/stats")
+    def writeOnce(): Unit = PartialFold.write(
+      LayoutQueries.zonePartials(batch), s"$tmp/stats", 0L)
     writeOnce(); writeOnce() // simulated at-least-once redelivery
-    val got = StreamingLayout.statsToDate(spark, s"$tmp/stats").collect()
+    val got = LayoutQueries.mergeZonePartials(
+      PartialFold.stored(spark, s"$tmp/stats")).collect()
     assert(got.length == 1)
     assert(got.head.getAs[Long]("z_rows") == 2L,
       s"redelivery doubled the stats: ${got.mkString}")

@@ -1,15 +1,18 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.validation.{MaskProfile, PartitionedStore}
+import graft.validation.MaskProfile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
-/** The streaming structure-profile twin must produce EXACTLY the ranked
-  * mask profile a batch pass over the union corpus would, surface a new
-  * mask that first appears mid-stream, and stay idempotent under
-  * foreachBatch redelivery. */
+/** Mask partials streamed through [[PartialFold]] must finalize to
+  * EXACTLY the ranked mask profile a batch pass over the union corpus
+  * would, surface a new mask that first appears mid-stream, and stay
+  * idempotent under foreachBatch redelivery. */
 class StreamingMasksSpec extends SparkTestBase {
+
+  private def masksToDate(dir: String) =
+    MaskProfile.fromFullMaskCounts(
+      MaskProfile.mergeFullMaskCounts(PartialFold.stored(spark, dir)), topK = 20)
 
   private def canon(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2),
@@ -23,15 +26,15 @@ class StreamingMasksSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_masks").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
-    val q = StreamingMasks.run(input.toDF().toDF("s"), "s",
-      s"$tmp/masks", s"$tmp/ckpt")
+    val q = PartialFold.stream(input.toDF().toDF("s"),
+      s"$tmp/masks", s"$tmp/ckpt")(MaskProfile.fullMaskCounts(_, "s"))
     try {
       input.addData(b1: _*); q.processAllAvailable()
       input.addData(b2: _*); q.processAllAvailable()
-      val before = canon(StreamingMasks.masksToDate(spark, s"$tmp/masks"))
+      val before = canon(masksToDate(s"$tmp/masks"))
       assert(!before.exists(_._2 == "??!"))
       input.addData(b3: _*); q.processAllAvailable()
-      val got = canon(StreamingMasks.masksToDate(spark, s"$tmp/masks"))
+      val got = canon(masksToDate(s"$tmp/masks"))
       val want = canon(MaskProfile.masks(
         (b1 ++ b2 ++ b3).toDF("s"), "s", topK = 20))
       assert(got == want)
@@ -45,11 +48,10 @@ class StreamingMasksSpec extends SparkTestBase {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("stream_masks_redo").toString
     val batch = Seq("ab12", "cd34").toDF("s")
-    def writeOnce(): Unit = PartitionedStore.write(
-      MaskProfile.fullMaskCounts(batch, "s").withColumn("part", lit("b0")),
-      s"$tmp/masks")
+    def writeOnce(): Unit = PartialFold.write(
+      MaskProfile.fullMaskCounts(batch, "s"), s"$tmp/masks", 0L)
     writeOnce(); writeOnce() // simulated at-least-once redelivery
-    val got = canon(StreamingMasks.masksToDate(spark, s"$tmp/masks"))
+    val got = canon(masksToDate(s"$tmp/masks"))
     assert(got == Seq((1, "a9", 2L, 1L, 1.0, 1.0)))
   }
 }

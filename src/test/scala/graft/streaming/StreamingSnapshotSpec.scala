@@ -1,10 +1,12 @@
 package graft.streaming
 
 import graft.{SnapshotQueries, SparkTestBase}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** The streamed baseline fingerprints must equal a direct recompute over
+/** Baseline fingerprints streamed through [[PartialFold]] must equal a
+  * direct recompute over
   * the union of all micro-batches (merge ≡ rescan for count/xor/sum), and
   * a reconciliation against the streamed baseline must reach the same
   * dirty-partition verdicts as the all-batch query. */
@@ -14,7 +16,15 @@ class StreamingSnapshotSpec extends SparkTestBase {
 
   private type Tup = (Long, Long, String, Double, java.sql.Timestamp, String)
 
-  private def canon(df: org.apache.spark.sql.DataFrame) = df
+  // the store owns `part`, so the fingerprint partition rides as `snap_part`
+  private def fpPartial(batch: DataFrame) =
+    SnapshotQueries.partitionFingerprints(batch).withColumnRenamed("part", "snap_part")
+
+  private def fingerprintsToDate(dir: String) =
+    SnapshotQueries.mergeFingerprints(
+      PartialFold.stored(spark, dir).withColumnRenamed("snap_part", "part"))
+
+  private def canon(df: DataFrame) = df
     .collect()
     .map(r => (r.getAs[String]("part"), r.getAs[Long]("n_rows"),
       r.getAs[Long]("fp_xor"), r.getAs[Long]("fp_sum")))
@@ -32,14 +42,14 @@ class StreamingSnapshotSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_snap").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Tup]
-    val q = StreamingSnapshot.run(
+    val q = PartialFold.stream(
       input.toDF().toDF("o_orderkey", "o_custkey", "o_orderstatus",
           "o_totalprice", "o_orderdate", "o_orderpriority")
         .withColumn("part", date_format(col("o_orderdate"), "yyyy-MM")),
-      s"$tmp/fp", s"$tmp/ckpt")
+      s"$tmp/fp", s"$tmp/ckpt")(fpPartial)
     try {
       batches.foreach { b => input.addData(b.toSeq: _*); q.processAllAvailable() }
-      val got = canon(StreamingSnapshot.fingerprintsToDate(spark, s"$tmp/fp"))
+      val got = canon(fingerprintsToDate(s"$tmp/fp"))
       val want = canon(SnapshotQueries.partitionFingerprints(base))
       assert(got == want)
       assert(got.nonEmpty)
@@ -48,7 +58,7 @@ class StreamingSnapshotSpec extends SparkTestBase {
       // verdicts as against a fresh batch fingerprint pass
       val cur = SnapshotQueries.curSnapshot(spark, dir)
       val fromStream = SnapshotQueries.dirtyPartitions(
-          StreamingSnapshot.fingerprintsToDate(spark, s"$tmp/fp"),
+          fingerprintsToDate(s"$tmp/fp"),
           SnapshotQueries.partitionFingerprints(cur))
         .collect().map(r => r.getAs[String]("part") -> r.getAs[String]("status"))
         .sortBy(_._1).toSeq
@@ -67,13 +77,22 @@ class StreamingSnapshotSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_snap2").toString
     // simulate foreachBatch redelivery: write batch 0 TWICE via the same
     // store discipline, then finalize — counts must not double
-    val p = SnapshotQueries.partitionFingerprints(base)
-      .withColumnRenamed("part", "snap_part")
-      .withColumn("part", lit("b0"))
-    graft.validation.PartitionedStore.write(p, s"$tmp/fp")
-    graft.validation.PartitionedStore.write(p, s"$tmp/fp")
-    val got = canon(StreamingSnapshot.fingerprintsToDate(spark, s"$tmp/fp"))
+    val p = fpPartial(base)
+    PartialFold.write(p, s"$tmp/fp", 0L)
+    PartialFold.write(p, s"$tmp/fp", 0L)
+    val got = canon(fingerprintsToDate(s"$tmp/fp"))
     val want = canon(SnapshotQueries.partitionFingerprints(base))
     assert(got == want)
+  }
+
+  test("a partial that keeps its own part column is rejected, not overwritten") {
+    val base = SnapshotQueries.baseSnapshot(spark, dir)
+      .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
+      .limit(5)
+    val tmp = java.nio.file.Files.createTempDirectory("stream_snap3").toString
+    val e = intercept[IllegalArgumentException](
+      PartialFold.write(SnapshotQueries.partitionFingerprints(base), s"$tmp/fp", 0L))
+    assert(e.getMessage.contains("part"))
+    assert(!new java.io.File(s"$tmp/fp").exists(), "nothing may be written")
   }
 }

@@ -3,8 +3,9 @@ package graft.streaming
 import graft.{SparkTestBase, Tables, TextQueries}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** Streamed Misra–Gries heavy hitters ≡ the batch pass on the union
-  * corpus, including under foreachBatch redelivery. */
+/** Misra–Gries sketch partials streamed through [[PartialFold]] ≡ the
+  * batch heavy-hitter pass on the union corpus, including under
+  * foreachBatch redelivery. */
 class StreamingTextSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
@@ -17,11 +18,12 @@ class StreamingTextSpec extends SparkTestBase {
       .select("doc_id", "text").as[(Long, String)].collect()
     val (b1, b2) = rows.partition(_._1 % 2 == 0)
 
-    val store = s"target/hh-store-${System.nanoTime()}"
-    val ckpt = s"target/hh-ckpt-${System.nanoTime()}"
+    val tmp = java.nio.file.Files.createTempDirectory("stream_hh").toString
+    val store = s"$tmp/store"
+    val ckpt = s"$tmp/ckpt"
     val input = MemoryStream[(Long, String)]
-    val q = StreamingText.heavyHitterStream(
-      input.toDS().toDF("doc_id", "text"), store, ckpt)
+    val q = PartialFold.stream(input.toDS().toDF("doc_id", "text"), store, ckpt)(
+      batch => TextQueries.sketchPartial(TextQueries.wordsOf(batch)))
     input.addData(b1.toSeq)
     q.processAllAvailable()
     input.addData(b2.toSeq)
@@ -32,7 +34,7 @@ class StreamingTextSpec extends SparkTestBase {
     val words = TextQueries.wordsOf(corpus)
 
     // the streamed store must see the whole stream: merged n = token count
-    val merged = StreamingText.mergedSketch(spark, store)
+    val merged = TextQueries.mergeSketches(PartialFold.stored(spark, store))
     assert(merged.n == words.count(), "merged sketch lost stream weight")
 
     // no false negatives across the merge: candidates ⊇ true heavy hitters
@@ -49,14 +51,12 @@ class StreamingTextSpec extends SparkTestBase {
     assert(streamedHh == batchHh)
 
     // at-least-once redelivery: re-summarizing batch 0 and overwriting
-    // its own file (what a redelivered foreachBatch invocation does)
+    // its own partial (what a redelivered foreachBatch invocation does)
     // must not change the confirmed result
-    val redo = TextQueries.sketchOf(TextQueries.wordsOf(
-      spark.createDataset(b1.toSeq).toDF("doc_id", "text"))).toBytes
-    spark.createDataset(Seq(redo)).toDF("sketch")
-      .coalesce(1).write.mode("overwrite").parquet(s"$store/batch=0")
+    PartialFold.write(TextQueries.sketchPartial(TextQueries.wordsOf(
+      spark.createDataset(b1.toSeq).toDF("doc_id", "text"))), store, 0L)
     val afterRedo = TextQueries.confirmHeavyHitters(words,
-      StreamingText.mergedSketch(spark, store))
+      TextQueries.mergeSketches(PartialFold.stored(spark, store)))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(afterRedo == batchHh, "redelivered batch changed the result")
   }

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.validation.{PartitionedStore, Timeliness}
+import graft.validation.Timeliness
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** The streaming freshness twin must produce EXACTLY the batch verdicts
-  * over the union of its micro-batches — including a silence gap that
+/** Freshness partials streamed through [[PartialFold]] must finish to
+  * EXACTLY the batch verdicts over the union of the micro-batches — including a silence gap that
   * SPANS a micro-batch boundary (the case per-batch state alone cannot
   * see), and stay overwrite-idempotent under redelivery. */
 class StreamingTimelinessSpec extends SparkTestBase {
@@ -29,13 +29,12 @@ class StreamingTimelinessSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("stream_fresh").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, java.sql.Timestamp)]
-    val q = StreamingTimeliness.run(
-      input.toDF().toDF("seg", "ts"), "ts", "seg",
-      s"$tmp/partials", s"$tmp/ckpt")
+    val q = PartialFold.stream(input.toDF().toDF("seg", "ts"),
+      s"$tmp/partials", s"$tmp/ckpt")(Timeliness.partials(_, "ts", "seg"))
     try {
       Seq(b1, b2, b3).foreach { b => input.addData(b: _*); q.processAllAvailable() }
-      val got = StreamingTimeliness.verdicts(spark, s"$tmp/partials", now,
-        maxLagHours = 48.0, maxGapHours = 30.0).collect()
+      val got = Timeliness.verdicts(PartialFold.stored(spark, s"$tmp/partials"),
+        now, maxLagHours = 48.0, maxGapHours = 30.0).collect()
       val want = Timeliness.freshness(all.toDF("seg", "ts"), "ts", "seg",
         now, maxLagHours = 48.0, maxGapHours = 30.0).collect()
       assert(got.toSeq == want.toSeq,
@@ -52,13 +51,11 @@ class StreamingTimelinessSpec extends SparkTestBase {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("stream_fresh_redo").toString
     val batch = Seq(("a", ts(1, 0)), ("a", ts(2, 0))).toDF("seg", "ts")
-    def writeOnce(): Unit = PartitionedStore.write(
-      StreamingTimeliness.partials(batch, "ts", "seg")
-        .withColumn("part", org.apache.spark.sql.functions.lit("b0")),
-      s"$tmp/partials")
+    def writeOnce(): Unit = PartialFold.write(
+      Timeliness.partials(batch, "ts", "seg"), s"$tmp/partials", 0L)
     writeOnce(); writeOnce()
-    val got = StreamingTimeliness.verdicts(spark, s"$tmp/partials", now,
-      48.0, 30.0).collect()
+    val got = Timeliness.verdicts(PartialFold.stored(spark, s"$tmp/partials"),
+      now, 48.0, 30.0).collect()
     assert(got.length == 1)
     assert(got.head.getLong(1) == 2L, "redelivery doubled the event count")
     assert(got.head.getDouble(5) == 24.0)

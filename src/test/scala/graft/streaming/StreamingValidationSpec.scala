@@ -10,12 +10,13 @@ class StreamingValidationSpec extends SparkTestBase {
 
   test("windowed counts over a file stream equal the batch computation") {
     // file stream sources read directories — stage the single parquet file
-    val eventsDir = s"target/stream-events-${System.nanoTime()}"
+    val tmp = java.nio.file.Files.createTempDirectory("stream_wc").toString
+    val eventsDir = s"$tmp/events"
     new java.io.File(eventsDir).mkdirs()
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       java.nio.file.Paths.get(s"$eventsDir/events.parquet"))
-    val ckpt = s"target/stream-ckpt-${System.nanoTime()}"
+    val ckpt = s"$tmp/ckpt"
     val streamed = StreamingValidation.runFileStreamOnce(
       spark, eventsDir, ckpt, s"wc_${System.nanoTime()}")
     val batch = StreamingValidation.windowedCounts(
@@ -85,15 +86,16 @@ class StreamingValidationSpec extends SparkTestBase {
     val b2 = rows.filter(r => half2.contains(r._2)).toSeq
 
     // batch twin: two explicit increments with the streaming runId scheme
-    val outBatch = s"target/kcd-batch-${System.nanoTime()}"
+    val tmp = java.nio.file.Files.createTempDirectory("stream_kcd").toString
+    val outBatch = s"$tmp/batch"
     ImageSuite.lightIncrement(spark,
       spark.createDataset(b1).toDF(cols: _*), captions, outBatch, "kcd-b0")
     ImageSuite.lightIncrement(spark,
       spark.createDataset(b2).toDF(cols: _*), captions, outBatch, "kcd-b1")
 
     // streaming twin: MemoryStream, one addData per micro-batch
-    val outStream = s"target/kcd-stream-${System.nanoTime()}"
-    val ckpt = s"target/kcd-ckpt-${System.nanoTime()}"
+    val outStream = s"$tmp/stream"
+    val ckpt = s"$tmp/ckpt"
     val input = MemoryStream[(String, String, Int, Int, String)]
     val q = StreamingValidation.keyCheckDriftStream(
       input.toDS().toDF(cols: _*), captions, outStream, ckpt, "kcd")
