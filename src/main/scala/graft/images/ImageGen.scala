@@ -300,11 +300,12 @@ object ImageGen {
 
   /** Deterministic dataset dir for a row count (also used to EMBED paths in
     * oracle SQL without forcing generation first). */
-  def dirFor(n: Long, baseDir: String = "/root/repo/data/images"): String =
+  def dirFor(n: Long, baseDir: String = s"${graft.Tables.DataRoot}/images"): String =
     s"$baseDir/v$GenVersion-n$n"
 
   /** Generate-if-absent, keyed by row count; returns the dataset dir. */
-  def ensure(spark: SparkSession, n: Long, baseDir: String = "/root/repo/data/images"): String = {
+  def ensure(spark: SparkSession, n: Long,
+             baseDir: String = s"${graft.Tables.DataRoot}/images"): String = {
     val dir = dirFor(n, baseDir)
     val marker = new java.io.File(s"$dir/_DONE")
     if (!marker.exists()) {

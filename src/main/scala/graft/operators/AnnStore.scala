@@ -21,9 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object AnnStore {
 
-  val Root: String = sys.props.get("graft.ann.dir")
-    .orElse(sys.env.get("GRAFT_ANN_DIR"))
-    .getOrElse("/root/repo/data/ann_store")
+  val Root: String = s"${Tables.DataRoot}/ann_store"
 
   /** Bump when the training math or its parameters (m, ks, dims, probe
     * cells, Lloyd steps) change — versions the tier key so published

@@ -104,9 +104,7 @@ object BpeTokenizer {
   // published vocab instead of retraining inside a timed query.
   private val vocabCache = scala.collection.mutable.Map[String, Seq[(String, String)]]()
 
-  val VocabRoot: String = sys.props.get("graft.bpe.dir")
-    .orElse(sys.env.get("GRAFT_BPE_DIR"))
-    .getOrElse("/root/repo/data/bpe_store")
+  val VocabRoot: String = s"${Tables.DataRoot}/bpe_store"
 
   private def vocabDir(dir: String): String = {
     // MergeRounds in the key: a changed round count must never serve a

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Document deduplication operators over the `documents` table — the
@@ -49,6 +50,63 @@ object DedupQueries {
           .as("shingle"))
   }
 
+  /** The one band explode of every banded rung: `df` plus `band` and
+    * `key`, one row per band. Band j of width w = 64/blocks is bits
+    * [j·w, (j+1)·w) of the 64-bit `hash`, shifted down and masked to w
+    * bits, so no sign bit leaks into a key; `blocks` ∈ {2, 4, 8, 16, 32}. The
+    * simhash rungs pass (hi << 32) | lo, so every band lies inside one
+    * 32-bit half ([[graft.streaming.StreamingNearDup.bandKey]] is the
+    * plain-Scala twin).
+    */
+  private[graft] def bands(df: DataFrame, hash: Column, blocks: Int): DataFrame = {
+    require(Set(2, 4, 8, 16, 32).contains(blocks), s"blocks=$blocks not in {2,4,8,16,32}")
+    val w = 64 / blocks
+    val mask = lit((1L << w) - 1) // w ≤ 32, no overflow
+    df.withColumn("_bk", explode(array((0 until blocks).map { j =>
+        struct(lit(j).as("band"), shiftrightunsigned(hash, j * w).bitwiseAND(mask).as("key"))
+      }: _*)))
+      .select(col("*"), col("_bk.band").as("band"), col("_bk.key").as("key"))
+      .drop("_bk")
+  }
+
+  /** The one lead-window pairing of every sorted-neighbourhood rung
+    * (Hernández & Stolfo, "The merge/purge problem for large databases",
+    * SIGMOD 1995; Manku et al.'s bounded run within a band bucket): each
+    * row of `df` once per neighbour, with `y` holding the `carry` columns
+    * of each of the next `width` rows of its `partition` window sorted by
+    * `order`. Leads never cross the window partition and the null leads
+    * past its end are dropped (`carry.head` must be a non-null id), so no
+    * cross-partition pair is ever emitted, and a partition of at most
+    * width + 1 rows pairs fully. Candidates O(rows · width), zero joins:
+    * a pair self-join enumerates every bucket's full cross product before
+    * filtering (Σ bucket² — 23 G probes, 80 s, on the dihedral rung's
+    * 16 M hot-keyed band rows at sf0.1, against 17 s lead-form).
+    * `partition` must be non-empty: an unpartitioned window moves all
+    * rows to one task.
+    */
+  private[graft] def sortedNeighbours(df: DataFrame, partition: Seq[String],
+                                      order: Seq[String], carry: Seq[String],
+                                      width: Int): DataFrame = {
+    require(partition.nonEmpty, "sortedNeighbours needs a partition key")
+    require(width >= 1, s"width=$width < 1")
+    val run = Window.partitionBy(partition.map(col): _*).orderBy(order.map(col): _*)
+    // window expressions must be top-level projections: materialize the
+    // width lead structs first, then explode the plain columns
+    val leads = (1 to width).map(d =>
+      struct(carry.map(c => lead(col(c), d).over(run).as(c)): _*).as(s"_y$d"))
+    df.select(col("*") +: leads: _*)
+      .select(df.columns.toSeq.map(col) :+
+        explode(array((1 to width).map(d => col(s"_y$d")): _*)).as("y"): _*)
+      .filter(col(s"y.${carry.head}").isNotNull)
+  }
+
+  /** Simhash signatures (doc_id, simhash_lo, simhash_hi) banded by
+    * [[bands]]: bits 0..31 in the low half of `simhash_lo`, bits 32..63
+    * in `simhash_hi` (the layout all three signature rungs emit). */
+  private def simhashBands(sh: DataFrame, blocks: Int): DataFrame =
+    bands(sh.select("doc_id", "simhash_lo", "simhash_hi"),
+      shiftleft(col("simhash_hi"), 32).bitwiseOR(col("simhash_lo")), blocks)
+
   /** Bit-block banded SimHash near-dup pairing, generalized (Manku/Jain/
     * Das Sarma, "Detecting near-duplicates for web crawling", WWW 2007):
     * split the 64-bit signature into `blocks` equal exact-match bands,
@@ -61,31 +119,18 @@ object DedupQueries {
     * longer keys → smaller buckets → fewer candidates but a smaller
     * guaranteed radius; `blocks = 4` (16-bit keys, radius 3) is the
     * q_dedup_simhash64_banded production setting. At 10^12 rows the same
-    * paper's second level applies within buckets (sort by the remaining
-    * bits, pair within a bounded run) — the first-level plan shape here is
+    * paper's second level applies within buckets
+    * ([[bandedSimhashPairsL2]]) — the first-level plan shape here is
     * what carries.
     *
-    * `sh` must have (doc_id, simhash_lo, simhash_hi) — bits 0..31 in the
-    * low half of `simhash_lo`, bits 32..63 in `simhash_hi` (the layout all
-    * three signature rungs emit). `blocks` ∈ {2, 4, 8, 16, 32} so every
-    * band lies entirely inside one half.
+    * `sh` must have (doc_id, simhash_lo, simhash_hi) in the
+    * [[simhashBands]] layout; `blocks` ∈ {2, 4, 8, 16, 32}.
     */
   def bandedSimhashPairs(sh: DataFrame, blocks: Int, maxHamming: Int): DataFrame = {
-    require(Set(2, 4, 8, 16, 32).contains(blocks), s"blocks=$blocks not in {2,4,8,16,32}")
-    val w = 64 / blocks
-    val mask = lit((1L << w) - 1) // w ≤ 32, no overflow
-    val bands = sh.select(col("doc_id"), col("simhash_lo"), col("simhash_hi"),
-        explode(array((0 until blocks).map { j =>
-          val src = if (j * w < 32) col("simhash_lo") else col("simhash_hi")
-          val shift = (j * w) % 32
-          struct(lit(j).as("band"),
-            shiftright(src, shift).bitwiseAND(mask).as("key"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash_lo"), col("simhash_hi"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
+    val b = simhashBands(sh, blocks)
     // signatures ride the band rows through the join (functionally
     // dependent on doc_id), so the re-rank needs no second join
-    bands.as("x").join(bands.as("y"),
+    b.as("x").join(b.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("x.simhash_lo").as("a_lo"),
@@ -108,9 +153,10 @@ object DedupQueries {
     * work across tasks but cannot shrink the candidate count). Here each
     * bucket is SORTED by the remaining signature bits (the band bits are
     * equal within the bucket, so ordering by (hi, lo) orders by exactly
-    * the non-band bits in fixed MSB-first position) and
+    * the non-band bits in fixed MSB-first position), and each row pairs
+    * with its next `runWidth` rows ([[sortedNeighbours]]):
     *
-    *   - buckets at or under `maxBucket` pair fully — identical to
+    *   - buckets of at most runWidth + 1 rows pair fully — identical to
     *     level-1 (the common case: with 2^w keys almost every bucket is
     *     tiny);
     *   - hot buckets pair only within a bounded run: (x, y) with
@@ -129,77 +175,19 @@ object DedupQueries {
     * own trade (WWW 2007 §3: "probe a small number of adjacent
     * fingerprints"), and HotBucketSpec pins both halves of it.
     *
-    * One shuffle on (band, key), total. In the production regime
-    * (maxBucket ≤ runWidth) the run condition subsumes the small-bucket
-    * branch and candidates are generated by window lead() off the run
-    * sort — no self-join, no per-bucket cross-product enumeration; the
-    * general regime keeps the symmetric self-join (ReuseExchange
-    * collapses its branches to one banding computation).
+    * One shuffle on (band, key), total.
     */
   def bandedSimhashPairsL2(sh: DataFrame, blocks: Int, maxHamming: Int,
-                           maxBucket: Int, runWidth: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(Set(2, 4, 8, 16, 32).contains(blocks), s"blocks=$blocks not in {2,4,8,16,32}")
-    val w = 64 / blocks
-    val mask = lit((1L << w) - 1)
-    val bands = sh.select(col("doc_id"), col("simhash_lo"), col("simhash_hi"),
-        explode(array((0 until blocks).map { j =>
-          val src = if (j * w < 32) col("simhash_lo") else col("simhash_hi")
-          val shift = (j * w) % 32
-          struct(lit(j).as("band"),
-            shiftright(src, shift).bitwiseAND(mask).as("key"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash_lo"), col("simhash_hi"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    val bucket = Window.partitionBy("band", "key")
-    // total order (doc_id is unique) → deterministic ranks in any engine
-    val run = bucket.orderBy("simhash_hi", "simhash_lo", "doc_id")
-    val cand =
-      if (maxBucket <= runWidth) {
-        // "bn ≤ maxBucket OR gap ≤ runWidth" collapses to "gap ≤ runWidth"
-        // (a ≤ maxBucket-row bucket only contains gaps < maxBucket), so
-        // candidates are exactly {(row, lead(row, d)) : d ≤ runWidth} —
-        // generated linearly off the run sort with ZERO joins. The join
-        // formulation below enumerates every bucket's full cross product
-        // internally before filtering: Σ bucket² probes, measured 23 G
-        // (80 s) on the dihedral rung's 16 M hot-keyed band rows vs 17 s
-        // lead-form. Production callers all sit in this regime.
-        val withLeads = (1 to runWidth).foldLeft(bands) { (df, d) =>
-          df.withColumn(s"y$d", struct(
-            lead(col("doc_id"), d).over(run).as("doc_id"),
-            lead(col("simhash_lo"), d).over(run).as("lo"),
-            lead(col("simhash_hi"), d).over(run).as("hi")))
-        }
-        // leads past the bucket end are null structs (lead never crosses
-        // the window partition), so cross-bucket pairs cannot be emitted
-        withLeads.select(col("doc_id"), col("simhash_lo"), col("simhash_hi"),
-            explode(array((1 to runWidth).map(d => col(s"y$d")): _*)).as("y"))
-          .filter(col("y.doc_id").isNotNull)
-          .select(least(col("doc_id"), col("y.doc_id")).as("a_id"),
-            greatest(col("doc_id"), col("y.doc_id")).as("b_id"),
-            (bit_count(col("simhash_lo").bitwiseXOR(col("y.lo"))) +
-             bit_count(col("simhash_hi").bitwiseXOR(col("y.hi")))).as("hamming"))
-      } else {
-        // general Manku form (small buckets pair fully beyond the run):
-        // self-join with symmetric bn references — bn identical on both
-        // sides keeps the two branches column-identical so ReuseExchange
-        // collapses them into ONE signature+banding computation
-        val ranked = bands
-          .withColumn("bn", count(lit(1)).over(bucket))
-          .withColumn("rn", row_number().over(run))
-        ranked.as("x").join(ranked.as("y"),
-            col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-              col("x.rn") < col("y.rn") &&
-              (col("x.bn") <= maxBucket || col("y.bn") <= maxBucket ||
-                col("y.rn") - col("x.rn") <= runWidth))
-          // rank order ≠ id order, so canonicalize the pair before distinct
-          .select(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
-            greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"),
-            (bit_count(col("x.simhash_lo").bitwiseXOR(col("y.simhash_lo"))) +
-             bit_count(col("x.simhash_hi").bitwiseXOR(col("y.simhash_hi")))).as("hamming"))
-      }
-    cand.distinct().filter(col("hamming") <= maxHamming)
-  }
+                           runWidth: Int): DataFrame =
+    // total order (doc_id is unique) → deterministic runs in any engine
+    sortedNeighbours(simhashBands(sh, blocks), Seq("band", "key"),
+        Seq("simhash_hi", "simhash_lo", "doc_id"),
+        Seq("doc_id", "simhash_lo", "simhash_hi"), runWidth)
+      .select(least(col("doc_id"), col("y.doc_id")).as("a_id"),
+        greatest(col("doc_id"), col("y.doc_id")).as("b_id"),
+        (bit_count(col("simhash_lo").bitwiseXOR(col("y.simhash_lo"))) +
+         bit_count(col("simhash_hi").bitwiseXOR(col("y.simhash_hi")))).as("hamming"))
+      .distinct().filter(col("hamming") <= maxHamming)
 
   /** Partial-crop (region) duplicate pairs from per-quadrant pHash tiles:
     * two images that share ONE quadrant's content (tile hamming ≤
@@ -214,56 +202,18 @@ object DedupQueries {
     * filtered. One shuffle on (q, band, key); candidates O(bucket · run).
     */
   def bandedTilePairs(sig: DataFrame, maxTileHamming: Int,
-                      minFullHamming: Int, maxBucket: Int,
-                      runWidth: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val mask = lit(65535L)
-    val bands = sig.select(col("doc_id"), col("phash"), col("q"), col("tile"),
-        explode(array((0 until 4).map { j =>
-          struct(lit(j).as("band"),
-            shiftright(col("tile"), j * 16).bitwiseAND(mask).as("key"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("phash"), col("q"), col("tile"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    val bucket = Window.partitionBy("q", "band", "key")
-    val run = bucket.orderBy("tile", "doc_id")
-    val cand =
-      if (maxBucket <= runWidth) {
-        // gap-only regime: lead-pairing off the run sort, zero joins
-        // (the Σ bucket² argument at [[bandedSimhashPairsL2]])
-        val withLeads = (1 to runWidth).foldLeft(bands) { (df, d) =>
-          df.withColumn(s"y$d", struct(
-            lead(col("doc_id"), d).over(run).as("doc_id"),
-            lead(col("phash"), d).over(run).as("phash"),
-            lead(col("tile"), d).over(run).as("tile")))
-        }
-        withLeads.select(col("doc_id"), col("phash"), col("q"), col("tile"),
-            explode(array((1 to runWidth).map(d => col(s"y$d")): _*)).as("y"))
-          .filter(col("y.doc_id").isNotNull)
-          .select(least(col("doc_id"), col("y.doc_id")).as("a_id"),
-            greatest(col("doc_id"), col("y.doc_id")).as("b_id"),
-            col("q"),
-            bit_count(col("tile").bitwiseXOR(col("y.tile"))).as("tile_hamming"),
-            bit_count(col("phash").bitwiseXOR(col("y.phash"))).as("full_hamming"))
-      } else {
-        val ranked = bands
-          .withColumn("bn", count(lit(1)).over(bucket))
-          .withColumn("rn", row_number().over(run))
-        ranked.as("x").join(ranked.as("y"),
-            col("x.q") === col("y.q") && col("x.band") === col("y.band") &&
-              col("x.key") === col("y.key") && col("x.rn") < col("y.rn") &&
-              (col("x.bn") <= maxBucket || col("y.bn") <= maxBucket ||
-                col("y.rn") - col("x.rn") <= runWidth))
-          .select(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
-            greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"),
-            col("x.q").as("q"),
-            bit_count(col("x.tile").bitwiseXOR(col("y.tile"))).as("tile_hamming"),
-            bit_count(col("x.phash").bitwiseXOR(col("y.phash"))).as("full_hamming"))
-      }
-    cand.distinct()
+                      minFullHamming: Int, runWidth: Int): DataFrame =
+    sortedNeighbours(bands(sig.select("doc_id", "phash", "q", "tile"), col("tile"), 4),
+        Seq("q", "band", "key"), Seq("tile", "doc_id"), Seq("doc_id", "phash", "tile"),
+        runWidth)
+      .select(least(col("doc_id"), col("y.doc_id")).as("a_id"),
+        greatest(col("doc_id"), col("y.doc_id")).as("b_id"),
+        col("q"),
+        bit_count(col("tile").bitwiseXOR(col("y.tile"))).as("tile_hamming"),
+        bit_count(col("phash").bitwiseXOR(col("y.phash"))).as("full_hamming"))
+      .distinct()
       .filter(col("tile_hamming") <= maxTileHamming &&
         col("full_hamming") >= minFullHamming)
-  }
 
   /** Mirror/rotation duplicate pairs by dihedral MULTI-PROBE banding: a
     * pair is reported when some D4-variant hash of one image is near the
@@ -287,49 +237,17 @@ object DedupQueries {
     * redundant double-transformed echo). Min over a pair's matched
     * probes makes the output orientation-free.
     *
-    * Candidate generation is window-LEAD pairing, not a self-join: with
-    * `maxBucket ≤ runWidth` the L2 condition "bucket ≤ maxBucket OR rank
-    * gap ≤ runWidth" collapses to exactly "rank gap ≤ runWidth" (a
-    * bucket of ≤ maxBucket rows only contains gaps < maxBucket), so the
-    * candidate set IS {(row, lead(row, d)) : d ≤ runWidth} within each
-    * (band, key) bucket — emitted linearly off the sort the rank window
-    * already pays, the [[q_link_snm_pairs]] sorted-neighborhood shape.
-    * The L2 self-join formulation enumerates every bucket's full cross
-    * product internally before filtering (Σ bucket² = 23 G bucket-pair
-    * probes at sf0.1 for this rung's 16 M hot-keyed band rows, measured
-    * 80 s); the lead form replaces that with 16 M · runWidth generated
-    * rows and zero joins. One shuffle on (band, key), total.
+    * Candidates are the [[sortedNeighbours]] runs of each (band, key)
+    * bucket, sorted by (hash, doc_id, kind) — a total order within a
+    * bucket — the [[q_link_snm_pairs]] sorted-neighborhood shape. One
+    * shuffle on (band, key), total.
     */
   def bandedDihedralPairs(sig: DataFrame, maxDihHamming: Int,
-                          minFullHamming: Int, maxBucket: Int,
-                          runWidth: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(maxBucket <= runWidth,
-      s"maxBucket=$maxBucket > runWidth=$runWidth: lead pairing would drop " +
-        "small-bucket pairs beyond the run")
-    val mask = lit(65535L)
-    val bands = sig.select(col("doc_id"), col("phash"), col("kind"), col("hash"),
-        explode(array((0 until 4).map { j =>
-          struct(lit(j).as("band"),
-            shiftright(col("hash"), j * 16).bitwiseAND(mask).as("key"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("phash"), col("kind"), col("hash"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    // total order: (hash, doc_id, kind) is unique within a bucket; leads
-    // past the bucket end are null structs (lead never crosses the
-    // window partition), so no cross-bucket pair can ever be emitted
-    val run = Window.partitionBy("band", "key").orderBy("hash", "doc_id", "kind")
-    val withLeads = (1 to runWidth).foldLeft(bands) { (df, d) =>
-      df.withColumn(s"y$d", struct(
-        lead(col("doc_id"), d).over(run).as("doc_id"),
-        lead(col("phash"), d).over(run).as("phash"),
-        lead(col("kind"), d).over(run).as("kind"),
-        lead(col("hash"), d).over(run).as("hash")))
-    }
-    withLeads.select(col("doc_id"), col("phash"), col("kind"), col("hash"),
-        explode(array((1 to runWidth).map(d => col(s"y$d")): _*)).as("y"))
-      .filter(col("y.doc_id").isNotNull &&
-        col("doc_id") =!= col("y.doc_id") &&
+                          minFullHamming: Int, runWidth: Int): DataFrame =
+    sortedNeighbours(bands(sig.select("doc_id", "phash", "kind", "hash"), col("hash"), 4),
+        Seq("band", "key"), Seq("hash", "doc_id", "kind"),
+        Seq("doc_id", "phash", "kind", "hash"), runWidth)
+      .filter(col("doc_id") =!= col("y.doc_id") &&
         ((col("kind") === 0) =!= (col("y.kind") === 0)))
       .select(least(col("doc_id"), col("y.doc_id")).as("a_id"),
         greatest(col("doc_id"), col("y.doc_id")).as("b_id"),
@@ -340,7 +258,6 @@ object DedupQueries {
       .select("a_id", "b_id", "dih_hamming", "full_hamming")
       .filter(col("dih_hamming") <= maxDihHamming &&
         col("full_hamming") >= minFullHamming)
-  }
 
   /** Connected components of an undirected near-dup pair graph by min-id
     * label propagation to a fixpoint: every node's label converges to the
@@ -585,6 +502,15 @@ object DedupQueries {
       .select("a_id", "b_id", "est_jaccard")
   }
 
+  /** The first decode-ok row per `image_id` by (phash_rec, n_bytes):
+    * one deterministic signature row per image for the tile and mirror
+    * rungs (duplicate-id rows carry two contents). */
+  private def firstDecoded(facts: DataFrame): DataFrame =
+    facts.filter(col("decode_ok"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("image_id").orderBy("phash_rec", "n_bytes")))
+      .filter(col("rn") === 1)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Exact dedup: content digest groupBy — `cache.py:27-29` MD5 keying.
@@ -757,16 +683,14 @@ object DedupQueries {
         .orderBy("a_id", "b_id")),
 
     // Level-2 (hot-bucket-safe) banded pairing at the production setting:
-    // same banding as q_dedup_simhash64_banded, but buckets beyond
-    // maxBucket pair only within a sorted run of runWidth neighbors —
-    // candidate count O(bucket·run), never O(bucket²). The parameters are
-    // deliberately LOW (maxBucket=4, runWidth=4) so the sf0.01 corpus
-    // genuinely exercises the hot path in both engines; a deployment
-    // would set maxBucket to a few hundred (below that, quadratic is
-    // cheaper than the window sort).
+    // same banding as q_dedup_simhash64_banded, but each doc pairs only
+    // with the next runWidth neighbors of its sorted bucket — candidate
+    // count O(bucket·run), never O(bucket²). runWidth is deliberately LOW
+    // (4) so the sf0.01 corpus genuinely exercises the hot path in both
+    // engines; buckets of at most runWidth + 1 docs still pair fully.
     "q_dedup_simhash64_banded_l2" -> ((s, dir) =>
       bandedSimhashPairsL2(simhash64Signatures(s, dir),
-          blocks = 4, maxHamming = 16, maxBucket = 4, runWidth = 4)
+          blocks = 4, maxHamming = 16, runWidth = 4)
         .orderBy("a_id", "b_id")),
 
     // Connected components over the banded near-dup graph (bounded id
@@ -805,8 +729,7 @@ object DedupQueries {
         .select(col("doc_id"),
           col("phash").bitwiseAND(lit(4294967295L)).as("simhash_lo"),
           shiftright(col("phash"), 32).bitwiseAND(lit(4294967295L)).as("simhash_hi"))
-      bandedSimhashPairsL2(sh, blocks = 4, maxHamming = 4,
-          maxBucket = 4, runWidth = 4)
+      bandedSimhashPairsL2(sh, blocks = 4, maxHamming = 4, runWidth = 4)
         .orderBy("a_id", "b_id")
     }),
 
@@ -821,18 +744,12 @@ object DedupQueries {
     // per image_id (min-(phash, n_bytes) content wins — dup-id rows carry
     // two contents) keeps both engines on the same deterministic input.
     "q_dedup_phash_tiles" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val f = graft.validation.ImageSuiteQueries.ensureFacts(s, dir)
-      val first = f.filter(col("decode_ok"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("image_id").orderBy("phash_rec", "n_bytes")))
-        .filter(col("rn") === 1)
+      val first = firstDecoded(graft.validation.ImageSuiteQueries.ensureFacts(s, dir))
       val sig = first.select(col("image_id").as("doc_id"),
           col("phash_rec").as("phash"),
           posexplode(col("phash_tiles")).as(Seq("q", "tile")))
         .filter(col("tile") =!= 0L)
-      bandedTilePairs(sig, maxTileHamming = 6, minFullHamming = 8,
-          maxBucket = 4, runWidth = 4)
+      bandedTilePairs(sig, maxTileHamming = 6, minFullHamming = 8, runWidth = 4)
         .orderBy("a_id", "b_id", "q")
     }),
 
@@ -844,19 +761,14 @@ object DedupQueries {
     // tractable; the production rung is unbounded — same O(log n)
     // contraction as the text/phash cluster rungs.
     "q_dedup_phash_tiles_cc" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val f = graft.validation.ImageSuiteQueries.ensureFacts(s, dir)
-        .filter(col("image_id") < "img-000000001000")
-      val first = f.filter(col("decode_ok"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("image_id").orderBy("phash_rec", "n_bytes")))
-        .filter(col("rn") === 1)
+      val first = firstDecoded(graft.validation.ImageSuiteQueries.ensureFacts(s, dir)
+        .filter(col("image_id") < "img-000000001000"))
       val sig = first.select(col("image_id").as("doc_id"),
           col("phash_rec").as("phash"),
           posexplode(col("phash_tiles")).as(Seq("q", "tile")))
         .filter(col("tile") =!= 0L)
       val pairs = bandedTilePairs(sig, maxTileHamming = 6, minFullHamming = 8,
-        maxBucket = 4, runWidth = 4)
+        runWidth = 4)
       connectedComponentsStar(pairs).orderBy("doc_id")
     }),
 
@@ -872,25 +784,20 @@ object DedupQueries {
     // rung is unbounded — same O(log n) contraction, and the edge
     // union is just one more distinct over two banded outputs.
     "q_dedup_phash_mirror_cc" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val f = graft.validation.ImageSuiteQueries.ensureFacts(s, dir)
-        .filter(col("image_id") < "img-000000002000")
-      val first = f.filter(col("decode_ok"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("image_id").orderBy("phash_rec", "n_bytes")))
-        .filter(col("rn") === 1)
+      val first = firstDecoded(graft.validation.ImageSuiteQueries.ensureFacts(s, dir)
+        .filter(col("image_id") < "img-000000002000"))
       val plainSig = first.select(col("image_id").as("doc_id"),
         col("phash_rec").bitwiseAND(lit(4294967295L)).as("simhash_lo"),
         shiftright(col("phash_rec"), 32).bitwiseAND(lit(4294967295L)).as("simhash_hi"))
       val plainPairs = bandedSimhashPairsL2(plainSig, blocks = 4,
-          maxHamming = 4, maxBucket = 4, runWidth = 4)
+          maxHamming = 4, runWidth = 4)
         .select("a_id", "b_id")
       val dihSig = first.select(col("image_id").as("doc_id"),
           col("phash_rec").as("phash"),
           posexplode(col("phash_d4")).as(Seq("kind", "hash")))
         .filter(col("hash") =!= 0L)
       val mirrorPairs = bandedDihedralPairs(dihSig, maxDihHamming = 6,
-          minFullHamming = 12, maxBucket = 4, runWidth = 4)
+          minFullHamming = 12, runWidth = 4)
         .select("a_id", "b_id")
       connectedComponentsStar(plainPairs.union(mirrorPairs).distinct())
         .orderBy("doc_id")
@@ -913,7 +820,7 @@ object DedupQueries {
           col("phash").bitwiseAND(lit(4294967295L)).as("simhash_lo"),
           shiftright(col("phash"), 32).bitwiseAND(lit(4294967295L)).as("simhash_hi"))
       connectedComponentsStar(bandedSimhashPairsL2(sh, blocks = 4,
-          maxHamming = 4, maxBucket = 4, runWidth = 4))
+          maxHamming = 4, runWidth = 4))
         .orderBy("doc_id")
     }),
 
@@ -929,18 +836,12 @@ object DedupQueries {
     // Deterministic signature row per image_id (same first-decode-ok
     // discipline as the tiles rung).
     "q_dedup_phash_mirror" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val f = graft.validation.ImageSuiteQueries.ensureFacts(s, dir)
-      val first = f.filter(col("decode_ok"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("image_id").orderBy("phash_rec", "n_bytes")))
-        .filter(col("rn") === 1)
+      val first = firstDecoded(graft.validation.ImageSuiteQueries.ensureFacts(s, dir))
       val sig = first.select(col("image_id").as("doc_id"),
           col("phash_rec").as("phash"),
           posexplode(col("phash_d4")).as(Seq("kind", "hash")))
         .filter(col("hash") =!= 0L)
-      bandedDihedralPairs(sig, maxDihHamming = 6, minFullHamming = 12,
-          maxBucket = 4, runWidth = 4)
+      bandedDihedralPairs(sig, maxDihHamming = 6, minFullHamming = 12, runWidth = 4)
         .orderBy("a_id", "b_id")
     }),
 

@@ -308,9 +308,10 @@ object RecordLinkage {
   val SnmWindow = 8
 
   /** Sliding-window candidates over the merged a∪b file sorted by the
-    * entity name. The window is expressed as w LEAD columns exploded
-    * into pairs — pure window functions, NO self-join (the rn-banding
-    * self-join SNM is usually built from costs a second shuffle).
+    * entity name. The window is [[DedupQueries.sortedNeighbours]]' w LEAD
+    * columns exploded into pairs — pure window functions, NO self-join
+    * (the rn-banding self-join SNM is usually built from costs a second
+    * shuffle).
     *
     * Scale shape: the sort is PARTITIONED by a 1-hex sort-key prefix
     * (16-way here; 3-4 hex chars at 10^12 rows), so the window never
@@ -324,7 +325,6 @@ object RecordLinkage {
     * Output: cross-side pairs only, oriented a→b (same-side neighbors
     * are dedup's job, not linkage's). */
   def snmCandidates(customer: DataFrame, w: Int = SnmWindow): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val a = sideA(customer).select(col("rec_id"),
       expr(enameSql("rec_id")).as("ename"), lit("a").as("side"))
     val b = sideB(customer).select(col("rec_id"),
@@ -332,23 +332,13 @@ object RecordLinkage {
       lit("b").as("side"))
     val merged = a.unionAll(b)
       .withColumn("pfx", substring(col("ename"), 1, 1))
-    val win = Window.partitionBy("pfx").orderBy("ename", "rec_id")
-    // window expressions must be top-level projections — materialize
-    // the w leads first, then pack/explode the plain columns
-    val withLeads = (1 to w).foldLeft(merged) { (df, k) =>
-      df.withColumn(s"_nid_$k", lead(col("rec_id"), k).over(win))
-        .withColumn(s"_nside_$k", lead(col("side"), k).over(win))
-    }
-    val pairsCols = (1 to w).map(k => struct(
-      col(s"_nid_$k").as("nid"), col(s"_nside_$k").as("nside")))
-    withLeads
-      .withColumn("nbr", explode(array(pairsCols: _*)))
-      .filter(col("nbr.nid").isNotNull &&
-        col("nbr.nside") =!= col("side"))
+    DedupQueries.sortedNeighbours(merged, Seq("pfx"), Seq("ename", "rec_id"),
+        Seq("rec_id", "side"), w)
+      .filter(col("y.side") =!= col("side"))
       .select(
         when(col("side") === "a", col("rec_id"))
-          .otherwise(col("nbr.nid")).as("a_id"),
-        when(col("side") === "a", col("nbr.nid"))
+          .otherwise(col("y.rec_id")).as("a_id"),
+        when(col("side") === "a", col("y.rec_id"))
           .otherwise(col("rec_id")).as("b_id"))
   }
 

@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Shape: signatures come from the same native [[graft.functions.SimHash64Expr]]
   * projection as the batch rungs; each signature explodes into
-  * `blocks` (band, 64/blocks-bit key) rows; `flatMapGroupsWithState`
+  * `blocks` (band, 64/blocks-bit key) rows through the batch rungs' own
+  * `DedupQueries.bands`; `flatMapGroupsWithState`
   * keyed by (band, key) holds the signatures previously seen in that
   * bucket and pairs each arriving signature against them. The state
   * function is genuine per-group imperative logic — the one place
@@ -71,27 +72,19 @@ object StreamingNearDup {
     * every previously seen signature still in its buckets. */
   def nearDupStream(docs: DataFrame, blocks: Int = 4, maxHamming: Int = 3,
                     maxBucket: Int = 4096): Dataset[DupPair] = {
-    require(Set(2, 4, 8, 16, 32).contains(blocks), s"blocks=$blocks not in {2,4,8,16,32}")
-    require(maxHamming <= blocks - 1,
-      s"maxHamming=$maxHamming loses the pigeonhole guarantee at blocks=$blocks")
     val s = docs.sparkSession
     import s.implicits._
-    val w = 64 / blocks
-    val mask = lit((1L << w) - 1)
-    val bands = docs.filter(col("text").isNotNull)
+    val sigs = docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
         graft.functions.SimHash64Expr.simhash64(col("text")).as("sh"))
       .filter(col("sh").isNotNull)
       .select(col("doc_id"), col("sh.simhash_lo").as("lo"), col("sh.simhash_hi").as("hi"))
-      .select(col("doc_id"), col("lo"), col("hi"),
-        explode(array((0 until blocks).map { j =>
-          val src = if (j * w < 32) col("lo") else col("hi")
-          struct(lit(j).as("band"),
-            shiftright(src, (j * w) % 32).bitwiseAND(mask).as("key"))
-        }: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"),
-        col("doc_id"), col("lo"), col("hi"))
+    val bands = graft.DedupQueries.bands(sigs,
+        shiftleft(col("hi"), 32).bitwiseOR(col("lo")), blocks)
+      .select("band", "key", "doc_id", "lo", "hi")
       .as[BandRow]
+    require(maxHamming <= blocks - 1,
+      s"maxHamming=$maxHamming loses the pigeonhole guarantee at blocks=$blocks")
     bands.groupByKey(r => (r.band, r.key))
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (bk: (Int, Long), rows: Iterator[BandRow], st: GroupState[BucketState]) =>

@@ -241,19 +241,17 @@ object Drift {
   def snapshot(spark: SparkSession, images: DataFrame, dir: String): Unit = {
     histogram(images).groupBy("colname", "bucket").agg(sum("cnt").as("cnt"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/histogram")
-    digests(images, byPart = false)
+    digests(images)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/digests")
   }
 
   def readBaseline(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/histogram")
 
-  /** Per-(part?, colname) t-digest sketches. */
-  def digests(images: DataFrame, byPart: Boolean): DataFrame = {
+  /** Per-colname t-digest sketches over every partition. */
+  def digests(images: DataFrame): DataFrame = {
     val td = udaf(new TDigestAgg())
-    val m = melted(images)
-    if (byPart) m.groupBy("part", "colname").agg(td(col("value")).as("sketch"))
-    else m.groupBy("colname").agg(td(col("value")).as("sketch"))
+    melted(images).groupBy("colname").agg(td(col("value")).as("sketch"))
   }
 
   /** Per-input-split partial state: one t-digest + one bucket histogram

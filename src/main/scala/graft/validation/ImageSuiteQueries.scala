@@ -43,12 +43,10 @@ object ImageSuiteQueries {
     * reference's content-addressed cache-key pattern cache.py:27-29), so
     * two JVMs on DIFFERENT tiers touch disjoint paths, and publication is
     * write-once-atomic ([[publishOnce]]) so two JVMs on the SAME tier
-    * cannot serve each other partial files either. The root is resolved
-    * from `-Dgraft.facts.dir` / `$GRAFT_FACTS_DIR` for out-of-tree runs.
+    * cannot serve each other partial files either. The root lives under
+    * [[graft.Tables.DataRoot]].
     */
-  val FactsRoot: String = sys.props.get("graft.facts.dir")
-    .orElse(sys.env.get("GRAFT_FACTS_DIR"))
-    .getOrElse("/root/repo/data/image_facts")
+  val FactsRoot: String = s"${graft.Tables.DataRoot}/image_facts"
 
   /** Bump when decodeFactsExpr's OUTPUT (columns or semantics) changes —
     * versioning the tier key the way ImageGen.GenVersion versions the
@@ -178,9 +176,7 @@ object ImageSuiteQueries {
     * gap: these four checks were the last verdict family verified only by
     * spec (reference resume/orphan semantics validation_agent.py:787-812).
     */
-  val KeysRoot: String = sys.props.get("graft.keys.dir")
-    .orElse(sys.env.get("GRAFT_KEYS_DIR"))
-    .getOrElse("/root/repo/data/image_keycheck")
+  val KeysRoot: String = s"${graft.Tables.DataRoot}/image_keycheck"
 
   def keysPath(sfDir: String): String = s"$KeysRoot/tier=${tierKey(sfDir)}"
 

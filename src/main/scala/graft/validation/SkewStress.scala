@@ -35,7 +35,7 @@ object SkewStress {
 
   /** Plant (once) the skewed tier in ImageGen layout; returns its dir. */
   def ensureSkewedTier(spark: SparkSession, n: Long,
-                       baseDir: String = "/root/repo/data/images_skew"): String = {
+                       baseDir: String = s"${graft.Tables.DataRoot}/images_skew"): String = {
     val dir = s"$baseDir/v${ImageGen.GenVersion}-h$HotKeys-n$n"
     val marker = new java.io.File(s"$dir/_DONE")
     if (marker.exists()) return dir

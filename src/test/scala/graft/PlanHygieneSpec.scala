@@ -87,6 +87,15 @@ class PlanHygieneSpec extends SparkTestBase {
     assert(p.contains("Window"), s"lead-pairing window missing:\n$p")
   }
 
+  test("SNM linkage pairing is window-lead generation within its prefix: ZERO pair joins") {
+    val df = SparkEntry.queries("q_link_snm_pairs")(spark, dir)
+    val p = planOf(df)
+    assert(!p.contains("CartesianProduct"), s"cartesian in SNM plan:\n$p")
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+      s"SNM pairing regressed to a pair self-join:\n$p")
+    assert(p.contains("Window"), s"lead-pairing window missing:\n$p")
+  }
+
   test("Mahalanobis scoring broadcasts the one-row stats, never a shuffle join") {
     val p = planOf(SparkEntry.queries("q_v_outliers_mahalanobis")(spark, dir))
     assert(!p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"),

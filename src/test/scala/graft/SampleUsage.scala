@@ -37,5 +37,6 @@ object SampleUsage {
     println("EXPR decode_ok counts:")
     facts.groupBy($"f.decode_ok").count().show()
     spark.stop()
+    SparkTestBase.deleteTree(java.nio.file.Paths.get(dir))
   }
 }

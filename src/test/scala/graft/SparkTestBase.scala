@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,6 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for specs (one JVM-wide session, local[4]). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer[Path]()
+
+  /** A fresh system temp directory (its path), deleted with everything in
+    * it when the suite ends. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(SparkTestBase.deleteTree))
+    finally super.afterAll()
 }
 
 object SparkTestBase {
@@ -22,4 +37,13 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Delete `root` and everything under it; a missing path is a no-op. */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 }

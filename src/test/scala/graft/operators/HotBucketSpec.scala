@@ -8,13 +8,14 @@ import org.apache.spark.sql.functions._
   * fraction of docs share one band key must produce O(bucket · runWidth)
   * candidates, not O(bucket²) — while keeping identical-signature clusters
   * connected (so keep-one-per-component dedup still recovers them) and
-  * degrading to EXACTLY level-1 semantics everywhere a bucket is small.
+  * degrading to EXACTLY level-1 semantics wherever a bucket has at most
+  * runWidth + 1 rows (each row pairs with its next runWidth neighbours,
+  * so such a bucket pairs fully).
   */
 class HotBucketSpec extends SparkTestBase {
 
   private val HotN = 200 // docs sharing ONE signature → one bucket per band
   private val ColdN = 400
-  private val MaxBucket = 8
   private val RunWidth = 8
 
   // deterministic synthetic signatures: docs 0..HotN-1 all-zero (every
@@ -38,7 +39,7 @@ class HotBucketSpec extends SparkTestBase {
     pairSet(DedupQueries.bandedSimhashPairs(corpus, blocks = 4, maxHamming = 64))
   lazy val l2: Set[(Long, Long)] =
     pairSet(DedupQueries.bandedSimhashPairsL2(corpus, blocks = 4, maxHamming = 64,
-      maxBucket = MaxBucket, runWidth = RunWidth))
+      runWidth = RunWidth))
 
   test("hot bucket candidates are O(bucket * runWidth), not O(bucket^2)") {
     // level-1 pays the quadratic hot cluster: C(HotN, 2) pairs
@@ -67,20 +68,24 @@ class HotBucketSpec extends SparkTestBase {
 
   test("level-2 equals level-1 wherever buckets are small") {
     // cold docs: pseudo-random signatures → every bucket far below
-    // maxBucket, so the hot-run restriction must never fire there
+    // RunWidth + 1 rows, so the hot-run restriction must never fire there
     val l1Cold = l1.filter { case (a, b) => a >= HotN && b >= HotN }
     val l2Cold = l2.filter { case (a, b) => a >= HotN && b >= HotN }
     assert(l1Cold == l2Cold, "cold-corpus pairs must be identical across levels")
-    // and on a real corpus with the threshold above every bucket size,
-    // the two functions are outright equal (same pairs AND hammings)
+    // and on a real corpus with a run as wide as the hottest bucket,
+    // every bucket pairs fully: the two functions are outright equal
+    // (same pairs AND hammings)
     val sh = DedupQueries.queries("q_dedup_simhash64_expr")(spark, "/root/testdata/sf0.001")
+    val hottest = DedupQueries.bands(sh.select("doc_id", "simhash_lo", "simhash_hi"),
+        shiftleft(col("simhash_hi"), 32).bitwiseOR(col("simhash_lo")), 4)
+      .groupBy("band", "key").count().agg(max("count")).head().getLong(0)
     def full(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Int]("hamming"))).toSet
     val a = full(DedupQueries.bandedSimhashPairs(sh, 4, 16))
     val b = full(DedupQueries.bandedSimhashPairsL2(sh, 4, 16,
-      maxBucket = 1000000, runWidth = 1))
-    assert(a == b, "L2 with an unreachable threshold must equal level-1")
+      runWidth = math.max(1, hottest.toInt - 1)))
+    assert(a == b, "L2 with a run spanning every bucket must equal level-1")
   }
 
   test("level-2 output is a subset of level-1 with true hamming distances") {

@@ -26,7 +26,7 @@ class StreamingChecksSpec extends SparkTestBase {
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount", "l_shipdate")
     val rows = li.as[(Long, Double, Double, Double, java.sql.Timestamp)].collect()
     val batches = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-    val tmp = java.nio.file.Files.createTempDirectory("stream_checks").toString
+    val tmp = tempDir("stream_checks")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Double, Double, Double, java.sql.Timestamp)]
     val q = PartialFold.stream(
@@ -63,7 +63,7 @@ class StreamingChecksSpec extends SparkTestBase {
 
   test("redelivered batch overwrites its own partition — counters never double") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_checks_redo").toString
+    val tmp = tempDir("stream_checks_redo")
     val s2 = CheckSuite(Seq(InRange("v", 0.0, 10.0, 1.0), SizeBetween(1L, 100L)))
     val batch = Seq(1.0, 2.0, 20.0).toDF("v")
     def writeOnce(): Unit = PartialFold.write(s2.partials(batch), s"$tmp/partials", 0L)

@@ -20,7 +20,7 @@ class StreamingGatesSpec extends SparkTestBase {
     val rows = f.as[(String, Boolean, Double, Double, Double, Double, Double)]
       .collect()
     val batches = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-    val tmp = java.nio.file.Files.createTempDirectory("stream_gates").toString
+    val tmp = tempDir("stream_gates")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Boolean, Double, Double, Double, Double, Double)]
     val q = PartialFold.stream(
@@ -39,7 +39,7 @@ class StreamingGatesSpec extends SparkTestBase {
 
   test("redelivered batch overwrites its own partition — gates never double") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_gates_redo").toString
+    val tmp = tempDir("stream_gates_redo")
     val batch = Seq(
       ("p0", true, 10.0, 120.0, 30.0, 0.0, 0.0),
       ("p0", true, 200.0, 130.0, 40.0, 0.0, 0.0))

@@ -27,7 +27,7 @@ class StreamingIntervalsSpec extends SparkTestBase {
     val b3 = Seq(("hole", 5100L, 5200L, 4L), ("solo", 0L, 10L, 1L))
     val all = b1 ++ b2 ++ b3
 
-    val tmp = java.nio.file.Files.createTempDirectory("stream_iv").toString
+    val tmp = tempDir("stream_iv")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long, Long)]
     val q = PartialFold.stream(input.toDF().toDF("k", "f", "t", "id"),
@@ -54,7 +54,7 @@ class StreamingIntervalsSpec extends SparkTestBase {
 
   test("redelivered batch overwrites its own partition — counts never double") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_iv_redo").toString
+    val tmp = tempDir("stream_iv_redo")
     val batch = Seq(("a", 0L, 300L, 1L), ("a", 200L, 400L, 2L))
       .toDF("k", "f", "t", "id")
     def writeOnce(): Unit = PartialFold.write(
@@ -69,7 +69,7 @@ class StreamingIntervalsSpec extends SparkTestBase {
 
   test("a batch reaching back over the carry is DETECTED, not absorbed") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_iv_ooo").toString
+    val tmp = tempDir("stream_iv_ooo")
     val b0 = Seq(("k", 0L, 1000L, 1L)).toDF("k", "f", "t", "id")
     val b1 = Seq(("k", 500L, 600L, 2L)).toDF("k", "f", "t", "id") // reaches back
     PartialFold.write(
@@ -85,7 +85,7 @@ class StreamingIntervalsSpec extends SparkTestBase {
 
   test("the carry orders micro-batches by number: batch 10 follows batch 2") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_iv_order").toString
+    val tmp = tempDir("stream_iv_order")
     // in contract: batch 10 starts where batch 2 ends. Ordered by the
     // string key, b10 would sort first and hand b2 a carry of 200 > 100.
     val b2 = Seq(("k", 100L, 100L, 1L)).toDF("k", "f", "t", "id")

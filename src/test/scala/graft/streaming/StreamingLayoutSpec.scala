@@ -18,7 +18,7 @@ class StreamingLayoutSpec extends SparkTestBase {
       .withColumn("l_shipdate", col("l_shipdate").cast("timestamp"))
     val rows = li.as[(java.sql.Timestamp, Long)].collect()
     val batches = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-    val tmp = java.nio.file.Files.createTempDirectory("stream_layout").toString
+    val tmp = tempDir("stream_layout")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, Long)]
     val q = PartialFold.stream(
@@ -46,7 +46,7 @@ class StreamingLayoutSpec extends SparkTestBase {
 
   test("redelivered batch overwrites its own stats partition — never double-counts") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_layout_redo").toString
+    val tmp = tempDir("stream_layout_redo")
     val batch = Seq(
       (java.sql.Timestamp.valueOf("1997-03-01 00:00:00"), 10L),
       (java.sql.Timestamp.valueOf("1997-03-09 00:00:00"), 30L))

@@ -23,7 +23,7 @@ class StreamingMasksSpec extends SparkTestBase {
     val b1 = (1 to 40).map(i => f"+1-555-$i%04d")
     val b2 = (1 to 25).map(i => f"AB-$i%03d")
     val b3 = Seq("??!", "hello", "hello") // malformed variant arrives LAST
-    val tmp = java.nio.file.Files.createTempDirectory("stream_masks").toString
+    val tmp = tempDir("stream_masks")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
     val q = PartialFold.stream(input.toDF().toDF("s"),
@@ -46,7 +46,7 @@ class StreamingMasksSpec extends SparkTestBase {
 
   test("redelivered batch overwrites its own partial — never double-counts") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_masks_redo").toString
+    val tmp = tempDir("stream_masks_redo")
     val batch = Seq("ab12", "cd34").toDF("s")
     def writeOnce(): Unit = PartialFold.write(
       MaskProfile.fullMaskCounts(batch, "s"), s"$tmp/masks", 0L)

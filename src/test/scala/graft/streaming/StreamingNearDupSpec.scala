@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{DedupQueries, SparkTestBase, Tables}
 import graft.streaming.StreamingNearDup.DupPair
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, shiftleft}
 import org.apache.spark.sql.streaming.OutputMode
 
 /** The streaming near-dup operator must reproduce the batch banded-
@@ -46,16 +47,14 @@ class StreamingNearDupSpec extends SparkTestBase {
     import spark.implicits._
     val sigs = DedupQueries.simhash64Signatures(spark, dir)
       .limit(50).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // batch-side: reuse bandedSimhashPairs' own explode via a self-check —
-    // recompute keys in SQL with the same shift/mask expressions
-    val sqlKeys = sigs.toSeq.toDF("doc_id", "lo", "hi")
-      .selectExpr("doc_id",
-        "(lo >> 0)  & 65535 as k0", "(lo >> 16) & 65535 as k1",
-        "(hi >> 0)  & 65535 as k2", "(hi >> 16) & 65535 as k3")
-      .collect().map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    // batch-side: the keys the batch rungs' own band explode emits
+    val batchKeys = DedupQueries.bands(sigs.toSeq.toDF("doc_id", "simhash_lo", "simhash_hi"),
+        shiftleft(col("simhash_hi"), 32).bitwiseOR(col("simhash_lo")), 4)
+      .collect().groupBy(_.getAs[Long]("doc_id"))
+      .map { case (id, rs) => id -> rs.sortBy(_.getAs[Int]("band")).map(_.getAs[Long]("key")).toSeq }
     sigs.foreach { case (id, lo, hi) =>
       val scalaKeys = (0 until 4).map(j => StreamingNearDup.bandKey(lo, hi, j, 4))
-      assert(scalaKeys == sqlKeys(id), s"doc $id")
+      assert(scalaKeys == batchKeys(id), s"doc $id")
     }
   }
 

@@ -39,7 +39,7 @@ class StreamingSnapshotSpec extends SparkTestBase {
         "o_orderdate", "o_orderpriority")
       .as[Tup].collect()
     val batches = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
-    val tmp = java.nio.file.Files.createTempDirectory("stream_snap").toString
+    val tmp = tempDir("stream_snap")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Tup]
     val q = PartialFold.stream(
@@ -74,7 +74,7 @@ class StreamingSnapshotSpec extends SparkTestBase {
     val base = SnapshotQueries.baseSnapshot(spark, dir)
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
       .limit(50)
-    val tmp = java.nio.file.Files.createTempDirectory("stream_snap2").toString
+    val tmp = tempDir("stream_snap2")
     // simulate foreachBatch redelivery: write batch 0 TWICE via the same
     // store discipline, then finalize — counts must not double
     val p = fpPartial(base)
@@ -89,7 +89,7 @@ class StreamingSnapshotSpec extends SparkTestBase {
     val base = SnapshotQueries.baseSnapshot(spark, dir)
       .withColumn("o_orderdate", col("o_orderdate").cast("timestamp"))
       .limit(5)
-    val tmp = java.nio.file.Files.createTempDirectory("stream_snap3").toString
+    val tmp = tempDir("stream_snap3")
     val e = intercept[IllegalArgumentException](
       PartialFold.write(SnapshotQueries.partitionFingerprints(base), s"$tmp/fp", 0L))
     assert(e.getMessage.contains("part"))

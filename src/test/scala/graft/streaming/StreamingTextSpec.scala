@@ -18,7 +18,7 @@ class StreamingTextSpec extends SparkTestBase {
       .select("doc_id", "text").as[(Long, String)].collect()
     val (b1, b2) = rows.partition(_._1 % 2 == 0)
 
-    val tmp = java.nio.file.Files.createTempDirectory("stream_hh").toString
+    val tmp = tempDir("stream_hh")
     val store = s"$tmp/store"
     val ckpt = s"$tmp/ckpt"
     val input = MemoryStream[(Long, String)]

@@ -26,7 +26,7 @@ class StreamingTimelinessSpec extends SparkTestBase {
     val b3 = (5 to 10).map(d => ("healthy", ts(d, 12))) :+ ("single", ts(9, 0))
     val all = b1 ++ b2 ++ b3
 
-    val tmp = java.nio.file.Files.createTempDirectory("stream_fresh").toString
+    val tmp = tempDir("stream_fresh")
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, java.sql.Timestamp)]
     val q = PartialFold.stream(input.toDF().toDF("seg", "ts"),
@@ -49,7 +49,7 @@ class StreamingTimelinessSpec extends SparkTestBase {
 
   test("redelivered batch overwrites its own partition — gaps and counts never double") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream_fresh_redo").toString
+    val tmp = tempDir("stream_fresh_redo")
     val batch = Seq(("a", ts(1, 0)), ("a", ts(2, 0))).toDF("seg", "ts")
     def writeOnce(): Unit = PartialFold.write(
       Timeliness.partials(batch, "ts", "seg"), s"$tmp/partials", 0L)

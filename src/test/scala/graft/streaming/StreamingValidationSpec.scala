@@ -10,7 +10,7 @@ class StreamingValidationSpec extends SparkTestBase {
 
   test("windowed counts over a file stream equal the batch computation") {
     // file stream sources read directories — stage the single parquet file
-    val tmp = java.nio.file.Files.createTempDirectory("stream_wc").toString
+    val tmp = tempDir("stream_wc")
     val eventsDir = s"$tmp/events"
     new java.io.File(eventsDir).mkdirs()
     java.nio.file.Files.copy(
@@ -86,7 +86,7 @@ class StreamingValidationSpec extends SparkTestBase {
     val b2 = rows.filter(r => half2.contains(r._2)).toSeq
 
     // batch twin: two explicit increments with the streaming runId scheme
-    val tmp = java.nio.file.Files.createTempDirectory("stream_kcd").toString
+    val tmp = tempDir("stream_kcd")
     val outBatch = s"$tmp/batch"
     ImageSuite.lightIncrement(spark,
       spark.createDataset(b1).toDF(cols: _*), captions, outBatch, "kcd-b0")

@@ -42,7 +42,7 @@ class FactsTierSpec extends SparkTestBase {
   }
 
   test("publishOnce: race loser discards its temp, winner's output intact") {
-    val root = Files.createTempDirectory("pubonce").toString
+    val root = tempDir("pubonce")
     val dst = s"$root/out"
     // writer A publishes normally
     ImageSuiteQueries.publishOnce(dst) { tmp =>

@@ -39,7 +39,7 @@ class MetricAnomalySpec extends SparkTestBase {
   }
 
   test("repository: record/history/anomalies round-trip; re-record replaces the run") {
-    val tmp = java.nio.file.Files.createTempDirectory("metrics_repo").toString
+    val tmp = tempDir("metrics_repo")
     val r1 = frame(Seq(Some(1.0), Some(2.0)))
     val r2 = frame(Seq(Some(1.0), None))
     MetricsRepository.record(suite.run(r1), "run1", tmp)

@@ -25,7 +25,7 @@ class RevalidationSpec extends SparkTestBase {
 
   test("caption rewrite of one partition revalidates only that partition and is caught") {
     val dataDir = ImageGen.ensure(spark, 2000)
-    val out = java.nio.file.Files.createTempDirectory("reval").toString
+    val out = tempDir("reval")
 
     // run 1: validate everything; checkpoint says all parts done
     ImageSuite.runAndCheckpoint(spark, dataDir, out, "run1")
@@ -40,7 +40,7 @@ class RevalidationSpec extends SparkTestBase {
     // out-of-band rewrite: a second data dir, identical except part p3's
     // captions get a suffix (captions table untouched → a consistency
     // violation the re-run must catch)
-    val dataDir2 = java.nio.file.Files.createTempDirectory("reval_data").toString
+    val dataDir2 = tempDir("reval_data")
     ImageGen.images(spark, dataDir)
       .withColumn("caption",
         when(col("part") === "p3", concat(col("caption"), lit(" [edited]")))

@@ -87,7 +87,7 @@ class SkewStressSpec extends SparkTestBase {
       val skewDir = SkewStress.ensureSkewedTier(spark, N)
       val uniDir = ImageGen.ensure(spark, N)
       def wall(dataDir: String, tag: String): Double = {
-        val out = java.nio.file.Files.createTempDirectory(s"skewstress-$tag").toString
+        val out = tempDir(s"skewstress-$tag")
         spark.catalog.clearCache()
         val t0 = System.nanoTime()
         ImageSuite.runAndCheckpoint(spark, dataDir, out, tag)
