@@ -70,32 +70,32 @@ object AnnStore {
   private def read(s: SparkSession, path: String, name: String): DataFrame =
     s.read.parquet(s"$path/$name")
 
+  private def normalized(s: SparkSession, dir: String): DataFrame =
+    SimilarityQueries.normalized(Tables(s, dir, "embeddings"))
+
   /** PQ serving from the store: ADC over persisted codes + exact re-rank. */
   def pqTopKStored(s: SparkSession, dir: String,
                    shortlist: Int = 10, k: Int = 5): DataFrame = {
     val path = ensure(s, dir)
-    val e = SimilarityQueries.normalized(Tables(s, dir, "embeddings"))
-    SimilarityQueries.adcRerank(e,
-      read(s, path, "pq_codes"), read(s, path, "pq_dtab"), shortlist, k)
+    SimilarityQueries.adcTopK(normalized(s, dir), read(s, path, "pq_codes"),
+      read(s, path, "pq_dtab"), SimilarityQueries.FlatLookup, shortlist, k)
   }
 
   /** IVF-PQ serving from the store. */
   def ivfPqTopKStored(s: SparkSession, dir: String,
                       shortlist: Int = 20, k: Int = 3): DataFrame = {
     val path = ensure(s, dir)
-    val e = SimilarityQueries.normalized(Tables(s, dir, "embeddings"))
-    SimilarityQueries.servePqIvf(e,
-      read(s, path, "pq_codes"), read(s, path, "pq_dtab"),
-      read(s, path, "ivf_probed"), shortlist, k)
+    SimilarityQueries.adcTopK(normalized(s, dir),
+      SimilarityQueries.probedCodes(read(s, path, "pq_codes"), read(s, path, "ivf_probed")),
+      read(s, path, "pq_dtab"), SimilarityQueries.ProbedLookup, shortlist, k)
   }
 
   /** Residual-IVFADC serving from the store. */
   def ivfPqResidualTopKStored(s: SparkSession, dir: String,
                               shortlist: Int = 20, k: Int = 3): DataFrame = {
     val path = ensure(s, dir)
-    val e = SimilarityQueries.normalized(Tables(s, dir, "embeddings"))
-    SimilarityQueries.serveResidual(e,
-      read(s, path, "r_codes"), read(s, path, "r_dtab"),
-      read(s, path, "r_probed"), shortlist, k)
+    SimilarityQueries.adcTopK(normalized(s, dir),
+      SimilarityQueries.probedCodes(read(s, path, "r_codes"), read(s, path, "r_probed")),
+      read(s, path, "r_dtab"), SimilarityQueries.ResidualLookup, shortlist, k)
   }
 }

@@ -83,8 +83,8 @@ object GraphRank {
     // per-round mass with a filter+sum scan of the checkpointed ranks
     // instead of replaying a ranks⋈outDeg anti-join
     var ranks = nodes
-      .join(broadcast(outDeg.select(col("src").as("id"),
-        lit(true).as("_has_out"))), Seq("id"), "left")
+      .join(outDeg.select(col("src").as("id"), lit(true).as("_has_out")),
+        Seq("id"), "left")
       .select(col("id"), coalesce(col("_has_out"), lit(false)).as("has_out"),
         lit(1.0 / n.toDouble).as("rank"))
       .localCheckpoint()
@@ -99,17 +99,16 @@ object GraphRank {
       val dangling = ranks.filter(!col("has_out"))
         .agg(coalesce(sum(expr(s"CAST(rank AS $dec)")),
           expr(s"CAST(0.0 AS $dec)")).as("dm"))
-      // the rank frame is node-cardinality (tiny beside the edge list):
-      // broadcast it into the join and the contrib frame into the
-      // update, so no round shuffles the edge list (guide §3.1)
+      // the rank and contrib frames grow with the node count: no
+      // broadcast hint, the planner and AQE pick the join from their
+      // measured size
       val contrib = edges
-        .join(broadcast(ranks.select(col("id"), col("rank"))),
-          edges("src") === col("id"))
+        .join(ranks.select(col("id"), col("rank")), edges("src") === col("id"))
         .select(col("dst"), (col("rank") * col("w")).as("c"))
         .groupBy("dst")
         .agg(sum(expr(s"CAST(c AS $dec)")).as("in_mass"))
       ranks = ranks.select(col("id"), col("has_out"))
-        .join(broadcast(contrib), col("id") === contrib("dst"), "left")
+        .join(contrib, col("id") === contrib("dst"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"), col("has_out"),
           (lit(base) + lit(Damping) *
@@ -120,9 +119,9 @@ object GraphRank {
     val inDeg = edgesRaw.groupBy(col("dst").as("id"))
       .agg(count(lit(1L)).as("in_deg"))
     ranks
-      .join(broadcast(outDeg.select(col("src").as("id"),
-        col("deg").as("out_deg"))), Seq("id"), "left")
-      .join(broadcast(inDeg), Seq("id"), "left")
+      .join(outDeg.select(col("src").as("id"), col("deg").as("out_deg")),
+        Seq("id"), "left")
+      .join(inDeg, Seq("id"), "left")
       .select(col("id"), round(col("rank"), 6).as("rank"),
         coalesce(col("out_deg"), lit(0L)).as("out_deg"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"))

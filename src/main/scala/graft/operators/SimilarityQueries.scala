@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Similarity search over the `embeddings` table (`Array[Float]` column):
   * brute-force cosine as the correctness baseline, random-hyperplane LSH
@@ -10,32 +12,53 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/src/crawl_first/analysis.py:645-671`) and nearest-k
   * ranking (`osm.py:563-575`).
   *
-  * Dot products run through `zip_with` + `aggregate` on double-cast arrays
-  * (builtin HOFs, codegen-friendly, sequential fold → deterministic order).
+  * Dot products run through the native [[dot]] leaf on double-cast arrays
+  * (sequential fold → deterministic order).
   *
   * Algorithms re-implemented from the public literature: random-hyperplane
   * LSH (Charikar, STOC 2002), OR-amplified multi-table retrieval
-  * (Indyk/Motwani, STOC 1998), inverted-file coarse quantization
-  * (Jégou/Douze/Schmid, "Product quantization for nearest neighbor
-  * search", TPAMI 2011 — the IVF skeleton without PQ codes).
+  * (Indyk/Motwani, STOC 1998), inverted-file coarse quantization and
+  * product quantization (Jégou/Douze/Schmid, "Product quantization for
+  * nearest neighbor search", TPAMI 2011).
+  *
+  * Every rung is written on one kernel per stage:
+  *   - input: [[embedded]], [[normalized]], [[subvectors]], `l2`;
+  *   - coarse quantizer: [[lloydCells]] (the integer-exact Lloyd step),
+  *     [[assignCells]], their composition [[trainedScored]], and
+  *     [[probedPairs]] (the inverted-file restriction);
+  *   - product quantizer: [[pqCodebookFlat]] (flat and residual codebooks)
+  *     and the encoder `pqEncode`;
+  *   - serving: [[adcTopK]] (the ADC shortlist over any code scan) and
+  *     [[exactTopK]] (the exact top-k tail every retrieval rung ends in);
+  *   - LSH: [[lshSignatures]].
+  * The DuckDB twins mirror the same stages with one hand-written SQL
+  * builder each (`eSql`, `sigsSql`, `cellsSql`, `evCellsSql`,
+  * `pqTrainSql`, `l2Sql`, `dotsSql`, `topKSql`, `adcCandSql`) — never
+  * generated from the Spark kernels, so the oracle stays independent.
   */
 object SimilarityQueries {
 
   private def embs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "embeddings")
 
-  /** Sequential-fold dot product of two array<double> columns. */
   /** Dot product via the native tight-loop leaf — bit-identical to the
-    * previous `aggregate(zip_with(a, b, _*_), 0.0, _+_)` HOF (same
-    * products, same left-fold order, same null contract) but ~100× less
-    * per-pair work: the interpreted-lambda formulation was the CPU of
-    * every cosine in the ANN family (see [[graft.functions.DotProductExpr]]). */
+    * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` HOF (same products, same
+    * left-fold order, same null contract) but ~100× less per-pair work:
+    * the interpreted-lambda formulation was the CPU of every cosine in the
+    * ANN family (see [[graft.functions.DotProductExpr]]). */
   def dot(a: Column, b: Column): Column =
     graft.functions.DotProductExpr.dotProduct(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  /** Squared L2 distance as a sequential array fold. */
+  private def l2(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
+
+  /** `v` scaled to unit length. */
+  private def unit(v: Column): Column = transform(v, x => x / sqrt(dot(v, v)))
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
@@ -89,15 +112,82 @@ object SimilarityQueries {
   val AnnPlanes = 4
   val AnnK = 5
 
-  /** Bucket id for hash table `t`: AnnPlanes sign bits packed into a long.
-    * Hyperplane weights are driver-computed literals — the scan stage stays
-    * one narrow codegen'd projection.
-    */
-  private def bucketFor(emb: Column, t: Int): Column =
-    (0 until AnnPlanes).map { p =>
-      val w = hyperplane(t * AnnPlanes + p, 64)
-      when(dot(emb, typedlit(w)) > 0, lit(1L << p)).otherwise(lit(0L))
+  /** (vec_id, label, emb) with the embedding as array<double>. */
+  private[graft] def embedded(raw: DataFrame): DataFrame =
+    raw.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb"))
+
+  /** `e` with its per-vector norm `nrm` (kept if already there): a cosine
+    * against it pays one dot per pair instead of three — the same
+    * dot/sqrt/divide sequence, so bit-identical values. */
+  private def withNorm(e: DataFrame): DataFrame =
+    if (e.columns.contains("nrm")) e else e.withColumn("nrm", norm(col("emb")))
+
+  /** Normalized (vec_id, label, emb) frame — the PQ rungs' input. */
+  private[graft] def normalized(raw: DataFrame): DataFrame =
+    raw.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb0"))
+      .select(col("vec_id"), col("label"), unit(col("emb0")).as("emb"))
+
+  /** One row per (vector, subquantizer j): the `keys` columns, `j`, and
+    * the j-th `dims / m`-wide slice of `vec` as `sv`. */
+  private[graft] def subvectors(df: DataFrame, keys: Seq[String], vec: Column,
+                                m: Int, dims: Int): DataFrame = {
+    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
+    val sub = dims / m
+    df.select(keys.map(col) :+ explode(array((0 until m).map(j =>
+        struct(lit(j).as("j"), slice(vec, j * sub + 1, sub).as("sv"))): _*)).as("s"): _*)
+      .select(keys.map(col) ++ Seq(col("s.j").as("j"), col("s.sv").as("sv")): _*)
+  }
+
+  /** The d-ordered array of `v` over a group's (d, v) rows. */
+  private def byDim(v: Column): Column =
+    transform(array_sort(collect_list(struct(col("d"), v.as("v")))), s => s.getField("v"))
+
+  /** The exact top-k tail every retrieval rung ends in: per query `q_id`,
+    * the `k` candidates `c_id` of highest `cos` (the lower c_id first on
+    * ties), cos rounded to 4 places. */
+  private[graft] def exactTopK(pairs: DataFrame, cos: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
+    pairs.withColumn("cos", cos)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
+  }
+
+  /** One side of a candidate pair: every column of `e` prefixed `p_`,
+    * vec_id becoming `p_id`. */
+  private def side(e: DataFrame, p: String): DataFrame =
+    e.select(e.columns.toSeq.map(c =>
+      col(c).as(s"${p}_${if (c == "vec_id") "id" else c}")): _*)
+
+  /** Pair cosine from the norms both sides carry. */
+  private def sideCos: Column =
+    dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm"))
+
+  /** Exact re-rank of candidate pairs (q_id, c_id) against `e`. */
+  private def rerank(cand: DataFrame, e: DataFrame, cos: Column, k: Int): DataFrame =
+    exactTopK(cand.join(side(e, "q"), Seq("q_id")).join(side(e, "c"), Seq("c_id")), cos, k)
+
+  /** Brute-force top-k: every label-0 vector of `e` queries all others. */
+  private def allPairsTopK(e: DataFrame, k: Int): DataFrame =
+    exactTopK(side(e.filter(col("label") === 0), "q")
+      .join(side(e, "c"), col("q_id") =!= col("c_id")), sideCos, k)
+
+  /** Sign-bit bucket of `emb` over the hyperplanes `planes`: bit i is set
+    * iff emb · w(planes(i)) > 0. The weights are driver-computed
+    * literals, so the scan stage stays one narrow codegen'd projection. */
+  private def signature(emb: Column, planes: Range): Column =
+    planes.zipWithIndex.map { case (p, i) =>
+      when(dot(emb, typedlit(hyperplane(p, 64))) > 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
+
+  /** LSH signatures (vec_id, t, bucket): one row per vector and hash table
+    * t, which hashes over planes [t·AnnPlanes, (t+1)·AnnPlanes). */
+  private[graft] def lshSignatures(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), explode(array((0 until AnnTables).map(t =>
+        struct(lit(t).as("t"),
+          signature(col("emb"), t * AnnPlanes until (t + 1) * AnnPlanes).as("bucket"))): _*))
+        .as("tb"))
+      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
 
   /** LSH ANN retrieval end-to-end (the 100 TB path the brute-force query is
     * the oracle for): signatures → bucket-equi-join for candidates (shuffle
@@ -108,21 +198,10 @@ object SimilarityQueries {
     * splits the probe; raising AnnPlanes shrinks buckets geometrically.
     */
   def lshTopK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // `e` feeds signatures, query selection, and both re-rank sides;
-    // `sigs` is both the probe AND build side of the bucket join.
-    // per-vector norm persisted beside the embedding: the re-rank then
-    // pays ONE dot per candidate pair instead of three (norms are
-    // per-vector, bit-identical cos values)
-    val e = embs(s, dir)
-      .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = e.select(col("vec_id"),
-        explode(array((0 until AnnTables).map(t =>
-          struct(lit(t).as("t"), bucketFor(col("emb"), t).as("bucket"))): _*)).as("tb"))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // `sigs` is both the probe AND build side of the bucket join
+    val e = withNorm(embedded(embs(s, dir))).persist(MEMORY_AND_DISK)
+    val sigs = lshSignatures(e).persist(MEMORY_AND_DISK)
     val qIds = e.filter(col("label") === 0).select(col("vec_id").as("q_id"))
     val qSigs = sigs.join(qIds, sigs("vec_id") === qIds("q_id"))
       .select(col("q_id"), col("t"), col("bucket"))
@@ -130,95 +209,86 @@ object SimilarityQueries {
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("c_id"))
       .distinct()
-    val qEmb = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-      col("nrm").as("q_nrm"))
-    val cEmb = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
-      col("nrm").as("c_nrm"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cand.join(qEmb, Seq("q_id")).join(cEmb, Seq("c_id"))
-      .withColumn("cos",
-        dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= AnnK)
-      .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
+    rerank(cand, e, sideCos, AnnK)
   }
+
+  /** Coarse cells (cell, c_emb) after `steps` integer-exact Lloyd's
+    * iterations from the 16 seed cells (the first 16 vectors). A step
+    * assigns every vector to its argmax-cosine cell and takes the
+    * per-(cell, dim) BIGINT sum of floor(x·1024) as the refined centroid:
+    * ·1024 is an exact power-of-two scale, floor is tie-free, BIGINT sums
+    * are order-independent, and cosine is scale-invariant, so the
+    * un-normalized quantized sum IS the mean direction — no
+    * FP-order-sensitive division, bit-identical in Spark and the DuckDB
+    * oracle at any step count. Centroid frames are 16 rows: each step is
+    * one more broadcast-assignment pass over the vectors (at 10^9 vectors
+    * one trains on a sample; the pass shape is identical).
+    */
+  private[graft] def lloydCells(e: DataFrame, steps: Int): DataFrame = {
+    val seeds = e.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("cell"), col("emb").as("c_emb"))
+    (1 to steps).foldLeft(seeds) { (cents, _) =>
+      assignCells(e, cents).filter(col("rk") === 1)
+        .select(col("cell"), posexplode(col("emb")).as(Seq("d", "x")))
+        .groupBy("cell", "d").agg(sum(floor(col("x") * 1024)).as("cq"))
+        .groupBy("cell").agg(byDim(col("cq").cast("double")).as("c_emb"))
+    }
+  }
+
+  /** Every vector of `e` scored against the cells `cents` (cell, c_emb):
+    * one row per (vector, cell) with `csim` and the per-vector rank `rk`
+    * by (csim desc, cell) — rk = 1 is the cell assignment. Norms are
+    * taken per vector and per cell below the 16-way broadcast cross join,
+    * so a pair pays one dot. */
+  private[graft] def assignCells(e: DataFrame, cents: DataFrame): DataFrame =
+    withNorm(e).crossJoin(broadcast(cents.withColumn("c_nrm", norm(col("c_emb")))))
+      .withColumn("csim", dot(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm")))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))))
+
+  /** [[assignCells]] against the `steps`-trained [[lloydCells]]: the
+    * coarse quantizer of every IVF rung and of [[semanticDrops]]. */
+  private[graft] def trainedScored(e: DataFrame, steps: Int): DataFrame =
+    assignCells(e, lloydCells(e, steps))
+
+  /** Each label-0 query's `probeCells` best cells: (q_id, cell). */
+  private def probes(scored: DataFrame, probeCells: Int): DataFrame =
+    scored.filter(col("label") === 0 && col("rk") <= probeCells)
+      .select(col("vec_id").as("q_id"), col("cell"))
+
+  /** The inverted-file restriction over a [[trainedScored]] frame:
+    * (cell, q_id, m_id) for every member m_id assigned to a cell its query
+    * q_id probes, the query itself excluded. */
+  private[graft] def probedPairs(scored: DataFrame, probeCells: Int): DataFrame =
+    probes(scored, probeCells)
+      .join(scored.filter(col("rk") === 1).select(col("vec_id").as("m_id"), col("cell")),
+        Seq("cell"))
+      .filter(col("q_id") =!= col("m_id"))
 
   /** Trained-IVF retrieval over any (vec_id, label, embedding) frame:
-    * `steps` integer-exact Lloyd's iterations from the 16 seed cells
-    * (every iteration re-quantizes member vectors as floor(x·1024) and
-    * takes BIGINT per-(cell, dim) sums — bit-identical in Spark and the
-    * DuckDB oracle at ANY step count, see q_ann_topk_ivf_trained), then
-    * the standard inverted-file probe. Centroid frames are 16 rows —
-    * each extra step costs one more broadcast-assignment pass over the
-    * vectors, the expected k-means training shape (at 10^9 vectors one
-    * trains on a sample; the assignment pass shape is identical).
+    * `steps` [[lloydCells]] iterations, then the standard inverted-file
+    * probe — each label-0 query probes its `probeCells` best cells and its
+    * candidates (the members of those cells) are exactly re-ranked to the
+    * top `k`.
     */
-  /** Every vector scored against the `steps`-trained cells: one row per
-    * (vector, cell) with `csim` and the per-vector rank `rk` (rk = 1 is
-    * the cell assignment). The shared coarse-quantizer core of
-    * [[ivfTrainedTopK]] and [[semanticDrops]].
-    */
-  private[graft] def trainedScored(e: DataFrame, steps: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // per-vector norm below the 16-way cell cross join: each assignment
-    // pass pays one norm per VECTOR plus one dot per (vector, cell)
-    // instead of re-deriving both norms per pair (bit-identical csim)
-    val en =
-      if (e.columns.contains("nrm")) e
-      else e.withColumn("nrm", norm(col("emb")))
-    val seeds = en.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
-    def assignTo(cents: DataFrame): DataFrame =
-      en.crossJoin(broadcast(cents.withColumn("c_nrm", norm(col("c_emb")))))
-        .withColumn("csim",
-          dot(col("emb"), col("c_emb")) / (col("nrm") * col("c_nrm")))
-        .withColumn("rk", row_number().over(wAssign))
-    // Lloyd's step: argmax-cosine assignment, then per-(cell, dim) BIGINT
-    // sums of floor(x·1024) collected into the refined centroid (cosine is
-    // scale-invariant, so the un-normalized quantized sum IS the mean
-    // direction — no FP-order-sensitive division anywhere)
-    def lloydStep(cents: DataFrame): DataFrame =
-      assignTo(cents).filter(col("rk") === 1)
-        .select(col("cell"), posexplode(col("emb")).as(Seq("d", "x")))
-        .withColumn("q", floor(col("x") * 1024))
-        .groupBy("cell", "d").agg(sum("q").as("cq"))
-        .groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("cq")))),
-          s => s.getField("cq").cast("double")).as("c_emb"))
-    assignTo((1 to steps).foldLeft(seeds)((c, _) => lloydStep(c)))
-  }
-
   def ivfTrainedTopK(raw: DataFrame, probeCells: Int = 2, k: Int = 3,
                      steps: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // `e` feeds steps+1 sequential assignment passes plus both re-rank
     // sides, and `scored` feeds assignment AND probe selection: persist
     // both (blocks reclaimed by the ContextCleaner once unreferenced).
-    val e = raw.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", norm(col("emb")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scored = trainedScored(e, steps)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assign1 = scored.filter(col("rk") === 1)
-      .select(col("vec_id").as("m_id"), col("cell"))
-    val probes = scored.filter(col("label") === 0 && col("rk") <= probeCells)
-      .select(col("vec_id").as("q_id"), col("cell"))
-    val cand = probes.join(assign1, Seq("cell"))
-      .filter(col("q_id") =!= col("m_id"))
+    val e = withNorm(embedded(raw)).persist(MEMORY_AND_DISK)
+    probedTopK(e, trainedScored(e, steps).persist(MEMORY_AND_DISK), probeCells, k)
+  }
+
+  /** The inverted-file probe of a scored frame: each query's candidates
+    * (the members of its `probeCells` best cells) exactly re-ranked to the
+    * top `k`. */
+  private def probedTopK(e: DataFrame, scored: DataFrame, probeCells: Int,
+                         k: Int): DataFrame = {
+    val cand = probedPairs(scored, probeCells)
       .select(col("q_id"), col("m_id").as("c_id"))
       .distinct()
-    val qEmb = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-      col("nrm").as("q_nrm"))
-    val cEmb = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb2"),
-      col("nrm").as("c_nrm"))
-    val wTop = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cand.join(qEmb, Seq("q_id")).join(cEmb, Seq("c_id"))
-      .withColumn("cos",
-        dot(col("q_emb"), col("c_emb2")) / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
+    rerank(cand, e, sideCos, k)
   }
 
   /** Semantic deduplication, SemDeDup-style (Abbas et al., "SemDeDup:
@@ -236,7 +306,7 @@ object SimilarityQueries {
     */
   def semanticDrops(raw: DataFrame, steps: Int = 1,
                     tau: Double = SemTau): DataFrame = {
-    val e = raw.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb"))
+    val e = embedded(raw)
     val assign = trainedScored(e, steps).filter(col("rk") === 1)
       .select(col("vec_id"), col("cell"))
     val m = e.select(col("vec_id"), col("emb")).join(assign, Seq("vec_id"))
@@ -261,19 +331,61 @@ object SimilarityQueries {
     * id range). */
   val SemBound = 400
 
-  /** Product-quantization ANN (Jégou/Douze/Schmid, TPAMI 2011): vectors
-    * are L2-NORMALIZED (so L2 ranking ≡ cosine ranking and the ADC
+  /** The flat trained PQ codebook (j, k, d, cx) over a subvector frame
+    * (vec_id, j, sv): seed centroids from the first `ks` vectors'
+    * subvectors, then one Lloyd's step per subquantizer (mean = exact
+    * BIGINT sum of floor(x·1024) / count, ONE exactly-rounded division, so
+    * both engines land the identical double). The flat and the residual
+    * codebooks both train here; exposed flat so the training itself is
+    * oracle-checkable (q_ann_train_pq).
+    */
+  private[graft] def pqCodebookFlat(sv: DataFrame, ks: Int): DataFrame = {
+    val seeds = sv.filter(col("vec_id") < ks)
+      .select(col("j"), col("vec_id").as("k"), col("sv").as("c"))
+    nearest(pqDistances(sv, seeds))
+      .select(col("j"), col("k"), posexplode(col("sv")).as(Seq("d", "x")))
+      .groupBy("j", "k", "d")
+      .agg(sum(floor(col("x") * 1024)).as("q"), count(lit(1)).as("cnt"))
+      .withColumn("cx", col("q").cast("double") / (col("cnt") * 1024L).cast("double"))
+      .select("j", "k", "d", "cx")
+  }
+
+  /** [[pqCodebookFlat]] in array form: (j, k, c). */
+  private def pqCodebook(sv: DataFrame, ks: Int): DataFrame =
+    pqCodebookFlat(sv, ks).groupBy("j", "k").agg(byDim(col("cx")).as("c"))
+
+  /** Every subvector's squared L2 `dist` to every centroid (j, k, c) of
+    * its subquantizer; the codebook rides a broadcast. */
+  private def pqDistances(sv: DataFrame, cb: DataFrame): DataFrame =
+    sv.join(broadcast(cb), Seq("j")).withColumn("dist", l2(col("sv"), col("c")))
+
+  /** The nearest centroid per (vec_id, j), the lower k first on ties. */
+  private def nearest(dists: DataFrame): DataFrame =
+    dists.withColumn("rn", row_number().over(
+        Window.partitionBy("vec_id", "j").orderBy(col("dist"), col("k"))))
+      .filter(col("rn") === 1)
+
+  /** The PQ encoder: (vec_id, j, code) from [[pqDistances]]. */
+  private def pqEncode(dists: DataFrame): DataFrame =
+    nearest(dists).select(col("vec_id"), col("j"), col("k").as("code"))
+
+  /** A distance-table entry QUANTIZED to BIGINT (floor(dist·2^20)), so the
+    * ADC sum is integer — exact and order-independent at any parallelism
+    * in either engine (an FP sum would rank-flip near-ties on
+    * re-association). ADC is approximate by design; 2^-20 quantization is
+    * far below its own error. */
+  private def quantized(dist: Column): Column =
+    floor(dist * (1L << 20)).cast("long").as("dq")
+
+  /** Product-quantization ANN parts (Jégou/Douze/Schmid, TPAMI 2011):
+    * vectors are L2-NORMALIZED (so L2 ranking ≡ cosine ranking and the ADC
     * shortlist optimizes the same objective the exact re-rank scores),
     * split into `m` subvectors; each subquantizer trains `ks` centroids
-    * with one integer-exact Lloyd's step (floor(x·1024) BIGINT sums, a
-    * BIGINT count, ONE exactly-rounded division — bit-identical in the
-    * DuckDB twin), every vector is encoded as `m` small codes, and
-    * queries rank candidates by ASYMMETRIC distance: a per-query
-    * distance table dtab[j][k] = ||q_j − c_jk||² (m·ks doubles, built
-    * once, broadcast) summed over the candidate's codes via a SEQUENTIAL
-    * array fold — no FP group-sum anywhere, so the math is
-    * order-independent at any parallelism. The ADC shortlist is exactly
-    * re-ranked to the final top-k.
+    * ([[pqCodebookFlat]]), every vector is encoded as `m` small codes, and
+    * the per-query distance table dtab[j][k] = ||q_j − c_jk||² (m·ks
+    * quantized entries, built once, broadcast) serves the asymmetric
+    * distance scan of [[adcTopK]]. Returns (normalized vectors, codes,
+    * dtab).
     *
     * The 10^9-vector story this encodes: candidates are scanned as
     * m-byte code arrays (64-dim float32 → 8 bytes, a 32× memory cut),
@@ -282,132 +394,63 @@ object SimilarityQueries {
     * composes in front of it to cut the scanned set, PQ cuts the bytes
     * per scanned vector.
     */
-  /** The PQ building blocks shared by [[pqTopK]] and [[ivfPqTopK]]:
-    * (normalized vectors, per-vector codes, per-query quantized distance
-    * tables) — see pqTopK for the math contract.
-    */
-  /** The flat trained PQ codebook (j, k, d, cx) over the subvector frame:
-    * seed centroids from the first `ks` vectors' subvectors, then one
-    * Lloyd's step per subquantizer (mean = exact BIGINT sum / count, so
-    * both engines land the identical double). Exposed flat so the
-    * training itself is oracle-checkable (q_ann_train_pq).
-    */
-  private[graft] def pqCodebookFlat(sv: DataFrame, ks: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def l2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-    val wMin = Window.partitionBy("vec_id", "j").orderBy(col("dist"), col("k"))
-    val seeds = sv.filter(col("vec_id") < ks)
-      .select(col("j"), col("vec_id").as("k"), col("sv").as("c"))
-    val assign0 = sv.join(broadcast(seeds), Seq("j"))
-      .withColumn("dist", l2(col("sv"), col("c")))
-      .withColumn("rn", row_number().over(wMin)).filter(col("rn") === 1)
-    assign0
-      .select(col("j"), col("k"), posexplode(col("sv")).as(Seq("d", "x")))
-      .groupBy("j", "k", "d")
-      .agg(sum(floor(col("x") * 1024)).as("q"), count(lit(1)).as("cnt"))
-      .withColumn("cx", col("q").cast("double") / (col("cnt") * 1024L).cast("double"))
-      .select("j", "k", "d", "cx")
-  }
-
-  /** Normalized (vec_id, label, emb) frame — the shared serving input. */
-  private[graft] def normalized(raw: DataFrame): DataFrame = {
-    val e0 = raw.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb0"))
-    e0.withColumn("emb",
-        transform(col("emb0"), x => x / sqrt(dot(col("emb0"), col("emb0")))))
-      .select(col("vec_id"), col("label"), col("emb"))
-  }
-
-  /** Subvector frame (vec_id, label, j, sv) over normalized vectors. */
-  private[graft] def subvectors(e: DataFrame, m: Int, dims: Int): DataFrame = {
-    val sub = dims / m
-    e.select(col("vec_id"), col("label"),
-        explode(array((0 until m).map(j =>
-          struct(lit(j).as("j"), slice(col("emb"), j * sub + 1, sub).as("sv"))): _*)).as("s"))
-      .select(col("vec_id"), col("label"), col("s.j").as("j"), col("s.sv").as("sv"))
-  }
-
   private[graft] def pqParts(raw: DataFrame, m: Int, ks: Int, dims: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val sub = dims / m
-    val e0 = raw.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb0"))
     // `e` feeds the subvector explode AND both exact-re-rank sides;
-    // `sv`/`scored` below each feed two training consumers: persist the
-    // reused frames (ContextCleaner reclaims the blocks once the query's
+    // `sv`/`scored` each feed two training consumers: persist the reused
+    // frames (ContextCleaner reclaims the blocks once the query's
     // references die) instead of recomputing the whole upstream per branch.
-    val e = e0.withColumn("emb",
-        transform(col("emb0"), x => x / sqrt(dot(col("emb0"), col("emb0")))))
-      .select(col("vec_id"), col("label"), col("emb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one row per (vector, subquantizer): the sub-dim slice as an array
-    val sv = e.select(col("vec_id"), col("label"),
-        explode(array((0 until m).map(j =>
-          struct(lit(j).as("j"), slice(col("emb"), j * sub + 1, sub).as("sv"))): _*)).as("s"))
-      .select(col("vec_id"), col("label"), col("s.j").as("j"), col("s.sv").as("sv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def l2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-    val wMin = Window.partitionBy("vec_id", "j").orderBy(col("dist"), col("k"))
-    val cb = pqCodebookFlat(sv, ks)
-      .groupBy("j", "k")
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("cx")))),
-        s => s.getField("cx")).as("c"))
-    // encode every vector; the same scored frame restricted to label-0
-    // rows IS the per-query distance table. The table is QUANTIZED to
-    // BIGINT (floor(dist·2^20)) so the ADC sum is integer — exact and
-    // order-independent at any parallelism in either engine (an FP sum
-    // would rank-flip near-ties on re-association). ADC is approximate
-    // by design; 2^-20 quantization is far below its own error.
-    val scored = sv.join(broadcast(cb), Seq("j"))
-      .withColumn("dist", l2(col("sv"), col("c")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codes = scored.withColumn("rn", row_number().over(wMin))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("j"), col("k").as("code"))
+    val e = normalized(raw).persist(MEMORY_AND_DISK)
+    val sv = subvectors(e, Seq("vec_id", "label"), col("emb"), m, dims)
+      .persist(MEMORY_AND_DISK)
+    // the scored frame encodes every vector and, restricted to label-0
+    // rows, IS the per-query distance table
+    val scored = pqDistances(sv, pqCodebook(sv, ks)).persist(MEMORY_AND_DISK)
     val dtab = scored.filter(col("label") === 0)
-      .select(col("vec_id").as("q_id"), col("j"), col("k"),
-        floor(col("dist") * (1L << 20)).cast("long").as("dq"))
-    (e, codes, dtab)
+      .select(col("vec_id").as("q_id"), col("j"), col("k"), quantized(col("dist")))
+    (e, pqEncode(scored), dtab)
   }
 
-  /** ADC shortlist + exact re-rank over a candidate code set — the tail
-    * both PQ retrieval variants share. `codes` may be pre-restricted
-    * (the IVF-probed subset) or the full table.
+  /** ADC shortlist + exact re-rank — the serving tail of every PQ rung (no
+    * training inside: the query phase a 10^9-vector deployment pays per
+    * query batch). Each `scan` row (vec_id, j, code, …) looks up the
+    * broadcast table `dtab` (q_id, j, k, dq, …) on j, code = k and
+    * `lookup`; a candidate's ADC is the BIGINT sum of its m lookups — the
+    * only per-candidate work at scan time (the 10^9-vector deployment packs
+    * codes as an m-byte array column; the long form keeps both engines'
+    * math identical). The `shortlist` lowest per query (c_id breaks ties)
+    * are exactly re-ranked (normalized dot = cosine) to the top `k`.
     */
-  private[graft] def adcRerank(e: DataFrame, codes: DataFrame, dtab: DataFrame,
-                               shortlist: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // ADC: every candidate's m codes look up the broadcast table — the
-    // only per-candidate work at scan time; codes are a 32× memory cut
-    // vs the raw float32 vectors (the 10^9-vector deployment packs them
-    // as an m-byte array column; the long form here keeps both engines'
-    // math identical)
-    val adc = codes.join(broadcast(dtab),
-        codes("j") === dtab("j") && codes("code") === dtab("k") &&
-          codes("vec_id") =!= dtab("q_id"))
-      .groupBy(col("q_id"), codes("vec_id").as("c_id"))
+  private[graft] def adcTopK(e: DataFrame, scan: DataFrame, dtab: DataFrame,
+                             lookup: Column, shortlist: Int, k: Int): DataFrame = {
+    val adc = scan.join(broadcast(dtab),
+        scan("j") === dtab("j") && scan("code") === dtab("k") && lookup)
+      .groupBy(col("q_id"), scan("vec_id").as("c_id"))
       .agg(sum(col("dq")).as("adc"))
     val wAdc = Window.partitionBy("q_id").orderBy(col("adc"), col("c_id"))
     val cand = adc.withColumn("rn", row_number().over(wAdc))
       .filter(col("rn") <= shortlist)
       .select(col("q_id"), col("c_id"))
-    // exact re-rank of the shortlist (normalized dot = cosine)
-    val qEmb = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val cEmb = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-    val wTop = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cand.join(qEmb, Seq("q_id")).join(cEmb, Seq("c_id"))
-      .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
+    rerank(cand, e, dot(col("q_emb"), col("c_emb")), k)
   }
 
+  // The ADC lookup keys beyond (j, code = k): the flat scan skips the
+  // query's own codes; a probed scan reads its own query's table, and the
+  // residual one that query's table for the candidate's probed cell.
+  private[graft] val FlatLookup: Column = col("vec_id") =!= col("q_id")
+  private[graft] val ProbedLookup: Column = col("p_q") === col("q_id")
+  private[graft] val ResidualLookup: Column =
+    ProbedLookup && col("p_cell") === col("cell")
+
+  /** The code scan restricted to the probed members (codes ⋈ probed). */
+  private[graft] def probedCodes(codes: DataFrame, probed: DataFrame): DataFrame =
+    codes.join(probed, codes("vec_id") === probed("m_id"))
+
+  /** Flat PQ retrieval: the ADC shortlist over every vector's codes. */
   def pqTopK(raw: DataFrame, m: Int = 8, ks: Int = 16,
              shortlist: Int = 10, k: Int = 5, dims: Int = 64): DataFrame = {
     val (e, codes, dtab) = pqParts(raw, m, ks, dims)
-    adcRerank(e, codes, dtab, shortlist, k)
+    adcTopK(e, codes, dtab, FlatLookup, shortlist, k)
   }
 
   /** IVF-PQ retrieval (the two halves composed, FAISS's IVFPQ with
@@ -418,78 +461,22 @@ object SimilarityQueries {
     * → per-cell code scan with a broadcast distance table → shortlist →
     * exact re-rank on the few survivors. Non-residual encoding keeps the
     * codebooks global (one table per query instead of one per probed
-    * cell) — the residual refinement is a documented accuracy upgrade,
-    * not a different plan shape.
+    * cell) — the residual refinement is [[ivfPqResidualTopK]].
     */
   def ivfPqTopK(raw: DataFrame, probeCells: Int = 2, m: Int = 8, ks: Int = 16,
                 shortlist: Int = 20, k: Int = 3, dims: Int = 64,
                 steps: Int = 1): DataFrame = {
     val (e, codes, dtab) = pqParts(raw, m, ks, dims)
-    servePqIvf(e, codes, dtab, ivfProbedPairs(e, probeCells, steps), shortlist, k)
+    adcTopK(e, probedCodes(codes, ivfProbedPairs(e, probeCells, steps)), dtab,
+      ProbedLookup, shortlist, k)
   }
 
-  /** Trained coarse quantizer → the inverted-file restriction: (query,
-    * member) pairs sharing a probed cell — integer-exact cells (same
-    * construction as ivfTrainedTopK) over the normalized vectors.
-    */
+  /** The IVF-PQ probe restriction (p_q, m_id): [[probedPairs]] over the
+    * `steps`-trained cells of the normalized vectors. */
   private[graft] def ivfProbedPairs(e: DataFrame, probeCells: Int,
-                                    steps: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val seeds = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
-    def assignTo(cents: DataFrame): DataFrame =
-      e.crossJoin(broadcast(cents))
-        .withColumn("csim", cosine(col("emb"), col("c_emb")))
-        .withColumn("rk", row_number().over(wAssign))
-    def lloydStep(cents: DataFrame): DataFrame =
-      assignTo(cents).filter(col("rk") === 1)
-        .select(col("cell"), posexplode(col("emb")).as(Seq("d", "x")))
-        .withColumn("q", floor(col("x") * 1024))
-        .groupBy("cell", "d").agg(sum("q").as("cq"))
-        .groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("cq")))),
-          s => s.getField("cq").cast("double")).as("c_emb"))
-    val trained = (1 to steps).foldLeft(seeds)((c, _) => lloydStep(c))
-    val scored = assignTo(trained)
-    val assign = scored.filter(col("rk") === 1)
-      .select(col("vec_id").as("m_id"), col("cell"))
-    val probes = scored.filter(col("label") === 0 && col("rk") <= probeCells)
-      .select(col("vec_id").as("q_id"), col("cell"))
-    probes.join(assign, Seq("cell"))
-      .filter(col("q_id") =!= col("m_id"))
+                                    steps: Int): DataFrame =
+    probedPairs(trainedScored(e, steps), probeCells)
       .select(col("q_id").as("p_q"), col("m_id"))
-  }
-
-  /** ADC over per-query probed codes + exact re-rank — the IVF-PQ serving
-    * tail (no training anywhere inside: the 10^9-vector query phase).
-    */
-  private[graft] def servePqIvf(e: DataFrame, codes: DataFrame, dtab: DataFrame,
-                                probed: DataFrame, shortlist: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probedCodes = codes.join(probed, codes("vec_id") === probed("m_id"))
-      .select(col("p_q"), col("vec_id"), col("j"), col("code"))
-    // restrict each query's table lookups to its own probed members
-    val adcIn = probedCodes.withColumnRenamed("p_q", "probe_q")
-    val dtabKeyed = dtab
-    val restricted = adcIn.join(broadcast(dtabKeyed),
-        adcIn("j") === dtabKeyed("j") && adcIn("code") === dtabKeyed("k") &&
-          adcIn("probe_q") === dtabKeyed("q_id"))
-      .groupBy(col("q_id"), adcIn("vec_id").as("c_id"))
-      .agg(sum(col("dq")).as("adc"))
-    val wAdc = Window.partitionBy("q_id").orderBy(col("adc"), col("c_id"))
-    val cand = restricted.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= shortlist)
-      .select(col("q_id"), col("c_id"))
-    val qEmb = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val cEmb = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-    val wTop = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cand.join(qEmb, Seq("q_id")).join(cEmb, Seq("c_id"))
-      .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
-  }
 
   /** Residual IVF-PQ (the full IVFADC of Jégou/Douze/Schmid §III —
     * FAISS's by_residual=true): vectors are encoded as the PQ codes of
@@ -509,7 +496,7 @@ object SimilarityQueries {
                         ks: Int = 16, shortlist: Int = 20, k: Int = 3,
                         dims: Int = 64): DataFrame = {
     val (e, codes, dtab, probed) = residualParts(raw, probeCells, m, ks, dims)
-    serveResidual(e, codes, dtab, probed, shortlist, k)
+    adcTopK(e, probedCodes(codes, probed), dtab, ResidualLookup, shortlist, k)
   }
 
   /** The trainable artifacts of residual IVFADC: (normalized vectors,
@@ -521,119 +508,42 @@ object SimilarityQueries {
   private[graft] def residualParts(raw: DataFrame, probeCells: Int = 2,
                                    m: Int = 8, ks: Int = 16, dims: Int = 64)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val sub = dims / m
     // The normalized frame feeds SIX consumers (two assignment passes,
     // residual encode, query residuals, both re-rank sides): cache it, or
     // each consumer re-reads and re-normalizes the full table. Same for
     // `scored`/`rsv` below (training reuse). At 10^9 vectors these are
     // narrow (id + vector) frames — the standard iterative-training
     // persist, spilled to disk when executor storage is tight.
-    val e = raw.select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb0"))
-      .withColumn("emb", transform(col("emb0"), x => x / sqrt(dot(col("emb0"), col("emb0")))))
-      .select(col("vec_id"), col("label"), col("emb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // coarse: one integer-exact Lloyd step from the 16 seed cells, then
-    // NORMALIZE the trained centroids (residuals need unit-scale anchors;
-    // cosine assignment is scale-invariant so the ranking is unchanged)
-    val seeds = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cell"), col("emb").as("c_emb"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
-    def assignTo(cents: DataFrame): DataFrame =
-      e.crossJoin(broadcast(cents))
-        .withColumn("csim", cosine(col("emb"), col("c_emb")))
-        .withColumn("rk", row_number().over(wAssign))
-    val trained = assignTo(seeds).filter(col("rk") === 1)
-      .select(col("cell"), posexplode(col("emb")).as(Seq("d", "x")))
-      .withColumn("q", floor(col("x") * 1024))
-      .groupBy("cell", "d").agg(sum("q").as("cq"))
-      .groupBy("cell")
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("cq")))),
-        s => s.getField("cq").cast("double")).as("c_emb"))
-    val cents = trained.withColumn("c_hat",
-        transform(col("c_emb"), x => x / sqrt(dot(col("c_emb"), col("c_emb")))))
-      .select(col("cell"), col("c_emb"), col("c_hat"))
-    val scored = assignTo(cents.select(col("cell"), col("c_emb")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assign = scored.filter(col("rk") === 1).select(col("vec_id"), col("cell"))
-    val probes = scored.filter(col("label") === 0 && col("rk") <= probeCells)
-      .select(col("vec_id").as("q_id"), col("cell"))
-    // residual of every vector against ITS cell's unit centroid, split
-    // into subvectors — the PQ input
-    def subSplit(vecCol: Column): Column =
-      explode(array((0 until m).map(j =>
-        struct(lit(j).as("j"), slice(vecCol, j * sub + 1, sub).as("sv"))): _*))
-    val resid = e.join(assign, Seq("vec_id"))
-      .join(broadcast(cents.select(col("cell"), col("c_hat"))), Seq("cell"))
-      .withColumn("r", zip_with(col("emb"), col("c_hat"), (x, c) => x - c))
-    val rsv = resid.select(col("vec_id"), col("label"), subSplit(col("r")).as("s"))
-      .select(col("vec_id"), col("label"), col("s.j").as("j"), col("s.sv").as("sv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def l2(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-    val wMin = Window.partitionBy("vec_id", "j").orderBy(col("dist"), col("k"))
-    val pqSeeds = rsv.filter(col("vec_id") < ks)
-      .select(col("j"), col("vec_id").as("k"), col("sv").as("c"))
-    val cb = rsv.join(broadcast(pqSeeds), Seq("j"))
-      .withColumn("dist", l2(col("sv"), col("c")))
-      .withColumn("rn", row_number().over(wMin)).filter(col("rn") === 1)
-      .select(col("j"), col("k"), posexplode(col("sv")).as(Seq("d", "x")))
-      .groupBy("j", "k", "d")
-      .agg(sum(floor(col("x") * 1024)).as("q"), count(lit(1)).as("cnt"))
-      .withColumn("cx", col("q").cast("double") / (col("cnt") * 1024L).cast("double"))
-      .groupBy("j", "k")
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("cx")))),
-        s => s.getField("cx")).as("c"))
-    val codes = rsv.join(broadcast(cb), Seq("j"))
-      .withColumn("dist", l2(col("sv"), col("c")))
-      .withColumn("rn", row_number().over(wMin)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("j"), col("k").as("code"))
+    val e = normalized(raw).persist(MEMORY_AND_DISK)
+    // coarse: one Lloyd step from the 16 seed cells; the trained
+    // centroids, NORMALIZED, are the residual anchors c_hat (cosine
+    // assignment is scale-invariant, so the ranking is unchanged)
+    val cells = lloydCells(e, 1)
+    val cHat = cells.select(col("cell"), unit(col("c_emb")).as("c_hat"))
+    val scored = assignCells(e, cells).persist(MEMORY_AND_DISK)
+    // subvectors of the residual of each (…, emb, cell) row against its
+    // cell's unit centroid — the PQ input
+    def residuals(df: DataFrame, keys: Seq[String]): DataFrame =
+      subvectors(df.join(broadcast(cHat), Seq("cell"))
+          .withColumn("r", zip_with(col("emb"), col("c_hat"), (x, c) => x - c)),
+        keys, col("r"), m, dims)
+    val rsv = residuals(
+        e.join(scored.filter(col("rk") === 1).select(col("vec_id"), col("cell")), Seq("vec_id")),
+        Seq("vec_id", "label"))
+      .persist(MEMORY_AND_DISK)
+    val cb = pqCodebook(rsv, ks)
     // per-(query, PROBED CELL) distance table: the query's residual is
     // taken against each probed cell's centroid
-    val qresid = probes.join(e.select(col("vec_id").as("q_id"), col("emb")), Seq("q_id"))
-      .join(broadcast(cents.select(col("cell"), col("c_hat"))), Seq("cell"))
-      .withColumn("r", zip_with(col("emb"), col("c_hat"), (x, c) => x - c))
-    val qsv = qresid.select(col("q_id"), col("cell"), subSplit(col("r")).as("s"))
-      .select(col("q_id"), col("cell"), col("s.j").as("j"), col("s.sv").as("sv"))
-    val dtab = qsv.join(broadcast(cb), Seq("j"))
-      .withColumn("dist", l2(col("sv"), col("c")))
-      .select(col("q_id"), col("cell"), col("j"), col("k"),
-        floor(col("dist") * (1L << 20)).cast("long").as("dq"))
+    val qsv = residuals(
+      probes(scored, probeCells).join(e.select(col("vec_id").as("q_id"), col("emb")), Seq("q_id")),
+      Seq("q_id", "cell"))
+    val dtab = pqDistances(qsv, cb)
+      .select(col("q_id"), col("cell"), col("j"), col("k"), quantized(col("dist")))
     // candidates = members of probed cells; lookups keyed additionally by
     // the candidate's cell so each query uses the right residual table
-    val probed = probes.join(assign.withColumnRenamed("vec_id", "m_id"), Seq("cell"))
-      .filter(col("q_id") =!= col("m_id"))
+    val probed = probedPairs(scored, probeCells)
       .select(col("q_id").as("p_q"), col("cell").as("p_cell"), col("m_id"))
-    (e, codes, dtab, probed)
-  }
-
-  /** Residual-IVFADC serving tail: per-(query, probed cell) ADC shortlist
-    * + exact re-rank. No training inside — the query phase a 10^9-vector
-    * deployment actually pays per query batch.
-    */
-  private[graft] def serveResidual(e: DataFrame, codes: DataFrame,
-                                   dtab: DataFrame, probed: DataFrame,
-                                   shortlist: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val adc = codes.join(probed, codes("vec_id") === probed("m_id"))
-      .join(broadcast(dtab),
-        codes("j") === dtab("j") && codes("code") === dtab("k") &&
-          col("p_q") === dtab("q_id") && col("p_cell") === dtab("cell"))
-      .groupBy(col("q_id"), codes("vec_id").as("c_id"))
-      .agg(sum(col("dq")).as("adc"))
-    val wAdc = Window.partitionBy("q_id").orderBy(col("adc"), col("c_id"))
-    val cand = adc.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") <= shortlist)
-      .select(col("q_id"), col("c_id"))
-    val qEmb = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-    val cEmb = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-    val wTop = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    cand.join(qEmb, Seq("q_id")).join(cEmb, Seq("c_id"))
-      .withColumn("cos", dot(col("q_emb"), col("c_emb")))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
+    (e, pqEncode(pqDistances(rsv, cb)), dtab, probed)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -641,8 +551,7 @@ object SimilarityQueries {
     // Pairwise cosine on a bounded id range — value-level oracle for the
     // kernels (no threshold filter: row set is fixed, only values compared).
     "q_sim_pairs_cos" -> ((s, dir) => {
-      val e = embs(s, dir).filter(col("vec_id") < 20)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+      val e = embedded(embs(s, dir)).filter(col("vec_id") < 20)
       val a = e.select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
       val b = e.select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
       a.join(b, col("a_id") < col("b_id"))
@@ -653,29 +562,8 @@ object SimilarityQueries {
 
     // Brute-force cosine top-k: every label-0 vector queries the full table.
     // The all-pairs baseline the IVF/LSH path is validated against.
-    "q_ann_topk_bruteforce" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // norms are per-VECTOR, not per-pair: compute them below the pair
-      // join (once per row on each side) so each of the |q|·n pairs pays
-      // one dot product instead of three — same dot/sqrt/divide sequence,
-      // bit-identical cos values
-      val e = embs(s, dir)
-        .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb"))
-        .withColumn("nrm", norm(col("emb")))
-      val q = e.filter(col("label") === 0)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("nrm").as("q_nrm"))
-      val cand = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"),
-        col("nrm").as("c_nrm"))
-      val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-      q.join(cand, col("q_id") =!= col("c_id"))
-        .withColumn("cos",
-          dot(col("q_emb"), col("c_emb")) / (col("q_nrm") * col("c_nrm")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
-        .orderBy("q_id", "rk")
-    }),
+    "q_ann_topk_bruteforce" -> ((s, dir) =>
+      allPairsTopK(withNorm(embedded(embs(s, dir))), 5).orderBy("q_id", "rk")),
 
     // LSH ANN retrieval end-to-end: per-query top-k within bucket-join
     // candidates (see lshTopK) — the production path validated against
@@ -689,20 +577,8 @@ object SimilarityQueries {
     // baseline. Bounded all-pairs here only because it is the oracle of
     // the projection math itself.
     "q_ann_topk_jl" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = embs(s, dir)
-        .select(col("vec_id"), col("label"),
-          jlProject(asDouble(col("embedding")), JlDims).as("emb"))
-      val q = e.filter(col("label") === 0)
-        .select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val cand = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb"))
-      val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-      q.join(cand, col("q_id") =!= col("c_id"))
-        .withColumn("cos", cosine(col("q_emb"), col("c_emb")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
-        .orderBy("q_id", "rk")
+      val e = embedded(embs(s, dir)).withColumn("emb", jlProject(col("emb"), JlDims))
+      allPairsTopK(withNorm(e), 5).orderBy("q_id", "rk")
     }),
 
     // Recall@k of the LSH path vs the brute-force baseline, per query —
@@ -729,12 +605,8 @@ object SimilarityQueries {
     // keep pairs above the near-dup threshold. Bounded id range keeps the
     // oracle tractable; the plan shape is the production one.
     "q_dedup_embedding" -> ((s, dir) => {
-      val e = embs(s, dir).filter(col("vec_id") < 300)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      val sigs = e.select(col("vec_id"),
-          explode(array((0 until AnnTables).map(t =>
-            struct(lit(t).as("t"), bucketFor(col("emb"), t).as("bucket"))): _*)).as("tb"))
-        .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
+      val e = embedded(embs(s, dir)).filter(col("vec_id") < 300)
+      val sigs = lshSignatures(e)
       val cand = sigs.as("x").join(sigs.as("y"),
           col("x.t") === col("y.t") && col("x.bucket") === col("y.bucket") &&
             col("x.vec_id") < col("y.vec_id"))
@@ -750,70 +622,40 @@ object SimilarityQueries {
     }),
 
     // IVF ANN variant: coarse quantizer = the first 16 vectors as cell
-    // centroids (deterministic, so the oracle reproduces them — a k-means
-    // refinement would only move the centroids, not the plan shape).
+    // centroids, untrained (deterministic, so the oracle reproduces them).
     // Every vector is assigned to its argmax-cosine cell; label-0 queries
     // probe their top-2 cells; exact re-rank within the probed cells.
     // Shuffle is on cell id — the inverted-file pattern.
     "q_ann_topk_ivf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = embs(s, dir)
-        .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("emb"))
-      val cents = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("emb").as("c_emb"))
-      val scored = e.crossJoin(broadcast(cents))
-        .withColumn("csim", cosine(col("emb"), col("c_emb")))
-      val wAssign = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
-      val assign = scored.withColumn("rk", row_number().over(wAssign))
-        .filter(col("rk") === 1)
-        .select(col("vec_id").as("m_id"), col("cell"))
-      val probes = scored.filter(col("label") === 0)
-        .withColumn("rk", row_number().over(wAssign))
-        .filter(col("rk") <= 2)
-        .select(col("vec_id").as("q_id"), col("cell"))
-      val cand = probes.join(assign, Seq("cell"))
-        .filter(col("q_id") =!= col("m_id"))
-        .select(col("q_id"), col("m_id").as("c_id"))
-        .distinct()
-      val qEmb = e.select(col("vec_id").as("q_id"), col("emb").as("q_emb"))
-      val cEmb = e.select(col("vec_id").as("c_id"), col("emb").as("c_emb2"))
-      val wTop = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-      cand.join(qEmb, Seq("q_id")).join(cEmb, Seq("c_id"))
-        .withColumn("cos", cosine(col("q_emb"), col("c_emb2")))
-        .withColumn("rk", row_number().over(wTop))
-        .filter(col("rk") <= 3)
-        .select(col("q_id"), col("rk"), col("c_id"), round(col("cos"), 4).as("cos"))
-        .orderBy("q_id", "rk")
+      // nothing persisted: with no training pass, caching `e` and the
+      // scored frame costs more than the second assignment pass it saves
+      val e = withNorm(embedded(embs(s, dir)))
+      probedTopK(e, trainedScored(e, 0), probeCells = 2, k = 3).orderBy("q_id", "rk")
     }),
 
-    // IVF with a TRAINED coarse quantizer: THREE deterministic Lloyd's
-    // iterations over the 16 seed cells. The refined centroid is the
-    // per-cell element-wise SUM of assigned vectors, integer-quantized as
-    // floor(x·1024) — exact everywhere: ·1024 is a power-of-two scale of a
-    // float-derived double (no rounding), floor is tie-free, and BIGINT
-    // sums are order-independent, so the trained centroids are
-    // bit-identical in Spark and the DuckDB oracle. Cosine is
-    // scale-invariant, so the un-normalized sum IS the mean direction —
-    // no division, no FP-order sensitivity. Same inverted-file plan shape
-    // as q_ann_topk_ivf (assign → probe top-2 cells → exact re-rank);
-    // training quality is asserted on clustered data in AnnClusteredSpec.
-    // Reference analogue: best-of-N selection analysis.py:645-671.
+    // IVF with a TRAINED coarse quantizer: THREE integer-exact Lloyd's
+    // iterations over the 16 seed cells (see lloydCells), so the trained
+    // centroids are bit-identical in Spark and the DuckDB oracle. Same
+    // inverted-file plan shape as q_ann_topk_ivf (assign → probe top-2
+    // cells → exact re-rank); training quality is asserted on clustered
+    // data in AnnClusteredSpec. Reference analogue: best-of-N selection
+    // analysis.py:645-671.
     "q_ann_topk_ivf_trained" -> ((s, dir) => ivfTrainedTopK(embs(s, dir))
       .orderBy("q_id", "rk")),
 
-    // Product-quantization ANN end-to-end (see pqTopK): normalized
-    // vectors → 8 subquantizers × 16 integer-exact trained centroids →
-    // m-byte codes → quantized asymmetric-distance shortlist → exact
-    // re-rank. The memory leg of the 10^9-vector story (IVF cuts the
-    // scanned set; PQ cuts the bytes per scanned vector 32×).
     // SemDeDup drop listing over a bounded id range (the oracle replays
     // the trained assignment + within-cell pairing exactly in SQL)
     "q_dedup_semantic" -> ((s, dir) =>
       semanticDrops(embs(s, dir).filter(col("vec_id") < SemBound))
         .orderBy("drop_id")),
 
-    // SERVED from the per-tier ANN store (AnnStore): the query phase pays
-    // ADC + re-rank only — training ran once at store publication and is
+    // Product-quantization ANN end-to-end (see pqParts): normalized
+    // vectors → 8 subquantizers × 16 integer-exact trained centroids →
+    // m-byte codes → quantized asymmetric-distance shortlist → exact
+    // re-rank. The memory leg of the 10^9-vector story (IVF cuts the
+    // scanned set; PQ cuts the bytes per scanned vector 32×). SERVED from
+    // the per-tier ANN store (AnnStore): the query phase pays ADC +
+    // re-rank only — training ran once at store publication and is
     // oracle-verified separately (q_ann_train_pq). The DuckDB twin still
     // replays training+serving end-to-end, valid because the store is a
     // pure function of the tier.
@@ -839,7 +681,8 @@ object SimilarityQueries {
     // persisted store.
     "q_ann_train_pq" -> ((s, dir) => {
       val e = normalized(embs(s, dir))
-      pqCodebookFlat(subvectors(e, m = 8, dims = 64), ks = 16)
+      pqCodebookFlat(subvectors(e, Seq("vec_id", "label"), col("emb"), m = 8, dims = 64),
+          ks = 16)
         .orderBy("j", "k", "d")
     }),
 
@@ -850,43 +693,100 @@ object SimilarityQueries {
     // CONSTANTS: computed once on the driver and embedded as literal
     // arrays, so the scan stage is a single narrow projection (no join,
     // no per-row md5 — the plan the optimizer can't derive itself).
-    "q_sim_lsh_buckets" -> ((s, dir) => {
-      val planes = 8
-      val e = embs(s, dir)
-        .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      val bucket = (0 until planes).map { p =>
-        val w = hyperplane(p, 64)
-        when(dot(col("emb"), typedlit(w)) > 0, lit(1L << p)).otherwise(lit(0L))
-      }.reduce(_ + _)
-      e.select(col("vec_id"), bucket.as("bucket"))
+    "q_sim_lsh_buckets" -> ((s, dir) =>
+      embedded(embs(s, dir))
+        .select(col("vec_id"), signature(col("emb"), 0 until 8).as("bucket"))
         .groupBy("bucket").agg(count(lit(1)).as("n_vecs"), min("vec_id").as("min_vec"))
-        .orderBy("bucket")
-    })
+        .orderBy("bucket"))
   )
 
-  /** DuckDB twin of [[ivfTrainedTopK]] for any Lloyd's step count: the
-    * training blocks are generated per step (assign to cents_i → quantized
-    * BIGINT sums → cents_{i+1}) so the oracle replays EXACTLY the
-    * iteration the Spark path runs — every step bit-exact (see the
-    * q_ann_topk_ivf_trained query comment for why floor(x·1024) + BIGINT
-    * sums are engine-independent).
-    */
-  private def ivfTrainedSql(steps: Int): String = {
-    val stepBlocks = (0 until steps).map { i =>
-      s""",
-         sd$i AS (
-           SELECT e.vec_id, c.cell,
+  // ---- DuckDB twins: one hand-written SQL builder per stage ----
+
+  /** The `e` CTE: embeddings as DOUBLE[] (vec_id, label, emb), `where`
+    * bounding the id range. */
+  private def eSql(where: String = ""): String =
+    s"""e AS (
+         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings$where)"""
+
+  /** LSH signature CTEs over `e`: `planes` md5 hyperplanes, `perTable`
+    * sign bits per hash table → sigs (vec_id, t, bucket). */
+  private def sigsSql(planes: Int, perTable: Int): String =
+    s"""planes AS (SELECT CAST(unnest(range(0, $planes)) AS INTEGER) AS plane),
+       proj AS (
+         SELECT vec_id, plane,
+           sum(emb[d+1] * (CAST(('0x' || substr(md5(CAST(plane AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)) AS BIGINT) - 7.5)) AS proj
+         FROM e, planes, UNNEST(range(0, 64)) AS u(d)
+         GROUP BY 1, 2),
+       sigs AS (
+         SELECT vec_id, plane // $perTable AS t,
+           CAST(sum(CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) << (plane % $perTable) ELSE 0 END) AS BIGINT) AS bucket
+         FROM proj GROUP BY 1, 2)"""
+
+  /** Exact cosine parts of candidate pairs: CTE `name` (q_id, c_id, dp,
+    * nq, nc) over the pair CTE `cand` (q_id, c_id) against `e`. */
+  private def dotsSql(name: String, cand: String): String =
+    s"""$name AS (
+         SELECT c.q_id, c.c_id,
+           sum(qe.emb[i] * ce.emb[i]) AS dp,
+           sum(qe.emb[i] * qe.emb[i]) AS nq,
+           sum(ce.emb[i] * ce.emb[i]) AS nc
+         FROM $cand c
+         JOIN e qe ON qe.vec_id = c.q_id
+         JOIN e ce ON ce.vec_id = c.c_id,
+         UNNEST(range(1, 65)) AS u(i)
+         GROUP BY 1, 2)"""
+
+  /** The exact top-k tail over `pairs` (q_id, c_id, …): rank by `cos`
+    * descending, c_id ascending, keep rk ≤ k, cos rounded to 4 places. */
+  private def topKSql(pairs: String, k: Int, cos: String = "dp/(sqrt(nq)*sqrt(nc))"): String =
+    s"""SELECT q_id, rk, c_id, round(cos, 4) AS cos FROM (
+         SELECT q_id, c_id, $cos AS cos,
+           row_number() OVER (PARTITION BY q_id ORDER BY $cos DESC, c_id) AS rk
+         FROM $pairs) WHERE rk <= $k"""
+
+  /** Brute-force candidates: every label-0 query against every other
+    * vector, with their cosine parts (bdots). */
+  private val bruteForceSql: String =
+    s"""bcand AS (
+         SELECT q.vec_id AS q_id, c.vec_id AS c_id
+         FROM e q JOIN e c ON q.label = 0 AND q.vec_id <> c.vec_id),
+       ${dotsSql("bdots", "bcand")}"""
+
+  /** LSH candidates: label-0 queries against every vector sharing a
+    * bucket of any of the 24 four-bit tables, with their cosine parts
+    * (ldots). */
+  private val lshSql: String =
+    s"""${sigsSql(96, 4)},
+       lcand AS (
+         SELECT DISTINCT s1.vec_id AS q_id, s2.vec_id AS c_id
+         FROM (SELECT s.* FROM sigs s JOIN e ON e.vec_id = s.vec_id AND e.label = 0) s1
+         JOIN sigs s2 ON s2.t = s1.t AND s2.bucket = s1.bucket AND s2.vec_id <> s1.vec_id),
+       ${dotsSql("ldots", "lcand")}"""
+
+  /** A vector's cells ranked by cosine (dp, nv, nc), the lower cell first
+    * on ties: rk = 1 is the assignment. */
+  private val cellRankSql =
+    "row_number() OVER (PARTITION BY vec_id ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell)"
+
+  /** Array-form coarse cells over `e`: cents0 = the first 16 vectors, then
+    * `steps` Lloyd steps (assign to cents_i → BIGINT sums of floor(x·1024)
+    * → cents_{i+1}), then `scored` (vec_id, label, cell, rk) against the
+    * final cells — every step bit-exact (see [[lloydCells]] for why
+    * floor(x·1024) + BIGINT sums are engine-independent). */
+  private def cellsSql(steps: Int): String = {
+    def sd(name: String, cents: String): String =
+      s"""$name AS (
+           SELECT e.vec_id, e.label, c.cell,
              sum(e.emb[i] * c.c_emb[i]) AS dp,
              sum(e.emb[i] * e.emb[i]) AS nv,
              sum(c.c_emb[i] * c.c_emb[i]) AS nc
-           FROM e, cents$i c, UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2),
-         a$i AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rk
-             FROM sd$i) WHERE rk = 1),
+           FROM e, $cents c, UNNEST(range(1, 65)) AS u(i)
+           GROUP BY 1, 2, 3)"""
+    val stepBlocks = (0 until steps).map { i =>
+      s""",
+         ${sd(s"sd$i", s"cents$i")},
+         a$i AS (SELECT vec_id, cell FROM (
+           SELECT vec_id, cell, $cellRankSql AS rk FROM sd$i) WHERE rk = 1),
          qs$i AS (
            SELECT a.cell, d,
              CAST(sum(CAST(floor(e.emb[d] * 1024) AS BIGINT)) AS BIGINT) AS cq
@@ -896,57 +796,29 @@ object SimilarityQueries {
            SELECT cell, list(CAST(cq AS DOUBLE) ORDER BY d) AS c_emb
            FROM qs$i GROUP BY 1)"""
     }.mkString
-    s"""WITH e AS (
-         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       cents0 AS (SELECT vec_id AS cell, emb AS c_emb FROM e WHERE vec_id < 16)$stepBlocks,
-       sdF AS (
-         SELECT e.vec_id, e.label, c.cell,
-           sum(e.emb[i] * c.c_emb[i]) AS dp,
-           sum(e.emb[i] * e.emb[i]) AS nv,
-           sum(c.c_emb[i] * c.c_emb[i]) AS nc
-         FROM e, cents$steps c, UNNEST(range(1, 65)) AS u(i)
-         GROUP BY 1, 2, 3),
-       scored AS (
-         SELECT vec_id, label, cell,
-           row_number() OVER (PARTITION BY vec_id
-             ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rk
-         FROM sdF),
+    s"""cents0 AS (SELECT vec_id AS cell, emb AS c_emb FROM e WHERE vec_id < 16)$stepBlocks,
+       ${sd("sdF", s"cents$steps")},
+       scored AS (SELECT vec_id, label, cell, $cellRankSql AS rk FROM sdF)"""
+  }
+
+  /** DuckDB twin of [[ivfTrainedTopK]] for any Lloyd's step count: the
+    * oracle replays EXACTLY the iteration the Spark path runs. */
+  private def ivfTrainedSql(steps: Int): String =
+    s"""WITH ${eSql()},
+       ${cellsSql(steps)},
        assignF AS (SELECT vec_id AS m_id, cell FROM scored WHERE rk = 1),
        probes AS (SELECT vec_id AS q_id, cell FROM scored WHERE label = 0 AND rk <= 2),
        cand AS (
          SELECT DISTINCT p.q_id, a.m_id AS c_id
          FROM probes p JOIN assignF a ON a.cell = p.cell AND a.m_id <> p.q_id),
-       dots AS (
-         SELECT c.q_id, c.c_id,
-           sum(qe.emb[i] * ce.emb[i]) AS dp,
-           sum(qe.emb[i] * qe.emb[i]) AS nq,
-           sum(ce.emb[i] * ce.emb[i]) AS nc
-         FROM cand c
-         JOIN e qe ON qe.vec_id = c.q_id
-         JOIN e ce ON ce.vec_id = c.c_id,
-         UNNEST(range(1, 65)) AS u(i)
-         GROUP BY 1, 2),
-       ranked AS (
-         SELECT q_id, c_id, dp/(sqrt(nq)*sqrt(nc)) AS cos,
-           row_number() OVER (PARTITION BY q_id
-             ORDER BY dp/(sqrt(nq)*sqrt(nc)) DESC, c_id) AS rk
-         FROM dots)
-       SELECT q_id, rk, c_id, round(cos, 4) AS cos
-       FROM ranked WHERE rk <= 3"""
-  }
+       ${dotsSql("dots", "cand")}
+       ${topKSql("dots", 3)}"""
 
-  /** Shared DuckDB CTE prefix of the PQ oracles: normalized long-form
-    * vectors (ev), one-step integer-exact subquantizer training (cb),
-    * per-vector codes, and the per-query BIGINT-quantized distance table
-    * (dtab) — ONE text, so the PQ math cannot diverge between the flat
-    * and IVF-composed oracles (mirrors [[pqParts]]).
-    */
   /** Normalized long-form vectors (ev: vec_id, label, j, d, x) — the
     * shared head of every PQ oracle.
     */
   private val evCte: String =
-    """e AS (
-         SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""${eSql()},
        nrm AS (
          SELECT vec_id, sqrt(sum(emb[d] * emb[d])) AS nn
          FROM e, UNNEST(range(1, 65)) AS u(d) GROUP BY 1),
@@ -955,96 +827,123 @@ object SimilarityQueries {
            e.emb[d] / nn AS x
          FROM e JOIN nrm USING (vec_id), UNNEST(range(1, 65)) AS u(d))"""
 
+  /** Long-form coarse cells over `ev`: one integer-exact Lloyd step from
+    * the first 16 vectors → cq1 (cell, d, cx); cscored ranks every vector's
+    * cells, cassign (vec_id, cell) is its assignment, cprobes (q_id, cell)
+    * each label-0 query's top-2 cells, and probed (q_id, cell, m_id) the
+    * members of a query's probed cells. */
+  private val evCellsSql: String = {
+    def sd(name: String, cents: String, v: String): String =
+      s"""$name AS (
+           SELECT ev.vec_id, ev.label, c.cell,
+             sum(ev.x * c.$v) AS dp, sum(ev.x * ev.x) AS nv, sum(c.$v * c.$v) AS nc
+           FROM ev JOIN $cents c ON c.d = ev.d
+           GROUP BY 1, 2, 3)"""
+    s"""cents0n AS (SELECT vec_id AS cell, d, x FROM ev WHERE vec_id < 16),
+       ${sd("csd0", "cents0n", "x")},
+       cassign0 AS (
+         SELECT vec_id, cell FROM (SELECT vec_id, cell, $cellRankSql AS rk FROM csd0) WHERE rk = 1),
+       cq1 AS (
+         SELECT a.cell, ev.d,
+           CAST(sum(CAST(floor(ev.x * 1024) AS BIGINT)) AS DOUBLE) AS cx
+         FROM cassign0 a JOIN ev ON ev.vec_id = a.vec_id
+         GROUP BY 1, 2),
+       ${sd("csd1", "cq1", "cx")},
+       cscored AS (SELECT vec_id, label, cell, $cellRankSql AS rk FROM csd1),
+       cassign AS (SELECT vec_id, cell FROM cscored WHERE rk = 1),
+       cprobes AS (SELECT vec_id AS q_id, cell FROM cscored WHERE label = 0 AND rk <= 2),
+       probed AS (
+         SELECT p.q_id, p.cell, a.vec_id AS m_id
+         FROM cprobes p JOIN cassign a USING (cell)
+         WHERE a.vec_id <> p.q_id)"""
+  }
+
+  /** Squared L2 distance of every subvector of `src` (keys…, j, d, `v`)
+    * to every centroid of its subquantizer in `cents` (j, k, d, `cv`): CTE
+    * `name` (keys…, j, k, dist). */
+  private def l2Sql(name: String, src: String, keys: Seq[String], v: String,
+                    cents: String, cv: String): String =
+    s"""$name AS (
+         SELECT ${keys.map(k => s"t.$k").mkString(", ")}, t.j, c.k,
+           sum((t.$v - c.$cv) * (t.$v - c.$cv)) AS dist
+         FROM $src t JOIN $cents c ON c.j = t.j AND c.d = t.d
+         GROUP BY ${(1 to keys.size + 2).mkString(", ")})"""
+
+  /** A distance-table entry quantized to BIGINT, as [[quantized]]. */
+  private val dqSql = "CAST(floor(dist * 1048576) AS BIGINT) AS dq"
+
+  /** Long-form PQ training and encoding over `src` (vec_id, label, j, d,
+    * `v`), CTE names prefixed `p`: seeds = the first 16 vectors'
+    * subvectors, one integer-exact Lloyd step → `p`cb (j, k, d, cx) with d
+    * the global 1-based dim, every subvector's distance to every
+    * centroid `p`sd1 (vec_id, label, j, k, dist), and the codes `p`codes
+    * (vec_id, j, code). */
+  private def pqTrainSql(src: String, v: String, p: String): String = {
+    def nearest(sd: String): String =
+      s"""SELECT vec_id, j, k FROM (
+           SELECT vec_id, j, k,
+             row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, k) AS rn
+           FROM $sd) WHERE rn = 1"""
+    s"""${p}seeds AS (SELECT j, vec_id AS k, d, $v FROM $src WHERE vec_id < 16),
+       ${l2Sql(s"${p}sd0", src, Seq("vec_id"), v, s"${p}seeds", v)},
+       ${p}a0 AS (${nearest(s"${p}sd0")}),
+       ${p}cb AS (
+         SELECT a.j, a.k, t.d,
+           CAST(sum(CAST(floor(t.$v * 1024) AS BIGINT)) AS DOUBLE)
+             / CAST(count(*) * 1024 AS DOUBLE) AS cx
+         FROM ${p}a0 a JOIN $src t ON t.vec_id = a.vec_id AND t.j = a.j
+         GROUP BY 1, 2, 3),
+       ${l2Sql(s"${p}sd1", src, Seq("vec_id", "label"), v, s"${p}cb", "cx")},
+       ${p}codes AS (SELECT vec_id, j, k AS code FROM (${nearest(s"${p}sd1")}))"""
+  }
+
+  /** Shared DuckDB CTE prefix of the flat PQ oracles: normalized long-form
+    * vectors (ev), subquantizer training (cb), per-vector codes, and the
+    * per-query BIGINT-quantized distance table (dtab) — ONE text, so the
+    * PQ math cannot diverge between the flat and IVF-composed oracles
+    * (mirrors [[pqParts]]).
+    */
   private val pqCtePrefix: String =
     s"""$evCte,
-       seeds AS (
-         SELECT j, vec_id AS k, d, x FROM ev WHERE vec_id < 16),
-       sd0 AS (
-         SELECT ev.vec_id, ev.j, s.k,
-           sum((ev.x - s.x) * (ev.x - s.x)) AS dist
-         FROM ev JOIN seeds s ON s.j = ev.j AND s.d = ev.d
-         GROUP BY 1, 2, 3),
-       a0 AS (
-         SELECT vec_id, j, k FROM (
-           SELECT vec_id, j, k,
-             row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, k) AS rn
-           FROM sd0) WHERE rn = 1),
-       cb AS (
-         SELECT a0.j, a0.k, ev.d,
-           CAST(sum(CAST(floor(ev.x * 1024) AS BIGINT)) AS DOUBLE)
-             / CAST(count(*) * 1024 AS DOUBLE) AS cx
-         FROM a0 JOIN ev ON ev.vec_id = a0.vec_id AND ev.j = a0.j
-         GROUP BY 1, 2, 3),
-       sd1 AS (
-         SELECT ev.vec_id, ev.label, ev.j, c.k,
-           sum((ev.x - c.cx) * (ev.x - c.cx)) AS dist
-         FROM ev JOIN cb c ON c.j = ev.j AND c.d = ev.d
-         GROUP BY 1, 2, 3, 4),
-       codes AS (
-         SELECT vec_id, j, k AS code FROM (
-           SELECT vec_id, j, k,
-             row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, k) AS rn
-           FROM sd1) WHERE rn = 1),
-       dtab AS (
-         SELECT vec_id AS q_id, j, k,
-           CAST(floor(dist * 1048576) AS BIGINT) AS dq
-         FROM sd1 WHERE label = 0)"""
+       ${pqTrainSql("ev", "x", "")},
+       dtab AS (SELECT vec_id AS q_id, j, k, $dqSql FROM sd1 WHERE label = 0)"""
 
-  /** Shared exact re-rank tail over a `cand` (q_id, c_id) CTE. */
-  private val pqRerankSql: String =
-    """, dots AS (
+  /** The ADC shortlist CTEs over a code scan `scan` (aliases c and, when
+    * probed, pr): adc sums each candidate's quantized lookups in `dtab` on
+    * (j, code = k) and `lookup`; cand keeps the `shortlist` lowest per
+    * query, c_id breaking ties; pqdots holds the candidates' normalized dots
+    * — the exact re-rank input of [[topKSql]]. */
+  private def adcCandSql(scan: String, dtab: String, lookup: String, shortlist: Int): String =
+    s"""adc AS (
+         SELECT d.q_id, c.vec_id AS c_id, sum(d.dq) AS adc
+         FROM $scan
+         JOIN $dtab d ON d.j = c.j AND d.k = c.code AND $lookup
+         GROUP BY 1, 2),
+       cand AS (
+         SELECT q_id, c_id FROM (
+           SELECT q_id, c_id,
+             row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
+           FROM adc) WHERE rn <= $shortlist),
+       pqdots AS (
          SELECT cand.q_id, cand.c_id, sum(qe.x * ce.x) AS cos
          FROM cand
          JOIN ev qe ON qe.vec_id = cand.q_id
          JOIN ev ce ON ce.vec_id = cand.c_id AND ce.d = qe.d
-         GROUP BY 1, 2),
-       ranked AS (
-         SELECT q_id, c_id, cos,
-           row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rk
-         FROM dots)
-       SELECT q_id, rk, c_id, round(cos, 4) AS cos"""
+         GROUP BY 1, 2)"""
 
   def oracleSql: Map[String, String] = Map(
     "q_sim_pairs_cos" ->
-      """WITH e AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-           FROM embeddings WHERE vec_id < 20),
-         pairs AS (
-           SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.emb AS a_emb, b.emb AS b_emb
-           FROM e a JOIN e b ON a.vec_id < b.vec_id),
-         dots AS (
-           SELECT a_id, b_id,
-             sum(a_emb[i] * b_emb[i]) AS dp,
-             sum(a_emb[i] * a_emb[i]) AS na,
-             sum(b_emb[i] * b_emb[i]) AS nb
-           FROM pairs, UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2)
-         SELECT a_id, b_id, round(dp / (sqrt(na) * sqrt(nb)), 4) AS cos
+      s"""WITH ${eSql(" WHERE vec_id < 20")},
+         pairs AS (SELECT a.vec_id AS q_id, b.vec_id AS c_id FROM e a JOIN e b ON a.vec_id < b.vec_id),
+         ${dotsSql("dots", "pairs")}
+         SELECT q_id AS a_id, c_id AS b_id, round(dp / (sqrt(nq) * sqrt(nc)), 4) AS cos
          FROM dots""",
     "q_ann_topk_bruteforce" ->
-      """WITH e AS (
-           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         pairs AS (
-           SELECT q.vec_id AS q_id, c.vec_id AS c_id, q.emb AS q_emb, c.emb AS c_emb
-           FROM (SELECT * FROM e WHERE label = 0) q
-           JOIN e c ON q.vec_id <> c.vec_id),
-         dots AS (
-           SELECT q_id, c_id,
-             sum(q_emb[i] * c_emb[i]) AS dp,
-             sum(q_emb[i] * q_emb[i]) AS nq,
-             sum(c_emb[i] * c_emb[i]) AS nc
-           FROM pairs, UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2),
-         ranked AS (
-           SELECT q_id, c_id, dp / (sqrt(nq) * sqrt(nc)) AS cos,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY dp / (sqrt(nq) * sqrt(nc)) DESC, c_id) AS rk
-           FROM dots)
-         SELECT q_id, rk, c_id, round(cos, 4) AS cos
-         FROM ranked WHERE rk <= 5""",
+      s"""WITH ${eSql()},
+         $bruteForceSql
+         ${topKSql("bdots", 5)}""",
     "q_ann_topk_jl" ->
-      s"""WITH e AS (
-           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${eSql()},
          js AS (SELECT CAST(unnest(range(0, $JlDims)) AS INTEGER) AS j),
          proj AS (
            SELECT vec_id, label, j,
@@ -1056,219 +955,55 @@ object SimilarityQueries {
              sum(q.p * c.p) AS dp, sum(q.p * q.p) AS nq, sum(c.p * c.p) AS nc
            FROM (SELECT * FROM proj WHERE label = 0) q
            JOIN proj c ON q.j = c.j AND q.vec_id <> c.vec_id
-           GROUP BY 1, 2),
-         ranked AS (
-           SELECT q_id, c_id, dp / (sqrt(nq) * sqrt(nc)) AS cos,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY dp / (sqrt(nq) * sqrt(nc)) DESC, c_id) AS rk
-           FROM pairs)
-         SELECT q_id, rk, c_id, round(cos, 4) AS cos
-         FROM ranked WHERE rk <= 5""",
+           GROUP BY 1, 2)
+         ${topKSql("pairs", 5)}""",
     "q_dedup_embedding" ->
-      """WITH e AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-           FROM embeddings WHERE vec_id < 300),
-         planes AS (SELECT CAST(unnest(range(0, 96)) AS INTEGER) AS plane),
-         proj AS (
-           SELECT vec_id, plane,
-             sum(emb[d+1] * (CAST(('0x' || substr(md5(CAST(plane AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)) AS BIGINT) - 7.5)) AS proj
-           FROM e, planes, UNNEST(range(0, 64)) AS u(d)
-           GROUP BY 1, 2),
-         sigs AS (
-           SELECT vec_id, plane // 4 AS t,
-             CAST(sum(CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) << (plane % 4) ELSE 0 END) AS BIGINT) AS bucket
-           FROM proj GROUP BY 1, 2),
+      s"""WITH ${eSql(" WHERE vec_id < 300")},
+         ${sigsSql(96, 4)},
          cand AS (
-           SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
+           SELECT DISTINCT x.vec_id AS q_id, y.vec_id AS c_id
            FROM sigs x JOIN sigs y
              ON x.t = y.t AND x.bucket = y.bucket AND x.vec_id < y.vec_id),
-         dots AS (
-           SELECT c.a_id, c.b_id,
-             sum(ae.emb[i] * be.emb[i]) AS dp,
-             sum(ae.emb[i] * ae.emb[i]) AS na,
-             sum(be.emb[i] * be.emb[i]) AS nb
-           FROM cand c
-           JOIN e ae ON ae.vec_id = c.a_id
-           JOIN e be ON be.vec_id = c.b_id,
-           UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2)
+         ${dotsSql("dots", "cand")}
          SELECT a_id, b_id, round(cos, 4) AS cos FROM (
-           SELECT a_id, b_id, dp/(sqrt(na)*sqrt(nb)) AS cos FROM dots)
+           SELECT q_id AS a_id, c_id AS b_id, dp/(sqrt(nq)*sqrt(nc)) AS cos FROM dots)
          WHERE cos >= 0.35""",
-    "q_ann_topk_ivf" ->
-      """WITH e AS (
-           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         cents AS (SELECT vec_id AS cell, emb AS c_emb FROM e WHERE vec_id < 16),
-         sdots AS (
-           SELECT e.vec_id, e.label, c.cell,
-             sum(e.emb[i] * c.c_emb[i]) AS dp,
-             sum(e.emb[i] * e.emb[i]) AS nv,
-             sum(c.c_emb[i] * c.c_emb[i]) AS nc
-           FROM e, cents c, UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2, 3),
-         scored AS (
-           SELECT vec_id, label, cell, dp/(sqrt(nv)*sqrt(nc)) AS csim FROM sdots),
-         assign AS (
-           SELECT vec_id AS m_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rk
-             FROM scored) WHERE rk = 1),
-         probes AS (
-           SELECT vec_id AS q_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rk
-             FROM scored WHERE label = 0) WHERE rk <= 2),
-         cand AS (
-           SELECT DISTINCT p.q_id, a.m_id AS c_id
-           FROM probes p JOIN assign a ON a.cell = p.cell AND a.m_id <> p.q_id),
-         dots AS (
-           SELECT c.q_id, c.c_id,
-             sum(qe.emb[i] * ce.emb[i]) AS dp,
-             sum(qe.emb[i] * qe.emb[i]) AS nq,
-             sum(ce.emb[i] * ce.emb[i]) AS nc
-           FROM cand c
-           JOIN e qe ON qe.vec_id = c.q_id
-           JOIN e ce ON ce.vec_id = c.c_id,
-           UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2),
-         ranked AS (
-           SELECT q_id, c_id, dp/(sqrt(nq)*sqrt(nc)) AS cos,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY dp/(sqrt(nq)*sqrt(nc)) DESC, c_id) AS rk
-           FROM dots)
-         SELECT q_id, rk, c_id, round(cos, 4) AS cos
-         FROM ranked WHERE rk <= 3""",
+    "q_ann_topk_ivf" -> ivfTrainedSql(0),
     "q_ann_topk_ivf_trained" -> ivfTrainedSql(3),
     "q_dedup_semantic" ->
-      s"""WITH e AS (
-           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-           FROM embeddings WHERE vec_id < $SemBound),
-         cents0 AS (SELECT vec_id AS cell, emb AS c_emb FROM e WHERE vec_id < 16),
-         sd0 AS (
-           SELECT e.vec_id, c.cell, sum(e.emb[i] * c.c_emb[i]) AS dp,
-             sum(e.emb[i] * e.emb[i]) AS nv, sum(c.c_emb[i] * c.c_emb[i]) AS nc
-           FROM e, cents0 c, UNNEST(range(1, 65)) AS u(i) GROUP BY 1, 2),
-         a0 AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-               ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rk FROM sd0) WHERE rk = 1),
-         qs0 AS (
-           SELECT a.cell, d, CAST(sum(CAST(floor(e.emb[d] * 1024) AS BIGINT)) AS BIGINT) AS cq
-           FROM a0 a JOIN e ON e.vec_id = a.vec_id, UNNEST(range(1, 65)) AS u(d)
-           GROUP BY 1, 2),
-         cents1 AS (SELECT cell, list(CAST(cq AS DOUBLE) ORDER BY d) AS c_emb
-           FROM qs0 GROUP BY 1),
-         sdF AS (
-           SELECT e.vec_id, c.cell, sum(e.emb[i] * c.c_emb[i]) AS dp,
-             sum(e.emb[i] * e.emb[i]) AS nv, sum(c.c_emb[i] * c.c_emb[i]) AS nc
-           FROM e, cents1 c, UNNEST(range(1, 65)) AS u(i) GROUP BY 1, 2),
-         assignF AS (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id
-               ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rk FROM sdF) WHERE rk = 1),
-         pairdots AS (
-           SELECT a.cell, a.vec_id AS a_id, b.vec_id AS b_id,
-             sum(ae.emb[i] * be.emb[i]) AS dp,
-             sum(ae.emb[i] * ae.emb[i]) AS na, sum(be.emb[i] * be.emb[i]) AS nb
-           FROM assignF a JOIN assignF b ON a.cell = b.cell AND a.vec_id < b.vec_id
-           JOIN e ae ON ae.vec_id = a.vec_id JOIN e be ON be.vec_id = b.vec_id,
-           UNNEST(range(1, 65)) AS u(i) GROUP BY 1, 2, 3),
-         pairs AS (SELECT a_id, b_id, dp/(sqrt(na)*sqrt(nb)) AS cos FROM pairdots
-           WHERE dp/(sqrt(na)*sqrt(nb)) >= $SemTau)
+      s"""WITH ${eSql(s" WHERE vec_id < $SemBound")},
+         ${cellsSql(1)},
+         assignF AS (SELECT vec_id, cell FROM scored WHERE rk = 1),
+         cellpairs AS (
+           SELECT a.vec_id AS q_id, b.vec_id AS c_id
+           FROM assignF a JOIN assignF b ON a.cell = b.cell AND a.vec_id < b.vec_id),
+         ${dotsSql("pairdots", "cellpairs")},
+         pairs AS (SELECT q_id AS a_id, c_id AS b_id, dp/(sqrt(nq)*sqrt(nc)) AS cos FROM pairdots
+           WHERE dp/(sqrt(nq)*sqrt(nc)) >= $SemTau)
          SELECT b_id AS drop_id, min(a_id) AS keep_id,
            round(min_by(cos, a_id), 4) AS cos
          FROM pairs GROUP BY b_id""",
     "q_ann_topk_ivfpq_residual" ->
       s"""WITH $evCte,
-         cents0n AS (SELECT vec_id AS cell, d, x FROM ev WHERE vec_id < 16),
-         csd0 AS (
-           SELECT ev.vec_id, c.cell,
-             sum(ev.x * c.x) AS dp, sum(ev.x * ev.x) AS nv, sum(c.x * c.x) AS nc
-           FROM ev JOIN cents0n c ON c.d = ev.d
-           GROUP BY 1, 2),
-         cassign0 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rn
-             FROM csd0) WHERE rn = 1),
-         cq1 AS (
-           SELECT a.cell, ev.d,
-             CAST(sum(CAST(floor(ev.x * 1024) AS BIGINT)) AS DOUBLE) AS cx
-           FROM cassign0 a JOIN ev ON ev.vec_id = a.vec_id
-           GROUP BY 1, 2),
+         $evCellsSql,
          cnorm AS (SELECT cell, sqrt(sum(cx * cx)) AS cn FROM cq1 GROUP BY 1),
          chat AS (
            SELECT cq1.cell, d, cx / cn AS cxh FROM cq1 JOIN cnorm USING (cell)),
-         csd1 AS (
-           SELECT ev.vec_id, ev.label, c.cell,
-             sum(ev.x * c.cx) AS dp, sum(ev.x * ev.x) AS nv, sum(c.cx * c.cx) AS nc
-           FROM ev JOIN cq1 c ON c.d = ev.d
-           GROUP BY 1, 2, 3),
-         cscored AS (
-           SELECT vec_id, label, cell,
-             row_number() OVER (PARTITION BY vec_id
-               ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rk
-           FROM csd1),
-         cassign AS (SELECT vec_id, cell FROM cscored WHERE rk = 1),
-         cprobes AS (SELECT vec_id AS q_id, cell FROM cscored WHERE label = 0 AND rk <= 2),
          rv AS (
            SELECT ev.vec_id, ev.label, ev.j, ev.d, ev.x - ch.cxh AS r
            FROM ev JOIN cassign a ON a.vec_id = ev.vec_id
            JOIN chat ch ON ch.cell = a.cell AND ch.d = ev.d),
-         rseeds AS (SELECT j, vec_id AS k, d, r FROM rv WHERE vec_id < 16),
-         rsd0 AS (
-           SELECT rv.vec_id, rv.j, s.k, sum((rv.r - s.r) * (rv.r - s.r)) AS dist
-           FROM rv JOIN rseeds s ON s.j = rv.j AND s.d = rv.d
-           GROUP BY 1, 2, 3),
-         ra0 AS (
-           SELECT vec_id, j, k FROM (
-             SELECT vec_id, j, k,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, k) AS rn
-             FROM rsd0) WHERE rn = 1),
-         rcb AS (
-           SELECT a.j, a.k, rv.d,
-             CAST(sum(CAST(floor(rv.r * 1024) AS BIGINT)) AS DOUBLE)
-               / CAST(count(*) * 1024 AS DOUBLE) AS cx
-           FROM ra0 a JOIN rv ON rv.vec_id = a.vec_id AND rv.j = a.j
-           GROUP BY 1, 2, 3),
-         rsd1 AS (
-           SELECT rv.vec_id, rv.j, c.k, sum((rv.r - c.cx) * (rv.r - c.cx)) AS dist
-           FROM rv JOIN rcb c ON c.j = rv.j AND c.d = rv.d
-           GROUP BY 1, 2, 3),
-         rcodes AS (
-           SELECT vec_id, j, k AS code FROM (
-             SELECT vec_id, j, k,
-               row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, k) AS rn
-             FROM rsd1) WHERE rn = 1),
+         ${pqTrainSql("rv", "r", "r")},
          qrv AS (
            SELECT p.q_id, p.cell, ev.j, ev.d, ev.x - ch.cxh AS r
            FROM cprobes p
            JOIN ev ON ev.vec_id = p.q_id
            JOIN chat ch ON ch.cell = p.cell AND ch.d = ev.d),
-         qdtab AS (
-           SELECT q_id, cell, j, k, CAST(floor(dist * 1048576) AS BIGINT) AS dq
-           FROM (
-             SELECT qrv.q_id, qrv.cell, qrv.j, c.k,
-               sum((qrv.r - c.cx) * (qrv.r - c.cx)) AS dist
-             FROM qrv JOIN rcb c ON c.j = qrv.j AND c.d = qrv.d
-             GROUP BY 1, 2, 3, 4)),
-         probed AS (
-           SELECT p.q_id, p.cell, a.vec_id AS m_id
-           FROM cprobes p JOIN cassign a USING (cell)
-           WHERE a.vec_id <> p.q_id),
-         adc AS (
-           SELECT d.q_id, c.vec_id AS c_id, sum(d.dq) AS adc
-           FROM rcodes c
-           JOIN probed pr ON pr.m_id = c.vec_id
-           JOIN qdtab d ON d.j = c.j AND d.k = c.code
-             AND d.q_id = pr.q_id AND d.cell = pr.cell
-           GROUP BY 1, 2),
-         cand AS (
-           SELECT q_id, c_id FROM (
-             SELECT q_id, c_id,
-               row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
-             FROM adc) WHERE rn <= 20)
-         $pqRerankSql
-         FROM ranked WHERE rk <= 3""",
+         ${l2Sql("qsd", "qrv", Seq("q_id", "cell"), "r", "rcb", "cx")},
+         qdtab AS (SELECT q_id, cell, j, k, $dqSql FROM qsd),
+         ${adcCandSql("rcodes c JOIN probed pr ON pr.m_id = c.vec_id", "qdtab",
+           "d.q_id = pr.q_id AND d.cell = pr.cell", 20)}
+         ${topKSql("pqdots", 3, "cos")}""",
     // cb's d is the GLOBAL 1-based dim; the Spark flat codebook keys by the
     // LOCAL 0-based position within the subvector — same 1:1 order within
     // each (j, k), remapped here.
@@ -1277,149 +1012,24 @@ object SimilarityQueries {
           SELECT j, k, CAST((d - 1) % 8 AS INTEGER) AS d, cx FROM cb""",
     "q_ann_topk_pq" ->
       s"""WITH $pqCtePrefix,
-         adc AS (
-           SELECT d.q_id, c.vec_id AS c_id, sum(d.dq) AS adc
-           FROM codes c JOIN dtab d
-             ON d.j = c.j AND d.k = c.code AND d.q_id <> c.vec_id
-           GROUP BY 1, 2),
-         cand AS (
-           SELECT q_id, c_id FROM (
-             SELECT q_id, c_id,
-               row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
-             FROM adc) WHERE rn <= 10)
-         $pqRerankSql
-         FROM ranked WHERE rk <= 5""",
+         ${adcCandSql("codes c", "dtab", "d.q_id <> c.vec_id", 10)}
+         ${topKSql("pqdots", 5, "cos")}""",
     "q_ann_topk_ivfpq" ->
       s"""WITH $pqCtePrefix,
-         cents0n AS (SELECT vec_id AS cell, d, x FROM ev WHERE vec_id < 16),
-         csd0 AS (
-           SELECT ev.vec_id, c.cell,
-             sum(ev.x * c.x) AS dp, sum(ev.x * ev.x) AS nv, sum(c.x * c.x) AS nc
-           FROM ev JOIN cents0n c ON c.d = ev.d
-           GROUP BY 1, 2),
-         cassign0 AS (
-           SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id
-                 ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rn
-             FROM csd0) WHERE rn = 1),
-         cq1 AS (
-           SELECT a.cell, ev.d,
-             CAST(sum(CAST(floor(ev.x * 1024) AS BIGINT)) AS DOUBLE) AS cx
-           FROM cassign0 a JOIN ev ON ev.vec_id = a.vec_id
-           GROUP BY 1, 2),
-         csd1 AS (
-           SELECT ev.vec_id, ev.label, c.cell,
-             sum(ev.x * c.cx) AS dp, sum(ev.x * ev.x) AS nv, sum(c.cx * c.cx) AS nc
-           FROM ev JOIN cq1 c ON c.d = ev.d
-           GROUP BY 1, 2, 3),
-         cscored AS (
-           SELECT vec_id, label, cell,
-             row_number() OVER (PARTITION BY vec_id
-               ORDER BY dp/(sqrt(nv)*sqrt(nc)) DESC, cell) AS rk
-           FROM csd1),
-         cassign AS (SELECT vec_id AS m_id, cell FROM cscored WHERE rk = 1),
-         cprobes AS (SELECT vec_id AS q_id, cell FROM cscored WHERE label = 0 AND rk <= 2),
-         probed AS (
-           SELECT p.q_id, a.m_id FROM cprobes p JOIN cassign a USING (cell)
-           WHERE a.m_id <> p.q_id),
-         adc AS (
-           SELECT d.q_id, c.vec_id AS c_id, sum(d.dq) AS adc
-           FROM codes c
-           JOIN probed pr ON pr.m_id = c.vec_id
-           JOIN dtab d ON d.j = c.j AND d.k = c.code AND d.q_id = pr.q_id
-           GROUP BY 1, 2),
-         cand AS (
-           SELECT q_id, c_id FROM (
-             SELECT q_id, c_id,
-               row_number() OVER (PARTITION BY q_id ORDER BY adc, c_id) AS rn
-             FROM adc) WHERE rn <= 20)
-         $pqRerankSql
-         FROM ranked WHERE rk <= 3""",
+         $evCellsSql,
+         ${adcCandSql("codes c JOIN probed pr ON pr.m_id = c.vec_id", "dtab",
+           "d.q_id = pr.q_id", 20)}
+         ${topKSql("pqdots", 3, "cos")}""",
     "q_ann_topk_lsh" ->
-      """WITH e AS (
-           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         planes AS (SELECT CAST(unnest(range(0, 96)) AS INTEGER) AS plane),
-         proj AS (
-           SELECT vec_id, plane,
-             sum(emb[d+1] * (CAST(('0x' || substr(md5(CAST(plane AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)) AS BIGINT) - 7.5)) AS proj
-           FROM e, planes, UNNEST(range(0, 64)) AS u(d)
-           GROUP BY 1, 2),
-         sigs AS (
-           SELECT vec_id, plane // 4 AS t,
-             CAST(sum(CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) << (plane % 4) ELSE 0 END) AS BIGINT) AS bucket
-           FROM proj GROUP BY 1, 2),
-         cand AS (
-           SELECT DISTINCT s1.vec_id AS q_id, s2.vec_id AS c_id
-           FROM (SELECT s.* FROM sigs s JOIN e ON e.vec_id = s.vec_id AND e.label = 0) s1
-           JOIN sigs s2 ON s2.t = s1.t AND s2.bucket = s1.bucket AND s2.vec_id <> s1.vec_id),
-         dots AS (
-           SELECT c.q_id, c.c_id,
-             sum(qe.emb[i] * ce.emb[i]) AS dp,
-             sum(qe.emb[i] * qe.emb[i]) AS nq,
-             sum(ce.emb[i] * ce.emb[i]) AS nc
-           FROM cand c
-           JOIN e qe ON qe.vec_id = c.q_id
-           JOIN e ce ON ce.vec_id = c.c_id,
-           UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2),
-         ranked AS (
-           SELECT q_id, c_id, dp/(sqrt(nq)*sqrt(nc)) AS cos,
-             row_number() OVER (PARTITION BY q_id
-               ORDER BY dp/(sqrt(nq)*sqrt(nc)) DESC, c_id) AS rk
-           FROM dots)
-         SELECT q_id, rk, c_id, round(cos, 4) AS cos
-         FROM ranked WHERE rk <= 5""",
+      s"""WITH ${eSql()},
+         $lshSql
+         ${topKSql("ldots", 5)}""",
     "q_ann_recall_lsh" ->
-      """WITH e AS (
-           SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         planes AS (SELECT CAST(unnest(range(0, 96)) AS INTEGER) AS plane),
-         proj AS (
-           SELECT vec_id, plane,
-             sum(emb[d+1] * (CAST(('0x' || substr(md5(CAST(plane AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)) AS BIGINT) - 7.5)) AS proj
-           FROM e, planes, UNNEST(range(0, 64)) AS u(d)
-           GROUP BY 1, 2),
-         sigs AS (
-           SELECT vec_id, plane // 4 AS t,
-             CAST(sum(CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) << (plane % 4) ELSE 0 END) AS BIGINT) AS bucket
-           FROM proj GROUP BY 1, 2),
-         cand AS (
-           SELECT DISTINCT s1.vec_id AS q_id, s2.vec_id AS c_id
-           FROM (SELECT s.* FROM sigs s JOIN e ON e.vec_id = s.vec_id AND e.label = 0) s1
-           JOIN sigs s2 ON s2.t = s1.t AND s2.bucket = s1.bucket AND s2.vec_id <> s1.vec_id),
-         ldots AS (
-           SELECT c.q_id, c.c_id,
-             sum(qe.emb[i] * ce.emb[i]) AS dp,
-             sum(qe.emb[i] * qe.emb[i]) AS nq,
-             sum(ce.emb[i] * ce.emb[i]) AS nc
-           FROM cand c
-           JOIN e qe ON qe.vec_id = c.q_id
-           JOIN e ce ON ce.vec_id = c.c_id,
-           UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2),
-         lsh AS (
-           SELECT q_id, c_id FROM (
-             SELECT q_id, c_id,
-               row_number() OVER (PARTITION BY q_id
-                 ORDER BY dp/(sqrt(nq)*sqrt(nc)) DESC, c_id) AS rk
-             FROM ldots) WHERE rk <= 5),
-         bpairs AS (
-           SELECT q.vec_id AS q_id, c.vec_id AS c_id, q.emb AS q_emb, c.emb AS c_emb
-           FROM (SELECT * FROM e WHERE label = 0) q
-           JOIN e c ON q.vec_id <> c.vec_id),
-         bdots AS (
-           SELECT q_id, c_id,
-             sum(q_emb[i] * c_emb[i]) AS dp,
-             sum(q_emb[i] * q_emb[i]) AS nq,
-             sum(c_emb[i] * c_emb[i]) AS nc
-           FROM bpairs, UNNEST(range(1, 65)) AS u(i)
-           GROUP BY 1, 2),
-         bf AS (
-           SELECT q_id, c_id FROM (
-             SELECT q_id, c_id,
-               row_number() OVER (PARTITION BY q_id
-                 ORDER BY dp/(sqrt(nq)*sqrt(nc)) DESC, c_id) AS rk
-             FROM bdots) WHERE rk <= 5),
+      s"""WITH ${eSql()},
+         $lshSql,
+         lsh AS (${topKSql("ldots", 5)}),
+         $bruteForceSql,
+         bf AS (${topKSql("bdots", 5)}),
          overlap AS (
            SELECT bf.q_id, count(*) AS n_overlap
            FROM bf JOIN lsh ON bf.q_id = lsh.q_id AND bf.c_id = lsh.c_id
@@ -1430,18 +1040,8 @@ object SimilarityQueries {
          FROM e LEFT JOIN overlap ON overlap.q_id = e.vec_id
          WHERE e.label = 0""",
     "q_sim_lsh_buckets" ->
-      """WITH e AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         planes AS (SELECT CAST(unnest(range(0, 8)) AS INTEGER) AS plane),
-         proj AS (
-           SELECT vec_id, plane,
-             sum(emb[d+1] * (CAST(('0x' || substr(md5(CAST(plane AS VARCHAR) || ':' || CAST(d AS VARCHAR)), 1, 1)) AS BIGINT) - 7.5)) AS proj
-           FROM e, planes, UNNEST(range(0, 64)) AS u(d)
-           GROUP BY 1, 2),
-         sigs AS (
-           SELECT vec_id,
-             CAST(sum(CASE WHEN proj > 0 THEN CAST(1 AS BIGINT) << plane ELSE 0 END) AS BIGINT) AS bucket
-           FROM proj GROUP BY 1)
+      s"""WITH ${eSql()},
+         ${sigsSql(8, 8)}
          SELECT bucket, count(*) AS n_vecs, min(vec_id) AS min_vec
          FROM sigs GROUP BY 1"""
   )

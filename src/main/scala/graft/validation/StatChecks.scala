@@ -614,7 +614,9 @@ object StatChecks {
     * [[ksTwoSample]]; the production swap at 10^12 distinct values is
     * the t-digest CDF. Distributed TakeOrdered top-K. Rows with any
     * null/non-finite dimension are excluded — the completeness checks
-    * own those.
+    * own those. The per-key score adds the per-dimension scores in
+    * declared column order before `round(…, 6)`, so it does not depend on
+    * the shuffle layout.
     *
     * Output: top-`topK` rows (keyCols..., ecod_score) by score
     * descending, key-ascending tiebreak, round-6 discipline. */
@@ -646,10 +648,18 @@ object StatChecks {
     val n = count(lit(1L)).over(Window.partitionBy("dim")).cast("double")
     val fLe = count(lit(1L)).over(asc).cast("double") / n
     val fGe = count(lit(1L)).over(desc).cast("double") / n
+    // one column per dimension, then the score as a row expression summed
+    // in declared column order (as in ecodOutliersGrid), whatever the
+    // shuffle layout. A per-dimension sum has one addend per row of the
+    // key, so it is exact for unique keys.
+    val perDim = cols.indices.map(i =>
+      sum(when(col("dim") === cols(i), col("dim_score"))).as(s"_s$i"))
     long
       .withColumn("dim_score", -log(least(fLe, fGe)))
       .groupBy(keyCols.map(col): _*)
-      .agg(round(sum(col("dim_score")), 6).as("ecod_score"))
+      .agg(perDim.head, perDim.tail: _*)
+      .select(keyCols.map(col) :+
+        round(cols.indices.map(i => col(s"_s$i")).reduce(_ + _), 6).as("ecod_score"): _*)
       .orderBy(col("ecod_score").desc +: keyCols.map(col): _*)
       .limit(topK)
   }
@@ -744,8 +754,8 @@ object StatChecks {
   }
 
   /** DuckDB twin of [[ecodOutliers]] — same unpivot (UNION ALL arms),
-    * same grouped-ECDF tails, same side-agnostic max, same round-6 +
-    * tiebreak + limit. */
+    * same grouped-ECDF tails, same side-agnostic max, same declared-order
+    * sum of the per-dimension scores, same round-6 + tiebreak + limit. */
   def duckEcodSql(table: String, cols: Seq[String], keyCols: Seq[String],
                   topK: Int = 100): String = {
     val keys = keyCols.mkString(", ")
@@ -754,6 +764,9 @@ object StatChecks {
     val arms = cols.map(c =>
       s"""SELECT $keys, '$c' AS dim, CAST($c AS DOUBLE) AS value
           FROM keyed""").mkString("\n  UNION ALL\n  ")
+    // per-dimension sums added in declared column order, as the Spark side
+    val score = cols.map(c => s"sum(dim_score) FILTER (WHERE dim = '$c')")
+      .mkString("(", " + ", ")")
     s"""WITH keyed AS (SELECT * FROM $table WHERE $finite),
        long AS (
          $arms),
@@ -767,7 +780,7 @@ object StatChecks {
        s AS (SELECT dim, value,
                -ln(least(cum_le / n, (n - cum_le + cntd) / n)) AS dim_score
              FROM t)
-       SELECT $keys, round(sum(dim_score), 6) AS ecod_score
+       SELECT $keys, round($score, 6) AS ecod_score
        FROM long JOIN s USING (dim, value)
        GROUP BY $keys
        ORDER BY ecod_score DESC, $keys

@@ -105,12 +105,14 @@ class PlanHygieneSpec extends SparkTestBase {
   }
 
   test("trained IVF retrieval plans equi-joins on the cell id, never a cartesian") {
-    val p = planOf(SparkEntry.queries("q_ann_topk_ivf_trained")(spark, dir))
-    assert(!p.contains("CartesianProduct"), s"cartesian in trained-IVF plan:\n$p")
+    for (q <- Seq("q_ann_topk_ivf", "q_ann_topk_ivf_trained", "q_dedup_semantic")) {
+      val p = planOf(SparkEntry.queries(q)(spark, dir))
+      assert(!p.contains("CartesianProduct"), s"cartesian in $q plan:\n$p")
+    }
   }
 
   test("PQ and IVF-PQ retrieval plan equi-joins with a broadcast distance table") {
-    for (q <- Seq("q_ann_topk_pq", "q_ann_topk_ivfpq")) {
+    for (q <- Seq("q_ann_topk_pq", "q_ann_topk_ivfpq", "q_ann_topk_ivfpq_residual")) {
       val p = planOf(SparkEntry.queries(q)(spark, dir))
       assert(!p.contains("CartesianProduct"), s"cartesian in $q plan:\n$p")
       // the ADC distance table must ride a broadcast — per-candidate work
