@@ -423,8 +423,12 @@ object SimilarityQueries {
     */
   private[graft] def adcTopK(e: DataFrame, scan: DataFrame, dtab: DataFrame,
                              lookup: Column, shortlist: Int, k: Int): DataFrame = {
-    val adc = scan.join(broadcast(dtab),
-        scan("j") === dtab("j") && scan("code") === dtab("k") && lookup)
+    // the table's `j` is renamed: codes and table may both derive from one
+    // frame, and `scan("j") === dtab("j")` would then compare one attribute
+    // with itself
+    val tab = dtab.withColumnRenamed("j", "t_j")
+    val adc = scan.join(broadcast(tab),
+        scan("j") === tab("t_j") && scan("code") === tab("k") && lookup)
       .groupBy(col("q_id"), scan("vec_id").as("c_id"))
       .agg(sum(col("dq")).as("adc"))
     val wAdc = Window.partitionBy("q_id").orderBy(col("adc"), col("c_id"))

@@ -349,33 +349,44 @@ object Drift {
       driverFinalizeMax)
 
   /** Route a partial set through the driver-side or distributed finalize
-    * depending on its size (shared by [[check]] and the resume path).
+    * depending on its size (shared by [[check]] and the resume path). One
+    * action decides and, on the driver path, fetches: every partition of
+    * the persisted partials keeps at most `driverFinalizeMax + 1` of them
+    * and one shuffle brings those to a single task that keeps as many, so
+    * the partials are reduced and cached in parallel and no more than that
+    * bound reaches the driver. The distributed branch runs only when the
+    * bound was reached, and reads the cache the probe built.
     */
   def verdictsAuto(spark: SparkSession, pds: Dataset[DriftPartial], runId: String,
                    baselineDir: Option[String] = None,
                    driverFinalizeMax: Int = DriverFinalizeMaxPartials)
       : (DataFrame, DataFrame) = {
+    val probe = math.min(math.max(driverFinalizeMax.toLong + 1, 0L), Int.MaxValue.toLong).toInt
     val cached = pds.persist()
-    if (cached.count() <= driverFinalizeMax) {
-      val r = verdictsFrom(spark, cached.collect(), runId, baselineDir)
-      cached.unpersist()
-      r
-    } else {
-      // Persist the RESULT frames (one row per part×check — far smaller
-      // than the partials), materialize them, then release the partials:
-      // leaving the partial set cached for the caller to maybe-release
-      // leaked executor storage across repeated large checks in one
-      // session. The verdict frames stay valid after the source unpersist
-      // because every partition is already computed and cached. CALLERS
-      // unpersist the returned frames once written (ImageSuite's
-      // increment paths do; unpersist is a no-op for the driver-side
-      // branch's unpersisted frames, so callers need not branch).
-      val (verd, viol) = verdictsDistributed(spark, cached, runId, baselineDir)
-      val vp = verd.persist(); val wp = viol.persist()
-      vp.count(); wp.count()
-      cached.unpersist()
-      (vp, wp)
-    }
+    try {
+      // keyed by (partition, position): the driver restores the cached
+      // partitions' order, which the derived baseline's merge depends on
+      val head = cached.rdd
+        .mapPartitionsWithIndex((i, it) => it.take(probe).zipWithIndex.map { case (d, j) => ((i, j), d) })
+        .repartition(1).mapPartitions(_.take(probe)).collect()
+        .sortBy(_._1).map(_._2)
+      if (head.length <= driverFinalizeMax) verdictsFrom(spark, head, runId, baselineDir)
+      else {
+        // Persist the RESULT frames (one row per part×check — far smaller
+        // than the partials), materialize them, then release the partials:
+        // leaving the partial set cached for the caller to maybe-release
+        // leaked executor storage across repeated large checks in one
+        // session. The verdict frames stay valid after the source unpersist
+        // because every partition is already computed and cached. CALLERS
+        // unpersist the returned frames once written (ImageSuite's
+        // increment paths do; unpersist is a no-op for the driver-side
+        // branch's unpersisted frames, so callers need not branch).
+        val (verd, viol) = verdictsDistributed(spark, cached, runId, baselineDir)
+        val vp = verd.persist(); val wp = viol.persist()
+        vp.count(); wp.count()
+        (vp, wp)
+      }
+    } finally cached.unpersist()
   }
 
   /** The per-partial finalize math — shared verbatim by the driver-side and

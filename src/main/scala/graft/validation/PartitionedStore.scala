@@ -57,6 +57,18 @@ object PartitionedStore {
     spark.catalog.refreshByPath(dir)
   }
 
+  /** True when [[rewriteAside]] on `dir` with the same `needsRewrite`
+    * would write: a crashed rewrite to replay, or a store that needs one.
+    */
+  private[validation] def rewritePending(spark: SparkSession, dir: String)(
+      needsRewrite: => Boolean): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(new org.apache.hadoop.fs.Path(dir + ".legacy")) ||
+      fs.exists(new org.apache.hadoop.fs.Path(dir + ".migrating")) ||
+      (fs.exists(p) && needsRewrite)
+  }
+
   /** Rewrite a legacy flat store into the partitioned layout. */
   private def migrateLegacy(spark: SparkSession, dir: String): Unit =
     rewriteAside(spark, dir)({

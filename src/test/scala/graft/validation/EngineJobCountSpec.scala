@@ -67,4 +67,57 @@ class EngineJobCountSpec extends SparkTestBase {
     assert(cold <= ColdJobsMax, s"cold call ran $cold jobs, ceiling $ColdJobsMax")
     assert(resumed <= ResumedJobsMax, s"resumed call ran $resumed jobs, ceiling $ResumedJobsMax")
   }
+
+  /** (jobs started between two fence jobs, those of them in `group`) while
+    * `f` runs in `group`. The fences run in their own groups before and
+    * after `f`; listener events arrive in posting order, so the jobs seen
+    * between the fences' starts are exactly the jobs started meanwhile.
+    */
+  private def jobsBetweenFences(group: String)(f: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val (open, close) = (s"$group-open", s"$group-close")
+    val all = new AtomicInteger(0)
+    val inGroup = new AtomicInteger(0)
+    val closed = new CountDownLatch(1)
+    @volatile var fenced = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `open` => fenced = true
+          case `close` => fenced = false; closed.countDown()
+          case g if fenced =>
+            all.incrementAndGet()
+            if (g == group) inGroup.incrementAndGet()
+          case _ =>
+        }
+    }
+    def run(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(l)
+    try {
+      run(open)(sc.parallelize(Seq(1), 1).count())
+      run(group)(f)
+      run(close)(sc.parallelize(Seq(1), 1).count())
+      assert(closed.await(120, TimeUnit.SECONDS), "the closing fence was not delivered within 120 s")
+      (all.get(), inGroup.get())
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("every job a cold and a resumed call start carries the caller's job group") {
+    val out = "target/test-images/ckpt-jobgroup"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    spark.catalog.clearCache()
+    val dir = ImageGen.ensure(spark, 2000L, "target/test-images")
+    val (coldAll, coldGroup) =
+      jobsBetweenFences("engine-cold")(ImageSuite.runAndCheckpoint(spark, dir, out, "cold"))
+    ImageSuite.invalidateParts(spark, out, Set("p3"))
+    val (resumedAll, resumedGroup) =
+      jobsBetweenFences("engine-resumed")(ImageSuite.runAndCheckpoint(spark, dir, out, "resumed"))
+    info(s"jobs in the caller's group / all: cold $coldGroup/$coldAll, resumed $resumedGroup/$resumedAll")
+    assert(coldAll > 0 && coldGroup == coldAll, s"cold: $coldGroup of $coldAll jobs in the group")
+    assert(resumedAll > 0 && resumedGroup == resumedAll,
+      s"resumed: $resumedGroup of $resumedAll jobs in the group")
+  }
 }

@@ -313,4 +313,70 @@ class ResumeSpec extends SparkTestBase {
     for ((k, m) <- ref)
       assert(math.abs(run2(k) - m) < 0.05, s"$k: run2=${run2(k)} ref=$m")
   }
+
+  test("a failing commit leg: every leg is joined, no state row, the retry matches") {
+    val w5 = "target/resume-failing-leg-test"
+    val out5 = s"$w5/out"; val ref5 = s"$w5/ref"
+    FileUtils.deleteQuietly(new File(w5))
+    // the metrics append fails: its store path is a regular file
+    val blocker = new File(s"$out5/metrics")
+    blocker.getParentFile.mkdirs()
+    FileUtils.writeStringToFile(blocker, "not a store", "UTF-8")
+    // job start and end times, to see whether any job of the call outlives it
+    val jobEvents = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobEvents.add(e.time)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobEvents.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(l)
+    val thrownAt = try {
+      intercept[Exception](ImageSuite.runAndCheckpoint(spark, srcDir, out5, "failed"))
+      val t = System.currentTimeMillis()
+      // a leg left running would start or end a job meanwhile
+      Thread.sleep(2000)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      t
+    } finally spark.sparkContext.removeSparkListener(l)
+    // no job of the call still runs, and none started or ended after it
+    // threw: the legs beside the failing one were joined before it rethrew
+    val active = spark.sparkContext.statusTracker.getActiveJobIds
+    assert(active.isEmpty, s"jobs still running after the call threw: ${active.mkString(",")}")
+    val late = jobEvents.toArray.count(_.asInstanceOf[java.lang.Long] > thrownAt)
+    assert(late == 0, s"$late job starts or ends after the call threw")
+    assert(ImageSuite.readDoneParts(spark, s"$out5/state").isEmpty,
+      "a state row was written although a leg failed")
+
+    assert(blocker.delete())
+    ImageSuite.runAndCheckpoint(spark, srcDir, out5, "retry")
+    ImageSuite.runAndCheckpoint(spark, srcDir, ref5, "ref")
+    def verdicts(out: String, run: String): Map[(String, String), Verdict] = {
+      import spark.implicits._
+      spark.read.parquet(s"$out/verdicts").filter(col("run_id") === run)
+        .drop("score").withColumn("run_id", lit("-")).as[Verdict].collect()
+        .map(v => (v.part, v.check) -> v).toMap
+    }
+    val retried = verdicts(out5, "retry"); val ref = verdicts(ref5, "ref")
+    assert(retried.keySet == ref.keySet && ref.nonEmpty)
+    for ((k, v) <- ref) {
+      val r = retried(k)
+      // KS reads t-digests whose merge order follows shuffle fetch order:
+      // equal to sketch tolerance; every other verdict is exact
+      if (k._2.startsWith("drift_ks"))
+        assert(r.copy(metric = 0.0, pass = true) == v.copy(metric = 0.0, pass = true) &&
+          math.abs(r.metric - v.metric) < 0.05, s"$k: retry=$r ref=$v")
+      else assert(r == v, s"$k: retry=$r ref=$v")
+    }
+    val keyChecks = Seq("uniqueness_image_id", "referential_caption_exists",
+      "referential_image_exists", "caption_consistent")
+    def keyViolations(out: String, run: String): Set[Seq[String]] =
+      spark.read.parquet(s"$out/violations")
+        .filter(col("run_id") === run && col("check").isin(keyChecks: _*))
+        .select("part", "image_id", "check", "observed", "expected").collect()
+        .map(r => (0 until 5).map(r.getString)).toSet
+    val retriedViol = keyViolations(out5, "retry"); val refViol = keyViolations(ref5, "ref")
+    assert(refViol.nonEmpty && retriedViol == refViol,
+      s"missing=${refViol diff retriedViol} extra=${retriedViol diff refViol}")
+  }
 }
