@@ -361,6 +361,21 @@ object Drift {
                    baselineDir: Option[String] = None,
                    driverFinalizeMax: Int = DriverFinalizeMaxPartials)
       : (DataFrame, DataFrame) = {
+    val f = finalizeAuto(spark, pds, runId, baselineDir, driverFinalizeMax)
+    (f.verdicts, f.violations)
+  }
+
+  /** A finalized drift check: `local` holds the verdict rows when the
+    * driver finalized them (the frames are then local relations over
+    * them), None when the executors did (the frames are then cached, and
+    * the caller unpersists them once written).
+    */
+  private[validation] case class Finalized(local: Option[Seq[Verdict]],
+                                           verdicts: DataFrame, violations: DataFrame)
+
+  /** [[verdictsAuto]], keeping the driver-side verdict rows. */
+  private[validation] def finalizeAuto(spark: SparkSession, pds: Dataset[DriftPartial],
+      runId: String, baselineDir: Option[String], driverFinalizeMax: Int): Finalized = {
     val probe = math.min(math.max(driverFinalizeMax.toLong + 1, 0L), Int.MaxValue.toLong).toInt
     val cached = pds.persist()
     try {
@@ -370,8 +385,14 @@ object Drift {
         .mapPartitionsWithIndex((i, it) => it.take(probe).zipWithIndex.map { case (d, j) => ((i, j), d) })
         .repartition(1).mapPartitions(_.take(probe)).collect()
         .sortBy(_._1).map(_._2)
-      if (head.length <= driverFinalizeMax) verdictsFrom(spark, head, runId, baselineDir)
-      else {
+      if (head.length <= driverFinalizeMax) {
+        import spark.implicits._
+        val rows = verdictRows(spark, head, runId, baselineDir)
+        // local relations: projections and filters over them fold on the
+        // driver
+        val verdicts = spark.createDataset(rows).toDF()
+        Finalized(Some(rows), verdicts, violationsOf(verdicts))
+      } else {
         // Persist the RESULT frames (one row per part×check — far smaller
         // than the partials), materialize them, then release the partials:
         // leaving the partial set cached for the caller to maybe-release
@@ -384,7 +405,7 @@ object Drift {
         val (verd, viol) = verdictsDistributed(spark, cached, runId, baselineDir)
         val vp = verd.persist(); val wp = viol.persist()
         vp.count(); wp.count()
-        (vp, wp)
+        Finalized(None, vp, wp)
       }
     } finally cached.unpersist()
   }
@@ -458,14 +479,11 @@ object Drift {
     * persisted, or a mix): chi-square vs baseline histogram + KS vs
     * baseline digest.
     */
-  def verdictsFrom(spark: SparkSession, merged: Array[DriftPartial], runId: String,
-                   baselineDir: Option[String] = None): (DataFrame, DataFrame) = {
-    import spark.implicits._
+  private def verdictRows(spark: SparkSession, merged: Array[DriftPartial], runId: String,
+                          baselineDir: Option[String]): Seq[Verdict] = {
     val (globalHist, globalDig) = baselineDir.map(readBaselineMaps(spark, _))
       .getOrElse(globalFromPartials(merged.toSeq))
-    val verdicts = spark.createDataset(
-      merged.toSeq.flatMap(finalizeOne(_, globalHist, globalDig, runId))).toDF()
-    (verdicts, violationsOf(verdicts))
+    merged.toSeq.flatMap(finalizeOne(_, globalHist, globalDig, runId))
   }
 
   /** Distributed finalize: the baseline (a few KB per colname) is broadcast

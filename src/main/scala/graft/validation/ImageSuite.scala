@@ -3,6 +3,7 @@ package graft.validation
 import graft.images.ImageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The north-rule constraint-validation engine over the image+caption table.
   *
@@ -13,9 +14,7 @@ import org.apache.spark.sql.functions._
   *     → decode stage (image_facts expression)            ── narrow
   *     → per-partition summary: every row-check count,    ── 1 shuffle (part)
   *       null and ladder counts, metrics, HLL sketch
-  *     → row/coverage/quality verdicts: one explode of    ── narrow
-  *       the summary; violation rows: one explode of the
-  *       decoded facts
+  *     → violation rows: one explode of the decoded facts ── narrow
   *   key checks: pending keys vs the stored key index     ── hash joins on
   *     (window count + left-outer count join, one left-     image_id,
   *     outer caption join, orphan anti joins), built once   persisted once
@@ -27,6 +26,16 @@ import org.apache.spark.sql.functions._
   * before the scan (partition pruning, anti-join on the state table —
   * reference resume semantics validation_agent.py:787-812).
   *
+  * Small families on the driver: the summary's counts (every column but
+  * the sketch) and the candidates' `(part, check)` counts are one row per
+  * pending partition, so the driver collects them and builds every verdict
+  * (row, coverage, quality, key; drift when the driver finalized it), the
+  * metric rows and the state rows from those local rows ([[Small]]). The
+  * verdict rules stay Catalyst columns, evaluated over a local relation,
+  * where the optimizer folds the projection without a job. The driver
+  * holds O(pending partitions × checks) rows; the HLL sketches, the
+  * violation rows and a distributed drift finalize stay in the executors.
+  *
   * One engine path: [[runAndCheckpoint]] reads the checkpoint's prior
   * state, computes and commits; [[run]] computes the same increment over
   * an empty prior state and returns the frames.
@@ -36,17 +45,20 @@ import org.apache.spark.sql.functions._
   * other run side by side ([[concurrently]]: one new thread per leg, each
   * inheriting the caller's job group, description and pool; every leg is
   * joined, then the first failure rethrown). A call runs three barriers:
-  *   1. the summary/HLL estimate ‖ the prior-state read (orphan pin; a
+  *   1. the summary counts collect ‖ the prior-state read (orphan pin; a
   *      violations store that still needs its `run_id` migration is read
-  *      after the estimate, so an all-done rerun writes nothing);
-  *   2. the key-check candidates ‖ the drift finalize; then the metrics
-  *      append ‖ the HLL overwrite;
-  *   3. the verdicts append, then the state-row collect ‖ the violations
-  *      append + its `_runid_uniform` marker;
+  *      after the counts, so an all-done rerun writes nothing);
+  *   2. the key-check candidates (materialized and counted in one action)
+  *      ‖ the drift finalize ‖ the NDV estimate over the summary's and the
+  *      stored HLL sketches, then the metrics append ‖ the HLL overwrite;
+  *      then the verdicts and state rows are built on the driver;
+  *   3. the verdicts append ‖ the violations append + its `_runid_uniform`
+  *      marker;
   * then the keys overwrite ‖ the drift-partials overwrite and, last, the
   * state append. The ordering rules the barriers keep are
   * [[commitIncrement]]'s. [[lightIncrement]] (one streaming micro-batch)
-  * runs barriers 2 and 3 without the side legs.
+  * collects its batch's `(part, n_rows)` as its emptiness check and runs
+  * barriers 2 and 3 without the side legs.
   */
 object ImageSuite {
 
@@ -160,7 +172,9 @@ object ImageSuite {
         avg(when(col("decode_ok"), col("psnr_db"))).as("psnr_mean"),
         hll_sketch_agg(col("image_id")).as("sketch")): _*)
 
-  /** One verdict entry of a summary row, as [[summaryVerdicts]] explodes it. */
+  /** One verdict entry of a summary row, as [[summaryVerdicts]] explodes it
+    * and [[Small]] evaluates it on the driver.
+    */
   private[validation] def verdictEntry(check: String, pass: Column, metric: Column,
                                        threshold: Double, nViolations: Column): Column =
     struct(lit(check).as("check"), pass.as("pass"), metric.cast("double").as("metric"),
@@ -176,13 +190,15 @@ object ImageSuite {
 
   private def rate(n: Column): Column = n.cast("double") / col("n_rows").cast("double")
 
-  /** Zero-tolerance verdicts of the row checks: fail on any violation; the
-    * metric is the violation rate.
+  /** The zero-tolerance verdict of one check counted in column
+    * `nv_<check>`: fail on any violation; the metric is the violation rate.
     */
-  private val RowEntries: Seq[Column] = RowChecks.map { c =>
-    val nv = col(nViolationsOf(c.check))
-    verdictEntry(c.check, nv === 0, rate(nv), 0.0, nv)
+  private def zeroTolerance(check: String): Column = {
+    val nv = col(nViolationsOf(check))
+    verdictEntry(check, nv === 0, rate(nv), 0.0, nv)
   }
+
+  private val RowEntries: Seq[Column] = RowChecks.map(c => zeroTolerance(c.check))
 
   /** Null-rate verdicts: pass while the null rate stays within [[NullRateMax]]. */
   private val CoverageEntries: Seq[Column] =
@@ -215,32 +231,37 @@ object ImageSuite {
   /** Full suite over the whole table; returns (verdicts, violations,
     * metrics). The same computation as [[runAndCheckpoint]], started from
     * an empty prior state and returning the frames instead of committing
-    * them.
+    * them: the verdicts and metrics are local relations built on the
+    * driver, the violations a frame over the cached facts and candidates.
     */
   def run(spark: SparkSession, dataDir: String, runId: String): (DataFrame, DataFrame, DataFrame) = {
     val facts = decodeFactsExpr(ImageGen.images(spark, dataDir)).cache()
-    val summary = partSummary(facts)
+    val summary = partSummary(facts).drop("sketch")
+    val countRows = summary.collect()
     // key and drift checks read the light columns of the cached facts
-    val kd = keyDrift(facts.select(LightCols.map(col): _*), summary.select("part", "n_rows"),
-      ImageGen.captions(spark, dataDir), emptyPrior(spark), runId)
+    val kd = keyDrift(facts.select(LightCols.map(col): _*), ImageGen.captions(spark, dataDir),
+      emptyPrior(spark), runId, Drift.DriverFinalizeMaxPartials)()
     // the drift verdicts are final (collected or cached) once built
     kd.freshPds.unpersist()
-    val (verdicts, violations) = allFamilies(summary, facts, kd, runId)
-    (verdicts, violations, metricRows(summary, runId))
+    val small = new Small(pendingCounts(spark, countRows, summary.schema, kd.keyCounts),
+      SummaryEntries, kd.drift, pendingDrift = false, runId)
+    (small.verdicts, rowViolations(facts).unionByName(kd.kViol).unionByName(kd.drift.violations),
+      localMetrics(spark, countRows, summary.schema, runId, Nil))
   }
 
   /** Per-partition lineage metrics (PerformanceTimer twin). */
   def metricsOf(facts: DataFrame, runId: String): DataFrame =
-    metricRows(partSummary(facts), runId)
-
-  /** The metric rows of a [[partSummary]]: row count, bytes and mean PSNR. */
-  private def metricRows(summary: DataFrame, runId: String): DataFrame =
-    summary.select(col("part"), explode(array(
-        struct(lit("n_rows").as("metric"), col("n_rows").cast("double").as("value")),
-        struct(lit("bytes_total").as("metric"), col("bytes_total").as("value")),
-        struct(lit("psnr_mean").as("metric"), col("psnr_mean").as("value")))).as("m"))
+    partSummary(facts).select(col("part"), explode(array(MetricEntries: _*)).as("m"))
       .select(col("part"), col("m.metric").as("metric"), col("m.value").as("value"),
         lit(runId).as("run_id"))
+
+  /** The metric entries of a [[partSummary]] row: row count, bytes and mean
+    * PSNR.
+    */
+  private val MetricEntries: Seq[Column] = Seq(
+    struct(lit("n_rows").as("metric"), col("n_rows").cast("double").as("value")),
+    struct(lit("bytes_total").as("metric"), col("bytes_total").as("value")),
+    struct(lit("psnr_mean").as("metric"), col("psnr_mean").as("value")))
 
   /** The key-check kernel: uniqueness, referential (both directions) and
     * caption consistency for the PENDING partitions only, against a
@@ -262,12 +283,28 @@ object ImageSuite {
     val candidates = keyCandidates(lightNew, oldKeys, captions,
       Option(doneParts).getOrElse(emptyStore(lightNew.sparkSession, "part STRING")),
       Option(priorOrphans))
-    (keyVerdicts(lightNew.groupBy("part").agg(count(lit(1)).as("n_rows")), candidates, runId),
-      newKeyViolations(candidates))
+    val nv = KeyChecks.map(c => count_if(col("check") === c).as(nViolationsOf(c)))
+    val counts = candidates.groupBy("part").agg(nv.head, nv.tail: _*)
+    val parts = lightNew.groupBy("part").agg(count(lit(1)).as("n_rows"))
+      .join(counts, Seq("part"), "left").na.fill(0L, KeyChecks.map(nViolationsOf))
+    (summaryVerdicts(parts, KeyEntries, runId), newKeyViolations(candidates))
   }
 
   private val KeyChecks = Seq("uniqueness_image_id", "referential_caption_exists",
     "referential_image_exists", "caption_consistent")
+
+  /** Zero-tolerance key-check verdicts of a row holding `n_rows` and one
+    * candidate count per key check: fail when any candidate carries that
+    * (part, check).
+    */
+  private val KeyEntries: Seq[Column] = KeyChecks.map(zeroTolerance)
+
+  /** Every verdict entry of a pending partition's counts row: the
+    * [[partSummary]] counts plus the key-check counts. Lazy: the quality
+    * entries live in [[Scoring]], whose initialization reads this object.
+    */
+  private lazy val SummaryEntries: Seq[Column] =
+    RowEntries ++ CoverageEntries ++ Scoring.QualityEntries ++ KeyEntries
 
   /** Every key-check violation candidate of an increment, built once: the
     * violation columns plus `is_new`, false only for orphan captions
@@ -337,23 +374,6 @@ object ImageSuite {
         .unionByName(asOrphanRows(orphanAll.join(po, seen, "left_semi"), isNew = false))
     }.getOrElse(asOrphanRows(orphanAll, isNew = true))
     dupViol.unionByName(capViol).withColumn("is_new", lit(true)).unionByName(orphans)
-  }
-
-  /** Zero-tolerance key-check verdicts: one row per (part of `parts`,
-    * check), failing when any candidate carries that (part, check); the
-    * metric is the violation rate. `parts` holds `(part, n_rows)`.
-    */
-  private def keyVerdicts(parts: DataFrame, candidates: DataFrame, runId: String): DataFrame = {
-    val checksDf = parts.sparkSession.createDataFrame(KeyChecks.map(Tuple1(_))).toDF("check")
-    val vcounts = candidates.groupBy("part", "check").agg(count(lit(1)).as("n_violations"))
-    parts.crossJoin(broadcast(checksDf))
-      .join(vcounts, Seq("part", "check"), "left")
-      .na.fill(0L, Seq("n_violations"))
-      .select(col("part"), col("check"),
-        (col("n_violations") === 0).as("pass"),
-        (col("n_violations").cast("double") / col("n_rows").cast("double")).as("metric"),
-        lit(0.0).as("threshold"),
-        col("n_rows"), col("n_violations"), lit(runId).as("run_id"))
   }
 
   /** The violation rows of the candidates not already stored. */
@@ -429,7 +449,7 @@ object ImageSuite {
     */
   private def emptyStore(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      StructType.fromDDL(ddl))
 
   /** Read one of the engine's own stores with its declared schema — no
     * footer-inference job per read — or its empty frame before the first
@@ -502,60 +522,112 @@ object ImageSuite {
   }
 
   /** Key-check and drift output of one increment. `candidates` are the
-    * persisted key-check candidates both `kVerd` and `kViol` read (built
-    * on use, so the commit builds them in a leg); `parts` holds the pending
-    * `(part, n_rows)`. `freshPds` are the pending partitions' drift
-    * partials, persisted: the commit stores them.
-    * `dVerd`/`dViol` may be cached by the distributed finalize;
-    * [[release]] frees them, the partials and the candidates once written,
-    * or once a leg failed.
+    * persisted key-check candidates the violations read, and `keyCounts`
+    * their number per `(part, check)`, counted by the action that
+    * materialized them. `freshPds` are the pending partitions' drift
+    * partials, persisted: the commit stores them. `drift` may hold frames
+    * cached by the distributed finalize; [[release]] frees them, the
+    * partials and the candidates once written, or once a leg failed.
     */
-  private case class KeyDrift(candidates: DataFrame, parts: DataFrame, runId: String,
-                              dVerd: DataFrame, dViol: DataFrame,
-                              freshPds: Dataset[Drift.DriftPartial]) {
-    def kVerd: DataFrame = keyVerdicts(parts, candidates, runId)
+  private case class KeyDrift(candidates: DataFrame, keyCounts: Map[(String, String), Long],
+                              drift: Drift.Finalized, freshPds: Dataset[Drift.DriftPartial]) {
     def kViol: DataFrame = newKeyViolations(candidates)
     def release(): Unit = {
-      candidates.unpersist(); freshPds.unpersist(); dVerd.unpersist(); dViol.unpersist()
+      candidates.unpersist(); freshPds.unpersist()
+      drift.verdicts.unpersist(); drift.violations.unpersist()
     }
   }
 
   /** Key checks and drift of a pending light frame against a prior state —
     * the one engine path of [[run]], [[runAndCheckpoint]] and
-    * [[lightIncrement]]. `parts` holds the pending `(part, n_rows)`. The
-    * candidates are materialized and the drift finalized as two concurrent
-    * legs, each also building and planning its own frames; both read prior
-    * snapshots the commit later replaces.
+    * [[lightIncrement]]. The candidates are materialized and counted, and
+    * the drift finalized, as two concurrent legs beside `sideLegs`; both
+    * read prior snapshots the commit later replaces. `driverFinalizeMax`
+    * is [[Drift.verdictsAuto]]'s bound.
     */
-  private def keyDrift(lightNew: DataFrame, parts: DataFrame, captions: DataFrame,
-                       prior: Prior, runId: String): KeyDrift = {
+  private def keyDrift(lightNew: DataFrame, captions: DataFrame, prior: Prior, runId: String,
+                       driverFinalizeMax: Int)(sideLegs: (() => Unit)*): KeyDrift = {
     var candidates: DataFrame = null
+    var keyCounts: Map[(String, String), Long] = null
     var freshPds: Dataset[Drift.DriftPartial] = null
-    var drift: (DataFrame, DataFrame) = null
-    try concurrently(
+    var drift: Drift.Finalized = null
+    try concurrently(Seq(
       () => {
-        // persisted: the verdicts and the violations both read the
-        // candidates, and without it the violations write re-runs every
-        // key-check join
+        // persisted: the violations write reads the candidates, and without
+        // it would re-run every key-check join
         candidates = keyCandidates(lightNew, prior.keys, captions, prior.doneDf,
           Some(prior.orphans)).persist()
-        candidates.foreachPartition((_: Iterator[Row]) => ())
+        keyCounts = countByPartCheck(candidates)
       },
       () => {
         // Drift partials stay DISTRIBUTED end-to-end: fresh partials from
         // the pending scan union the persisted partials of done partitions
         // (parts are disjoint, both sides pre-reduced per key), and
-        // verdictsAuto finalizes driver-side below 10^5 partials, in
-        // executors beyond — nothing funnels through the driver at
-        // 10^6-partition scale.
+        // finalizeAuto finalizes driver-side below its bound, in executors
+        // beyond — nothing funnels through the driver at 10^6-partition
+        // scale.
         freshPds = Drift.partials(lightNew).persist()
-        drift = Drift.verdictsAuto(lightNew.sparkSession, prior.partials.union(freshPds), runId)
-      })
+        drift = Drift.finalizeAuto(lightNew.sparkSession, prior.partials.union(freshPds), runId,
+          None, driverFinalizeMax)
+      }) ++ sideLegs: _*)
     catch { case e: Throwable =>
       Option(candidates).foreach(_.unpersist()); Option(freshPds).foreach(_.unpersist())
+      Option(drift).foreach { d => d.verdicts.unpersist(); d.violations.unpersist() }
       throw e
     }
-    KeyDrift(candidates, parts, runId, drift._1, drift._2, freshPds)
+    KeyDrift(candidates, keyCounts, drift, freshPds)
+  }
+
+  /** The candidates per `(part, check)`, counted in the one action that
+    * materializes the persisted candidates: each task counts its rows into
+    * an accumulator, the driver adds the per-task counts — no shuffle.
+    */
+  private def countByPartCheck(candidates: DataFrame): Map[(String, String), Long] = {
+    val counts = candidates.sparkSession.sparkContext
+      .collectionAccumulator[((String, String), Long)]("key-check candidate counts")
+    candidates.select("part", "check").foreachPartition { (rows: Iterator[Row]) =>
+      val n = scala.collection.mutable.HashMap[(String, String), Long]()
+      rows.foreach { r =>
+        val k = (r.getString(0), r.getString(1))
+        n(k) = n.getOrElse(k, 0L) + 1L
+      }
+      n.foreach(counts.add)
+    }
+    import scala.jdk.CollectionConverters._
+    counts.value.asScala.toSeq.groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
+  /** The metric rows of [[MetricEntries]] over the pending partitions'
+    * summary counts `rows` (with `schema`), plus `extra` — a local relation
+    * built on the driver.
+    */
+  private def localMetrics(spark: SparkSession, rows: Seq[Row], schema: StructType,
+                           runId: String, extra: Seq[MetricRow]): DataFrame = {
+    val metrics = local(spark, rows, schema).select(col("part") +: MetricEntries: _*).collect()
+      .toSeq.flatMap { r =>
+        (1 until r.length).map { i =>
+          val e = r.getStruct(i)
+          Row(r.getString(0), e.getString(0), e.get(1), runId)
+        }
+      } ++ extra.map(m => Row(m.part, m.metric, m.value, m.run_id))
+    local(spark, metrics, StructType.fromDDL("part STRING, metric STRING, value DOUBLE, run_id STRING"))
+  }
+
+  /** `rows` as a local relation: projections over it fold on the driver. */
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** The pending partitions' counts as a local relation: `rows` (with
+    * `schema`: part, n_rows and the summary counts) plus one `nv_<check>`
+    * column per key check from `keyCounts`.
+    */
+  private def pendingCounts(spark: SparkSession, rows: Seq[Row], schema: StructType,
+                            keyCounts: Map[(String, String), Long]): DataFrame = {
+    val part = schema.fieldIndex("part")
+    local(spark, rows.map(r => Row.fromSeq(r.toSeq ++
+        KeyChecks.map(c => keyCounts.getOrElse((r.getString(part), c), 0L)))),
+      StructType(schema.fields ++
+        KeyChecks.map(c => StructField(nViolationsOf(c), LongType, nullable = false))))
   }
 
   /** Run `legs` side by side, one new thread per leg, and return when every
@@ -580,86 +652,99 @@ object ImageSuite {
     }
   }
 
+  /** The small families of one increment, built on the driver from its
+    * pending partitions' counts. `counts` is the local relation of
+    * [[pendingCounts]]; `entries` are the verdict entries its rows are
+    * graded by. The projections of the entries and of
+    * [[Scoring.verdictScore]] over local relations fold in the optimizer, so
+    * no Spark job runs here — except, when the executors finalized the
+    * drift check, one filtered collect of the pending partitions' failing
+    * drift verdicts for the state rows. `pendingDrift` keeps the drift
+    * verdicts of the pending partitions only.
+    */
+  private final class Small(counts: DataFrame, entries: Seq[Column],
+                            drift: Drift.Finalized, pendingDrift: Boolean, runId: String) {
+    private val spark = counts.sparkSession
+    import spark.implicits._
+
+    /** The rows of `df` of the pending partitions. */
+    def pendingOnly(df: DataFrame): DataFrame =
+      df.join(counts.select("part"), Seq("part"), "left_semi")
+
+    private val graded: Seq[Verdict] =
+      counts.select(col("part") +: col("n_rows") +: entries: _*).collect().toSeq.flatMap { r =>
+        (2 until r.length).map { i =>
+          val e = r.getStruct(i)
+          Verdict(r.getString(0), e.getString(0), e.getBoolean(1), e.getDouble(2),
+            e.getDouble(3), r.getLong(1), e.getLong(4), runId)
+        }
+      }
+
+    private val parts = graded.map(_.part).toSet
+
+    /** The drift verdict rows, when the driver finalized them. */
+    private val driftRows: Option[Seq[Verdict]] =
+      drift.local.map(_.filter(v => !pendingDrift || parts(v.part)))
+
+    /** Every verdict, scored (V1; [[Scoring.overallScores]] composes them). */
+    def verdicts: DataFrame = {
+      val local = spark.createDataset(graded ++ driftRows.getOrElse(Nil)).toDF()
+      scored(if (driftRows.isDefined) local
+        else local.unionByName(if (pendingDrift) pendingOnly(drift.verdicts) else drift.verdicts))
+    }
+
+    /** One state row per pending partition: the sum of its verdicts'
+      * `n_violations` and their largest `n_rows`; `finished_at` is stamped
+      * at commit.
+      */
+    def stateRows: Seq[StateRow] = {
+      val drifted = driftRows.getOrElse(pendingOnly(drift.verdicts)
+        .filter(col("n_violations") =!= 0).as[Verdict].collect().toSeq)
+      (graded ++ drifted).filter(v => parts(v.part)).groupBy(_.part).toSeq.map { case (p, vs) =>
+        StateRow(p, "done", vs.map(_.n_rows).max, vs.map(_.n_violations).sum, runId, 0L)
+      }
+    }
+  }
+
   private def scored(verdicts: DataFrame): DataFrame =
     verdicts.withColumn("score",
       Scoring.verdictScore(col("check"), col("metric"), col("threshold")))
 
-  /** Every check family over one increment: the row, coverage and quality
-    * verdicts as one explode of the pending partitions' [[partSummary]],
-    * the row violations from the decoded facts, plus the key and drift
-    * output. Returns (scored verdicts, violations); every verdict carries a
-    * graded score (V1), and Scoring.overallScores composes them (V8).
-    */
-  private def allFamilies(summary: DataFrame, facts: DataFrame, kd: KeyDrift, runId: String)
-      : (DataFrame, DataFrame) = {
-    val verdicts = summaryVerdicts(summary,
-        RowEntries ++ CoverageEntries ++ Scoring.QualityEntries, runId)
-      .unionByName(kd.kVerd).unionByName(kd.dVerd)
-    (scored(verdicts), rowViolations(facts).unionByName(kd.kViol).unionByName(kd.dViol))
-  }
-
   /** Shared commit-protocol tail of [[runAndCheckpoint]] and
     * [[lightIncrement]] — the crash-ordering invariant lives HERE only. It
     * runs after [[keyDrift]] has read the prior key index and drift
-    * partials, in this order:
-    *   - `sideLegs` (the full engine's metrics append and HLL
-    *     overwrite), with `families` — the (verdicts, violations) frames —
-    *     built and planned beside them; side stores extend via dynamic
-    *     partition overwrite (idempotent per partition), each only after
-    *     the prior snapshot it replaces was consumed;
-    *   - the verdicts append, then the state-row collect ‖ the violations
-    *     append and its `_runid_uniform` marker: output tables append
-    *     (at-least-once on crash-retry); the state rows aggregate the
-    *     verdicts of `parts`, the increment's pending partitions (drift
-    *     verdicts also cover done partitions). The verdicts are persisted
-    *     here: the frame is tiny (one row per partition × check) but its
-    *     lineage is the whole engine, and both the append and the state
-    *     rows read it;
-    *   - the keys overwrite ‖ the drift-partials overwrite, only now:
-    *     each re-caches every plan over its store (`refreshByPath`), and
-    *     the persisted frames the verdicts and violations read scan them
-    *     (the candidates the key index, the distributed drift finalize's
-    *     frames the stored partials) — so the state rows reach the driver
-    *     before either;
-    *   - the state append — the commit point — LAST, and only when every
-    *     leg before it succeeded (a failed leg is rethrown once its barrier
-    *     has joined all legs).
-    * `finished_at` is stamped on the collected rows, so the state plan is
-    * the same on every call (a long literal is compiled into its code).
+    * partials (and, beside it, the full engine has appended its metrics and
+    * overwritten its HLL sketches), with the verdicts and the state rows
+    * already built on the driver ([[Small]]), in this order:
+    *   - the verdicts append ‖ the violations append and its
+    *     `_runid_uniform` marker: output tables append (at-least-once on
+    *     crash-retry);
+    *   - the keys overwrite ‖ the drift-partials overwrite, only now: side
+    *     stores extend via dynamic partition overwrite (idempotent per
+    *     partition), each re-caches every plan over its store
+    *     (`refreshByPath`), and the persisted frames the violations and
+    *     verdicts read scan them (the candidates the key index, the
+    *     distributed drift finalize's frames the stored partials);
+    *   - the state append of `state` — the commit point — LAST, and only
+    *     when every leg before it succeeded (a failed leg is rethrown once
+    *     its barrier has joined all legs). `finished_at` is stamped here.
     */
   private def commitIncrement(spark: SparkSession, outDir: String, runId: String,
-      families: () => (DataFrame, DataFrame), lightNew: DataFrame, parts: DataFrame,
-      freshPds: Dataset[Drift.DriftPartial])(sideLegs: (() => Unit)*): Unit = {
+      verdicts: DataFrame, violations: DataFrame, state: Seq[StateRow], lightNew: DataFrame,
+      freshPds: Dataset[Drift.DriftPartial]): Unit = {
     import spark.implicits._
-    var verdicts: DataFrame = null
-    var violations: DataFrame = null
-    val familiesLeg: () => Unit = () => {
-      val (v, x) = families()
-      verdicts = v.persist(); violations = x
-    }
-    var stateRows: Seq[StateRow] = Nil
-    try {
-      concurrently(familiesLeg +: sideLegs: _*)
-      concurrently(() => {
-        verdicts.write.mode(SaveMode.Append).parquet(s"$outDir/verdicts")
-        val totals = verdicts
-          .join(parts, Seq("part"), "left_semi")
-          .groupBy("part").agg(sum(col("n_violations")), max(col("n_rows")))
-          .as[(String, Long, Long)].collect()
-        val finishedAt = System.currentTimeMillis()
-        stateRows = totals.toSeq.map { case (part, nv, nr) =>
-          StateRow(part, "done", nr, nv, runId, finishedAt)
-        }
-      }, () => {
+    concurrently(
+      () => verdicts.write.mode(SaveMode.Append).parquet(s"$outDir/verdicts"),
+      () => {
         violations.withColumn("run_id", lit(runId))
           .write.mode(SaveMode.Append).parquet(s"$outDir/violations")
         markRunIdUniform(spark, s"$outDir/violations")
       })
-    } finally Option(verdicts).foreach(_.unpersist())
     concurrently(
       () => PartitionedStore.write(lightNew.select("image_id", "part"), s"$outDir/keys"),
       () => Drift.writePartialsDS(freshPds, s"$outDir/drift_partials"))
-    spark.createDataset(stateRows).toDF()
+    val finishedAt = System.currentTimeMillis()
+    spark.createDataset(state.map(_.copy(finished_at = finishedAt))).toDF()
       .coalesce(1).write.mode(SaveMode.Append).parquet(s"$outDir/state")
   }
 
@@ -677,7 +762,14 @@ object ImageSuite {
     * micro-batch is not).
     */
   def lightIncrement(spark: SparkSession, lightNew0: DataFrame,
-                     captions: DataFrame, outDir: String, runId: String): Unit = {
+                     captions: DataFrame, outDir: String, runId: String): Unit =
+    lightIncrement(spark, lightNew0, captions, outDir, runId, Drift.DriverFinalizeMaxPartials)
+
+  /** [[lightIncrement]] with the drift finalize's driver bound lowered —
+    * how a spec sends a checkpointed call down the distributed finalize.
+    */
+  private[validation] def lightIncrement(spark: SparkSession, lightNew0: DataFrame,
+      captions: DataFrame, outDir: String, runId: String, driverFinalizeMax: Int): Unit = {
     import spark.implicits._
     val done: Set[String] = readDoneParts(spark, s"$outDir/state")
     val doneDf = done.toSeq.toDF("part")
@@ -689,14 +781,18 @@ object ImageSuite {
       else lightNew0.join(broadcast(doneDf), Seq("part"), "left_anti")).cache()
     var kd: KeyDrift = null
     try {
-      if (lightNew.isEmpty) return
+      // the emptiness check: the batch's (part, n_rows), before any read
+      // of the prior state
       val parts = lightNew.groupBy("part").agg(count(lit(1)).as("n_rows"))
-      kd = keyDrift(lightNew, parts, captions, readPrior(spark, outDir, doneDf), runId)
-      val batchParts = parts.select("part")
-      val families = () =>
-        (scored(kd.kVerd.unionByName(kd.dVerd.join(batchParts, Seq("part"), "left_semi"))),
-          kd.kViol.unionByName(kd.dViol.join(batchParts, Seq("part"), "left_semi")))
-      commitIncrement(spark, outDir, runId, families, lightNew, batchParts, kd.freshPds)()
+      val partRows = parts.collect()
+      if (partRows.isEmpty) return
+      kd = keyDrift(lightNew, captions, readPrior(spark, outDir, doneDf), runId,
+        driverFinalizeMax)()
+      val small = new Small(pendingCounts(spark, partRows, parts.schema, kd.keyCounts), KeyEntries,
+        kd.drift, pendingDrift = true, runId)
+      commitIncrement(spark, outDir, runId, small.verdicts,
+        kd.kViol.unionByName(small.pendingOnly(kd.drift.violations)), small.stateRows, lightNew,
+        kd.freshPds)
     } finally { Option(kd).foreach(_.release()); lightNew.unpersist() }
   }
 
@@ -714,7 +810,14 @@ object ImageSuite {
     *     partitions only.
     */
   def runAndCheckpoint(spark: SparkSession, dataDir: String, outDir: String,
-                       runId: String): Unit = {
+                       runId: String): Unit =
+    runAndCheckpoint(spark, dataDir, outDir, runId, Drift.DriverFinalizeMaxPartials)
+
+  /** [[runAndCheckpoint]] with the drift finalize's driver bound lowered —
+    * how a spec sends a checkpointed call down the distributed finalize.
+    */
+  private[validation] def runAndCheckpoint(spark: SparkSession, dataDir: String, outDir: String,
+                                           runId: String, driverFinalizeMax: Int): Unit = {
     import spark.implicits._
     val images = ImageGen.images(spark, dataDir)
     val captions = ImageGen.captions(spark, dataDir)
@@ -737,50 +840,58 @@ object ImageSuite {
     // fan-out both read the decoded facts, and the key and drift checks
     // read their light columns
     val facts = decodeFactsExpr(pending)
-    // persisted likewise: one row per pending partition, read by the
-    // verdicts, the metrics, the HLL store and the state rows
+    // persisted likewise: one row per pending partition, whose counts the
+    // driver collects and whose sketches the HLL store and estimate read
     val summary = partSummary(facts)
-
-    // Cross-run NDV(image_id) from mergeable HLL sketches (DataSketches HLL
-    // via the builtin hll_* functions): the summary's sketch per pending
-    // partition is merged with the persisted sketches of DONE partitions —
-    // resumed runs get the sketch-accuracy estimate without re-reading a
-    // single done partition (the same resume pattern as the drift t-digest
-    // partials). Estimated EAGERLY (collect) before the store below is
-    // overwritten; the same collect counts the pending partitions. It runs
-    // beside the prior-state read (barrier 1) — unless that read would
-    // first migrate the violations store: the migration is a write, so it
-    // waits for the estimate to show pending work, and an all-done rerun
-    // writes nothing.
-    val storedHll = readStore(spark, s"$outDir/hll", HllSchema)
-      .join(broadcast(doneDf), Seq("part"), "left_semi")
-    var hllRow: Row = null
-    val estimate: () => Unit = () => {
+    val counted = summary.drop("sketch")
+    var countRows: Array[Row] = null
+    val countsLeg: () => Unit = () => {
       facts.cache(); summary.persist()
-      hllRow = summary.select(col("sketch"), lit(true).as("fresh"))
-        .unionByName(storedHll.select(col("sketch"), lit(false).as("fresh")))
-        .agg(count_if(col("fresh")),
-          hll_sketch_estimate(hll_union_agg(col("sketch"))))
-        .head()
+      countRows = counted.collect()
     }
     var prior: Prior = null
     val priorLeg: () => Unit = () => prior = readPrior(spark, outDir, doneDf)
     var kd: KeyDrift = null
     try {
-      if (violationsNeedRewrite(spark, s"$outDir/violations")) estimate()
-      else concurrently(estimate, priorLeg)
+      // Barrier 1: the counts collect ‖ the prior-state read — unless that
+      // read would first migrate the violations store: the migration is a
+      // write, so it waits for the counts to show pending work, and an
+      // all-done rerun writes nothing.
+      if (violationsNeedRewrite(spark, s"$outDir/violations")) countsLeg()
+      else concurrently(countsLeg, priorLeg)
       // idempotent no-op rerun: everything is done — appending the drift
       // verdicts recomputed from stored partials again would grow the
       // output tables on every invocation without new information
-      if (hllRow.getLong(0) == 0L) return
+      if (countRows.isEmpty) return
       if (prior == null) priorLeg()
-      val ndvImageId = hllRow.getLong(1)
 
+      // Cross-run NDV(image_id) from mergeable HLL sketches (DataSketches
+      // HLL via the builtin hll_* functions): the summary's sketch per
+      // pending partition is merged with the persisted sketches of DONE
+      // partitions — resumed runs get the sketch-accuracy estimate without
+      // re-reading a single done partition (the same resume pattern as the
+      // drift t-digest partials). The sketches never reach the driver. The
+      // estimate reads the store before its overwrite, and the metrics
+      // append — which carries the estimate — fails the call before any
+      // verdict or violation is appended.
+      val storedHll = readStore(spark, s"$outDir/hll", HllSchema)
+        .join(broadcast(doneDf), Seq("part"), "left_semi")
+      val sideLeg: () => Unit = () => {
+        val ndv = ndvOf(summary.select("part", "sketch").unionByName(storedHll))
+        val metrics = localMetrics(spark, countRows.toSeq, counted.schema, runId,
+          Seq(MetricRow("_global", "ndv_image_id_hll", ndv.toDouble, runId)))
+        concurrently(
+          () => metrics.write.mode(SaveMode.Append).parquet(s"$outDir/metrics"),
+          () => PartitionedStore.write(summary.select("part", "sketch"), s"$outDir/hll"))
+      }
+      // Barrier 2: the key-check candidates ‖ the drift finalize ‖ the NDV
+      // estimate, then the metrics append ‖ the HLL overwrite
       val lightNew = facts.select(LightCols.map(col): _*)
-      kd = keyDrift(lightNew, summary.select("part", "n_rows"), captions, prior, runId)
+      kd = keyDrift(lightNew, captions, prior, runId, driverFinalizeMax)(sideLeg)
+      val small = new Small(pendingCounts(spark, countRows.toSeq, counted.schema, kd.keyCounts),
+        SummaryEntries, kd.drift, pendingDrift = false, runId)
 
-      // Commit through the shared protocol (see commitIncrement): the
-      // metrics append and the HLL store overwrite are side legs. Key-index
+      // Commit through the shared protocol (see commitIncrement). Key-index
       // + sketch stores extend via DYNAMIC PARTITION OVERWRITE, not append:
       // a crash-retry re-processes the same partitions, and appending would
       // leave duplicate key rows (inflating n_old for ever after) and
@@ -788,18 +899,25 @@ object ImageSuite {
       // merge) — the output tables stay append-only (at-least-once on
       // crash, exactly-once per successful run; the state table is the
       // commit point).
-      commitIncrement(spark, outDir, runId, () => allFamilies(summary, facts, kd, runId),
-        lightNew, summary.select("part"), kd.freshPds)(
-        () => metricRows(summary, runId)
-          .unionByName(spark.createDataset(Seq(
-            MetricRow("_global", "ndv_image_id_hll", ndvImageId.toDouble, runId))).toDF())
-          .write.mode(SaveMode.Append).parquet(s"$outDir/metrics"),
-        () => PartitionedStore.write(summary.select("part", "sketch"), s"$outDir/hll"))
+      commitIncrement(spark, outDir, runId, small.verdicts,
+        rowViolations(facts).unionByName(kd.kViol).unionByName(kd.drift.violations),
+        small.stateRows, lightNew, kd.freshPds)
     } finally {
       Option(kd).foreach(_.release())
       facts.unpersist(); summary.unpersist()
     }
   }
+
+  /** NDV(image_id) of per-partition HLL sketches `(part, sketch)`. The
+    * union's estimate depends on the order it merges sketches in, so the
+    * sketches are merged in `part` order by one fold in one task, and the
+    * same sketches give the same estimate whatever order they arrive in.
+    * That task holds one sketch per partition, as the drift probe's single
+    * task holds one partial per partition and column.
+    */
+  private[validation] def ndvOf(sketches: DataFrame): Long =
+    sketches.repartition(1).sortWithinPartitions("part", "sketch")
+      .agg(hll_sketch_estimate(hll_union_agg(col("sketch")))).head().getLong(0)
 
   def readDoneParts(spark: SparkSession, stateDir: String): Set[String] =
     if (!pathExists(spark, stateDir)) Set.empty

@@ -2,10 +2,14 @@ package graft.dev
 
 import graft.validation.ImageSuite
 import org.apache.commons.io.FileUtils
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+import org.apache.spark.{ListenerBusDrain, SparkContext, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 import java.io.File
@@ -26,11 +30,50 @@ import scala.collection.mutable
   *
   * Per call it prints the wall, the jobs started, the union of the jobs'
   * running time ("job-busy") and the rest ("no-job"), the codegen
-  * compilations (`CodegenMetrics`), and every SQL execution's start and end
-  * (seconds from the call's start) with its call site. Executions whose
-  * spans overlap ran concurrently.
+  * compilations and the milliseconds spent compiling, and every SQL
+  * execution's start and end (seconds from the call's start) with its call
+  * site and the compilations it triggered. Executions whose spans overlap
+  * ran concurrently. Compilations are read from `CodeGenerator`'s "Code
+  * generated in … ms" log line, charged to the SQL execution id of the
+  * thread that compiled (a driver thread's local property, or a task's);
+  * those outside the call's SQL executions are summed on one line.
+  *
+  * Spark's generated-class cache (default 100 entries) is keyed by the
+  * context class loader and the code. In local mode a whole-stage class
+  * compiles once on the driver, where the plan is prepared, and once more
+  * in a task thread, whose class loader differs — so a call holds about
+  * 1.5 cache keys per distinct class body (e.g. ~133 keys for ~90 bodies),
+  * and a call whose keys exceed the cache recompiles classes on every
+  * call.
   */
 object CallTimeline {
+
+  /** Every "Code generated in … ms" line of `CodeGenerator`, as (SQL
+    * execution id of the compiling thread, milliseconds). */
+  private final class Compiles(sc: SparkContext) extends AbstractAppender(
+      "graft-call-timeline-compiles", null, null, true, Property.EMPTY_ARRAY) {
+    private val Generated = "Code generated in ([0-9.]+) ms".r.unanchored
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], Double)]()
+
+    override def append(e: LogEvent): Unit = e.getMessage.getFormattedMessage match {
+      case Generated(ms) =>
+        val id = Option(TaskContext.get()).map(_.getLocalProperty(SQLExecution.EXECUTION_ID_KEY))
+          .orElse(Option(sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)))
+        seen.add((id.map(_.toLong), ms.toDouble))
+      case _ =>
+    }
+
+    /** Route `CodeGenerator`'s INFO lines here only, not to the console. */
+    def attach(): Unit = {
+      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+      val logger = new LoggerConfig(name, Level.INFO, false)
+      start()
+      logger.addAppender(this, Level.INFO, null)
+      ctx.getConfiguration.addLogger(name, logger)
+      ctx.updateLoggers()
+    }
+  }
 
   private final class Recorder extends SparkListener {
     val jobs = mutable.Map[Int, (Long, Long)]()
@@ -117,6 +160,8 @@ object CallTimeline {
 
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
+    val compiles = new Compiles(spark.sparkContext)
+    compiles.attach()
     val walls = mutable.ArrayBuffer[Double]()
     val idle = mutable.ArrayBuffer[Double]()
     try for (i <- 0 to calls) {
@@ -124,29 +169,40 @@ object CallTimeline {
       System.gc()
       ListenerBusDrain(spark.sparkContext)
       rec.reset()
-      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      compiles.seen.clear()
       val t0 = System.currentTimeMillis()
       ImageSuite.runAndCheckpoint(spark, dataDir, ck, s"r$i")
       val t1 = System.currentTimeMillis()
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       ListenerBusDrain(spark.sparkContext)
+      val compiled = compiles.seen.toArray(Array.empty[(Option[Long], Double)]).toSeq
+      val compileMs = compiled.map(_._2).sum
       if (i == 0) {
         if (workload == "full_cold") spark.catalog.clearCache()
-        println(f"warm-up ($label): ${(t1 - t0) / 1e3}%.3f s, $compiles codegen compiles")
+        println(f"warm-up ($label): ${(t1 - t0) / 1e3}%.3f s, ${compiled.size} codegen compiles, " +
+          f"$compileMs%.0f ms compiling")
       } else rec.synchronized {
         val wall = (t1 - t0) / 1e3
         val busy = unionLength(rec.jobs.values.toSeq, t0, t1) / 1e3
         walls += wall; idle += wall - busy
         println(f"call $i ($workload, $label): wall $wall%.3f s, ${rec.jobs.size} jobs, " +
           f"job-busy $busy%.3f s, no-job ${wall - busy}%.3f s, " +
-          f"${rec.execs.size} SQL executions, $compiles codegen compiles")
+          f"${rec.execs.size} SQL executions, ${compiled.size} codegen compiles, " +
+          f"$compileMs%.0f ms compiling")
+        val byExec = compiled.groupBy(_._1)
         rec.execs.toSeq.sortBy { case (id, (s, _, _)) => (s, id) }.foreach { case (id, (s, e, d)) =>
           val end = if (e == Long.MaxValue) "   open" else f"${(e - t0) / 1e3}%7.3f"
-          println(f"  ${(s - t0) / 1e3}%7.3f $end  exec $id%-4d $d")
+          val c = byExec.getOrElse(Some(id), Nil)
+          println(f"  ${(s - t0) / 1e3}%7.3f $end  exec $id%-4d ${c.size}%3d compiles " +
+            f"${c.map(_._2).sum}%6.0f ms  $d")
         }
+        val outside = compiled.filterNot(_._1.exists(rec.execs.contains))
+        if (outside.nonEmpty)
+          println(f"  outside the listed SQL executions: ${outside.size} compiles, " +
+            f"${outside.map(_._2).sum}%.0f ms")
       }
     } finally {
       spark.sparkContext.removeSparkListener(rec)
+      compiles.stop()
       spark.stop()
       FileUtils.deleteQuietly(new File(work))
     }

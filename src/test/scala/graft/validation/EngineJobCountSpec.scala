@@ -12,14 +12,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * goes to per-job overhead, not to rows, so each layer is one pass; a
   * change that brings back a per-check aggregate, a repeated join or a
   * schema-inference read raises the count past its ceiling. The ceilings
-  * are the highest counts measured on the one-pass engine: on the same
-  * input the cold call ran 30 jobs in some runs and 31 in others, as one
-  * leaf job of the verdicts write is submitted or not depending on timing.
+  * are the highest counts measured once the verdicts, metric rows and state
+  * rows are built on the driver: on the same input the cold call ran 22
+  * jobs in some runs and 23 in others, as one leaf job is submitted or not
+  * depending on timing; the resumed call ran 32 in every run.
   */
 class EngineJobCountSpec extends SparkTestBase {
 
-  val ColdJobsMax = 31
-  val ResumedJobsMax = 40
+  val ColdJobsMax = 23
+  val ResumedJobsMax = 32
 
   /** Jobs `f` starts, counted by a job group set around it, so jobs other
     * work in the session starts meanwhile are not counted. Listener events
@@ -119,5 +120,27 @@ class EngineJobCountSpec extends SparkTestBase {
     assert(coldAll > 0 && coldGroup == coldAll, s"cold: $coldGroup of $coldAll jobs in the group")
     assert(resumedAll > 0 && resumedGroup == resumedAll,
       s"resumed: $resumedGroup of $resumedAll jobs in the group")
+  }
+
+  test("a cold, a resumed and a failing call leave nothing in the session's cache") {
+    val out = "target/test-images/ckpt-cache"
+    val failing = "target/test-images/ckpt-cache-failing"
+    Seq(out, failing).foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    val dir = ImageGen.ensure(spark, 2000L, "target/test-images")
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    ImageSuite.runAndCheckpoint(spark, dir, out, "cold")
+    assert(cache.isEmpty, "the cold call left cached frames")
+    ImageSuite.invalidateParts(spark, out, Set("p3"))
+    ImageSuite.runAndCheckpoint(spark, dir, out, "resumed")
+    assert(ImageSuite.readDoneParts(spark, s"$out/state").contains("p3"))
+    assert(cache.isEmpty, "the resumed call left cached frames")
+    // the metrics append fails: its store path is a regular file
+    val blocker = new java.io.File(s"$failing/metrics")
+    blocker.getParentFile.mkdirs()
+    org.apache.commons.io.FileUtils.writeStringToFile(blocker, "not a store", "UTF-8")
+    intercept[Exception](ImageSuite.runAndCheckpoint(spark, dir, failing, "failed"))
+    assert(ImageSuite.readDoneParts(spark, s"$failing/state").isEmpty)
+    assert(cache.isEmpty, "the failing call left cached frames")
   }
 }
