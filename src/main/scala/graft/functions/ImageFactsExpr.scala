@@ -38,12 +38,11 @@ case class ImageFactsExpr(left: Expression, right: Expression)
     val bytesRaw = left.eval(input)
     val idRaw = right.eval(input)
     val bytes = if (bytesRaw == null) null else bytesRaw.asInstanceOf[Array[Byte]]
-    val id = if (idRaw == null) "" else idRaw.toString
     val hasBytes = bytes != null && bytes.nonEmpty
     val nBytes = if (bytes == null) 0L else bytes.length.toLong
     val sniffed = ImageCodec.sniffFormat(bytes).getOrElse("none")
     val (containerKind, containerOk) = ImageCodec.containerFacts(bytes)
-    val ord = try id.stripPrefix("img-").toLong catch { case _: Throwable => -1L }
+    val ord = ImageGen.ordinalOf(if (idRaw == null) null else idRaw.toString)
     val capExp = ImageGen.caption(ord)
     ImageCodec.decode(bytes) match {
       case Some((px, dw, dh)) =>

@@ -158,6 +158,12 @@ object ImageGen {
 
   def idStr(i: Long): String = f"img-$i%012d"
 
+  /** The ordinal `i` of the id `idStr(i)`; -1 for a null, empty or
+    * non-numeric id. */
+  def ordinalOf(id: String): Long =
+    if (id == null) -1L
+    else try id.stripPrefix("img-").toLong catch { case _: NumberFormatException => -1L }
+
   def caption(i: Long): String = {
     val m = ImageCodec.mix64(i ^ (Seed * 0x9e37L))
     val n = 4 + (m & 3).toInt

@@ -3,7 +3,7 @@ package graft.validation
 import graft.images.ImageGen
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The north-rule constraint-validation engine over the image+caption table.
   *
@@ -26,15 +26,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * before the scan (partition pruning, anti-join on the state table —
   * reference resume semantics validation_agent.py:787-812).
   *
-  * Small families on the driver: the summary's counts (every column but
-  * the sketch) and the candidates' `(part, check)` counts are one row per
-  * pending partition, so the driver collects them and builds every verdict
-  * (row, coverage, quality, key; drift when the driver finalized it), the
-  * metric rows and the state rows from those local rows ([[Small]]). The
-  * verdict rules stay Catalyst columns, evaluated over a local relation,
-  * where the optimizer folds the projection without a job. The driver
-  * holds O(pending partitions × checks) rows; the HLL sketches, the
-  * violation rows and a distributed drift finalize stay in the executors.
+  * One grading path: the summary's counts (every column but the sketch)
+  * and the candidates' `(part, check)` counts make one counts row per
+  * partition ([[Counts]]), and one set of plain-Scala grading functions
+  * turns it into every row, coverage, quality and key verdict and every
+  * metric row, as [[Drift.finalizeOne]] grades drift. The engine grades
+  * its pending partitions' rows into verdicts and state rows on the driver
+  * ([[Small]]); each public family function collects its own counts once
+  * and returns its verdicts as a local relation. The driver holds
+  * O(partitions × checks) rows; the HLL sketches, the violation rows and a
+  * distributed drift finalize stay in the executors.
   *
   * One engine path: [[runAndCheckpoint]] reads the checkpoint's prior
   * state, computes and commits; [[run]] computes the same increment over
@@ -71,8 +72,7 @@ object ImageSuite {
   // and would flag every partition at 10^12 scale.
   val DriftChi2Max = 0.5
 
-  def idOrdinal(id: String): Long =
-    try id.stripPrefix("img-").toLong catch { case _: Throwable => -1L }
+  def idOrdinal(id: String): Long = ImageGen.ordinalOf(id)
 
   /** Decode stage as a DataFrame projection over the native `image_facts`
     * Catalyst expression: no Product-encoder round-trip per row,
@@ -172,61 +172,99 @@ object ImageSuite {
         avg(when(col("decode_ok"), col("psnr_db"))).as("psnr_mean"),
         hll_sketch_agg(col("image_id")).as("sketch")): _*)
 
-  /** One verdict entry of a summary row, as [[summaryVerdicts]] explodes it
-    * and [[Small]] evaluates it on the driver.
+  /** One partition's counts row, the only thing its verdicts and metric rows
+    * are graded from: a [[partSummary]] row without its sketch (`part` and
+    * `n_rows` alone for a light frame) and the key-check candidate counts
+    * per `(part, check)`. Grading is plain Scala on the driver, as
+    * [[Drift.finalizeOne]] grades drift.
     */
-  private[validation] def verdictEntry(check: String, pass: Column, metric: Column,
-                                       threshold: Double, nViolations: Column): Column =
-    struct(lit(check).as("check"), pass.as("pass"), metric.cast("double").as("metric"),
-      lit(threshold).as("threshold"), nViolations.cast("long").as("n_violations"))
-
-  /** Verdict rows of a [[partSummary]]: one narrow explode of `entries`. */
-  private[validation] def summaryVerdicts(summary: DataFrame, entries: Seq[Column],
-                                          runId: String): DataFrame =
-    summary.select(col("part"), col("n_rows"), explode(array(entries: _*)).as("v"))
-      .select(col("part"), col("v.check").as("check"), col("v.pass").as("pass"),
-        col("v.metric").as("metric"), col("v.threshold").as("threshold"),
-        col("n_rows"), col("v.n_violations").as("n_violations"), lit(runId).as("run_id"))
-
-  private def rate(n: Column): Column = n.cast("double") / col("n_rows").cast("double")
-
-  /** The zero-tolerance verdict of one check counted in column
-    * `nv_<check>`: fail on any violation; the metric is the violation rate.
-    */
-  private def zeroTolerance(check: String): Column = {
-    val nv = col(nViolationsOf(check))
-    verdictEntry(check, nv === 0, rate(nv), 0.0, nv)
+  private[validation] final case class Counts(row: Row,
+                                              keyCounts: Map[(String, String), Long] = Map.empty) {
+    val part: String = row.getAs[String]("part")
+    val nRows: Long = row.getAs[Long]("n_rows")
+    def apply(name: String): Long = row.getAs[Long](name)
+    def key(check: String): Long = keyCounts.getOrElse((part, check), 0L)
   }
 
-  private val RowEntries: Seq[Column] = RowChecks.map(c => zeroTolerance(c.check))
+  /** How one family grades a counts row into its verdicts. */
+  private[validation] type Grade = (Counts, String) => Seq[Verdict]
+
+  private def rate(nv: Long, c: Counts): Double = nv.toDouble / c.nRows.toDouble
+
+  /** Zero tolerance: fail on any violation; the metric is the violation rate. */
+  private def zeroTolerance(c: Counts, check: String, nv: Long, runId: String): Verdict =
+    Verdict(c.part, check, nv == 0, rate(nv, c), 0.0, c.nRows, nv, runId)
+
+  private val rowGrades: Grade = (c, runId) =>
+    RowChecks.map(k => zeroTolerance(c, k.check, c(nViolationsOf(k.check)), runId))
 
   /** Null-rate verdicts: pass while the null rate stays within [[NullRateMax]]. */
-  private val CoverageEntries: Seq[Column] =
+  private val coverageGrades: Grade = (c, runId) =>
     Seq("null_caption" -> "null_rate_caption", "null_bytes" -> "null_rate_bytes").map {
       case (nulls, check) =>
-        verdictEntry(check, rate(col(nulls)) <= NullRateMax, rate(col(nulls)),
-          NullRateMax, col(nulls))
+        val r = rate(c(nulls), c)
+        Verdict(c.part, check, r <= NullRateMax, r, NullRateMax, c.nRows, c(nulls), runId)
     }
 
-  /** Per-(part, check) verdicts for the row-invariant family — a projection
-    * of [[partSummary]]. `violations` is NOT read: the counts come from the
-    * same check table [[rowViolations]] fans out. The parameter is kept
-    * only because the benchmark under `perfbench/` compiles against this
-    * signature.
+  private val keyGrades: Grade = (c, runId) =>
+    KeyChecks.map(k => zeroTolerance(c, k, c.key(k), runId))
+
+  /** The grading of the families a [[partSummary]] counts: row, coverage
+    * and quality. */
+  private val decodeGrades: Grade = (c, runId) =>
+    rowGrades(c, runId) ++ coverageGrades(c, runId) ++ Scoring.qualityGrades(c, runId)
+
+  /** The full engine's grading: the decode families and the key family. */
+  private val allGrades: Grade = (c, runId) => decodeGrades(c, runId) ++ keyGrades(c, runId)
+
+  /** The counts rows of `facts`' partitions: one collect of [[partSummary]]. */
+  private[validation] def summaryCounts(facts: DataFrame): Seq[Counts] =
+    partSummary(facts).drop("sketch").collect().toSeq.map(Counts(_))
+
+  /** The verdicts `grade` gives `counts`, as a local relation. */
+  private[validation] def gradedFrame(spark: SparkSession, counts: Seq[Counts], runId: String)
+                                     (grade: Grade): DataFrame = {
+    import spark.implicits._
+    counts.flatMap(grade(_, runId)).toDF()
+  }
+
+  /** Per-(part, check) verdicts for the row-invariant family, graded from
+    * [[partSummary]]'s counts, which this call collects (one Spark job).
+    * `violations` is NOT read: the counts come from the same check table
+    * [[rowViolations]] fans out. The parameter is kept only because the
+    * benchmark under `perfbench/` compiles against this signature.
     */
   def rowVerdicts(facts: DataFrame, violations: DataFrame, runId: String): DataFrame =
-    summaryVerdicts(partSummary(facts), RowEntries, runId)
+    gradedFrame(facts.sparkSession, summaryCounts(facts), runId)(rowGrades)
 
-  /** Null-rate / coverage verdicts per partition (A10 — the core stat). */
+  /** Null-rate / coverage verdicts per partition (A10 — the core stat),
+    * graded from [[partSummary]]'s counts, which this call collects.
+    */
   def coverageVerdicts(facts: DataFrame, runId: String): DataFrame =
-    summaryVerdicts(partSummary(facts), CoverageEntries, runId)
+    gradedFrame(facts.sparkSession, summaryCounts(facts), runId)(coverageGrades)
+
+  /** [[rowVerdicts]], [[coverageVerdicts]] and [[Scoring.qualityVerdicts]]
+    * together, from one collect of their counts.
+    */
+  private[validation] def decodeVerdicts(facts: DataFrame, runId: String): DataFrame =
+    gradedFrame(facts.sparkSession, summaryCounts(facts), runId)(decodeGrades)
 
   /** Id-keyed checks over a whole table: [[incrementalKeyChecks]] against
     * an empty key index — the full check is the incremental one started
     * from nothing, so every key-check violation row is built in one place.
+    * Like it, this call counts the candidates (Spark jobs run here).
     */
   def keyChecks(light: DataFrame, captions: DataFrame, runId: String): (DataFrame, DataFrame) =
     incrementalKeyChecks(light, emptyStore(light.sparkSession, KeysSchema), captions, runId)
+
+  /** The violations of [[keyChecks]] alone: a lazy plan over the joins, no
+    * verdict graded and no Spark job run.
+    */
+  private[validation] def keyViolations(light: DataFrame, captions: DataFrame): DataFrame = {
+    val spark = light.sparkSession
+    newKeyViolations(keyCandidates(light, emptyStore(spark, KeysSchema), captions,
+      emptyStore(spark, "part STRING"), None))
+  }
 
   /** Full suite over the whole table; returns (verdicts, violations,
     * metrics). The same computation as [[runAndCheckpoint]], started from
@@ -236,32 +274,36 @@ object ImageSuite {
     */
   def run(spark: SparkSession, dataDir: String, runId: String): (DataFrame, DataFrame, DataFrame) = {
     val facts = decodeFactsExpr(ImageGen.images(spark, dataDir)).cache()
-    val summary = partSummary(facts).drop("sketch")
-    val countRows = summary.collect()
+    val summary = summaryCounts(facts)
     // key and drift checks read the light columns of the cached facts
     val kd = keyDrift(facts.select(LightCols.map(col): _*), ImageGen.captions(spark, dataDir),
       emptyPrior(spark), runId, Drift.DriverFinalizeMaxPartials)()
     // the drift verdicts are final (collected or cached) once built
     kd.freshPds.unpersist()
-    val small = new Small(pendingCounts(spark, countRows, summary.schema, kd.keyCounts),
-      SummaryEntries, kd.drift, pendingDrift = false, runId)
+    val small = new Small(spark, summary.map(_.copy(keyCounts = kd.keyCounts)), allGrades,
+      kd.drift, pendingDrift = false, runId)
     (small.verdicts, rowViolations(facts).unionByName(kd.kViol).unionByName(kd.drift.violations),
-      localMetrics(spark, countRows, summary.schema, runId, Nil))
+      metricsFrame(spark, summary.flatMap(metricRows(_, runId))))
   }
 
-  /** Per-partition lineage metrics (PerformanceTimer twin). */
-  def metricsOf(facts: DataFrame, runId: String): DataFrame =
-    partSummary(facts).select(col("part"), explode(array(MetricEntries: _*)).as("m"))
-      .select(col("part"), col("m.metric").as("metric"), col("m.value").as("value"),
-        lit(runId).as("run_id"))
-
-  /** The metric entries of a [[partSummary]] row: row count, bytes and mean
-    * PSNR.
+  /** Per-partition lineage metrics (PerformanceTimer twin), from
+    * [[partSummary]]'s counts, which this call collects.
     */
-  private val MetricEntries: Seq[Column] = Seq(
-    struct(lit("n_rows").as("metric"), col("n_rows").cast("double").as("value")),
-    struct(lit("bytes_total").as("metric"), col("bytes_total").as("value")),
-    struct(lit("psnr_mean").as("metric"), col("psnr_mean").as("value")))
+  def metricsOf(facts: DataFrame, runId: String): DataFrame =
+    metricsFrame(facts.sparkSession, summaryCounts(facts).flatMap(metricRows(_, runId)))
+
+  /** The metric rows of a counts row: row count, bytes and mean PSNR, as
+    * rows of [[MetricSchema]], where a null sum or mean stays a null value.
+    */
+  private def metricRows(c: Counts, runId: String): Seq[Row] =
+    Seq("n_rows" -> c.nRows.toDouble, "bytes_total" -> c.row.getAs[Any]("bytes_total"),
+      "psnr_mean" -> c.row.getAs[Any]("psnr_mean")).map { case (m, v) => Row(c.part, m, v, runId) }
+
+  private val MetricSchema = StructType.fromDDL("part STRING, metric STRING, value DOUBLE, run_id STRING")
+
+  /** Metric rows as a local relation. */
+  private def metricsFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), MetricSchema)
 
   /** The key-check kernel: uniqueness, referential (both directions) and
     * caption consistency for the PENDING partitions only, against a
@@ -275,36 +317,31 @@ object ImageSuite {
     * O(keys) storage, hash-equi joins only (bucket it by hash(image_id) in
     * the Iceberg layout so the join is storage-partitioned). Its left-outer
     * and anti joins are ones AQE can split on skewed keys (SkewStressSpec).
+    * The verdicts are graded when this is called: it collects the light
+    * frame's `(part, n_rows)` and counts the candidates (two Spark jobs).
     */
   def incrementalKeyChecks(lightNew: DataFrame, oldKeys: DataFrame,
                            captions: DataFrame, runId: String,
                            doneParts: DataFrame = null,
                            priorOrphans: DataFrame = null): (DataFrame, DataFrame) = {
+    val spark = lightNew.sparkSession
+    // not persisted: the violations stay a lazy plan over the joins
     val candidates = keyCandidates(lightNew, oldKeys, captions,
-      Option(doneParts).getOrElse(emptyStore(lightNew.sparkSession, "part STRING")),
-      Option(priorOrphans))
-    val nv = KeyChecks.map(c => count_if(col("check") === c).as(nViolationsOf(c)))
-    val counts = candidates.groupBy("part").agg(nv.head, nv.tail: _*)
-    val parts = lightNew.groupBy("part").agg(count(lit(1)).as("n_rows"))
-      .join(counts, Seq("part"), "left").na.fill(0L, KeyChecks.map(nViolationsOf))
-    (summaryVerdicts(parts, KeyEntries, runId), newKeyViolations(candidates))
+      Option(doneParts).getOrElse(emptyStore(spark, "part STRING")), Option(priorOrphans))
+    val keyCounts = countByPartCheck(candidates)
+    (gradedFrame(spark, lightCounts(lightNew).map(Counts(_, keyCounts)), runId)(keyGrades),
+      newKeyViolations(candidates))
   }
 
+  /** The key checks, each failing a partition any candidate of that
+    * `(part, check)` carries.
+    */
   private val KeyChecks = Seq("uniqueness_image_id", "referential_caption_exists",
     "referential_image_exists", "caption_consistent")
 
-  /** Zero-tolerance key-check verdicts of a row holding `n_rows` and one
-    * candidate count per key check: fail when any candidate carries that
-    * (part, check).
-    */
-  private val KeyEntries: Seq[Column] = KeyChecks.map(zeroTolerance)
-
-  /** Every verdict entry of a pending partition's counts row: the
-    * [[partSummary]] counts plus the key-check counts. Lazy: the quality
-    * entries live in [[Scoring]], whose initialization reads this object.
-    */
-  private lazy val SummaryEntries: Seq[Column] =
-    RowEntries ++ CoverageEntries ++ Scoring.QualityEntries ++ KeyEntries
+  /** `(part, n_rows)` of a light frame, collected. */
+  private def lightCounts(lightNew: DataFrame): Seq[Row] =
+    lightNew.groupBy("part").agg(count(lit(1)).as("n_rows")).collect().toSeq
 
   /** Every key-check violation candidate of an increment, built once: the
     * violation columns plus `is_new`, false only for orphan captions
@@ -597,39 +634,6 @@ object ImageSuite {
     counts.value.asScala.toSeq.groupMapReduce(_._1)(_._2)(_ + _)
   }
 
-  /** The metric rows of [[MetricEntries]] over the pending partitions'
-    * summary counts `rows` (with `schema`), plus `extra` — a local relation
-    * built on the driver.
-    */
-  private def localMetrics(spark: SparkSession, rows: Seq[Row], schema: StructType,
-                           runId: String, extra: Seq[MetricRow]): DataFrame = {
-    val metrics = local(spark, rows, schema).select(col("part") +: MetricEntries: _*).collect()
-      .toSeq.flatMap { r =>
-        (1 until r.length).map { i =>
-          val e = r.getStruct(i)
-          Row(r.getString(0), e.getString(0), e.get(1), runId)
-        }
-      } ++ extra.map(m => Row(m.part, m.metric, m.value, m.run_id))
-    local(spark, metrics, StructType.fromDDL("part STRING, metric STRING, value DOUBLE, run_id STRING"))
-  }
-
-  /** `rows` as a local relation: projections over it fold on the driver. */
-  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-
-  /** The pending partitions' counts as a local relation: `rows` (with
-    * `schema`: part, n_rows and the summary counts) plus one `nv_<check>`
-    * column per key check from `keyCounts`.
-    */
-  private def pendingCounts(spark: SparkSession, rows: Seq[Row], schema: StructType,
-                            keyCounts: Map[(String, String), Long]): DataFrame = {
-    val part = schema.fieldIndex("part")
-    local(spark, rows.map(r => Row.fromSeq(r.toSeq ++
-        KeyChecks.map(c => keyCounts.getOrElse((r.getString(part), c), 0L)))),
-      StructType(schema.fields ++
-        KeyChecks.map(c => StructField(nViolationsOf(c), LongType, nullable = false))))
-  }
-
   /** Run `legs` side by side, one new thread per leg, and return when every
     * leg has ended. A new thread inherits the caller's Spark local
     * properties (job group, job description, scheduler pool) — the threads
@@ -653,34 +657,24 @@ object ImageSuite {
   }
 
   /** The small families of one increment, built on the driver from its
-    * pending partitions' counts. `counts` is the local relation of
-    * [[pendingCounts]]; `entries` are the verdict entries its rows are
-    * graded by. The projections of the entries and of
-    * [[Scoring.verdictScore]] over local relations fold in the optimizer, so
-    * no Spark job runs here — except, when the executors finalized the
-    * drift check, one filtered collect of the pending partitions' failing
-    * drift verdicts for the state rows. `pendingDrift` keeps the drift
-    * verdicts of the pending partitions only.
+    * pending partitions' counts rows, which `grade` grades. The projection
+    * of [[Scoring.verdictScore]] over the local relation folds in the
+    * optimizer, so no Spark job runs here — except, when the executors
+    * finalized the drift check, one filtered collect of the pending
+    * partitions' failing drift verdicts for the state rows. `pendingDrift`
+    * keeps the drift verdicts of the pending partitions only.
     */
-  private final class Small(counts: DataFrame, entries: Seq[Column],
+  private final class Small(spark: SparkSession, counts: Seq[Counts], grade: Grade,
                             drift: Drift.Finalized, pendingDrift: Boolean, runId: String) {
-    private val spark = counts.sparkSession
     import spark.implicits._
+
+    private val graded: Seq[Verdict] = counts.flatMap(grade(_, runId))
+
+    private val parts = counts.map(_.part).toSet
 
     /** The rows of `df` of the pending partitions. */
     def pendingOnly(df: DataFrame): DataFrame =
-      df.join(counts.select("part"), Seq("part"), "left_semi")
-
-    private val graded: Seq[Verdict] =
-      counts.select(col("part") +: col("n_rows") +: entries: _*).collect().toSeq.flatMap { r =>
-        (2 until r.length).map { i =>
-          val e = r.getStruct(i)
-          Verdict(r.getString(0), e.getString(0), e.getBoolean(1), e.getDouble(2),
-            e.getDouble(3), r.getLong(1), e.getLong(4), runId)
-        }
-      }
-
-    private val parts = graded.map(_.part).toSet
+      df.join(parts.toSeq.toDF("part"), Seq("part"), "left_semi")
 
     /** The drift verdict rows, when the driver finalized them. */
     private val driftRows: Option[Seq[Verdict]] =
@@ -783,12 +777,11 @@ object ImageSuite {
     try {
       // the emptiness check: the batch's (part, n_rows), before any read
       // of the prior state
-      val parts = lightNew.groupBy("part").agg(count(lit(1)).as("n_rows"))
-      val partRows = parts.collect()
+      val partRows = lightCounts(lightNew)
       if (partRows.isEmpty) return
       kd = keyDrift(lightNew, captions, readPrior(spark, outDir, doneDf), runId,
         driverFinalizeMax)()
-      val small = new Small(pendingCounts(spark, partRows, parts.schema, kd.keyCounts), KeyEntries,
+      val small = new Small(spark, partRows.map(Counts(_, kd.keyCounts)), keyGrades,
         kd.drift, pendingDrift = true, runId)
       commitIncrement(spark, outDir, runId, small.verdicts,
         kd.kViol.unionByName(small.pendingOnly(kd.drift.violations)), small.stateRows, lightNew,
@@ -843,11 +836,10 @@ object ImageSuite {
     // persisted likewise: one row per pending partition, whose counts the
     // driver collects and whose sketches the HLL store and estimate read
     val summary = partSummary(facts)
-    val counted = summary.drop("sketch")
-    var countRows: Array[Row] = null
+    var counts: Seq[Counts] = null
     val countsLeg: () => Unit = () => {
       facts.cache(); summary.persist()
-      countRows = counted.collect()
+      counts = summary.drop("sketch").collect().toSeq.map(Counts(_))
     }
     var prior: Prior = null
     val priorLeg: () => Unit = () => prior = readPrior(spark, outDir, doneDf)
@@ -862,7 +854,7 @@ object ImageSuite {
       // idempotent no-op rerun: everything is done — appending the drift
       // verdicts recomputed from stored partials again would grow the
       // output tables on every invocation without new information
-      if (countRows.isEmpty) return
+      if (counts.isEmpty) return
       if (prior == null) priorLeg()
 
       // Cross-run NDV(image_id) from mergeable HLL sketches (DataSketches
@@ -878,8 +870,8 @@ object ImageSuite {
         .join(broadcast(doneDf), Seq("part"), "left_semi")
       val sideLeg: () => Unit = () => {
         val ndv = ndvOf(summary.select("part", "sketch").unionByName(storedHll))
-        val metrics = localMetrics(spark, countRows.toSeq, counted.schema, runId,
-          Seq(MetricRow("_global", "ndv_image_id_hll", ndv.toDouble, runId)))
+        val metrics = metricsFrame(spark, counts.flatMap(metricRows(_, runId)) :+
+          Row("_global", "ndv_image_id_hll", ndv.toDouble, runId))
         concurrently(
           () => metrics.write.mode(SaveMode.Append).parquet(s"$outDir/metrics"),
           () => PartitionedStore.write(summary.select("part", "sketch"), s"$outDir/hll"))
@@ -888,8 +880,8 @@ object ImageSuite {
       // estimate, then the metrics append ‖ the HLL overwrite
       val lightNew = facts.select(LightCols.map(col): _*)
       kd = keyDrift(lightNew, captions, prior, runId, driverFinalizeMax)(sideLeg)
-      val small = new Small(pendingCounts(spark, countRows.toSeq, counted.schema, kd.keyCounts),
-        SummaryEntries, kd.drift, pendingDrift = false, runId)
+      val small = new Small(spark, counts.map(_.copy(keyCounts = kd.keyCounts)), allGrades,
+        kd.drift, pendingDrift = false, runId)
 
       // Commit through the shared protocol (see commitIncrement). Key-index
       // + sketch stores extend via DYNAMIC PARTITION OVERWRITE, not append:

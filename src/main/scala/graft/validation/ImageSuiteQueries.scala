@@ -22,15 +22,16 @@ object ImageSuiteQueries {
   // One suite execution per (session, dataset dir): cached DataFrames are
   // bound to the session that built them, so a stop/recreate-session
   // pattern (the Bench flow) must not resurrect frames from a dead session.
-  private val cache = scala.collection.mutable.Map[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]()
+  private val cache = scala.collection.mutable.Map[(SparkSession, String), DataFrame]()
 
-  def suite(s: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) =
+  /** The verdicts of the full suite over the tier of `sfDir`, cached. */
+  def suite(s: SparkSession, sfDir: String): DataFrame =
     cache.synchronized {
       cache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
       cache.getOrElseUpdate((s, sfDir), {
         val dir = ImageGen.ensure(s, rowsFor(sfDir))
-        val (v, viol, m) = ImageSuite.run(s, dir, "verify")
-        (v.cache(), viol.cache(), m.cache())
+        val (v, _, _) = ImageSuite.run(s, dir, "verify")
+        v.cache()
       })
     }
 
@@ -381,9 +382,7 @@ object ImageSuiteQueries {
     // qi_verdicts (score column).
     "q_i_overall" -> ((s, dir) => {
       val f = ensureFacts(s, dir)
-      val verdicts = ImageSuite.rowVerdicts(f, ImageSuite.rowViolations(f), "verify")
-        .unionByName(ImageSuite.coverageVerdicts(f, "verify"))
-        .unionByName(Scoring.qualityVerdicts(f, "verify"))
+      val verdicts = ImageSuite.decodeVerdicts(f, "verify")
         .withColumn("score",
           Scoring.verdictScore(col("check"), col("metric"), col("threshold")))
       Scoring.overallScores(verdicts)
@@ -407,7 +406,7 @@ object ImageSuiteQueries {
       val f = ensureFacts(s, dir)
       val (light, caps) = ensureKeyTables(s, dir)
       ImageSuite.rowViolations(f)
-        .unionByName(ImageSuite.keyChecks(light, caps, "verify")._2)
+        .unionByName(ImageSuite.keyViolations(light, caps))
         .orderBy("part", "image_id", "check", "observed")
     }),
     // Per-partition metric rows (PerformanceTimer twin) recounted by DuckDB
@@ -443,8 +442,7 @@ object ImageSuiteQueries {
         Seq("0", "1"), maxViolRate = 0.01)),
     // Full verdict table: one row per (partition, check), always emitted.
     "qi_verdicts" -> ((s, dir) => {
-      val (v, _, _) = suite(s, dir)
-      v.orderBy("part", "check")
+      suite(s, dir).orderBy("part", "check")
     }),
     // Column-stats family incl. the sketch aggregates that have no DuckDB
     // twin (approx_count_distinct HLL++, percentile_approx GK).

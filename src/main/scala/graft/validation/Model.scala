@@ -7,8 +7,11 @@ package graft.validation
   *   - one [[Verdict]] per (partition, check) — always emitted, even for
   *     all-corrupt partitions (V9 "never fail the job on bad data");
   *   - zero-or-more [[Violation]] rows per failing record;
-  *   - [[StateRow]]s checkpoint per-partition completion for resume (ST2);
-  *   - [[MetricRow]]s are the PerformanceTimer twin (logging_utils.py:259-319).
+  *   - [[StateRow]]s checkpoint per-partition completion for resume (ST2).
+  *
+  * The metric rows, the PerformanceTimer twin (logging_utils.py:259-319),
+  * are `(part, metric, value, run_id)` rows whose value may be null
+  * (`ImageSuite.metricsOf`).
   */
 case class Verdict(part: String, check: String, pass: Boolean,
                    metric: Double, threshold: Double,
@@ -19,5 +22,3 @@ case class Violation(part: String, image_id: String, check: String,
 
 case class StateRow(part: String, status: String, n_rows: Long,
                     n_violations: Long, run_id: String, finished_at: Long)
-
-case class MetricRow(part: String, metric: String, value: Double, run_id: String)

@@ -61,7 +61,7 @@ object Scoring {
       count_if(decodable && ham >= 5 && ham <= ImageSuite.PhashHammingMax).as("h06"))
   }
 
-  /** The two quality verdict entries of a summary row ([[LadderCounts]]):
+  /** The two quality verdicts of a counts row ([[LadderCounts]]): the
     * metric is the MEAN per-row ladder score (reference scores each record
     * then averages); rows scoring below [[QualityPassMin]] count as
     * violations. Partitions with zero scorable rows get the reference's
@@ -74,23 +74,24 @@ object Scoring {
     * re-associates across partitions), which makes the verdict both
     * rerun-deterministic at cluster scale and DuckDB-oracle-reproducible.
     */
-  private[validation] val QualityEntries: Seq[Column] = {
-    def entry(check: String, n: Column, c1: Column, c08: Column, c06: Column) = {
+  private[validation] val qualityGrades: ImageSuite.Grade = (c, runId) => {
+    def grade(check: String, n: Long, c1: Long, c08: Long, c06: Long): Verdict = {
       val bad = n - c1 - c08 - c06
-      val mean = when(n > 0,
-        (c1 * 10 + c08 * 8 + c06 * 6 + bad * 2).cast("double") / (n * 10).cast("double"))
-        .otherwise(lit(0.5)) // reference's "unavailable" score
-      ImageSuite.verdictEntry(check, mean >= QualityPassMin, mean, QualityPassMin, bad)
+      val mean =
+        if (n > 0) (c1 * 10 + c08 * 8 + c06 * 6 + bad * 2).toDouble / (n * 10).toDouble
+        else 0.5 // reference's "unavailable" score
+      Verdict(c.part, check, mean >= QualityPassMin, mean, QualityPassMin, c.nRows, bad, runId)
     }
-    Seq(entry("psnr_quality", col("nd"), col("p1"), col("p08"), col("p06")),
-      entry("phash_quality", col("nh"), col("h1"), col("h08"), col("h06")))
+    Seq(grade("psnr_quality", c("nd"), c("p1"), c("p08"), c("p06")),
+      grade("phash_quality", c("nh"), c("h1"), c("h08"), c("h06")))
   }
 
-  /** Per-partition graded-quality verdicts from decoded facts — a
-    * projection of ImageSuite's per-partition summary ([[QualityEntries]]).
+  /** Per-partition graded-quality verdicts from decoded facts, graded from
+    * ImageSuite's per-partition summary counts ([[qualityGrades]]), which
+    * this call collects.
     */
   def qualityVerdicts(facts: DataFrame, runId: String): DataFrame =
-    ImageSuite.summaryVerdicts(ImageSuite.partSummary(facts), QualityEntries, runId)
+    ImageSuite.gradedFrame(facts.sparkSession, ImageSuite.summaryCounts(facts), runId)(qualityGrades)
 
   /** V8: per-partition overall score = mean of that partition's sub-scores
     * (all checks emit a score here, so "available" = all; the 0.5 fallback
