@@ -3,6 +3,7 @@ package graft.images
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import scala.util.control.NonFatal
 
 /** Pure-JVM image encode/decode + the per-row pixel invariants
   * (decoded-pixel allclose via PSNR, per BASELINE.json input_hint).
@@ -13,9 +14,11 @@ import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
   * PSNR are deterministic pure functions of `bytes`, recomputed under
   * Catalyst instead of cached (SURVEY.md §4 memoization row).
   *
-  * All functions are total: failures return Option/None, never throw —
-  * bad rows become violation rows, tasks never fail (reference "robust
-  * sections" biosample.py:288-404).
+  * All functions are total on bad bytes: failures return Option/None,
+  * never throw — bad rows become violation rows, tasks never fail
+  * (reference "robust sections" biosample.py:288-404). Fatal JVM errors
+  * (out of memory, an interrupt) are not bad bytes: they propagate and
+  * fail the task instead of becoming an "undecodable" verdict.
   */
 object ImageCodec {
 
@@ -43,24 +46,36 @@ object ImageCodec {
     // are stable under JPEG re-encode (natural-image-like spectrum).
     // Texture is identical across channels (pure luminance) so JPEG
     // chroma subsampling doesn't eat it and q=0.95 stays above 40 dB.
-    val nWaves = 6
-    val freqX = Array(1, 2, 3, 4, 5, 6)
-    val freqY = Array(2, 1, 5, 3, 6, 4)
-    val amp = Array.tabulate(nWaves)(k => 26.0 / (k + 1))
-    val phase = Array.tabulate(nWaves)(k => (((m >>> (16 + 6 * k)) & 0x3f) / 63.0) * 2 * math.Pi)
+    // Wave k (k = 0..5) has amplitude 26/(k+1), an id-derived phase and
+    // (x, y) frequencies (1,2) (2,1) (3,5) (4,3) (5,6) (6,4); the six
+    // terms are written out and summed in k order (a loop over k through
+    // amplitude and frequency arrays cost ~2.8× as much per pixel in
+    // graft.dev.DecodeProfile, even with the one-axis waves hoisted, on a
+    // 4-core x86-64 host under JDK 17). The two one-axis waves depend on
+    // x alone or on y alone, so they are computed once per column and
+    // once per row. Every term is the same expression on the same inputs
+    // as a per-pixel loop over k evaluates, summed in the same order, so
+    // every pixel is bit-equal to that form (KernelIdentitySpec).
+    val phase = Array.tabulate(6)(k => (((m >>> (16 + 6 * k)) & 0x3f) / 63.0) * 2 * math.Pi)
+    val p0 = phase(0); val p1 = phase(1); val p2 = phase(2)
+    val p3 = phase(3); val p4 = phase(4); val p5 = phase(5)
+    val fxs = Array.tabulate(w)(x => x.toDouble / w)
+    val waveX = Array.tabulate(w)(x => 40 * math.sin(2 * math.Pi * fxs(x) + a))
     var y = 0
     while (y < h) {
+      val fy = y.toDouble / h
+      val waveY = 40 * math.cos(2 * math.Pi * fy + b)
       var x = 0
       while (x < w) {
-        val fx = x.toDouble / w
-        val fy = y.toDouble / h
-        val s = 40 * math.sin(2 * math.Pi * fx + a) + 40 * math.cos(2 * math.Pi * fy + b)
-        var t = 0.0
-        var k = 0
-        while (k < nWaves) {
-          t += amp(k) * math.sin(2 * math.Pi * (freqX(k) * fx + freqY(k) * fy) + phase(k))
-          k += 1
-        }
+        val fx = fxs(x)
+        val s = waveX(x) + waveY
+        val t = 0.0 +
+          (26.0 / 1) * math.sin(2 * math.Pi * (1 * fx + 2 * fy) + p0) +
+          (26.0 / 2) * math.sin(2 * math.Pi * (2 * fx + 1 * fy) + p1) +
+          (26.0 / 3) * math.sin(2 * math.Pi * (3 * fx + 5 * fy) + p2) +
+          (26.0 / 4) * math.sin(2 * math.Pi * (4 * fx + 3 * fy) + p3) +
+          (26.0 / 5) * math.sin(2 * math.Pi * (5 * fx + 6 * fy) + p4) +
+          (26.0 / 6) * math.sin(2 * math.Pi * (6 * fx + 4 * fy) + p5)
         val r = clamp(baseR + s + t + 30 * fx)
         val g = clamp(baseG + s + t + 30 * fy)
         val bl = clamp(baseB + 0.5 * s + t + 15 * (fx + fy))
@@ -152,7 +167,7 @@ object ImageCodec {
       }
       if (img == null) None
       else Some((fromImage(img), img.getWidth, img.getHeight))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Sniff format from magic bytes — the fmt↔content consistency input. */
   def sniffFormat(bytes: Array[Byte]): Option[String] = {
@@ -250,9 +265,6 @@ object ImageCodec {
     } else ("unknown", false)
   }
 
-  /** PSNR in dB between two same-size packed-RGB images; +Inf if identical.
-    * None if sizes differ.
-    */
   /** Perceptual-quality facts from decoded pixels — the gates a
     * production image-curation pipeline runs beside integrity checks
     * (blur and exposure filtering; e.g. the LAION pipeline's aesthetic
@@ -318,6 +330,9 @@ object ImageCodec {
     (sharp, bright, contr, nLo.toDouble / n, nHi.toDouble / n)
   }
 
+  /** PSNR in dB between two same-size packed-RGB images; +Inf if identical.
+    * None if sizes differ or the images are empty.
+    */
   def psnr(a: Array[Int], b: Array[Int]): Option[Double] = {
     if (a.length != b.length || a.length == 0) return None
     var se = 0.0

@@ -4,6 +4,13 @@ package graft.images
   * resample to 32×32 → 2-D DCT-II → top-left 8×8 low-frequency block
   * (skipping DC) + one extra coefficient → sign-vs-median bits.
   *
+  * Every hash here reads coefficients with u, v ≤ 8 only, so [[dct2d]]
+  * computes just that 9×9 corner of the 32×32 transform (81 of 1,024
+  * coefficients): 32×9 row sums, then 9×9 column sums. Each computed
+  * coefficient is the same sum over the same products in the same order
+  * as in the full transform, so every hash is bit-equal to the one the
+  * full DCT gives.
+  *
   * The stored `phash` column is validated by recomputing this from decoded
   * bytes and bucketing the hamming distance — the graft twin of the
   * reference's elevation-difference buckets
@@ -11,19 +18,22 @@ package graft.images
   * Deterministic pure Scala; no native deps.
   */
 object Phash {
-  private val N = 32
+  private[images] val N = 32
+  /** Coefficients per axis the hashes read: u, v ∈ [0, K). */
+  private[images] val K = 9
 
-  // Thread-local scratch for the three N×N double planes and the tile
-  // sub-image: the hash kernels run once per image (5× with quadrant
-  // tiles) on executor task threads, and per-call allocation of ~40 KB
-  // of arrays dominated the decode stage's allocation rate (~120 KB per
-  // image → GC pressure that measurably sagged per-core throughput at
-  // local[4] in the spark-submit scaling twin). Every cell of every
-  // plane is overwritten before it is read, so reuse cannot leak state
-  // between calls; values are bit-identical to the allocating version.
+  // Thread-local scratch for the grayscale plane, the two DCT planes
+  // (N×K row sums, K×K corner) and the tile sub-image: the hash kernels
+  // run once per image (5× with quadrant tiles) on executor task threads,
+  // and per-call allocation of these arrays dominated the decode stage's
+  // allocation rate (GC pressure that measurably sagged per-core
+  // throughput at local[4] in the spark-submit scaling twin). Every cell
+  // of every plane is overwritten before it is read, so reuse cannot leak
+  // state between calls; values are bit-identical to the allocating
+  // version.
   private val bufGray = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](N * N))
-  private val bufTmp = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](N * N))
-  private val bufOut = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](N * N))
+  private val bufTmp = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](N * K))
+  private val bufOut = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](K * K))
   private val bufSub = new ThreadLocal[Array[Int]] {
     override def initialValue(): Array[Int] = new Array[Int](0)
   }
@@ -34,7 +44,7 @@ object Phash {
   }
 
   /** Mean-pool (area-average) resample of packed-RGB to N×N grayscale. */
-  private def toGray32(px: Array[Int], w: Int, h: Int): Array[Double] = {
+  private[images] def toGray32(px: Array[Int], w: Int, h: Int): Array[Double] = {
     val g = bufGray.get()
     var gy = 0
     while (gy < N) {
@@ -61,7 +71,7 @@ object Phash {
     g
   }
 
-  private lazy val cosTable: Array[Double] = {
+  private[images] lazy val cosTable: Array[Double] = {
     val t = new Array[Double](N * N)
     var u = 0
     while (u < N) {
@@ -75,28 +85,34 @@ object Phash {
     t
   }
 
-  /** 2-D DCT-II of an N×N block (row-column decomposition, O(N^3)). */
+  /** The K×K low-frequency corner of the 2-D DCT-II of an N×N block,
+    * row-major by v (`out(v * K + u)`), by row-column decomposition: a
+    * row pass of N rows × K values of u, then a column pass of K × K,
+    * O(N²K + NK²) instead of the full transform's O(N³). Each coefficient
+    * sums the same products in the same order (x, then y ascending) as
+    * the full N×N transform, so it is bit-equal to that transform's
+    * coefficient. */
   private def dct2d(g: Array[Double]): Array[Double] = {
     val tmp = bufTmp.get()
     var y = 0
     while (y < N) { // DCT along rows
       var u = 0
-      while (u < N) {
+      while (u < K) {
         var s = 0.0; var x = 0
         while (x < N) { s += g(y * N + x) * cosTable(u * N + x); x += 1 }
-        tmp(y * N + u) = s
+        tmp(y * K + u) = s
         u += 1
       }
       y += 1
     }
     val out = bufOut.get()
     var u = 0
-    while (u < N) { // DCT along columns
+    while (u < K) { // DCT along columns
       var v = 0
-      while (v < N) {
+      while (v < K) {
         var s = 0.0; var y2 = 0
-        while (y2 < N) { s += tmp(y2 * N + u) * cosTable(v * N + y2); y2 += 1 }
-        out(v * N + u) = s
+        while (y2 < N) { s += tmp(y2 * K + u) * cosTable(v * N + y2); y2 += 1 }
+        out(v * K + u) = s
         v += 1
       }
       u += 1
@@ -104,32 +120,16 @@ object Phash {
     out
   }
 
-  /** 64-bit pHash of packed-RGB pixels. */
+  /** 64-bit pHash of packed-RGB pixels: the 8×8 low-frequency block
+    * skipping (0,0) DC, plus coefficient (u=0, v=8) to keep 64 bits —
+    * the identity reading of [[dihedralIdx]]. */
   def phash64(px: Array[Int], w: Int, h: Int): Long = {
     val coef = dct2d(toGray32(px, w, h))
-    // 64 low-frequency coefficients: the 8×8 block skipping (0,0) DC,
-    // plus coefficient (8,0) to keep 64 bits.
+    val idx = dihedralIdx(0)
     val vals = new Array[Double](64)
     var i = 0
-    var v = 0
-    while (v < 8) {
-      var u = 0
-      while (u < 8) {
-        if (!(u == 0 && v == 0)) { vals(i) = coef(v * N + u); i += 1 }
-        u += 1
-      }
-      v += 1
-    }
-    vals(63) = coef(8 * N)
-    val sorted = vals.sorted
-    val median = (sorted(31) + sorted(32)) / 2.0
-    var bits = 0L
-    i = 0
-    while (i < 64) {
-      if (vals(i) > median) bits |= (1L << i)
-      i += 1
-    }
-    bits
+    while (i < 64) { vals(i) = coef(idx(i)); i += 1 }
+    hashFromVals(vals)
   }
 
   def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
@@ -152,11 +152,11 @@ object Phash {
     * boxed (Int, Int) tuple and re-derived transpose/sign arithmetic
     * 8 × 64 times per decoded image — measurable pointer-chase in the
     * kernel this file otherwise keeps allocation-free. */
-  private val dihedralIdx: Array[Array[Int]] = Array.tabulate(8) { k =>
+  private[images] val dihedralIdx: Array[Array[Int]] = Array.tabulate(8) { k =>
     val tr = (k >> 2) == 1
     Array.tabulate(64) { i =>
       val (u, v) = hashPos(i)
-      if (tr) u * N + v else v * N + u
+      if (tr) u * K + v else v * K + u
     }
   }
   private val dihedralNeg: Array[Array[Boolean]] = Array.tabulate(8) { k =>
@@ -167,8 +167,12 @@ object Phash {
     }
   }
 
+  /** Sign-vs-median bits of 64 coefficients. The median sorts a primitive
+    * copy with `java.util.Arrays.sort`, whose order is `Double.compare`'s
+    * total order — the order `Array[Double].sorted` uses, without boxing. */
   private def hashFromVals(vals: Array[Double]): Long = {
-    val sorted = vals.clone().sorted
+    val sorted = vals.clone()
+    java.util.Arrays.sort(sorted)
     val median = (sorted(31) + sorted(32)) / 2.0
     var bits = 0L
     var i = 0
@@ -190,7 +194,7 @@ object Phash {
     * boxes are 1–2 px wide and a 1-px misalignment replaces a cell's
     * whole content).
     */
-  private def toGraySym(px: Array[Int], w: Int, h: Int): Array[Double] = {
+  private[images] def toGraySym(px: Array[Int], w: Int, h: Int): Array[Double] = {
     val g = bufGray.get()
     val sx = w / 32.0; val sy = h / 32.0 // exact: small int / power of 2
     var gy = 0
@@ -230,8 +234,8 @@ object Phash {
     * (cos((2(N-1-x)+1)uπ/2N) = (−1)^u cos((2x+1)uπ/2N)), flipping along y
     * negates odd-v, and transposing swaps (u, v). The eight group elements
     * are exactly {transpose? × sign(−1)^(su·u+sv·v)}, so each variant hash
-    * is a sign/permutation re-read of the same 32×32 DCT — no second
-    * pixel pass, no second O(N³) transform. Index k = tr·4 + sv·2 + su:
+    * is a sign/permutation re-read of the same DCT corner — no second
+    * pixel pass, no second transform. Index k = tr·4 + sv·2 + su:
     * k=0 identity, k=1 flip-x, k=2 flip-y, k=3 rot180, k=4 transpose,
     * k=5 rot90(T∘flip-x side), k=6 rot270, k=7 anti-transpose.
     *

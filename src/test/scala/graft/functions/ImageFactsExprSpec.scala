@@ -73,6 +73,37 @@ class ImageFactsExprSpec extends SparkTestBase {
     assert(a == b)
   }
 
+  test("decodeFactsExpr's quality, tile, dihedral and container facts ≡ plain-Scala kernels") {
+    // The expression's InternalRow is positional: a field-order slip
+    // against ImageFactsExpr.schema would land a fact under another name.
+    val dir = ImageGen.ensure(spark, 2000L, "target/test-images")
+    val images = ImageGen.images(spark, dir)
+    def line(id: String, part: String, nBytes: Long, tiles: Seq[Long], d4: Seq[Long],
+             q: (Double, Double, Double, Double, Double), kind: String, ok: Boolean) =
+      s"$id|$part|$nBytes|${tiles.mkString(",")}|${d4.mkString(",")}|$q|$kind|$ok"
+    val expected = images.select("image_id", "part", "bytes").collect().map { r =>
+      val bytes = r.getAs[Array[Byte]]("bytes")
+      val (kind, ok) = ImageCodec.containerFacts(bytes)
+      val nBytes = if (bytes == null) 0L else bytes.length.toLong
+      val (tiles, d4, q) = ImageCodec.decode(bytes) match {
+        case Some((px, w, h)) => (Phash.tilePhashes(px, w, h).toSeq,
+          Phash.dihedralPhashes(px, w, h).toSeq, ImageCodec.lumaQuality(px, w, h))
+        case None => (Seq.fill(4)(0L), Seq.fill(8)(0L), (0.0, 0.0, 0.0, 0.0, 0.0))
+      }
+      line(r.getString(0), r.getString(1), nBytes, tiles, d4, q, kind, ok)
+    }.sorted.toSeq
+    val actual = ImageSuite.decodeFactsExpr(images)
+      .select("image_id", "part", "n_bytes", "phash_tiles", "phash_d4", "sharpness",
+        "brightness", "contrast", "clip_lo", "clip_hi", "container_kind", "container_ok")
+      .collect().map { r =>
+        line(r.getString(0), r.getString(1), r.getLong(2), r.getSeq[Long](3), r.getSeq[Long](4),
+          (r.getDouble(5), r.getDouble(6), r.getDouble(7), r.getDouble(8), r.getDouble(9)),
+          r.getString(10), r.getBoolean(11))
+      }.sorted.toSeq
+    assert(expected.size == 2000)
+    assert(actual == expected)
+  }
+
   test("expression is total on nulls and garbage") {
     import spark.implicits._
     val df = Seq(
